@@ -51,8 +51,8 @@ object Graft {
       // integrity sidecars buy nothing here; a deployment whose
       // checkpoint volume CAN tear writes (object stores) re-enables
       // via SPARK_GRAFT_CHECKPOINT_CHECKSUM=true. Scale-neutral: the
-      // per-batch fixed cost this removes grows with state partitions,
-      // the same dial streamStatePartitions documents.
+      // per-batch fixed cost this removes grows with state partitions
+      // (Replay.StatePartitions).
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
         sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_CHECKSUM", "false"))
       .config("spark.ui.enabled", "false")

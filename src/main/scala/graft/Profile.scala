@@ -58,16 +58,9 @@ object Profile {
     // to the r=1 graded point's, so the re-band's candidate cut and
     // honest recall trade are measured for the stream, not just batch.
     if (args.contains("--streamneardup8")) {
-      val batch = docs.select(col("doc_id"), col("text"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-snd8").toString
-      batch.repartition(8).write.mode("overwrite").parquet(s"$tmp/in")
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-      try {
-        val src = spark.readStream.schema(batch.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
+      Replay.withStateWidth(spark) {
+        val src = Replay.unordered(spark,
+          docs.select(col("doc_id"), col("text"))).stream
         val pairs = graft.streaming.StreamNearDup.pairs(src,
           col("doc_id"), col("text"), shingleN = 3, numHashes = 16,
           bands = 8, threshold = 0.5, site = "snd8")
@@ -77,7 +70,7 @@ object Profile {
           try q.processAllAvailable() finally q.stop()
           spark.table("snd8_sink").count()
         }
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       val m = graft.streaming.StreamNearDup.emissionMetrics("snd8").get
       println(s"""[streamneardup8] {"dropped_candidates":""" +
         s"""${m.droppedCandidates.value},"exhausted_bucket_triggers":""" +
@@ -312,22 +305,16 @@ object Profile {
         if (args.contains("--heap")) Seq("heap")
         else if (args.contains("--rocksdb")) Seq("rocksdb")
         else Seq("heap", "rocksdb")
-      val nFiles = 8
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-statestore").toString
-      spark.range(keys).select(
-          expr("timestamp '2026-01-01 00:00:00'").as("ts"),
-          md5(col("id").cast("string")).as("k"))
-        .repartition(nFiles).write.mode("overwrite").parquet(s"$base/in")
+      val replay = Replay.unordered(spark, spark.range(keys).select(
+        expr("timestamp '2026-01-01 00:00:00'").as("ts"),
+        md5(col("id").cast("string")).as("k")))
       providers.foreach { p =>
         graft.streaming.StateBackend.withProvider(spark, p) {
-          val src = spark.readStream.schema("ts timestamp, k string")
-            .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
           val dd = graft.streaming.StreamDedup.withinWatermark(
-            src, "ts", "3650 days", Seq("k"))
+            replay.stream, "ts", "3650 days", Seq("k"))
           val t0 = System.nanoTime()
           val q = dd.writeStream.outputMode("append").format("noop")
-            .option("checkpointLocation", s"$base/ckpt-$p").start()
+            .option("checkpointLocation", s"${replay.checkpoint}/$p").start()
           try {
             q.processAllAvailable()
             val wall = (System.nanoTime() - t0) / 1e9
