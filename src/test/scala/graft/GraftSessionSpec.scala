@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * entry was detected but its value never reached Spark (the implied
   * true was merely withheld, flipping the effective setting to the
   * provider default), and an extraConfs pin was silently overridden
-  * because the implied default was applied after the fold.
+  * because the implied default was applied after the fold. Also pins
+  * the Tungsten page size a `Graft.session` session actually uses.
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -60,6 +61,11 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(Graft.changelogDecision(Map(key -> "false"), d).isEmpty)
     }
     assert(Graft.changelogDecision(Map(key -> "false"), None).isEmpty)
+  }
+
+  test("sessions use 1 MB Tungsten pages, not Spark's heap-derived size") {
+    val sc = TestSpark.spark.sparkContext
+    assert(org.apache.spark.GraftTestAccess.pageSizeBytes(sc) == 1L << 20)
   }
 
   test("a -D system property wins (SparkConf loads spark.* sys props " +

@@ -201,6 +201,39 @@ class SortValidatorSpec extends SparkSpec {
   }
 }
 
+/** Rows larger than a Tungsten page (`graft.Graft.PageSize`, 1 MB) each
+  * take one page of their own size in the sorter, the aggregation hash
+  * map and the broadcast hash relation. */
+class WideRowSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("~3 MB rows sort, aggregate and broadcast-join to the expected rows") {
+    val width = 3 << 20
+    def wide(tag: Long): String = f"$tag%02d" + "x" * width
+    // six rows over three distinct wide values, built inside tasks
+    val rows = spark.range(0, 6, 1, 3).select($"id",
+      concat(lpad(($"id" % 3).cast("string"), 2, "0"), repeat(lit("x"), width)).as("w"))
+
+    val sorted = Sorting.totalOrderSort(rows, $"w".desc, $"id".asc)
+      .as[(Long, String)].collect().toSeq
+    assert(sorted == Seq(2L, 5L, 1L, 4L, 0L, 3L).map(i => (i, wide(i % 3))))
+
+    val agg = rows.groupBy($"w").agg(count(lit(1)), sum($"id"))
+    assert(agg.queryExecution.executedPlan.toString.contains("HashAggregate"))
+    assert(agg.as[(String, Long, Long)].collect().toSet ==
+      Set((wide(0), 2L, 3L), (wide(1), 2L, 5L), (wide(2), 2L, 7L)))
+
+    // a string key builds an UnsafeHashedRelation (a long key would not)
+    def key(id: org.apache.spark.sql.Column) = concat(lit("k"), id.cast("string")).as("k")
+    val build = rows.filter($"id" < 3).select(key($"id"), $"w")
+    val probe = spark.range(12).select(key($"id" % 4), $"id".as("pid"))
+    val joined = probe.join(broadcast(build), "k").select($"pid", $"w")
+    assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    assert(joined.as[(Long, String)].collect().toSet ==
+      (0L until 12L).filter(_ % 4 < 3).map(p => (p, wide(p % 4))).toSet)
+  }
+}
+
 class PipelinePlanSpec extends SparkSpec {
   import spark.implicits._
 
