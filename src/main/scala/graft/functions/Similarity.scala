@@ -571,10 +571,10 @@ object Similarity {
     // the raw-cosine gate runs BEFORE the 4-decimal round: round()
     // on a double is a per-row BigDecimal round-trip, and the
     // within-cluster expansion evaluates it ~1.7e9 times at sf10
-    // (measured bound, Profile --semdedup) when almost every pair
-    // fails the threshold. A margin of 1e-4 keeps strictly more
-    // than HALF_UP rounding can promote (x rounds to >= t only if
-    // x >= t - 5e-5), so the rounded filter still decides — the
+    // (measured bound, SCALE.md "q_semdedup sf10 audit") when almost
+    // every pair fails the threshold. A margin of 1e-4 keeps strictly
+    // more than HALF_UP rounding can promote (x rounds to >= t only
+    // if x >= t - 5e-5), so the rounded filter still decides — the
     // gate is pure plumbing, zero semantic effect.
     val pairs = a.join(b, Seq("cluster"))
       .filter(col("id_a") < col("id_b"))

@@ -94,9 +94,10 @@ object TextAnalysis {
     * `size(filter(toks, ...))` form is 4-5× slower at scale:
     * interpreted higher-order functions don't CSE, so |langs| filter
     * passes each re-tokenize the document (measured 13.8 s → 2.9 s
-    * for 50k sf1 docs, `graft.Profile --langid`; the explode+agg
-    * variant is marginally faster still but buys a shuffle the
-    * per-row form doesn't need at 100 TB). Same no-CSE rule is why
+    * for 50k sf1 docs; graded q_langid at sf1 13.9 → 3.8 s, BASELINE.md
+    * "Round-7 measured numbers"; the explode+agg variant is
+    * marginally faster still but buys a shuffle the per-row form
+    * doesn't need at 100 TB). Same no-CSE rule is why
     * the fold result is bound ONCE via a single-element `transform`
     * lambda — referencing it from each branch of the argmax would
     * re-run the fold per reference.

@@ -29,7 +29,7 @@ for i in $(seq 1 "$RUNS"); do
   fi
 done
 echo "=== statestore 10M-key rocksdb point $(date +%H:%M:%S) ==="
-SPARK_GRAFT_STATE_PROVIDER=rocksdb SPARK_GRAFT_SS_KEYS=10000000 \
+SPARK_GRAFT_STATE_PROVIDER=rocksdb \
   SPARK_GRAFT_CPUS=32 \
   java -cp "$CP" $JOPTS graft.Profile --statestore --rocksdb 2>/dev/null \
   | grep statestore
