@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at
   * `SPARK_GRAFT_SF_DIR`, prints one JSON line for the driver
   * (`BENCH_r{N}.json`).
@@ -9,9 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.session(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt, appName = "graft-bench")
+    val spark = Graft.querySession("graft-bench")
     // warm the JVM/codegen/file-source paths so the first measured
     // query isn't charged for session startup, and pre-JIT the heavy
     // operator kernels (shingling, signatures, window pair expansion,
@@ -143,7 +139,7 @@ object Bench {
     val probeOnly = artifact.map { case (k, _, _, _, _, _) =>
       "\"" + k + "\":" + fmt(median(streamOnly(k).map(s => s._1 - s._3))) }
       .mkString("{", ",", "}")
-    val zorderPruning = SparkEntry.zorderBenchStats(spark, sfDir)
+    val zorderPruning = queries.RetrievalQueries.zorderBenchStats(spark, sfDir)
       .map(j => s""","zorder_pruning":$j""").getOrElse("")
     val failed = meds.collect { case (k, m, _, _, _, _) if m < 0 => "\"" + k + "\"" }
     val total = meds.collect { case (_, m, _, _, _, _) if m >= 0 => m }.sum

@@ -34,8 +34,8 @@ object Graft {
     * On a real cluster `shufflePartitions` should be ~2-3x total cores
     * (AQE coalesces down); locally we match the core count.
     */
-  def session(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-              shufflePartitions: Int = 32,
+  def session(master: String,
+              shufflePartitions: Int,
               appName: String = "graft",
               extraConfs: Map[String, String] = Map.empty): SparkSession = {
     val builder0 = SparkSession.builder()
@@ -108,25 +108,24 @@ object Graft {
       .getOrElse(builder)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // state-pressure advisory on by default (one stderr line per
-    // offending query run, before the heap provider's deferred OOM
-    // lands — see streaming.StateAdvisor); SPARK_GRAFT_STATE_ADVISOR=0
-    // disables, or set a byte budget to override heap/4. Wired once
-    // per session: getOrCreate hands the same session back to every
-    // caller in the JVM, and stacked listeners would duplicate lines.
+    // state-pressure advisory at the heap/4 budget (one stderr line
+    // per offending query run, before the heap provider's deferred OOM
+    // lands — see streaming.StateAdvisor). Wired once per session:
+    // getOrCreate hands the same session back to every caller in the
+    // JVM, and stacked listeners would duplicate lines.
     if (advisorWired.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
-      sys.env.getOrElse("SPARK_GRAFT_STATE_ADVISOR", "1") match {
-        case "0" | "" =>
-        case "1" => streaming.StateAdvisor.attach(spark): Unit
-        case bytes => bytes.trim.toLongOption.filter(_ > 0) match {
-          case Some(b) => streaming.StateAdvisor.attach(spark, b): Unit
-          case None => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_STATE_ADVISOR='$bytes' is not a valid value: " +
-              "expected 0 (off), 1 (on, heap/4 budget), or a positive " +
-              "byte budget")
-        }
-      }
+      streaming.StateAdvisor.attach(spark): Unit
     spark
+  }
+
+  /** The session Verify, Bench and Explain run queries in:
+    * `local[N]` with N shuffle partitions, N = `SPARK_GRAFT_CPUS`
+    * (default 4), so Explain prints the plans the other two run.
+    */
+  def querySession(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    session(master = s"local[$cpus]", shufflePartitions = cpus.toInt,
+      appName = appName)
   }
 
   private val advisorWired = java.util.Collections.synchronizedMap(

@@ -597,12 +597,6 @@ object Soak {
     (shortLat, bulkWall.get() / 1e9)
   }
 
-  /** Env dials: `SPARK_GRAFT_SOAK_FIX_ROWS` / `_VAR_ROWS` /
-    * `_TEXT_ROWS` (family input sizes), `SPARK_GRAFT_SOAK_DIR`
-    * (work dir), `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SOAK_CONCURRENT`
-    * (non-empty = simultaneous-submission mode). Prints one JSON
-    * line: total wall, per-family seconds/rows/heap.
-    */
   /** `--scheduler`: run [[schedulerProbe]] on a FIFO session, then on
     * a FAIR session with [[fairPoolsXml]], and print both short-job
     * latencies — the FIFO-starves-short / FAIR-bounds-short evidence
@@ -628,6 +622,16 @@ object Soak {
       s""""fifo_bulk_s":${fmt(fifoBulk)},"fair_bulk_s":${fmt(fairBulk)}}""")
   }
 
+  /** Runs the soak (or, with `--scheduler`, [[schedulerMain]]) and
+    * prints one JSON line: total wall, per-family seconds/rows/heap.
+    * Env dials: `SPARK_GRAFT_CPUS` (cores and partitions, default 32),
+    * `SPARK_GRAFT_SOAK_FIX_ROWS` / `_VAR_ROWS` / `_TEXT_ROWS` (family
+    * input sizes), `SPARK_GRAFT_SOAK_DIR` (work dir),
+    * `SPARK_GRAFT_SOAK_CONCURRENT` (non-empty = simultaneous-submission
+    * mode), `SPARK_GRAFT_SOAK_FAIR` (non-empty = the concurrent soak
+    * under FAIR pools) and `SPARK_GRAFT_SOAK_RECLAIM` (non-empty =
+    * reclaim each family's data as it finishes).
+    */
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     if (args.contains("--scheduler")) { schedulerMain(cpus); return }

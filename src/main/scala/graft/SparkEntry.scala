@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.operators._
-import graft.Replay.{rmTree, scratchDir}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.operators.TextOps
+import graft.queries._
 
-/** Driver contract — one `queries` entry (+ `oracleSql` when ANSI-SQL
-  * expressible) per implemented operator from SURVEY.md §2.
+/** Driver contract — one [[queries.Query]], a query with its DuckDB
+  * oracle, per implemented operator from SURVEY.md §2.
   *
   * Parity rules used throughout (so Spark and the DuckDB oracle
   * hash-match bit-for-bit):
@@ -38,324 +38,17 @@ object SparkEntry {
     */
   val artifactWriteNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Graft.table(s, dir, name)
+  /** Every graded query, family by family. */
+  lazy val registry: Seq[Query] = Seq(
+    DataflowQueries.all, CatalogQueries.all, DedupQueries.all,
+    SimilarityQueries.all, TextQueries.all, MultimodalQueries.all,
+    StreamQueries.all, RetrievalQueries.all, SketchQueries.all).flatten
 
-  /** Probe-side pruning witness for the z-order layout, computed once
-    * per bench run (UNTIMED — the graded timing stays q_zorder_box's
-    * end-to-end number): the same 2-D box the query grades, answered
-    * through (a) the clustered artifact the last pass wrote and (b) a
-    * freshly-written single-column-sorted copy at the same file count
-    * (the layout a naive pipeline produces). Reports, per layout, how
-    * many files' bounding boxes intersect the query box
-    * ([[graft.sources.Layout.fileBoxes]] — files a reader must open)
-    * and how many rows the parquet reader actually decoded (the scan
-    * node's numOutputRows: pushed min/max row-group stats skip
-    * non-intersecting files). The round-over-round signal for the
-    * read-side payoff that the rewrite buys at 100 TB.
-    */
-  def zorderBenchStats(s: SparkSession, dir: String): Option[String] =
-    try {
-      val zpath = scratchDir(s, "zorder")
-      if (!new java.io.File(zpath).exists()) return None
-      val base = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-      val mx = base.agg(max(col("l_orderkey")), max(col("l_partkey"))).head()
-      val (maxOk, maxPk) = (mx.getLong(0), mx.getLong(1))
-      val (xlo, xhi) = (math.ceil(0.1 * maxOk).toLong,
-        math.floor(0.3 * maxOk).toLong)
-      val (ylo, yhi) = (math.ceil(0.2 * maxPk).toLong,
-        math.floor(0.45 * maxPk).toLong)
-      val spath = scratchDir(s, "zorder-sorted")
-      base.repartitionByRange(8, col("l_orderkey"))
-        .sortWithinPartitions(col("l_orderkey"))
-        .write.mode("overwrite").parquet(spath)
-      // two probe shapes: the graded 2-D box, and a Y-ONLY range —
-      // the case that separates the layouts (an x-sorted file covers
-      // the full y range, so y-only predicates prune NOTHING there,
-      // while z-order tiles bound both dimensions)
-      def stats(path: String, pred: Column,
-                boxHit: org.apache.spark.sql.Row => Boolean): (Long, Long, Long) = {
-        val boxes = sources.Layout.fileBoxes(s, path,
-          "l_orderkey", "l_partkey").collect()
-        val hit = boxes.count(boxHit)
-        val probe = s.read.parquet(path).filter(pred)
-        probe.queryExecution.toRdd.count()
-        val scanRows = meta.Advisor.flatten(probe.queryExecution.executedPlan)
-          .collectFirst {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-              f.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-          }.getOrElse(-1L)
-        (boxes.length.toLong, hit.toLong, scanRows)
-      }
-      val boxPred = col("l_orderkey") >= lit(xlo) &&
-        col("l_orderkey") <= lit(xhi) &&
-        col("l_partkey") >= lit(ylo) && col("l_partkey") <= lit(yhi)
-      def boxHit(r: org.apache.spark.sql.Row): Boolean =
-        r.getLong(1) <= xhi && r.getLong(2) >= xlo &&
-          r.getLong(3) <= yhi && r.getLong(4) >= ylo
-      val yPred = col("l_partkey") >= lit(ylo) && col("l_partkey") <= lit(yhi)
-      def yHit(r: org.apache.spark.sql.Row): Boolean =
-        r.getLong(3) <= yhi && r.getLong(4) >= ylo
-      val (zf, zh, zr) = stats(zpath, boxPred, boxHit)
-      val (sf, sh, sr) = stats(spath, boxPred, boxHit)
-      val (_, zyh, zyr) = stats(zpath, yPred, yHit)
-      val (_, syh, syr) = stats(spath, yPred, yHit)
-      Some(s"""{"box":{"files":$zf,"files_hit_zorder":$zh,""" +
-        s""""rows_scanned_zorder":$zr,"files_hit_sorted":$sh,""" +
-        s""""rows_scanned_sorted":$sr},""" +
-        s""""y_only":{"files":$zf,"files_hit_zorder":$zyh,""" +
-        s""""rows_scanned_zorder":$zyr,"files_hit_sorted":$syh,""" +
-        s""""rows_scanned_sorted":$syr}}""")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] zorder pruning stats skipped: " +
-          e.getMessage)
-        None
-    }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
-  /** Shared prelude of q_range_join / q_active_count: error events
-    * as (event_id, t) points and 12-hour-gap session summaries as
-    * (start_t, end_t) intervals, both on the us timeline. One
-    * definition so the twins' "identical semantics" contract can't
-    * silently drift.
-    */
-  private def errorsAndSessions(s: SparkSession,
-                                dir: String): (DataFrame, DataFrame) = {
-    val e = t(s, dir, "events").select(col("event_id"), col("user_id"),
-      expr("ts div 1000").as("t"), col("event_type"), col("value"))
-    val sess = operators.Temporal.sessionSummary(
-        e.select(col("user_id"), col("t").as("ts"), col("value")),
-        col("user_id"), col("ts"), gap = 43200000000L,
-        col("value").cast("decimal(18,2)"))
-      .select(col("start_t"), col("end_t"))
-    val errors = e.filter(col("event_type") === "error")
-      .select(col("event_id"), col("t"))
-    (errors, sess)
-  }
-
-  /** Tab-separated KV corpus built from lineitem (FIXTURES.md §2):
-    * fields 0..5 = orderkey, partkey, suppkey, linenumber, returnflag,
-    * shipdate(date).
-    */
-  private def kvCorpus(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(
-      col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-      col("l_linenumber"), col("l_returnflag"),
-      col("l_shipdate").cast("date").as("l_shipdate_d"),
-      concat_ws("\t",
-        col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        col("l_linenumber"), col("l_returnflag"),
-        col("l_shipdate").cast("date")).as("value"))
-
-  private val kvCorpusSql =
-    """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_returnflag,
-      |       CAST(l_shipdate AS DATE) AS l_shipdate_d,
-      |       concat_ws(chr(9), l_orderkey, l_partkey, l_suppkey,
-      |                 l_linenumber, l_returnflag,
-      |                 CAST(l_shipdate AS DATE)) AS value
-      |FROM lineitem""".stripMargin
-
-  /** A corpus WITH planted near-duplicate structure, derived
-    * deterministically from the embeddings table: every vector gets a
-    * jittered twin at id+1,000,000 — component i shifts by
-    * eps·(u − 0.5) with u an md5-hash unit in [0,1) of "vec_id:i".
-    * The derivation is pure engine-portable arithmetic (md5 → first
-    * 15 hex digits → /2^60; the same conv trick the balancer oracle
-    * uses), so DuckDB replays the corpus bit-for-bit and can brute-
-    * force the true pair set. eps=1e-3 on unit-norm vectors puts each
-    * twin at angle ~0.0023 rad (cos ≈ 0.999997): a TRUE near-dup,
-    * while the max natural pair stays at cos ≈ 0.60 — the separation
-    * LSH's contract actually covers (q_embed_blocked's comment has
-    * the recall arithmetic).
-    */
-  private def plantedEmbeddings(e: DataFrame): DataFrame = {
-    def u(s: Column): Column =
-      conv(substring(md5(s), 1, 15), 16, 10).cast("long").cast("double") /
-        lit(1.152921504606846976e18) // 2^60, exact as a double
-    val base = e.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("cv"))
-    val jit = base.select(col("vec_id"),
-        transform(col("cv"), (x, i) =>
-          x + lit(1e-3) * (u(concat(col("vec_id").cast("string"), lit(":"),
-            i.cast("string"))) - lit(0.5))).as("cv"))
-      .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("cv"))
-    base.unionByName(jit)
-  }
-
-  /** Shared oracle of q_embed_ivf and q_embed_ivf_disk: with
-    * nprobe = nlist the probe provably equals brute-force top-k,
-    * disk round trip or not (parquet doubles are binary-exact).
-    */
-  private val embedIvfSql: String =
-      """WITH c AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |           FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, cv AS qv FROM c WHERE vec_id < 5),
-        |s AS (SELECT query_id, vec_id,
-        |        round(list_dot_product(cv, qv) /
-        |              sqrt(list_dot_product(cv, cv) *
-        |                   list_dot_product(qv, qv)), 4) AS cos
-        |      FROM c CROSS JOIN q WHERE vec_id <> query_id)
-        |SELECT query_id, vec_id, cos,
-        |       CAST(row_number() OVER (PARTITION BY query_id
-        |              ORDER BY cos DESC, vec_id ASC) AS INT) AS rnk
-        |FROM s QUALIFY rnk <= 5""".stripMargin
-
-  /** Shared oracle of q_stream_replication and its recovery twin:
-    * the throttled-EWMA fold as a recursive CTE (bit-exact dyadic
-    * blends), then tier/exempt/sweep mirrored in closed form.
-    */
-  private val streamReplicationSql: String =
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, epoch_us(ts) // 1000 AS t,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY epoch_us(ts) // 1000) AS rn
-        |  FROM events),
-        |mx AS (SELECT user_id, max(rn) AS n FROM ev GROUP BY user_id),
-        |s AS (
-        |  SELECT user_id, rn, CAST(t AS DOUBLE) AS ewma, t AS last
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.user_id, s.rn + 1,
-        |         CASE WHEN e2.t <= s.ewma + 30000 THEN s.ewma
-        |              ELSE 0.5 * s.ewma + 0.5 * e2.t END,
-        |         CASE WHEN e2.t <= s.ewma + 30000 THEN s.last
-        |              ELSE e2.t END
-        |  FROM s JOIN ev e2
-        |    ON e2.user_id = s.user_id AND e2.rn = s.rn + 1),
-        |h AS (SELECT s.user_id, s.ewma
-        |      FROM s JOIN mx ON s.user_id = mx.user_id AND s.rn = mx.n),
-        |tiered AS (
-        |  SELECT user_id, ewma,
-        |         CAST(7 - ntile(4) OVER (ORDER BY ewma DESC, user_id ASC)
-        |              AS INT) AS tr
-        |  FROM h WHERE user_id % 5 <> 0
-        |  UNION ALL
-        |  SELECT user_id, ewma, 3 AS tr FROM h WHERE user_id % 5 = 0),
-        |ranked AS (
-        |  SELECT user_id, ewma, tr,
-        |         row_number() OVER (PARTITION BY tr
-        |                            ORDER BY ewma ASC, user_id ASC) AS rk,
-        |         count(*) OVER (PARTITION BY tr) AS bn
-        |  FROM tiered)
-        |SELECT user_id, ewma,
-        |       CAST(CASE WHEN tr > 3 AND rk <= bn // 2 THEN tr - 1
-        |            ELSE tr END AS INT) AS target_rep
-        |FROM ranked""".stripMargin
-
-  /** Exact n-gram Jaccard pair oracle — shared by q_ngram_jaccard
-    * (the exact inverted-index path) and q_minhash_lsh (whose
-    * bands=numHashes candidates + exact rerank provably produce the
-    * same set; see the `queries` entry).
-    */
-  /** The exact A-ES weighted-sample ranking — shared verbatim by the
-    * batch query (q_weighted_sample) and its streaming twin
-    * (q_stream_sample): the draw is a pure function of (doc_id,
-    * seed), so both must produce this exact top-20.
-    */
-  private val weightedSampleSql =
-    """WITH d AS (
-      |  SELECT *,
-      |    pow(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':42'),
-      |                             1, 8)) AS BIGINT) / 4294967296.0,
-      |        1.0 / CAST(n_chars AS DOUBLE)) AS draw
-      |  FROM documents WHERE n_chars > 0)
-      |SELECT doc_id, text, lang, source, n_chars, draw
-      |FROM d ORDER BY draw DESC, doc_id LIMIT 20""".stripMargin
-
-  private val ngramJaccardSql =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         list_filter(string_split_regex(text, '\s+'),
-      |                     x -> length(x) > 0) AS tk
-      |  FROM documents),
-      |sh AS (
-      |  SELECT doc_id,
-      |         list_distinct(CASE WHEN len(tk) >= 3
-      |           THEN [array_to_string(tk[i+1:i+3], ' ')
-      |                 for i in range(len(tk) - 2)]
-      |           ELSE [array_to_string(tk, ' ')] END) AS s
-      |  FROM toks),
-      |inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS s FROM sh),
-      |keep AS (SELECT s FROM inv GROUP BY s HAVING count(*) <= 1000),
-      |pr AS (SELECT i.* FROM inv i JOIN keep USING (s)),
-      |pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |         a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-      |  FROM pr a JOIN pr b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2, 3, 4)
-      |SELECT id_a, id_b,
-      |       round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-      |FROM pairs
-      |WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5""".stripMargin
-
-  /** Full BPE merge-list re-derivation in DuckDB, machine-generated
-    * for `n` rounds — the iterative trainer is NOT one-shot SQL
-    * (rule i+1 depends on the post-merge vocabulary), but each round
-    * IS: pair counts via a positional self-join, argmax with the
-    * trainer's (cnt desc, lhs, rhs) tie-break, and the greedy
-    * left-to-right non-overlapping rewrite as gaps-and-islands —
-    * consecutive match positions form an island and greedy chooses
-    * its 1st, 3rd, … members (exactly [[functions.Bpe.mergeOnce]]'s
-    * fold semantics: a just-fused token never re-fuses in the same
-    * pass), chosen rows fuse lhs||rhs, the row after a chosen one is
-    * consumed, positions renumber. One CTE block per round.
-    */
-  private def bpeMergesSql(n: Int): String = {
-    val head =
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-        |                x -> length(x) > 0)) AS w
-        |  FROM documents),
-        |wf AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS f
-        |      FROM toks GROUP BY w),
-        |s1r AS (SELECT w AS wid, f, unnest(range(1, length(w) + 1)) AS p
-        |        FROM wf),
-        |s1 AS MATERIALIZED (SELECT wid, f, CAST(p AS INT) AS pos,
-        |              substr(wid, CAST(p AS INT), 1) AS sym
-        |       FROM s1r)""".stripMargin
-    val rounds = (1 to n).map { k =>
-      val last = k == n
-      s"""p$k AS (SELECT a.sym AS lhs, b.sym AS rhs,
-         |             CAST(sum(a.f) AS BIGINT) AS cnt
-         |      FROM s$k a JOIN s$k b
-         |        ON a.wid = b.wid AND b.pos = a.pos + 1
-         |      GROUP BY 1, 2),
-         |t$k AS MATERIALIZED (SELECT lhs, rhs, cnt FROM p$k
-         |      ORDER BY cnt DESC, lhs, rhs LIMIT 1)""".stripMargin +
-        (if (last) "" else
-          s""",
-             |m$k AS (SELECT s.wid, s.f, s.pos, s.sym,
-             |             coalesce(s.sym = t.lhs AND
-             |               lead(s.sym) OVER (PARTITION BY s.wid
-             |                 ORDER BY s.pos) = t.rhs, FALSE) AS mt
-             |      FROM s$k s CROSS JOIN t$k t),
-             |g$k AS (SELECT *, pos - row_number() OVER (
-             |               PARTITION BY wid, mt ORDER BY pos) AS grp
-             |      FROM m$k),
-             |c$k AS (SELECT *, mt AND (row_number() OVER (
-             |               PARTITION BY wid, mt, grp ORDER BY pos)
-             |               % 2 = 1) AS chosen
-             |      FROM g$k),
-             |n$k AS (SELECT wid, f, pos,
-             |             CASE WHEN chosen
-             |               THEN sym || (SELECT rhs FROM t$k)
-             |               ELSE sym END AS sym,
-             |             coalesce(lag(chosen) OVER (PARTITION BY wid
-             |               ORDER BY pos), FALSE) AS consumed
-             |      FROM c$k),
-             |s${k + 1} AS MATERIALIZED (SELECT wid, f,
-             |             CAST(row_number() OVER (PARTITION BY wid
-             |               ORDER BY pos) AS INT) AS pos, sym
-             |      FROM n$k WHERE NOT consumed)""".stripMargin)
-    }.mkString(",\n", ",\n", "\n")
-    val union = (1 to n).map(k =>
-      s"""SELECT $k AS "rank", lhs, rhs, lhs || rhs AS merged,
-         |       cnt AS pair_count FROM t$k""".stripMargin)
-      .mkString("\nUNION ALL\n")
-    head + rounds + union
-  }
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0):
     * the Grep pipeline — the reference's own canonical example
@@ -363,5506 +56,6 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame =
     TextOps.grep(
-      t(spark, "/root/testdata/sf0.001", "documents"),
+      Graft.table(spark, "/root/testdata/sf0.001", "documents"),
       col("text"), "s[a-z]+")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- §2.2 map-side text operators -------------------------------
-    "q_grep" -> ((s, dir) =>
-      TextOps.grep(t(s, dir, "documents"), col("text"), "s[a-z]+")),
-
-    "q_wordcount" -> ((s, dir) =>
-      TextOps.wordCount(t(s, dir, "documents"), col("text"))),
-
-    // PiEstimator parity: 100k Halton samples, no data input at all —
-    // the embarrassingly-parallel generator job
-    "q_pi" -> ((s, _) => operators.Pi.estimate(s, 100000L)),
-
-    // Distributed backtracking search (the reference's dancing package:
-    // DistributedPentomino prefix-split + DancingLinks exact cover).
-    // 6x10 two-sided pentomino, depth-2 split: 2339 solutions is the
-    // public value (Dana Scott 1958); the query also validates every
-    // board in-plan (12 pieces x exactly 5 cells each).
-    "q_pentomino" -> ((s, _) =>
-      operators.Search.pentominoValidated(s, 6, 10, oneSided = false,
-        depth = 2)),
-
-    // Sudoku via the same exact-cover model, distributed split: a
-    // proper 41-clue puzzle; validation (rows/cols/boxes are 1..9
-    // permutations, clues respected) happens in-plan
-    "q_sudoku" -> ((s, _) =>
-      operators.Search.sudokuValidated(s, operators.Search.sudokuFixture9,
-        boxW = 3, boxH = 3, depth = 2)),
-
-    "q_field_selection" -> ((s, dir) =>
-      TextOps.fieldSelection(kvCorpus(s, dir), col("value"),
-        spec = "4,2,0-1,5-", maxFields = 6)),
-
-    "q_inverse" -> ((s, dir) =>
-      TextOps.inverse(
-        t(s, dir, "nation").select(col("n_name"), col("n_nationkey")),
-        "n_name", "n_nationkey")),
-
-    // ---- §2.1 scan-time filters (SequenceFileInputFilter) -----------
-    "q_regex_filter" -> ((s, dir) =>
-      Filters.regexFilter(t(s, dir, "part"), col("p_name"), "^s.*dget")
-        .select(col("p_partkey"), col("p_name"))),
-
-    "q_percent_filter" -> ((s, dir) =>
-      Filters.percentFilter(t(s, dir, "orders"), col("o_orderkey"), 10)
-        .select(col("o_orderkey"), col("o_totalprice"))),
-
-    "q_md5_filter" -> ((s, dir) =>
-      Filters.md5Filter(t(s, dir, "orders"), col("o_orderkey"))
-        .select(col("o_orderkey"), col("o_custkey"))),
-
-    // ---- §2.5 sorts / top-k / secondary sort ------------------------
-    "q_topk" -> ((s, dir) =>
-      Sorting.topK(t(s, dir, "orders").select(
-          col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        100, col("o_totalprice").desc, col("o_orderkey").asc)),
-
-    "q_secondary_sort" -> ((s, dir) =>
-      Sorting.secondarySortRanked(
-        t(s, dir, "lineitem").select(
-          col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
-        group = Seq(col("l_orderkey")), order = Seq(col("l_linenumber")))),
-
-    "q_keyfield_sort" -> ((s, dir) =>
-      Sorting.keyFieldSort(kvCorpus(s, dir).select(col("value")),
-          col("value"), "-k5,5r -k1,1n -k4,4n")
-        .limit(100)),
-
-    // ---- §2.3 joins -------------------------------------------------
-    "q_join_inner" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey").as("custkey"), col("c_name"))
-      val o = t(s, dir, "orders")
-        .select(col("o_custkey").as("custkey"), col("o_orderkey"), col("o_totalprice"))
-      Joins.innerJoin(Seq(c, o), "custkey")
-    }),
-
-    "q_join_outer" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .filter(col("c_custkey") % 3 =!= 0)
-        .select(col("c_custkey").as("custkey"), col("c_name"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 5 === 0)
-        .groupBy(col("o_custkey").as("custkey"))
-        .agg(count(lit(1)).as("n_orders"))
-      Joins.outerJoin(Seq(c, o), "custkey")
-    }),
-
-    "q_join_override" -> ((s, dir) => {
-      val base = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_retailprice").as("price"))
-      val ovr = t(s, dir, "lineitem")
-        .groupBy(col("l_partkey").as("p_partkey"))
-        .agg(min(col("l_extendedprice")).as("price"))
-      Joins.overrideJoin(Seq(base, ovr), "p_partkey",
-        Seq(Seq("price"), Seq("price")))
-    }),
-
-    "q_join_semi" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey").as("custkey"), col("c_name"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_totalprice") > 400000)
-        .select(col("o_custkey").as("custkey"))
-      Joins.semiJoin(c, o, "custkey")
-    }),
-
-    "q_join_anti" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-        .select(col("c_custkey").as("custkey"), col("c_name"))
-      val o = t(s, dir, "orders")
-        .filter(col("o_totalprice") > 400000)
-        .select(col("o_custkey").as("custkey"))
-      Joins.antiJoin(c, o, "custkey")
-    }),
-
-    "q_composite_dsl" -> ((s, dir) => {
-      val tables = Map(
-        "cust" -> t(s, dir, "customer").select(col("c_custkey"), col("c_name")),
-        "ords" -> t(s, dir, "orders")
-          .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders")),
-        "vip" -> t(s, dir, "orders").filter(col("o_totalprice") > 400000)
-          .select(col("o_custkey")).distinct().withColumn("vip", lit(1)))
-      Joins.compositeJoin("outer(inner(tbl(cust), tbl(ords)), tbl(vip))", tables)
-    }),
-
-    "q_data_join" -> ((s, dir) =>
-      Joins.dataJoin(
-        t(s, dir, "customer").select(col("c_custkey"), col("c_name")),
-        t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        "c_custkey", "o_custkey")),
-
-    // ---- §2.1 multi-input / KV-text sources -------------------------
-    "q_multi_inputs" -> ((s, dir) =>
-      sources.MultiIO.multipleInputs(Seq(
-        t(s, dir, "customer") -> ((df: DataFrame) => df.select(
-          col("c_name").as("name"), col("c_acctbal").as("acctbal"),
-          lit("C").as("src"))),
-        t(s, dir, "supplier") -> ((df: DataFrame) => df.select(
-          col("s_name").as("name"), col("s_acctbal").as("acctbal"),
-          lit("S").as("src")))))),
-
-    "q_kv_text" -> ((s, dir) =>
-      sources.MultiIO.keyValueText(kvCorpus(s, dir).select(col("value")),
-        col("value"))),
-
-    // ---- §2.2 external-process pipe + chain -------------------------
-    "q_pipe" -> ((s, dir) =>
-      Pipe.pipe(t(s, dir, "documents"), "tr a-z A-Z", col("text"))),
-
-    "q_chain" -> ((s, dir) =>
-      Pipe.chain(t(s, dir, "documents"),
-        df => df.filter(col("lang") === "en"),
-        df => TextOps.wordCount(df, col("text")))),
-
-    // Hadoop Streaming's `-reducer aggregate` special form, composed
-    // end-to-end (reference: StreamJob.java:722 binds the aggregate
-    // library as the reduce): an external mapper process emits
-    // "Type:id<TAB>value" descriptor lines, pipeKV reframes them, and
-    // the aggregate library's data-driven reduce emits (id, report).
-    // The awk program is one whitespace-free token (RDD.pipe
-    // tokenizes the command on spaces).
-    "q_pipe_aggregate" -> ((s, dir) =>
-      AggregateLib.aggregateReduce(
-        Pipe.pipeKV(t(s, dir, "documents"),
-          """awk {print("LongValueSum:"$1"\t1");print("UniqValueCount:langs\t"$1)}""",
-          col("lang")),
-        col("key"), col("value"))),
-
-    // ---- §2.4 aggregation -------------------------------------------
-    // decimal sums stay exact internally; final cast to double keeps the
-    // output arrow type (float64) identical to the oracle's
-    "q1_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_price"),
-          sum((col("l_extendedprice").cast("decimal(18,2)") *
-               (lit(java.math.BigDecimal.ONE).cast("decimal(18,2)") -
-                col("l_discount").cast("decimal(18,2)")))
-            .cast("decimal(28,4)")).cast("double").as("sum_disc_price"),
-          round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double") /
-                count(lit(1)), 4).as("avg_qty"),
-          count(lit(1)).as("cnt"))),
-
-    "q_agg_lib" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          AggregateLib.longValueSum(col("l_linenumber")).as("long_sum"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("qty_sum"),
-          AggregateLib.longValueMax(col("l_partkey")).as("long_max"),
-          AggregateLib.longValueMin(col("l_partkey")).as("long_min"),
-          AggregateLib.stringValueMax(col("l_linestatus")).as("str_max"),
-          AggregateLib.stringValueMin(col("l_linestatus")).as("str_min"))),
-
-    "q_uniq_capped" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          AggregateLib.uniqValueCount(col("l_partkey"), 50).as("uniq_50"),
-          AggregateLib.uniqValueCount(col("l_partkey"), 1000000).as("uniq_all"))),
-
-    "q_histogram" -> ((s, dir) =>
-      AggregateLib.valueHistogram(t(s, dir, "lineitem"),
-        Seq(col("l_returnflag")), col("l_quantity"))),
-
-    // distribution report: exact token-count percentiles per lang
-    // (quantile_cont interpolation convention in both engines)
-    "q_percentiles" -> ((s, dir) =>
-      AggregateLib.percentileReport(t(s, dir, "documents"),
-        col("lang"),
-        functions.TextAnalysis.tokenCount(col("text")).cast("long"),
-        ps = Seq(0.5, 0.9, 0.99))),
-
-    // AccumulatingReducer: value type rides on the key prefix (l: =
-    // long sum, s: = sorted concat; the f: double branch is spec'd,
-    // not oracled — double-to-string formatting differs per engine)
-    "q_accumulate" -> ((s, dir) =>
-      AggregateLib.accumulatingReduce(
-        t(s, dir, "nation").select(
-          when(col("n_nationkey") % 2 === 0, lit("l:even_keys"))
-            .otherwise(lit("s:odd_names")).as("k"),
-          when(col("n_nationkey") % 2 === 0,
-            col("n_nationkey").cast("string"))
-            .otherwise(col("n_name")).as("v")),
-        col("k"), col("v"))),
-
-    // ---- §2.8 / record codecs: JSON record parsing ------------------
-    "q_json_record" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(col("value"),
-          sources.Records.fromJson(col("props"), "k INT").getField("k").as("k"))
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))),
-
-    // ---- §2.6 window functions (superset of secondary sort) ---------
-    "q_window_running" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events").select(
-        col("user_id"), col("event_id"),
-        col("value").cast("decimal(18,2)").cast("double").as("v"),
-        sum(col("value").cast("decimal(18,2)")).over(w).cast("double")
-          .as("running_sum"),
-        lag(col("event_id"), 1).over(
-          Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id")))
-          .as("prev_event"))
-    }),
-
-    // ---- §2.4 grouping sets (free superset: rollup) -----------------
-    "q_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-               .as("sum_qty"),
-             count(lit(1)).as("cnt"))),
-
-    // ---- §0.1 dynamic-replication policy (batch form) ---------------
-    "q_ewma" -> ((s, dir) =>
-      streaming.Heat.ewmaBatch(t(s, dir, "events"),
-        col("user_id"), Seq(col("ts"), col("event_id")),
-        col("value"), alpha = 0.5)),
-
-    "q_replication_plan" -> ((s, dir) =>
-      streaming.Heat.replicationPlan(
-        streaming.Heat.ewmaBatch(t(s, dir, "events"),
-          col("user_id"), Seq(col("ts"), col("event_id")),
-          col("value"), alpha = 0.5),
-        col("user_id"), col("ewma"))),
-
-    // ---- §2.2 skip-bad-records (try + quarantine) -------------------
-    "q_skip_bad" -> ((s, dir) =>
-      Resilient.applied(t(s, dir, "orders"),
-        expr("try_cast(substr(md5(cast(o_orderkey as string)), 1, 1) AS INT)"),
-        "d").select(col("o_orderkey"), col("d"))),
-
-    "q_skip_bad_quarantine" -> ((s, dir) =>
-      Resilient.quarantine(t(s, dir, "orders"),
-        expr("try_cast(substr(md5(cast(o_orderkey as string)), 1, 1) AS INT)"))
-        .select(col("o_orderkey"), col("o_custkey"))),
-
-    // ---- §1/§2.1 metadata catalog + FsShell analytics ---------------
-    "q_meta_du" -> ((s, dir) =>
-      meta.Catalog.du(
-        meta.Catalog.fromDocuments(t(s, dir, "documents")), "/corpus")),
-
-    "q_meta_count" -> ((s, dir) =>
-      meta.Catalog.countSummary(
-        meta.Catalog.fromDocuments(t(s, dir, "documents")), "/corpus")),
-
-    // Balancer plan: classify each modeled datanode against the
-    // cluster-average utilization band and size the required moves
-    "q_balancer" -> ((s, dir) =>
-      meta.Catalog.balancerPlan(
-        meta.Catalog.fromDocuments(t(s, dir, "documents")),
-        blockSize = 256L, nNodes = 10, nodeCapacity = 100000L,
-        threshold = 0.01)),
-
-    "q_meta_fsck" -> ((s, dir) =>
-      meta.Catalog.fsck(
-        meta.Catalog.fromDocuments(t(s, dir, "documents")),
-        blockSize = 256L)),
-
-    // TextOutputFormat graded END-TO-END (was sink-spec-only): write
-    // nation as key<TAB>value text via the real sink, read the files
-    // back as lines; the oracle reconstructs every line in SQL — the
-    // separator, the null->'' coalesce, and the string casts are all
-    // on the graded path
-    "q_text_sink" -> ((s, dir) => {
-      val out = scratchDir(s, "textsink")
-      sources.MultiIO.writeText(
-        t(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
-        out, sep = "\t")
-      s.read.text(out).select(col("value").as("line"))
-    }),
-
-    // FsShell getmerge graded END-TO-END: merge the text sink's part
-    // files into ONE local file (name order, byte-for-byte), then
-    // read the merged file — same oracle as the sink (merging must
-    // lose/duplicate nothing)
-    "q_getmerge" -> ((s, dir) => {
-      val out = scratchDir(s, "getmergesrc")
-      sources.MultiIO.writeText(
-        t(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
-        out, sep = "\t")
-      val merged = java.nio.file.Paths
-        .get(scratchDir(s, "getmergedst"), "merged.txt")
-      new java.io.File(merged.getParent.toString).mkdirs()
-      sources.MultiIO.getmerge(s, out, merged.toString)
-      s.read.text(merged.toString).select(col("value").as("line"))
-    }),
-
-    // SequenceFileOutput/InputFormat graded END-TO-END (was
-    // spec-only round trip): nation written as a (Text,Text)
-    // SequenceFile via the real Writable sink, read back via the
-    // real SequenceFile source — the binary container is on the
-    // graded path even though the ORACLE reconstructs the rows from
-    // the base table (DuckDB cannot read SequenceFiles; it doesn't
-    // need to — lossless round trip means base-table equality)
-    "q_seqfile_roundtrip" -> ((s, dir) => {
-      val out = scratchDir(s, "seqfile")
-      rmTree(new java.io.File(out)) // saveAsSequenceFile refuses an existing dir
-      sources.MultiIO.writeSequenceFile(
-        t(s, dir, "nation"), "n_nationkey", "n_name", out)
-      sources.MultiIO.readSequenceFile(s, out)
-    }),
-
-    // SequenceFileAsBinary graded END-TO-END: the same rows through
-    // the UNINTERPRETED BytesWritable container (string -> UTF-8
-    // bytes -> BytesWritable -> bytes -> string), proving the binary
-    // path copies Writable buffers out correctly
-    "q_seqfile_binary" -> ((s, dir) => {
-      val out = scratchDir(s, "seqbin")
-      rmTree(new java.io.File(out))
-      sources.MultiIO.writeSequenceFileBinary(
-        t(s, dir, "nation")
-          .select(col("n_nationkey").cast("string").as("k"),
-            col("n_name").as("v")),
-        "k", "v", out)
-      sources.MultiIO.readSequenceFileBinary(s, out)
-        .select(col("key").cast("string").cast("int").as("n_nationkey"),
-          col("value").cast("string").as("n_name"))
-    }),
-
-    // MapFileOutputFormat + getEntry graded END-TO-END: build the
-    // bucketed+sorted artifact (the MapFile analog), then point-look
-    // two keys up through the bucket-pruned path; the oracle selects
-    // the same keys from the base table. The SelectedBucketsCount
-    // plan contract is asserted in ScaleSpec.
-    "q_mapfile_lookup" -> ((s, dir) => {
-      val tbl = "graft_q_mapfile_nation"
-      sources.Bucketing.writeBucketed(
-        t(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
-        tbl, "n_nationkey", buckets = 4)
-      sources.Bucketing.lookup(s, tbl, "n_nationkey", 3L)
-        .unionByName(sources.Bucketing.lookup(s, tbl, "n_nationkey", 14L))
-    }),
-
-    // NLineInputFormat graded END-TO-END (was spec-only): deal the
-    // doc_id-sorted corpus into row-exact 64-line splits, then emit
-    // per-split (count, min, max); the oracle recomputes the dealing
-    // arithmetic from row_number(), so an off-by-one in the split
-    // math or a dropped/duplicated/misrouted row cannot hash-match
-    "q_nline_splits" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-        .orderBy(col("doc_id"))
-      sources.MultiIO.nLineSplit(docs, 64)
-        .withColumn("split_id", spark_partition_id())
-        .groupBy(col("split_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-    }),
-
-    // SortValidator / TeraValidate graded END-TO-END (was spec-only):
-    // total-order sort events by (user_id, event_id), then run the
-    // distributed boundary-checking validator; the verdict row
-    // (globally sorted + every row seen) IS the query result
-    "q_sort_validate" -> ((s, dir) => {
-      val sorted = Sorting.totalOrderSort(
-        t(s, dir, "events").select(col("user_id"), col("event_id")),
-        col("user_id"), col("event_id"))
-      val (ok, n) = Sorting.validateSorted(sorted, Seq("user_id", "event_id"))
-      import s.implicits._
-      Seq((ok, n)).toDF("is_sorted", "checked_rows")
-    }),
-
-    // TotalOrderPartitioner + in-partition sort order graded
-    // END-TO-END: the global rank read off the sorted partitions
-    // themselves (zipWithIndex in partition order — no second sort,
-    // no window) vs the oracle's row_number; a key routed past a
-    // range boundary or an unsorted run shifts every later rank
-    "q_total_order_rank" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val sorted = Sorting.totalOrderSort(
-        t(s, dir, "customer").select(col("c_custkey")), col("c_custkey"))
-      val rows = sorted.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row(r.getLong(0), i + 1L) }
-      s.createDataFrame(rows, StructType(Seq(
-        StructField("c_custkey", LongType, nullable = false),
-        StructField("global_rank", LongType, nullable = false))))
-    }),
-
-    // Salted skew join graded END-TO-END (was spec-only): the salted
-    // plan must preserve exact join multiplicity — the oracle is the
-    // PLAIN join; salts=8 fans the hot suppkey over 8 reducers
-    "q_skew_join" -> ((s, dir) => {
-      val probe = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("s_suppkey"), col("l_orderkey"))
-      val build = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey"))
-      Skew.saltedJoin(probe, build, "s_suppkey", salts = 8)
-        .groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("cnt"), sum(col("l_orderkey")).as("key_sum"))
-    }),
-
-    // Counters graded END-TO-END (was spec-only): observe-metric
-    // counters accumulated DURING one pass (no second scan), read
-    // back after the action and emitted as rows; the oracle
-    // recomputes both counts declaratively
-    "q_counters" -> ((s, dir) => {
-      val name = "graft.q_counters"
-      val obs = Counters.observed(
-        t(s, dir, "documents").select(col("lang")), name,
-        "records" -> count(lit(1)),
-        "english" -> count(when(col("lang") === "en", lit(1))))
-      obs.write.format("noop").mode("overwrite").save()
-      // listener delivery is async — poll (bounded) like the specs do
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var row = Counters.lastObserved(s, name)
-      while (row.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(20); row = Counters.lastObserved(s, name)
-      }
-      val r = row.getOrElse(
-        sys.error("q_counters: observed metrics never delivered"))
-      import s.implicits._
-      Seq(("english", r.getAs[Long]("english")),
-        ("records", r.getAs[Long]("records"))).toDF("counter", "value")
-    }),
-
-    // StreamInputFormat custom-delimiter analog graded END-TO-END
-    // (was spec-only): records separated by 0x07 instead of newline,
-    // written and read through the lineSep option; oracle = the same
-    // line reconstruction as q_text_sink
-    "q_linesep" -> ((s, dir) => {
-      val out = scratchDir(s, "linesep")
-      t(s, dir, "nation")
-        .select(concat_ws("\t", col("n_nationkey").cast("string"),
-          col("n_name")).as("value"))
-        .write.mode("overwrite").option("lineSep", "\u0007").text(out)
-      s.read.option("lineSep", "\u0007").text(out)
-        .select(col("value").as("line"))
-    }),
-
-    // Sorted-copartitioned (bucketed, zero-Exchange) join graded
-    // END-TO-END (was plan-asserted only): both sides written
-    // bucketed on the join key, joined through the bucket contract,
-    // against the plain-join oracle — a bucket-routing mismatch
-    // between writer and join silently drops rows, which the
-    // base-join oracle catches
-    "q_bucketed_join" -> ((s, dir) => {
-      sources.Bucketing.writeBucketed(
-        t(s, dir, "orders").select(col("o_custkey").as("custkey"),
-          col("o_orderkey")),
-        "graft_q_bj_orders", "custkey", buckets = 8)
-      sources.Bucketing.writeBucketed(
-        t(s, dir, "customer").select(col("c_custkey").as("custkey"),
-          col("c_mktsegment")),
-        "graft_q_bj_customer", "custkey", buckets = 8)
-      sources.Bucketing.bucketedJoin(s, "graft_q_bj_orders",
-        "graft_q_bj_customer", "custkey")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("cnt"), max(col("o_orderkey")).as("max_order"))
-    }),
-
-    // ReduceValuesIterator graded END-TO-END (was spec-only): the
-    // reducer sees each group's values as a SORTED STREAM — graded
-    // by an order-sensitive fold (first three order keys, in order,
-    // plus the run length) that any buffering or ordering bug breaks
-    "q_reduce_values" -> ((s, dir) => {
-      import s.implicits._
-      val orders = t(s, dir, "orders").select(col("o_custkey"),
-        col("o_orderkey"))
-      Sorting.reduceSortedGroups[(Long, String, Long)](
-        orders, Seq("o_custkey"), Seq(col("o_orderkey"))) { (key, rows) =>
-        val first = new scala.collection.mutable.ArrayBuffer[Long](3)
-        var n = 0L
-        rows.foreach { r =>
-          if (n < 3) first += r.getLong(1)
-          n += 1
-        }
-        Iterator.single((key.head.asInstanceOf[Long], first.mkString(","), n))
-      }.toDF("o_custkey", "first_orders", "n_orders")
-    }),
-
-    // MultipleOutputFormat / partitionedWrite graded END-TO-END:
-    // nation written partitioned by region (one directory per key —
-    // the reference's generateFileNameForKeyValue layout), read back
-    // whole; the partition column round-trips through directory
-    // names, cast back to its base type for the hash
-    "q_partitioned_sink" -> ((s, dir) => {
-      val out = scratchDir(s, "partsink")
-      sources.MultiIO.partitionedWrite(
-        t(s, dir, "nation").select(col("n_nationkey"), col("n_name"),
-          col("n_regionkey")),
-        out, Seq("n_regionkey"))
-      s.read.parquet(out).select(col("n_nationkey"), col("n_name"),
-        col("n_regionkey").cast("int"))
-    }),
-
-    // small-file compaction graded END-TO-END: nation written as
-    // many tiny files per region dir, compacted (only violating dirs
-    // rewritten, one file each at this size), the COMPACTED table
-    // read back whole against the base-table oracle — a dropped,
-    // duplicated, or cross-partition-leaked row cannot hash-match
-    "q_compaction" -> ((s, dir) => {
-      val out = scratchDir(s, "compact")
-      t(s, dir, "nation").select(col("n_nationkey"), col("n_name"),
-          col("n_regionkey"))
-        .repartition(6)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("n_regionkey").parquet(out)
-      val report = sources.Compaction.compact(s, out)
-      require(report.filter(col("rewritten")).count() > 0,
-        "compaction fixture produced no violating partition")
-      s.read.parquet(out).select(col("n_nationkey"), col("n_name"),
-        col("n_regionkey").cast("int"))
-    }),
-
-    // physical delete-by-key graded END-TO-END: customer written as
-    // several files, three keys deleted (only hit files rewritten —
-    // the pushdown hit scan + per-file surgery), the table read back
-    // whole against a NOT IN oracle — an over- or under-deleted row
-    // cannot hash-match
-    "q_delete_keys" -> ((s, dir) => {
-      val out = scratchDir(s, "redact")
-      t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-        .repartition(6)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-      val report = sources.Redaction.deleteKeys(s, out, "c_custkey",
-        Seq(1L, 2L, 3L))
-      require(report.count() > 0, "delete fixture hit no file")
-      s.read.parquet(out).select(col("c_custkey"), col("c_name"))
-    }),
-
-    // DistCp graded END-TO-END: the partitioned layout copied
-    // partition-parallel (layout preserved), the COPY read back
-    // against the base-table oracle — a dropped or duplicated
-    // partition cannot hash-match
-    "q_distcp" -> ((s, dir) => {
-      val src = scratchDir(s, "distcp-src")
-      val dst = scratchDir(s, "distcp-dst")
-      sources.MultiIO.partitionedWrite(
-        t(s, dir, "nation").select(col("n_nationkey"), col("n_name"),
-          col("n_regionkey")),
-        src, Seq("n_regionkey"))
-      sources.MultiIO.distcp(s, src, dst, Seq("n_regionkey"))
-      s.read.parquet(dst).select(col("n_nationkey"), col("n_name"),
-        col("n_regionkey").cast("int"))
-    }),
-
-    // DBOutputFormat + DBInputFormat graded END-TO-END against a
-    // REAL embedded database (Derby, in-JVM): batched INSERTs out,
-    // whole-table read back, base-table oracle — the SQL type
-    // round trip (INTEGER/CLOB) is on the graded path
-    "q_jdbc_roundtrip" -> ((s, dir) => {
-      System.setProperty("derby.stream.error.field",
-        "java.lang.System.err") // no derby.log in CWD
-      val url = s"jdbc:derby:${scratchDir(s, "derby")}/db;create=true"
-      sources.Jdbc.write(
-        t(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
-        url, "NATION_RT", org.apache.spark.sql.SaveMode.Overwrite)
-      sources.Jdbc.read(s, url, "NATION_RT")
-        .select(col("n_nationkey"), col("n_name"))
-    }),
-
-    // HAR graded END-TO-END: one small file per nation row packed
-    // into the archive (concatenated part blobs + parquet index),
-    // then EVERY file read back through the ranged part reader and
-    // decoded — pack, index, seek arithmetic, and byte fidelity all
-    // on the hash-checked path. The driver materializes the 25
-    // source files (nation is a fixed-size dimension; O(rows) only
-    // for this bounded table — harPack itself is driver-metadata +
-    // task-side bytes at any scale).
-    "q_har_roundtrip" -> ((s, dir) => {
-      val src = scratchDir(s, "harsrc")
-      val dst = scratchDir(s, "hardst")
-      rmTree(new java.io.File(src)); rmTree(new java.io.File(dst))
-      new java.io.File(src).mkdirs()
-      t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-        .collect().foreach { r =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(src, s"f_${r.getInt(0)}.txt"),
-            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-      sources.MultiIO.harPack(s, src, dst)
-      sources.MultiIO.readHar(s, dst)
-        .select(regexp_extract(col("path"), "f_(\\d+)\\.txt", 1)
-            .cast("int").as("n_nationkey"),
-          col("bytes").cast("string").as("n_name"))
-    }),
-
-    // MultipleOutputs graded END-TO-END: one pass fanning nation
-    // into two named sinks (region parity), both read back and
-    // re-unioned — a row routed to the wrong sink, dropped, or
-    // double-written cannot hash-match the base table
-    "q_multiple_outputs" -> ((s, dir) => {
-      val base = scratchDir(s, "multiout")
-      sources.MultiIO.multipleOutputs(
-        t(s, dir, "nation").select(col("n_nationkey"), col("n_name"),
-          col("n_regionkey")),
-        Map(
-          "even" -> ((d: DataFrame) => d.filter(col("n_regionkey") % 2 === 0),
-            s"$base/even"),
-          "odd" -> ((d: DataFrame) => d.filter(col("n_regionkey") % 2 === 1),
-            s"$base/odd")))
-      s.read.parquet(s"$base/even")
-        .unionByName(s.read.parquet(s"$base/odd"))
-    }),
-
-    // DistCh (distributed chmod/chown batch): recursive owner/perm
-    // edits over the modeled namespace, ordered ops with later-wins
-    // overlap — here "/corpus" re-owned wholesale, then src1's tree
-    // overridden, plus a perm-only op leaving owners alone
-    "q_distch" -> ((s, dir) =>
-      meta.Catalog.distCh(
-        meta.Catalog.fromDocuments(t(s, dir, "documents"))
-          .withColumn("owner", lit("root"))
-          .withColumn("perm", lit("644")),
-        Seq(meta.Catalog.ChOp("/corpus", owner = Some("etl")),
-          meta.Catalog.ChOp("/corpus/src1", owner = Some("curator"),
-            perm = Some("600")),
-          meta.Catalog.ChOp("/corpus/src2", perm = Some("400"))))
-        .select(col("path"), col("owner"), col("perm"))),
-
-    // Logalyzer (grep + column-sort over logs): whole lines matching
-    // the pattern with occurrence counts — doc text stands in for
-    // log lines; dedup'd lines sum their counts
-    "q_logalyze" -> ((s, dir) =>
-      operators.TextOps.logalyze(t(s, dir, "documents"),
-        col("text"), "data", sortCols = Seq(0))),
-
-    // vaidya analog (post-hoc job diagnostics): run a deliberately
-    // pathological pipeline — an md5-wrapped filter that defeats
-    // pushdown, a 99%-hot-key repartition, a broadcast nested-loop
-    // cross join — and grade the advisor's triggered rule set. Only
-    // the scale-invariant rules are graded (small_files_scan etc.
-    // legitimately depend on the fixture's file layout); the oracle
-    // is the constant triggered set. AQE is pinned off for the
-    // fixture: coalesced/skew-split partitions would change the
-    // task-level statistics the skew rule reads (diagnose is eager,
-    // so the conf is restored before any other query plans).
-    "q_advisor" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val ev = t(s, dir, "events")
-          .filter(substring(md5(col("event_id").cast("string")), 1, 1)
-            === "0")
-        val sk = ev.withColumn("k",
-            when(col("event_id") % 100 === 0, col("event_id"))
-              .otherwise(lit(0L)))
-          .repartition(col("k"))
-        val fixture = sk.crossJoin(
-          broadcast(t(s, dir, "region").select(col("r_regionkey"))))
-        // second fixture: an exact COUNT(DISTINCT) over the whole
-        // events scan — the state-blowup pattern the new rule
-        // prescribes the sketch panel for. distinctRows=1000 puts
-        // every test scale >= 4x the threshold, so the severity
-        // band is scale-invariant (impact pins at 1.0).
-        val distinctFx = t(s, dir, "events")
-          .groupBy(col("event_type"))
-          .agg(countDistinct(col("user_id")).as("d"))
-        meta.Advisor.diagnose(fixture)
-          .filter(col("rule").isin("balanced_shuffle_partitioning",
-            "cartesian_join", "unpushed_filter"))
-          .unionByName(
-            meta.Advisor.diagnose(distinctFx, distinctRows = 1000L)
-              .filter(col("rule") === "exact_distinct_at_scale"))
-          .select(col("rule"), col("severity"))
-          .distinct()
-      } finally s.conf.set("spark.sql.adaptive.enabled", prev)
-    }),
-
-    // ---- L4: dedup --------------------------------------------------
-    "q_dedup_exact" -> ((s, dir) =>
-      functions.Dedup.exactDupClasses(t(s, dir, "documents"),
-        col("doc_id"), col("text"))),
-
-    // quality-aware near-dup retention: transitive classes from the
-    // exact pair graph, survivor = best score per CLASS (not min id),
-    // unpaired docs pass — the "keep the clean re-scrape" policy
-    "q_keep_best_neardup" -> ((s, dir) =>
-      functions.Dedup.nearDupDedupBest(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("text"),
-            (col("doc_id") % 7).as("score")),
-        col("doc_id"), col("text"), col("score"),
-        shingleN = 3, threshold = 0.5)
-        .select(col("doc_id"), col("score"))),
-
-    // corpus snapshot diff: old = ids not divisible by 5, new = ids
-    // not divisible by 3 with every 7th text rewritten — every status
-    // class populated, fingerprint-level change detection
-    "q_snapshot_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val oldV = docs.filter(col("doc_id") % 5 =!= 0)
-      val newV = docs.filter(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0,
-            concat(col("text"), lit(" revised"))).otherwise(col("text"))
-            .as("text"))
-      functions.Dedup.snapshotDiff(oldV, newV, col("doc_id"), col("text"))
-    }),
-
-    // quality-aware retention: same duplicate classes as
-    // q_dedup_exact, but the survivor is the BEST-scoring member
-    // (score = doc_id % 7, a deterministic stand-in that disagrees
-    // with min-id inside the fixture's planted dup classes — the
-    // policy difference is observable), ties -> smallest id
-    "q_keep_best" -> ((s, dir) =>
-      functions.Dedup.keepBest(t(s, dir, "documents")
-          .select(col("doc_id"), col("text"),
-            (col("doc_id") % 7).as("score")),
-        col("doc_id"), col("text"), col("score"))
-        .select(col("doc_id"), col("score"))),
-
-    // sub-document dedup: 5-token segments deduped corpus-wide,
-    // first (doc_id, seg_idx) occurrence wins, survivors reassembled
-    "q_segment_dedup" -> ((s, dir) =>
-      functions.Dedup.segmentDedup(t(s, dir, "documents"),
-        col("doc_id"), col("text"), segTokens = 5)),
-
-    // incremental ingest dedup: a delta (doc_id % 4 >= 2 — the split
-    // is sf-independent) deduped within itself AND against the
-    // standing corpus's fingerprint set; the corpus is probed, never
-    // re-shuffled
-    "q_delta_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val corpusFps = docs.filter(col("doc_id") % 4 < 2 &&
-          col("text").isNotNull)
-        .select(functions.TextAnalysis.fingerprint(col("text")).as("fp"))
-        .distinct()
-      functions.Dedup.deltaDedup(docs.filter(col("doc_id") % 4 >= 2),
-          col("doc_id"), col("text"), corpusFps)
-        .select(col("doc_id"))
-    }),
-
-    // bloom-prefiltered twin of q_delta_dedup: same corpus/delta
-    // split, same EXACT semantics (bloom positives verified by the
-    // anti-join, negatives skip it map-side) — graded against the
-    // identical oracle
-    "q_delta_dedup_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val corpusFps = docs.filter(col("doc_id") % 4 < 2 &&
-          col("text").isNotNull)
-        .select(functions.TextAnalysis.fingerprint(col("text")).as("fp"))
-        .distinct()
-      functions.Dedup.deltaDedupBloom(docs.filter(col("doc_id") % 4 >= 2),
-          col("doc_id"), col("text"), corpusFps, fpp = 0.01)
-        .select(col("doc_id"))
-    }),
-
-    "q_ngram_jaccard" -> ((s, dir) =>
-      functions.Dedup.ngramJaccardPairs(t(s, dir, "documents"),
-        col("doc_id"), col("text"), shingleN = 3, threshold = 0.5)),
-
-    // asymmetric containment near-dup (quote/subset detection —
-    // |A∩B|/|A| high where Jaccard is tiny); threshold 0.5 so the
-    // fixture's partial-overlap planted dups surface
-    "q_containment" -> ((s, dir) =>
-      functions.Dedup.containmentPairs(t(s, dir, "documents"),
-        col("doc_id"), col("text"), shingleN = 3, threshold = 0.5)),
-
-    // min-side-prefix EXACT containment (the routed scale path at
-    // t >= 0.7): candidates only from each doc's rarest shingles
-    // joined against the full index, exact sorted-set rerank — TRUE
-    // pair set on full shingle sets, no df cap
-    "q_containment_prefix" -> ((s, dir) =>
-      functions.Dedup.containmentPairs(t(s, dir, "documents"),
-        col("doc_id"), col("text"), shingleN = 3, threshold = 0.8)),
-
-    // prefix-filtered EXACT Jaccard (PPJoin-style): candidates only
-    // from each doc's globally-rarest shingles, then exact rerank —
-    // same answer as q_ngram_jaccard at a candidate count that
-    // shrinks as the threshold rises; the graded scale twin for the
-    // exact (non-LSH) near-dup path
-    "q_ngram_prefix" -> ((s, dir) =>
-      functions.Dedup.prefixJaccardPairs(t(s, dir, "documents"),
-        col("doc_id"), col("text"), shingleN = 3, threshold = 0.5)),
-
-    // pre-flight candidate-population report (the sf10 campaign's
-    // lesson made a product operator): per threshold, the prefix
-    // index size and the exact-family candidate bounds — aggregation
-    // only, safe at scales where the pair joins themselves are not
-    "q_blocking_stats" -> ((s, dir) =>
-      functions.Dedup.blockingStats(t(s, dir, "documents"),
-        col("doc_id"), col("text"), shingleN = 3,
-        thresholds = Seq(0.5, 0.8, 0.9))),
-
-    // span-level duplication diagnostic: per doc, the fraction of
-    // 5-gram positions whose gram occurs in >= 2 distinct docs — the
-    // cross-doc boilerplate signal exact-substring dedup keys on
-    "q_dup_spans" -> ((s, dir) =>
-      functions.Dedup.duplicateSpanStats(t(s, dir, "documents"),
-        col("doc_id"), col("text"), n = 5)),
-
-    // which sources are re-scrapes of each other: shared distinct
-    // 5-gram count + gram-set Jaccard per source pair — output is
-    // |sources|² rows max, never document pairs
-    "q_source_overlap" -> ((s, dir) =>
-      functions.Dedup.sourceOverlap(t(s, dir, "documents"),
-        col("source"), col("text"), n = 5)),
-
-    // deterministic 4-fold assignment (cross-validation shards): a
-    // pure function of (doc_id, seed), re-derivable by any engine
-    "q_kfold" -> ((s, dir) =>
-      functions.Sampling.kFold(
-        t(s, dir, "documents").select(col("doc_id")),
-        col("doc_id"), k = 4)),
-
-    // "keep the best 20%" as a global RANK cut (one range exchange,
-    // no zero-partition percent_rank window); score = token count,
-    // tie-broken on doc_id; survivors carry their curriculum rank
-    "q_quality_gate" -> ((s, dir) =>
-      functions.Sampling.topFraction(
-        t(s, dir, "documents").select(col("doc_id"),
-          functions.TextAnalysis.tokenCount(col("text")).cast("long")
-            .as("n_tokens")),
-        Seq(col("n_tokens").desc, col("doc_id")), frac = 0.2)),
-
-    // first-touch conversion funnel view -> click -> purchase with a
-    // 1-day per-step window (ts is epoch-ns; window in ns)
-    "q_funnel" -> ((s, dir) =>
-      operators.Temporal.funnel(t(s, dir, "events"), col("user_id"),
-        col("ts"), col("event_type"),
-        Seq("view", "click", "purchase"), window = 86400000000000L)),
-
-    // retention cohort matrix: weekly buckets over the 30-day event
-    // window — cohort = first active week, one row per
-    // (cohort, period) with active-user counts
-    "q_retention" -> ((s, dir) =>
-      operators.Temporal.retentionCohorts(t(s, dir, "events"),
-        col("user_id"), col("ts"), bucket = 604800000000000L)),
-
-    // pairwise candidates -> transitive duplicate classes (a≈b, b≈c
-    // must form ONE class); min-label propagation vs the oracle's
-    // recursive-CTE closure over the same pair set
-    "q_dedup_classes" -> ((s, dir) =>
-      functions.Dedup.connectedComponents(
-        functions.Dedup.ngramJaccardPairs(t(s, dir, "documents"),
-          col("doc_id"), col("text"), shingleN = 3, threshold = 0.5))),
-
-    // bands = numHashes ⇒ candidates ⊇ every pair sharing any min
-    // value; a pair at J >= 0.5 escapes with p = 0.5^16 ≈ 1.5e-5, and
-    // the exact-Jaccard rerank makes the output identical to the
-    // q_ngram_jaccard set — which is exactly the oracle used here
-    // (equality verified empirically at sf0.01 AND sf0.1 — the only
-    // graded corpora, and sf0.001 shares sf0.01's documents; seeded
-    // hashes make it deterministic). Preconditions, checked in
-    // DedupSpec: no shingle df exceeds the oracle's maxDf prune, so
-    // both sides score jaccard over the same shingle space.
-    "q_minhash_lsh" -> ((s, dir) =>
-      functions.Dedup.minhashNearDups(t(s, dir, "documents"),
-        col("doc_id"), col("text"), shingleN = 3, numHashes = 16,
-        bands = 16, threshold = 0.5)),
-
-    // PRODUCTION banding: numHashes=16 in bands=8 ⇒ r=2 rows per
-    // band — buckets key on PAIRS of min values, the operating point
-    // a 100 TB run uses (r=1 buckets saturate on any single shared
-    // min value; r=2 candidate mass tracks true-pair mass). Graded
-    // as a recall-AND-precision witness against the exact pair set:
-    // one row per exact J>=0.5 pair with found=1 iff the banded path
-    // surfaced it, via a full outer join — a recall miss emits
-    // found=0 and a spurious banded pair an unmatched row, both
-    // hash-mismatches, so neither can hide behind the bucket cap.
-    // With the seeded hash family every exact pair on the graded
-    // corpora lands in >=1 shared (band, bucket) (verified at
-    // sf0.01 / sf0.1 / sf1), hence the oracle's constant found=1.
-    // Plan note (r17): the banded side joins the CANDIDATE set, not
-    // minhashNearDups' reranked output — provably the same rows. The
-    // banded output is by construction candidates ∩ {J >= 0.5} on the
-    // SAME hashed shingle sets and round(.,4) the exact side scores
-    // (rerankExact is the shared kernel), so banded ⊆ exact: the old
-    // full_outer could never emit a banded-only row, and for every
-    // exact pair "banded found it" ⟺ "it is a candidate". Joining
-    // candidates directly skips the banded branch's second tokenize/
-    // pin/rerank pass (2 shuffle-hash joins + a corpus scan) while
-    // the graded recall witness — found=0 on any exact pair the
-    // banding misses — is computed identically. Equivalence verified
-    // against the unchanged DuckDB oracle at sf0.01/sf0.1.
-    "q_minhash_banded" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val cands = functions.Dedup.lshCandidates(
-        functions.Dedup.minhashSignature(docs, col("doc_id"), col("text"),
-          shingleN = 3, numHashes = 16), bands = 8)
-        .withColumn("__hit", lit(1))
-      val exact = functions.Dedup.ngramJaccardPairs(docs,
-        col("doc_id"), col("text"), shingleN = 3, threshold = 0.5)
-      exact.join(cands, Seq("id_a", "id_b"), "left_outer")
-        .select(col("id_a"), col("id_b"), col("jaccard"),
-          when(col("__hit").isNotNull, lit(1)).otherwise(lit(0))
-            .as("found"))
-    }),
-
-    // xxhash64-based signature — no external engine can recompute it,
-    // so this is the self-validating form (SortValidator pattern):
-    // chunk-blocked pairs vs the exact brute-force Hamming join, one
-    // witness row whose invariants the oracle states as constants.
-    // Radius 4 is the operating point: the seeded near-dup pairs sit
-    // at hamming <= 5 (median 2-3), while a wider radius stops being
-    // a near-dup query at all (12 admits ~8% of ALL pairs on this
-    // corpus — natural-language simhashes cluster far below the
-    // random-64-bit mean of 32) and forces 5-bit blocking chunks
-    // whose buckets approach all-pairs. 5 chunks of ~13 bits keep
-    // the pigeonhole recall-1.0 guarantee with selective keys. The
-    // exact witness joins a 500-doc hash stratum against the FULL
-    // corpus (broadcast, map-side, O(500·n)), so the graded path has
-    // NO quadratic stage — and because only ONE endpoint must land
-    // in the stratum, witness pairs survive at ~500·pairDensity,
-    // constant as the corpus grows (a both-endpoint stratum decays
-    // as rate² and would go vacuous at large sf). non_empty=true
-    // verified at all three graded sfs.
-    "q_simhash" -> ((s, dir) =>
-      functions.Dedup.simhashValidate(t(s, dir, "documents"),
-        col("doc_id"), col("text"), maxHamming = 4)),
-
-    // ---- L4: similarity search --------------------------------------
-    "q_embed_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      functions.Similarity.bruteForceTopK(
-        e, col("vec_id"), col("embedding"),
-        e.filter(col("vec_id") < 3), col("vec_id"), col("embedding"),
-        k = 10)
-    }),
-
-    // model-free text embedding (feature hashing): md5-bucketed
-    // token counts, L2-normalized, fed straight into the cosine
-    // top-k stack — grades the text -> vector bridge end-to-end
-    // (fixture docs all tokenize non-empty, so the oracle can build
-    // vectors from the sparse counts alone)
-    "q_hash_embed" -> ((s, dir) => {
-      val emb = functions.TextAnalysis.hashEmbedding(
-        t(s, dir, "documents"), col("doc_id"), col("text"), dim = 16)
-      functions.Similarity.bruteForceTopK(
-        emb, col("doc_id"), col("embedding"),
-        emb.filter(col("doc_id") < 3), col("doc_id"), col("embedding"),
-        k = 5)
-    }),
-
-    // hard-negative mining: per query, top-10 most-similar vectors
-    // whose LABEL disagrees — the contrastive-training counterpart
-    // of q_embed_topk
-    "q_hard_negatives" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      functions.Similarity.hardNegatives(
-        e, col("vec_id"), col("embedding"), col("label"),
-        e.filter(col("vec_id") < 3), col("vec_id"), col("embedding"),
-        col("label"), k = 10)
-    }),
-
-    // embedding drift monitor: per-label prototype cosine between
-    // the even-id and odd-id halves of the corpus (two pseudo-
-    // snapshots) — near 1 for a stationary distribution
-    "q_embed_drift" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      functions.Similarity.prototypeDrift(
-        e.filter(col("vec_id") % 2 === 0),
-        e.filter(col("vec_id") % 2 === 1),
-        col("embedding"), col("label"))
-    }),
-
-    // nearest-class-mean classification: integer micro-unit label
-    // prototypes (exact, order-independent sums — engine-portable
-    // where a float mean is not), every vector assigned to its
-    // nearest prototype
-    "q_prototype" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      functions.Similarity.prototypePredict(
-        e, col("embedding"), col("label"),
-        e, col("vec_id"), col("embedding"))
-    }),
-
-    // exact-cosine near-dup pairs in the WEAK-similarity regime
-    // (0.4–0.6 — no LSH blocks it efficiently), graded SUBLINEARLY:
-    // every pair with >= 1 endpoint in a 500-vector md5-hash stratum
-    // is scored exactly against the FULL corpus (stratum broadcast,
-    // O(500·n) map-side — the last O(n²) graded plan, now gone; the
-    // full quadratic bruteForcePairs stays a library baseline for
-    // dim-sized inputs). One-sided membership keeps the witness
-    // density CONSTANT as the corpus grows; the oracle rederives the
-    // stratum from the same engine-portable md5 predicate and
-    // brute-forces only stratum × corpus.
-    "q_embed_neardup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      functions.Similarity.stratumPairs(e, col("vec_id"), col("embedding"),
-        threshold = 0.4, witnessSize = 500)
-    }),
-
-    // the SCALE path graded for set equality against a brute-force
-    // oracle: banded-LSH embedding near-dup over the planted-twin
-    // corpus (every vector + a jittered copy at cos ≈ 0.999997; see
-    // plantedEmbeddings — DuckDB rederives the corpus bit-for-bit and
-    // brute-forces the true pair set). Threshold 0.9 sits in the
-    // planted/natural separation (max natural cos ≈ 0.60), where
-    // LSH's contract holds: per-bit collision p = 1 − θ/π ≈ 0.99927
-    // at θ ≈ 0.0023 rad, so a 16-bit band collides at p^16 ≈ 0.988
-    // and missing all 4 bands is (1−0.988)^4 ≈ 2e-8 per pair —
-    // verified exact equality (0 missed / 0 extra) at sf0.001, 0.01
-    // AND 0.1, deterministic because signatures and jitter are both
-    // pure content hashes. q_embed_neardup remains the exact O(n²)
-    // baseline for the weak-similarity regime (cos 0.4–0.6) that no
-    // LSH blocks efficiently; THIS query grades the plan you'd run
-    // at 100×.
-    "q_embed_blocked" -> ((s, dir) =>
-      functions.Similarity.embeddingNearDups(
-        plantedEmbeddings(t(s, dir, "embeddings")),
-        col("vec_id"), col("cv"), threshold = 0.9)),
-
-    // SemDeDup end-to-end: cluster-partitioned pair discovery +
-    // transitive closure + keep-one, on the corpus ∪ an exact copy
-    // of itself (ids +1M). EXACT twins, not jittered: identical
-    // vectors get identical centroid assignments, so co-clustering
-    // is deterministic at every sf — a jittered twin within ~1e-3 of
-    // a k-means boundary can land across it (the method's inherent
-    // approximation; at 20k twins a few hundred would split), which
-    // is exactly the regime the oracle-equality gate must NOT depend
-    // on. The oracle closes the GLOBAL ≥0.98 pair graph (recursive
-    // CTE) and keeps class minima; no natural pair reaches 0.98
-    // (fixture same-label mean cos ≈ 0.021). The jittered/split
-    // regime is covered by q_embed_blocked's banded-LSH path, whose
-    // miss probability is scale-independent.
-    "q_semdedup" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("cv"))
-      val corpus = base.unionByName(
-        base.select((col("vec_id") + lit(1000000L)).as("vec_id"), col("cv")))
-      // SemDeDup's published recipe sizes nlist WITH the corpus
-      // (constant ~8k-vector clusters keep the within-cluster
-      // quadratic flat as n grows — nlist is the dial, per the
-      // semDedup scaladoc). Both graded scales resolve to the
-      // historical nlist = 8 (sf0.01: 1k, sf1: 40k corpus vectors);
-      // past ~65k vectors the formula starts scaling cluster COUNT
-      // instead of cluster size. Oracle safety is unchanged at any
-      // nlist: exact twins always co-cluster, and no natural pair
-      // reaches 0.98 (checked by DuckDB brute force at sf ≤ 1;
-      // ~7.7σ per pair on unit-norm 64-d Gaussians above that).
-      val nlist = math.max(8L, 2L * base.count() / 8192L).toInt
-      functions.Similarity.semDedup(corpus,
-        col("vec_id"), col("cv"), nlist = nlist, threshold = 0.98)
-    }),
-
-    // IVF probe with nprobe = nlist: every cluster is scanned, so the
-    // result provably equals brute-force top-k — a full hash-checked
-    // oracle over the whole index/assign/probe machinery (pruned
-    // nprobe < nlist recall is gated separately in IvfSpec).
-    "q_embed_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (indexed, cents) = functions.Ivf.index(e, col("vec_id"),
-        col("embedding"), k = 16, iters = 1)
-      functions.Ivf.topK(indexed, cents,
-        e.filter(col("vec_id") < 5), col("vec_id"), col("embedding"),
-        k = 5, nprobe = 16)
-    }),
-
-    // the same IVF machinery as a PERSISTED artifact — the
-    // build-once/probe-many shape a 100 TB ANN deployment runs:
-    // index written cluster-partitioned to parquet (+ the O(nlist)
-    // centroid table beside it), probe reads it back from disk; a
-    // pruned probe scans only its nprobe partitions (IvfSpec asserts
-    // the partition-pruned plan), and nprobe = nlist here makes the
-    // result provably brute-force-equal so the oracle hash-checks
-    // the full write/read/probe round trip. artifactWriteNanos
-    // splits the bench record like q_zorder_box's.
-    "q_embed_ivf_disk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val out = scratchDir(s, "ivf")
-      val (indexed, cents) = functions.Ivf.index(e, col("vec_id"),
-        col("embedding"), k = 16, iters = 1)
-      val tw0 = System.nanoTime()
-      functions.Ivf.writePartitioned(indexed, s"$out/index")
-      cents.write.mode("overwrite").parquet(s"$out/centroids")
-      artifactWriteNanos.addAndGet(System.nanoTime() - tw0)
-      functions.Ivf.topK(s.read.parquet(s"$out/index"),
-        s.read.parquet(s"$out/centroids"),
-        e.filter(col("vec_id") < 5), col("vec_id"), col("embedding"),
-        k = 5, nprobe = 16)
-    }),
-
-    // classification by retrieval: each query vector takes the
-    // majority label of its 7 nearest neighbors (exact cosine,
-    // smaller-label tie-break)
-    "q_knn_predict" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      functions.Similarity.knnPredict(
-        e, col("vec_id"), col("embedding"), col("label"),
-        e.filter(col("vec_id") < 20), col("vec_id"), col("embedding"),
-        k = 7)
-    }),
-
-    // int8-quantized approximate scan + exact float rerank: with
-    // overfetch 4 the true top-5 survive the approximate cut (the
-    // quantization error at 64 dims is ~1% of the score), so the
-    // output EQUALS brute-force top-k and the oracle is the same
-    // full ranking SQL — the whole quantize/score/rerank pipeline is
-    // hash-checked row-for-row.
-    "q_embed_quantized" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      functions.Similarity.quantizedTopK(
-        e, col("vec_id"), col("embedding"),
-        e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-        k = 5, overfetch = 4)
-    }),
-
-    // hyperplane-hash buckets are xxhash64-based (not SQL-portable),
-    // so the gate is self-validating: per-query recall@k of the
-    // multiprobe ANN against brute force, every query must clear the
-    // floor the oracle states as a constant. The synthetic embeddings
-    // have no true near-neighbor structure (max pairwise cos ≈ 0.5 —
-    // the "neighbors" are near-orthogonal, the regime LSH is worst
-    // at), so the graded config trades pruning for a gate that
-    // BITES: radius 3 probes 15 of 16 buckets and the measured min
-    // recall is exactly 4/5 at sf0.01 AND sf0.1 (sf0.001 shares
-    // sf0.01's embeddings; signatures are hash-deterministic, so the
-    // measurement is stable). Floor 0.8 means a signature/probe/rank
-    // regression that costs even one hit on the worst query
-    // hash-mismatches — vs the old 0.4 floor a halved recall could
-    // slip past. Real corpora with actual near-dup structure run
-    // higher bits with small radius (FunctionsSpec's banded recall
-    // gate covers that regime with seeded near-identical vectors).
-    "q_embed_ann" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val ann = functions.Similarity.lshTopK(
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"),
-        k = 5, bits = 4, probeRadius = 3)
-      val exact = functions.Similarity.bruteForceTopK(
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"), k = 5)
-      functions.Similarity.annRecallGate(ann, exact, k = 5, floor = 0.8)
-    }),
-
-    // product quantization (Pq.adcTopK): 16 one-byte codes per
-    // 64-dim vector (a 16× smaller scan than float, 4× smaller than
-    // int8), ADC lookup-table scoring, exact rerank of the
-    // candidates. Candidates scale with the corpus (≈4% of n, the
-    // q_semdedup nlist pattern), so the recall gate is tight at BOTH
-    // verified scales: measured min recall is exactly 3/5 at sf0.01
-    // (n=500, overfetch 8) and at sf1 (n=50k, overfetch 400) on
-    // these near-orthogonal synthetic embeddings — PQ's worst
-    // regime, like LSH's (q_embed_ann). Floor 0.6 = the measured
-    // min: losing ONE hit on the worst query fails the gate. Real
-    // near-dup structure retrieves top-1 exactly (PqSpec's planted
-    // pairs).
-    "q_embed_pq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val k = 5
-      val overfetch = math.max(8L, e.count() / (25L * k)).toInt
-      val pq = functions.Pq.adcTopK(e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"),
-        k = k, m = 16, ksub = 16, overfetch = overfetch, iters = 2)
-      val exact = functions.Similarity.bruteForceTopK(
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"), k = k)
-      functions.Similarity.annRecallGate(pq, exact, k = k, floor = 0.6)
-    }),
-
-    // IVF-PQ (IvfPq.index/topK): coarse clusters prune WHICH vectors
-    // are scanned (nprobe 8 of nlist 16), PQ codes compress WHAT is
-    // scanned (16 B residual code words), and the score splits
-    // exactly as dot(q,c) + ADC(residual). Residual encoding lifts
-    // the measured min recall to 4/5 at sf0.01 and 5/5 at sf1 (vs
-    // flat PQ's 3/5 at the same code budget) — floor 0.8 = the
-    // measured min; one lost hit on the worst query fails.
-    "q_embed_ivfpq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val k = 5
-      val overfetch = math.max(8L, e.count() / (25L * k)).toInt
-      val (index, cents, cb) = functions.IvfPq.index(
-        e, col("vec_id"), col("embedding"), nlist = 16, m = 16, ksub = 16)
-      val got = functions.IvfPq.topK(index, cents, cb,
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"),
-        k = k, m = 16, ksub = 16, nprobe = 8, overfetch = overfetch)
-      val exact = functions.Similarity.bruteForceTopK(
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"), k = k)
-      functions.Similarity.annRecallGate(got, exact, k = k, floor = 0.8)
-    }),
-
-    // the full IVF-PQ artifact set PERSISTED (IvfPq.writeIndex /
-    // readIndex): code index partitioned by cluster + centroid +
-    // residual-codebook tables on parquet, probe reading only the
-    // probed clusters' code files plus the float column for rerank
-    // survivors. Byte/double round-trip is binary-exact, so the disk
-    // probe clears q_embed_ivfpq's recall gate at the same 0.8 floor.
-    // artifactWriteNanos splits the bench record like q_zorder_box's.
-    "q_embed_ivfpq_disk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val k = 5
-      val overfetch = math.max(8L, e.count() / (25L * k)).toInt
-      val out = scratchDir(s, "ivfpq")
-      val (index, cents, cb) = functions.IvfPq.index(
-        e, col("vec_id"), col("embedding"), nlist = 16, m = 16, ksub = 16)
-      val tw0 = System.nanoTime()
-      functions.IvfPq.writeIndex(index, cents, cb, out)
-      artifactWriteNanos.addAndGet(System.nanoTime() - tw0)
-      val (dIndex, dCents, dCb) = functions.IvfPq.readIndex(s, out)
-      val got = functions.IvfPq.topK(dIndex, dCents, dCb,
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"),
-        k = k, m = 16, ksub = 16, nprobe = 8, overfetch = overfetch)
-      val exact = functions.Similarity.bruteForceTopK(
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"), k = k)
-      functions.Similarity.annRecallGate(got, exact, k = k, floor = 0.8)
-    }),
-
-    // the same PQ machinery as a PERSISTED artifact — the
-    // build-once/probe-many shape: the (vec_id, codes) table (16
-    // B/vector) and the m·ksub-row codebook written to parquet, the
-    // probe reading ONLY them plus the float column for the rerank
-    // survivors. Byte/double columns round-trip binary-exact, so the
-    // disk probe passes the same gate at the same floor.
-    // artifactWriteNanos splits the bench record like q_zorder_box's.
-    "q_embed_pq_disk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 10)
-      val k = 5
-      val overfetch = math.max(8L, e.count() / (25L * k)).toInt
-      val out = scratchDir(s, "pq")
-      val cb = functions.Pq.train(e, col("vec_id"), col("embedding"),
-        m = 16, ksub = 16, iters = 2)
-      val encoded = functions.Pq.encode(e, col("vec_id"),
-        col("embedding"), cb, m = 16)
-      val tw0 = System.nanoTime()
-      encoded.write.mode("overwrite").parquet(s"$out/codes")
-      cb.write.mode("overwrite").parquet(s"$out/codebook")
-      artifactWriteNanos.addAndGet(System.nanoTime() - tw0)
-      val pq = functions.Pq.adcTopKIndexed(
-        s.read.parquet(s"$out/codes"), s.read.parquet(s"$out/codebook"),
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"),
-        k = k, m = 16, ksub = 16, overfetch = overfetch)
-      val exact = functions.Similarity.bruteForceTopK(
-        e, col("vec_id"), col("embedding"),
-        queries, col("vec_id"), col("embedding"), k = k)
-      functions.Similarity.annRecallGate(pq, exact, k = k, floor = 0.6)
-    }),
-
-    // ---- L4: text analysis ------------------------------------------
-    "q_quality" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          functions.TextAnalysis.qualityMetrics(col("text")).as("m"))
-        .select(col("doc_id"), col("m.n_chars"), col("m.n_tokens"),
-          col("m.chars_per_token"), col("m.punct_ratio"),
-          col("m.stopword_ratio"))),
-
-    "q_langid" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        functions.TextAnalysis.langId(col("text")).as("pred_lang"))),
-
-    // BPE merge training's round-0 statistic (Bpe.pairCounts):
-    // frequency-weighted adjacent character pairs over the distinct-
-    // word table — the count the first merge rule is argmax'd from.
-    // The full iterative trainer (Bpe.train) is graded against an
-    // independent scan-and-skip reference in BpeSpec (rule i+1
-    // depends on the post-merge vocabulary — not one-shot SQL).
-    "q_bpe_pairs" -> ((s, dir) =>
-      functions.Bpe.pairCounts(t(s, dir, "documents"), col("text"))
-        .orderBy(col("cnt").desc, col("lhs"), col("rhs")).limit(50)),
-
-    // the FULL iterative merge list (8 rounds of Bpe.train), graded
-    // against a machine-generated DuckDB re-derivation that replays
-    // every round — pair counts, argmax tie-break AND the greedy
-    // non-overlapping rewrite (gaps-and-islands parity) — so the
-    // trainer's cross-round dependency chain is driver-graded, not
-    // just round 0 (bpeMergesSql has the round-block construction)
-    "q_bpe_merges" -> ((s, dir) =>
-      functions.Bpe.train(t(s, dir, "documents"), col("text"), n = 8)),
-
-    // interpolated bigram LM: per-doc mean position log-probability
-    // under lambda*bigram + (1-lambda)*unigram — the fluency signal
-    // unigrams can't see (word salad scores low even on common words)
-    "q_bigram_lm" -> ((s, dir) =>
-      functions.TextAnalysis.bigramLogProb(t(s, dir, "documents"),
-        col("doc_id"), col("text"))),
-
-    // self-scored unigram LM: per-doc mean token log-probability
-    // under the corpus' own unigram distribution
-    "q_unigram_lm" -> ((s, dir) =>
-      functions.TextAnalysis.unigramLogProb(t(s, dir, "documents"),
-        col("doc_id"), col("text"))),
-
-    "q_corpus_stats" -> ((s, dir) =>
-      functions.TextAnalysis.corpusStats(t(s, dir, "documents"),
-        col("lang"), col("text"))),
-
-    // per-source dataset-card composition: volume, language spread,
-    // exact-dup rate — the table a mix-weight decision reads
-    "q_source_report" -> ((s, dir) =>
-      functions.TextAnalysis.sourceReport(t(s, dir, "documents"),
-        col("source"), col("lang"), col("text"))),
-
-    // Gopher-style repetition pre-filter: dup-token and top-bigram
-    // coverage fractions per document
-    "q_repetition" -> ((s, dir) =>
-      functions.TextAnalysis.repetitionReport(t(s, dir, "documents"),
-        col("doc_id"), col("text"), n = 2)),
-
-    // context-window chunking: 20-token chunks advancing by 15
-    // (5 tokens of overlap carry context across boundaries)
-    "q_chunking" -> ((s, dir) =>
-      functions.TextAnalysis.chunkByTokens(t(s, dir, "documents"),
-        col("doc_id"), col("text"), chunkSize = 20, stride = 15)),
-
-    // the full training-export composition: chunk every document,
-    // then pack the chunks into ~500-token shards per language in
-    // deterministic (doc_id, chunk_id) order — what actually gets
-    // written as training shards
-    "q_export" -> ((s, dir) => {
-      // lang rides through the chunker as a carried column — one
-      // scan, and the only exchange is the pack window's
-      val chunks = functions.TextAnalysis.chunkByTokens(
-        t(s, dir, "documents"), col("doc_id"), col("text"),
-        chunkSize = 20, stride = 15, carry = Seq("lang"))
-      functions.Sampling.packByBudget(chunks, col("lang"),
-        Seq(col("doc_id"), col("chunk_id")), col("n_tokens"),
-        budget = 500L)
-        .select(col("doc_id"), col("chunk_id"), col("lang"),
-          col("n_tokens"), col("shard"))
-    }),
-
-    // winnowing document fingerprints — md5-hex hashes compared
-    // lexicographically, so DuckDB replays the exact window minima
-    "q_winnowing" -> ((s, dir) =>
-      functions.TextAnalysis.winnowingFingerprints(t(s, dir, "documents"),
-        col("doc_id"), col("text"), shingleN = 3, window = 4)),
-
-    // test-set decontamination: deterministic 50/50 hash split, then
-    // per test doc the fraction of winnowing fingerprints found
-    // anywhere in train (threshold 0.2 flags the seeded cross-split
-    // near-dups without tripping on shared boilerplate 3-grams)
-    "q_decontaminate" -> ((s, dir) => {
-      val (train, test) = functions.Sampling.hashSplit(
-        t(s, dir, "documents"), col("doc_id"), rate = 0.5)
-      functions.TextAnalysis.contaminationReport(
-        test, col("doc_id"), col("text"),
-        train, col("doc_id"), col("text"),
-        shingleN = 3, window = 4, threshold = 0.2)
-    }),
-
-    // ---- L4: the training-data pipeline end-to-end ------------------
-    // quality filter -> exact dedup (min-id survivor) -> per-lang stats
-    "q_pipeline" -> ((s, dir) => {
-      val scored = t(s, dir, "documents")
-        .withColumn("m", functions.TextAnalysis.qualityMetrics(col("text")))
-        .filter(col("m.n_tokens") >= 10)
-      val deduped = functions.Dedup.exactDedup(scored, col("doc_id"), col("text"))
-      deduped.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("m.n_tokens").cast("long")).as("n_tokens"))
-    }),
-
-    // the full modern pipeline: quality filter -> exact dedup ->
-    // near-dup classes (transitive) -> keep class representative ->
-    // per-lang stats. The near-dup stage runs on the exact-deduped
-    // corpus (standard order: exact first, it's cheaper).
-    "q_pipeline_neardup" -> ((s, dir) => {
-      val scored = t(s, dir, "documents")
-        .withColumn("m", functions.TextAnalysis.qualityMetrics(col("text")))
-        .filter(col("m.n_tokens") >= 10)
-      // nearDupDedup pins its input internally (both its pair graph
-      // and keep-one join read it), so no extra checkpoint here
-      val exact = functions.Dedup.exactDedup(scored, col("doc_id"), col("text"))
-      val survivors = functions.Dedup.nearDupDedup(exact,
-        col("doc_id"), col("text"), shingleN = 3, threshold = 0.5)
-      survivors.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("m.n_tokens").cast("long")).as("n_tokens"))
-    }),
-
-    // ---- L4: multimodal plumbing (stub decode, real dataflow) -------
-    "q_multimodal_meta" -> ((s, dir) =>
-      functions.Multimodal.decodeMeta(
-        functions.Multimodal.asMedia(t(s, dir, "documents"),
-          "doc_id", "text")).toDF()),
-
-    // image near-dup end-to-end with REAL codecs: each doc_id < 40
-    // becomes a deterministic 9x8 pattern PNG whose decoded dHash is
-    // doc_id % 5's designed bit pattern — so the full decode →
-    // perceptual-hash → Hamming-block → pair path must recover
-    // exactly the same-class pairs the oracle derives from doc_id
-    // arithmetic (PNG is lossless; distinct classes differ in >= 2
-    // gradient signs per row, far outside maxHamming = 0)
-    "q_image_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val media = t(s, dir, "documents").filter(col("doc_id") < 40)
-        .select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => functions.Multimodal.MediaRow(
-          id, "image/png",
-          functions.Multimodal.patternPng((id % 5).toInt))))
-      functions.Multimodal.imageNearDups(media, maxHamming = 0)
-    }),
-
-    // video near-dup end-to-end (GIF frames, real codecs): doc_id % 5
-    // selects a 3-frame pattern clip; frame-level dHash containment
-    // must recover the same-class pairs with every frame shared
-    "q_video_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val media = t(s, dir, "documents").filter(col("doc_id") < 40)
-        .select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => functions.Multimodal.MediaRow(
-          id, "image/gif",
-          functions.Multimodal.patternGif((id % 5).toInt))))
-      functions.Multimodal.videoNearDups(media, minOverlap = 0.9)
-    }),
-
-    // audio near-dup end-to-end with REAL codecs (javax.sound PCM
-    // decode): same witness scheme as q_image_neardup — doc_id % 5
-    // selects a deterministic amplitude-modulation pattern, the
-    // energy-envelope hash recovers exactly the same-class pairs
-    "q_audio_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val media = t(s, dir, "documents").filter(col("doc_id") < 40)
-        .select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => functions.Multimodal.MediaRow(
-          id, "audio/wav",
-          functions.Multimodal.patternWav((id % 5).toInt))))
-      functions.Multimodal.audioNearDups(media, maxHamming = 0)
-    }),
-
-    // ---- L4: deterministic sampling / export (InputSampler made
-    // content-level: reference lib/InputSampler.java samples splits;
-    // a training mix samples rows, reproducibly) ---------------------
-    "q_sample_hash" -> ((s, dir) =>
-      functions.Sampling.hashSample(t(s, dir, "documents"),
-        col("doc_id"), rate = 0.25)
-        .select(col("doc_id"), col("lang"))),
-
-    // deterministic weighted sample (Efraimidis-Spirakis A-ES):
-    // longer docs proportionally likelier, yet the draw is a pure
-    // function of (doc_id, seed) — top-20 by u^(1/n_chars)
-    "q_weighted_sample" -> ((s, dir) =>
-      functions.Sampling.weightedSample(t(s, dir, "documents"),
-        col("doc_id"), col("n_chars"), k = 20)),
-
-    // deterministic global shuffle: content-hash training order,
-    // reproducible across retries/engines/cluster sizes
-    "q_shuffle" -> ((s, dir) =>
-      functions.Sampling.deterministicShuffle(t(s, dir, "documents"),
-        col("doc_id"), seed = 7L)
-        .select(col("doc_id"), col("rank"))),
-
-    "q_sample_stratified" -> ((s, dir) =>
-      functions.Sampling.stratifiedHashSample(t(s, dir, "documents"),
-        col("doc_id"), col("lang"),
-        rates = Map("en" -> 0.5, "de" -> 0.25), default = 0.1)
-        .select(col("doc_id"), col("lang"))),
-
-    "q_sample_stratum_k" -> ((s, dir) =>
-      functions.Sampling.perStratumSample(t(s, dir, "documents"),
-        col("doc_id"), col("lang"), k = 20)
-        .select(col("doc_id"), col("lang"))),
-
-    // rebalance the corpus toward a 60/25/15 en/de/zh mix (es/fr
-    // unweighted -> dropped); the oracle re-derives the exact rates
-    // from the group counts and replays the hash thresholds
-    "q_mix_weights" -> ((s, dir) =>
-      functions.Sampling.mixByWeight(t(s, dir, "documents"),
-        col("doc_id"), col("lang"),
-        weights = Map("en" -> 0.6, "de" -> 0.25, "zh" -> 0.15))
-        .select(col("doc_id"), col("lang"))),
-
-    // the curation composition: repetition pre-filter (fixed 0.55
-    // dup-token threshold, ~the corpus median on the graded
-    // testdata) -> deterministic re-mix of the survivors toward
-    // target language weights. tokenDupStats, not the full
-    // repetitionReport: the n-gram branch would run and be discarded
-    "q_curation" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val rep = functions.TextAnalysis.tokenDupStats(docs,
-        col("doc_id"), col("text"))
-      val kept = docs.join(
-        rep.filter(col("dup_token_frac") <= 0.55).select("doc_id"),
-        Seq("doc_id"))
-      functions.Sampling.mixByWeight(kept, col("doc_id"), col("lang"),
-        weights = Map("en" -> 0.5, "de" -> 0.25, "es" -> 0.25))
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    // token-budget shard packing — the training-export step
-    "q_pack_shards" -> ((s, dir) =>
-      functions.Sampling.packByBudget(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          functions.TextAnalysis.tokenCount(col("text")).cast("long")
-            .as("n_tokens")),
-        col("lang"), Seq(col("doc_id")), col("n_tokens"), budget = 2000L)),
-
-    // ---- L4: temporal joins / event grouping ------------------------
-    // point-in-time join: each measurement event picks up the latest
-    // preceding snapshot (event_id % 7 == 0) value of its user.
-    // Times surface (and match) in MICROS: the parquet timestamps are
-    // NANOS, which the DuckDB oracle truncates to its microsecond
-    // TIMESTAMP — `ts div 1000` is the same truncation, and per-user
-    // timestamps are unique at micro precision, so ordering agrees.
-    "q_asof_join" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      operators.Temporal.asOfJoin(
-        e.filter(col("event_id") % 7 =!= 0)
-          .select(col("event_id"), col("user_id"),
-            expr("ts div 1000").as("ts")),
-        col("user_id"), col("ts"),
-        e.filter(col("event_id") % 7 === 0)
-          .select(col("user_id"), expr("ts div 1000").as("ts"),
-            col("value")),
-        col("user_id"), col("ts"),
-        col("value"), "snap_value")
-    }),
-
-    // gap sessionization (12 h in micros — the events table's median
-    // per-user inter-event gap is ~7 h, so sessions average a few
-    // events instead of degenerating to singletons)
-    "q_sessionize" -> ((s, dir) =>
-      operators.Temporal.sessionSummary(
-        t(s, dir, "events").select(col("user_id"),
-          expr("ts div 1000").as("ts"), col("value")),
-        col("user_id"), col("ts"), gap = 43200000000L,
-        col("value").cast("decimal(18,2)"))),
-
-    // point-in-interval range join, bucket-blocked: for every error
-    // event, how many sessions (any user) were active at its
-    // timestamp — sessionization composed with the range join.
-    // 1-day buckets ≈ the typical session span (p50 0.2 d, max 5.5 d)
-    "q_range_join" -> ((s, dir) => {
-      val (errors, sess) = errorsAndSessions(s, dir)
-      operators.Temporal.rangeJoin(errors, col("t"), sess,
-          col("start_t"), col("end_t"), bucket = 86400000000L)
-        .groupBy(col("event_id")).agg(count(lit(1)).as("n_active"))
-    }),
-
-    // the sweep twin of q_range_join: identical semantics (count of
-    // sessions active at each error event) through
-    // activeIntervalCount's boundary-counting plan — no candidate
-    // pairs at any scale, so this is the shape that survives a dense
-    // 100 TB timeline where the bucketed join's per-bucket population
-    // densifies quadratically. Zero-coverage errors surface with
-    // count 0 (the LEFT reading), which the oracle mirrors. Null-time
-    // errors are filtered on BOTH sides: the operator reports them as
-    // NULL (unknown coverage) while a LEFT-join oracle would say 0 —
-    // a divergence no current fixture exercises, closed here so a
-    // fixture revision can't surface it as a hash mismatch.
-    "q_active_count" -> ((s, dir) => {
-      val (errors, sess) = errorsAndSessions(s, dir)
-      operators.Temporal.activeIntervalCount(
-          errors.filter(col("t").isNotNull), col("t"), sess,
-          col("start_t"), col("end_t"))
-        .select(col("event_id"), col("n_active"))
-    }),
-
-    // ---- §2.9 streaming twins, graded against BATCH oracles ---------
-    // The events table is replayed through a real file-source stream
-    // (graft.Replay: 8 parquet files read one per trigger ⇒ 8
-    // micro-batches with watermark/state maintenance between them),
-    // the sink is collected after processAllAvailable, and the result
-    // is graded by the SAME DuckDB oracle a batch query would use —
-    // closing the "streaming twins are spec-only" gap: the streaming
-    // plan algebra now has rows+schema+hash correctness rows.
-
-    // tumbling event-time day windows (EventWindows.tumbling) in
-    // complete mode: the final sink state equals the batch
-    // aggregation no matter how the replay micro-batches. Times are
-    // integer-floored to seconds (ts DIV 1e9 = epoch_us // 1e6 on
-    // the nanos fixture); sums go through DECIMAL(18,2) so partial
-    // aggregation order can't move a bit.
-    "q_stream_windows" -> ((s, dir) => Replay.withStateWidth(s) {
-        val batch = t(s, dir, "events")
-          .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-            col("event_type"), col("value"))
-        val agg = streaming.EventWindows.tumbling(
-          Replay.unordered(s, batch).stream, "ts2",
-          col("event_type"), "90 days", "1 day",
-          col("value").cast("decimal(18,2)"))
-        val q = agg.writeStream.outputMode("complete").format("memory")
-          .queryName("q_stream_windows_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_windows_sink")
-          .select(col("w_start").cast("long").as("w_start"),
-            col("event_type"), col("n"),
-            col("total").cast("double").as("total"))
-    }),
-
-    // streaming distinct-count sketch (StreamSketch.perWindow): per
-    // event-time day window, ONE theta sketch of user_id built by
-    // the declarative theta_sketch_agg streaming aggregation —
-    // sketch union is order-free, so the replay's micro-batch order
-    // cannot move the estimate, and below 2^20 distinct keys the
-    // estimate is EXACT, grading against per-window COUNT(DISTINCT).
-    // The -1 rollup row re-unions the per-window sketches from the
-    // SINK (panelRollup's law on streamed output): the emitted
-    // artifact stays mergeable, not just readable.
-    "q_stream_sketch" -> ((s, dir) => Replay.withStateWidth(s) {
-        val batch = t(s, dir, "events")
-          .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-            col("user_id"))
-        val est = streaming.StreamSketch.perWindow(
-          Replay.unordered(s, batch).stream, "ts2", "90 days", "1 day",
-          col("user_id"))
-        val q = est.writeStream.outputMode("complete").format("memory")
-          .queryName("q_stream_sketch_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        val sink = s.table("q_stream_sketch_sink")
-        sink.select(col("window_start"), col("distinct_est"))
-          .unionByName(sink.agg(
-            lit(-1L).as("window_start"),
-            call_function("theta_sketch_estimate",
-              call_function("theta_union_agg", col("theta"), lit(20)))
-              .as("distinct_est")))
-    }),
-
-    // streaming weighted sample (StreamSample.perWindow): the A-ES
-    // draw is a pure function of (doc_id, seed), so the per-window
-    // top-k state merge is order-insensitive and the stream's sample
-    // EQUALS the batch operator's — graded by q_weighted_sample's
-    // oracle VERBATIM. The corpus replays as 8 ordered files inside
-    // one window; a 9th, later file carries only a watermark
-    // heartbeat (time moves on) that closes the window and flushes
-    // the sample exactly once. Map-side thinning forwards ≤ k
-    // candidates per partition per batch into the single window
-    // group.
-    "q_stream_sample" -> ((s, dir) => Replay.withStateWidth(s) {
-        import s.implicits._
-        val docs = t(s, dir, "documents")
-        val batch = docs.select(
-            lit(new java.sql.Timestamp(100000L)).as("ts"),
-            col("doc_id").cast("string").as("key"),
-            col("n_chars").cast("double").as("weight"),
-            col("doc_id").as("__ord"))
-          .unionByName(s.range(1).select(
-            lit(new java.sql.Timestamp(1300000L)).as("ts"),
-            lit(null).cast("string").as("key"),
-            lit(0.0).as("weight"),
-            lit(Long.MaxValue).as("__ord")))
-        val stream = Replay.ordered(s, batch, col("__ord"), nFiles = 9).stream
-          .select(col("ts"), col("key"), col("weight"))
-          .as[streaming.StreamSample.Item]
-        val picks = streaming.StreamSample.perWindow(stream,
-          windowMillis = 600000L, watermark = "10 minutes", k = 20)
-        val q = picks.writeStream.outputMode("append").format("memory")
-          .queryName("q_stream_sample_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_sample_sink")
-          .select(col("key"), col("draw"))
-          .join(docs, col("key") === docs("doc_id").cast("string"))
-          .select(docs("doc_id"), docs("text"), docs("lang"),
-            docs("source"), docs("n_chars"), col("draw"))
-    }),
-
-    // streaming count-min sketch (StreamCms.perWindow): the corpus'
-    // word stream replayed through 9 ordered files inside one
-    // window; each partition pre-aggregates to a partial sketch
-    // map-side (≤ depth·width cells forwarded per batch, never the
-    // items) and the window's dense 4×64 state flushes once on the
-    // heartbeat-driven close. Cell-wise sums are order-free, so the
-    // emitted table equals the batch cmsTable bit-for-bit and grades
-    // against the same SQL derivation as q_cms's tbl stage.
-    "q_stream_cms" -> ((s, dir) => Replay.withStateWidth(s) {
-        import s.implicits._
-        val words = t(s, dir, "documents")
-          .select(explode(split(col("text"), "\\s+")).as("w"))
-          .filter(length(col("w")) > 0)
-        val batch = words.select(
-            lit(new java.sql.Timestamp(100000L)).as("ts"),
-            col("w").as("item"),
-            monotonically_increasing_id().as("__ord"))
-          .unionByName(s.range(1).select(
-            lit(new java.sql.Timestamp(1300000L)).as("ts"),
-            lit("closer").as("item"),
-            lit(Long.MaxValue).as("__ord")))
-        val stream = Replay.ordered(s, batch, col("__ord"), nFiles = 9).stream
-          .select(col("ts"), col("item")).as[streaming.StreamCms.Item]
-        val cells = streaming.StreamCms.perWindow(stream,
-          windowMillis = 600000L, watermark = "10 minutes",
-          depth = 4, width = 64)
-        val q = cells.writeStream.outputMode("append").format("memory")
-          .queryName("q_stream_cms_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_cms_sink").filter(col("windowStart") === 0L)
-          .select(col("r"), col("bucket"), col("cnt"))
-    }),
-
-    // streaming dedup (StreamDedup.withinWatermark) on the
-    // (user_id, event_type) key: the watermark outlives the replay
-    // span, so no event is ever late-dropped and the appended
-    // survivors are exactly the distinct key set — deterministic even
-    // though WHICH copy survives depends on file arrival order
-    // (only the key columns are emitted). State is the exercised
-    // surface: keys ride the state store across 8 micro-batches.
-    "q_stream_dedup" -> ((s, dir) => Replay.withStateWidth(s) {
-        val batch = t(s, dir, "events")
-          .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-            col("user_id"), col("event_type"))
-        val deduped = streaming.StreamDedup.withinWatermark(
-          Replay.unordered(s, batch).stream, "ts2", "3650 days",
-          Seq("user_id", "event_type"))
-        val q = deduped.writeStream.outputMode("append").format("memory")
-          .queryName("q_stream_dedup_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_dedup_sink")
-          .select(col("user_id"), col("event_type"))
-    }),
-
-    // streaming MinHash-LSH near-dup (StreamNearDup.pairs) at the
-    // oracle-parity banding (bands = numHashes = 16): documents
-    // replayed through 8 unordered micro-batches, each pair emitted
-    // exactly once by its first shared band when its LATER member
-    // arrives (state: per-bucket signatures + shingle-hash sets
-    // across the replay), appended output graded by the SAME exact-
-    // Jaccard oracle as q_minhash_lsh/q_ngram_jaccard — the batch/
-    // stream pair-set equality is the operator's contract
-    "q_stream_neardup" -> ((s, dir) => Replay.withStateWidth(s) {
-        val batch = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        // -Dgraft.stream.ledger=true (Profile --streamphases) turns on
-        // the in-operator phase accumulators (signature-walk vs rerank
-        // nanos) on the EXACT graded shape; off, the hot loop carries
-        // no timing calls
-        val pairs = streaming.StreamNearDup.pairs(
-          Replay.unordered(s, batch).stream, col("doc_id"), col("text"),
-          shingleN = 3, numHashes = 16, bands = 16, threshold = 0.5,
-          ledger = java.lang.Boolean.getBoolean("graft.stream.ledger"))
-        val q = pairs.writeStream.outputMode("append").format("memory")
-          .queryName("q_stream_neardup_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_neardup_sink")
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-    }),
-
-    // gap-session windows (EventWindows.sessions) in complete mode:
-    // sessions merge ACROSS unordered micro-batches (an early file may
-    // hold the middle of a session whose edges arrive later — the
-    // session-window state store must merge three fragments), and the
-    // final state equals the batch lag-form sessionization. Spark's
-    // session_window treats an event exactly `gap` later as the SAME
-    // session (merge condition start <= end on half-open windows), so
-    // the oracle breaks strictly greater-than; timestamps are floored
-    // to seconds, sums ride DECIMAL(18,2).
-    "q_stream_sessions" -> ((s, dir) => Replay.withStateWidth(s) {
-        val batch = t(s, dir, "events")
-          .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-            col("user_id"), col("value"))
-        val agg = streaming.EventWindows.sessions(
-          Replay.unordered(s, batch).stream, "ts2",
-          col("user_id"), "3650 days", "12 hours",
-          col("value").cast("decimal(18,2)"))
-        val q = agg.writeStream.outputMode("complete").format("memory")
-          .queryName("q_stream_sessions_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_sessions_sink")
-          .select(col("s_start").cast("long").as("s_start"),
-            col("s_end").cast("long").as("s_end"),
-            col("user_id"), col("n"),
-            col("total").cast("double").as("total"))
-    }),
-
-    // streaming retention cohorts: the per-user fold (min bucket +
-    // active-bucket set) runs as ONE complete-mode streaming
-    // aggregation across 8 unordered micro-batches — set state
-    // bounded by buckets/user, never events — and the (cohort,
-    // period) matrix is the batch rollup of the sink. Same oracle
-    // as q_retention: the stream must converge to the batch answer.
-    "q_stream_retention" -> ((s, dir) => Replay.withStateWidth(s) {
-        val batch = t(s, dir, "events")
-          .filter(col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("user_id").as("u"),
-            operators.Temporal.timeBucket(col("ts"), 604800000000000L)
-              .as("b"))
-        val agg = Replay.unordered(s, batch).stream.groupBy(col("u"))
-          .agg(min(col("b")).as("cohort"), collect_set(col("b")).as("bs"))
-        val q = agg.writeStream.outputMode("complete").format("memory")
-          .queryName("q_stream_retention_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_retention_sink")
-          .select(col("cohort"), explode(col("bs")).as("b"))
-          .groupBy(col("cohort"), (col("b") - col("cohort")).as("period"))
-          .agg(count(lit(1)).as("users"))
-    }),
-
-    // streaming as-of enrichment (StreamAsOf.enrichMerged): the
-    // interleaved point/snapshot log replays through an ORDERED file
-    // stream (each micro-batch a time slice), so the O(1)-per-key
-    // state (latest snapshot only) reproduces the batch as-of join
-    // exactly — same split of the events table as q_asof_join, same
-    // DuckDB ASOF LEFT JOIN oracle. Update-mode memory sink: each
-    // point emits exactly once, in the batch it arrives.
-    "q_stream_asof" -> ((s, dir) => Replay.withStateWidth(s) {
-        val e = t(s, dir, "events")
-        val merged = e.filter(col("event_id") % 7 =!= 0)
-          .select(col("user_id").as("key"), expr("ts div 1000").as("t"),
-            lit(true).as("isPoint"),
-            col("event_id").cast("string").as("tag"), lit(0.0).as("value"))
-          .unionByName(e.filter(col("event_id") % 7 === 0)
-            .select(col("user_id").as("key"), expr("ts div 1000").as("t"),
-              lit(false).as("isPoint"), lit("").as("tag"), col("value")))
-        val stream = Replay.ordered(s, merged, col("t")).stream
-          .as(org.apache.spark.sql.Encoders.product[streaming.StreamAsOf.Merged])
-        // t is epoch-MICROseconds here (ts div 1000), so the ms-named
-        // TTL/lateness params count µs on this stream: pass explicit
-        // values ≫ the fixture's 30-day span (1e15 µs ≈ 31 years) so
-        // the lifecycle machinery provably cannot evict or drop
-        // anything mid-replay and the oracle equality is untouched
-        val q = streaming.StreamAsOf.enrichMerged(stream,
-            stateTtlMs = 1000000000000000L,
-            allowedLatenessMs = 1000000000000000L)
-          .writeStream.outputMode("update").format("memory")
-          .queryName("q_stream_asof_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_asof_sink")
-          .select(col("tag").cast("long").as("event_id"),
-            col("key").as("user_id"), col("t").as("ts"),
-            col("snapValue").as("snap_value"))
-    }),
-
-    // streaming heavy hitters (StreamHeavyHitters.perWindow): append
-    // mode — a day window emits exactly once, when the watermark
-    // passes its end. Ordered replay + zero watermark delay make the
-    // emission set deterministic: exactly the windows whose end is
-    // strictly before the corpus' max event second. Capacity 64 >
-    // the 5 distinct event_types, so the Misra-Gries sketch never
-    // decrements and min_count IS the exact per-window count — the
-    // oracle is a plain GROUP BY over the closed windows.
-    "q_stream_heavy" -> ((s, dir) => Replay.withStateWidth(s) {
-        import s.implicits._
-        val batch = t(s, dir, "events")
-          .select(expr("ts div 1000000000").cast("timestamp").as("ts"),
-            col("event_type").as("item"))
-        val stream = Replay.ordered(s, batch, col("ts")).stream
-          .as[streaming.StreamHeavyHitters.Item]
-        val q = streaming.StreamHeavyHitters
-          .perWindow(stream, 86400000L, "0 seconds", capacity = 64)
-          .writeStream.outputMode("append").format("memory")
-          .queryName("q_stream_heavy_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_heavy_sink")
-          .select(expr("windowStart div 1000").as("w_start"), col("item"),
-            col("minCount").as("min_count"), col("n"))
-    }),
-
-    // the Misra-Gries sketch UNDER DECREMENT PRESSURE, graded: the
-    // item universe is ~504 keys (5 heavy event_types on even
-    // event_ids + a 499-key tail on odd ones) against capacity 24,
-    // so the sketch decrements constantly inside every window state —
-    // then the phiHeavyHitters decide phase recounts the surviving
-    // candidates exactly and thresholds at ceil(φ·n). φ = 0.05 >
-    // 1/(capacity+1) = 0.04 keeps the no-false-negative guarantee
-    // (any item above n/25 survives the sketch), so the decided
-    // output provably equals the exact φ-heavy-hitters per closed
-    // window — which is precisely what the oracle computes with a
-    // plain GROUP BY. A sketch regression that drops a true heavy
-    // hitter under pressure loses a row and hash-mismatches.
-    "q_stream_heavy_pressure" -> ((s, dir) => Replay.withStateWidth(s) {
-        import s.implicits._
-        val phi = 0.05
-        val base = t(s, dir, "events")
-          .select(expr("ts div 1000000000").cast("timestamp").as("ts"),
-            when(col("event_id") % 2 === 0, col("event_type"))
-              .otherwise(concat(lit("u"),
-                (col("event_id") % 499).cast("string"))).as("item"))
-          .filter(col("item").isNotNull && col("ts").isNotNull)
-        val stream = Replay.ordered(s, base, col("ts")).stream
-          .as[streaming.StreamHeavyHitters.Item]
-        val q = streaming.StreamHeavyHitters
-          .perWindow(stream, 86400000L, "0 seconds", capacity = 24)
-          .writeStream.outputMode("append").format("memory")
-          .queryName("q_stream_pressure_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        // decide phase: candidates (≤ capacity per window) broadcast
-        // against one exact recount of the same table — the sketch
-        // only proposes, exact counting decides (phiHeavyHitters'
-        // two-pass discipline, reference SortValidator.java's
-        // self-validating-job pattern)
-        val cands = s.table("q_stream_pressure_sink")
-          .select(expr("windowStart div 1000").as("w_start"), col("item"),
-            col("n"))
-        val counted = base
-          .select((expr("CAST(ts AS LONG) div 86400") * 86400).as("w_start"),
-            col("item"))
-          .groupBy(col("w_start"), col("item"))
-          .agg(count(lit(1)).as("cnt"))
-        counted.join(broadcast(cands), Seq("w_start", "item"))
-          .filter(col("cnt") >= ceil(lit(phi) * col("n")))
-          .select(col("w_start"), col("item"), col("cnt"), col("n"))
-    }),
-
-    // the §0.1 policy loop ITSELF as a graded stream: per-file
-    // EWMA-with-atime-throttle state (HeatStream.heatUpdates — the
-    // reference's FSDirectory EWMA + 30 s precision skip) over an
-    // ordered replay of access events. The throttle makes the fold
-    // state-dependent (skip iff now <= ewma + 30000), so the oracle
-    // replays the exact recurrence as a recursive CTE; α = 0.5 keeps
-    // every step a dyadic-rational blend evaluated in the same order
-    // in both engines — doubles match bit for bit, no rounding
-    // needed. Same-millisecond access pairs are provably
-    // order-invariant under the throttle (first one seeds/updates,
-    // the second always throttles at equal t), so row_number tie
-    // order can't drift the result. Final state per file = the
-    // update-mode record with the greatest lastUpdateMs (throttled
-    // batches re-emit the unchanged record — max(struct) dedups).
-    "q_stream_heat" -> ((s, dir) => Replay.withStateWidth(s) {
-        import s.implicits._
-        val batch = t(s, dir, "events")
-          .select(col("user_id").cast("string").as("path"),
-            expr("ts div 1000000").as("tsMs"))
-        val stream = Replay.ordered(s, batch, col("tsMs")).stream
-          .as[streaming.HeatStream.Access]
-        // TTL ≫ the fixture's 30-day event span (1e12 ms ≈ 31 years):
-        // the graded recurrence must see every access; state
-        // lifecycle is graded separately by the TTL eviction specs
-        val q = streaming.HeatStream.heatUpdates(stream,
-            stateTtlMs = 1000000000000L,
-            allowedLatenessMs = 1000000000000L)
-          .writeStream.outputMode("update").format("memory")
-          .queryName("q_stream_heat_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        s.table("q_stream_heat_sink")
-          .groupBy(col("path"))
-          .agg(max(struct(col("lastUpdateMs"), col("ewma"))).as("m"))
-          .select(col("path").cast("long").as("user_id"),
-            col("m.ewma").as("ewma"),
-            col("m.lastUpdateMs").as("last_update_ms"))
-    }),
-
-    // the FULL §0.1 policy loop, streamed end-to-end and graded:
-    // ordered replay → the real flatMapGroupsWithState throttled-EWMA
-    // state machine (q_stream_heat's machinery) → settled per-file
-    // heat → tier assignment with the single-block exemption
-    // (user_id % 5 == 0 models the exempt files,
-    // FSNamesystem.java:4427-4430) → used-bytes capacity check →
-    // ONE demoteSweep (coldest half of every bucket down a level,
-    // FSNamesystem.java:4456-4480). Capacity = 3.5·n·size makes the
-    // 0.8-top breach PROVABLE at any sf (used ≥ 3·n·size > 2.8·n·size
-    // even if every file tiers at minRep), so the graded plan always
-    // contains a real sweep — the no-breach branch is spec-gated
-    // (ReplicationPolicySpec). The oracle replays the identical
-    // throttled fold as a recursive CTE (bit-exact dyadic blends),
-    // then mirrors tier/exempt/sweep in closed form.
-    "q_stream_replication" -> ((s, dir) => Replay.withStateWidth(s) {
-        import s.implicits._
-        val batch = t(s, dir, "events")
-          .select(col("user_id").cast("string").as("path"),
-            expr("ts div 1000000").as("tsMs"))
-        val stream = Replay.ordered(s, batch, col("tsMs")).stream
-          .as[streaming.HeatStream.Access]
-        // same TTL ≫ replay-span rationale as q_stream_heat
-        val q = streaming.HeatStream.heatUpdates(stream,
-            stateTtlMs = 1000000000000L,
-            allowedLatenessMs = 1000000000000L)
-          .writeStream.outputMode("update").format("memory")
-          .queryName("q_stream_repl_sink").start()
-        try q.processAllAvailable() finally q.stop()
-        val heat = s.table("q_stream_repl_sink")
-          .groupBy(col("path"))
-          .agg(max(struct(col("lastUpdateMs"), col("ewma"))).as("m"))
-          .select(col("path").cast("long").as("user_id"),
-            col("m.ewma").as("ewma"))
-        val nFiles = heat.count()
-        streaming.Heat.policyLoopPlan(heat, col("user_id"), col("ewma"),
-          blocksCol = when(col("user_id") % 5 === 0, 1).otherwise(2),
-          sizeBytes = 1000L, capacityBytes = 3500L * math.max(nFiles, 1L))
-    }),
-
-    // q_stream_replication with a HARD stop + checkpoint restart in
-    // the middle of the replay — the recovery grading for the most
-    // state-critical query: the first four time slices stream, the
-    // query is killed, the remaining four arrive, a NEW query resumes
-    // from the SAME checkpoint, and the final replication plan is
-    // graded against the identical oracle as the uninterrupted run.
-    // Only the recovered per-file EWMA state (offset log + state
-    // store) can make the resumed fold land on the same numbers; the
-    // memory sink of the base query is replaced by a foreachBatch
-    // parquet append because an in-memory sink does not survive a
-    // restart (it is not fault-tolerant — the point of the exercise).
-    "q_stream_replication_recovery" -> ((s, dir) => Replay.withStateWidth(s) {
-        import s.implicits._
-        val batch = t(s, dir, "events")
-          .select(col("user_id").cast("string").as("path"),
-            expr("ts div 1000000").as("tsMs"))
-        val replay = Replay.ordered(s, batch, col("tsMs"), held = true)
-        def run(): Unit = {
-          val q = streaming.HeatStream.heatUpdates(
-              replay.stream.as[streaming.HeatStream.Access],
-              stateTtlMs = 1000000000000L,
-              allowedLatenessMs = 1000000000000L)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", replay.checkpoint)
-            .foreachBatch { (b: org.apache.spark.sql.Dataset[
-                streaming.HeatStream.HeatRecord], _: Long) =>
-              b.write.mode("append").parquet(replay.sink); ()
-            }.start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        replay.release(4); run() // phase 1, then the hard stop
-        replay.release(8); run() // resume from the SAME checkpoint
-        val heat = s.read.parquet(replay.sink)
-          .groupBy(col("path"))
-          .agg(max(struct(col("lastUpdateMs"), col("ewma"))).as("m"))
-          .select(col("path").cast("long").as("user_id"),
-            col("m.ewma").as("ewma"))
-        val nFiles = heat.count()
-        streaming.Heat.policyLoopPlan(heat, col("user_id"), col("ewma"),
-          blocksCol = when(col("user_id") % 5 === 0, 1).otherwise(2),
-          sizeBytes = 1000L, capacityBytes = 3500L * math.max(nFiles, 1L))
-    }),
-
-    // ---- L4: retrieval scoring / frequency sketch / PII scrub -------
-    // BM25 top-10 over a mixed rare+common term bag; scores are
-    // ln/round(4) doubles derived from identical integer operands in
-    // both engines
-    "q_bm25" -> ((s, dir) =>
-      functions.Retrieval.bm25TopK(t(s, dir, "documents"),
-        col("doc_id"), col("text"),
-        queryTerms = Seq("dup", "spark", "vector"), k = 10)),
-
-    // TF-IDF keyword extraction: top-3 terms per document, ranked on
-    // the rounded score so the cut is engine-portable
-    "q_tfidf" -> ((s, dir) =>
-      functions.Retrieval.tfidfTopTerms(t(s, dir, "documents"),
-        col("doc_id"), col("text"), k = 3)),
-
-    // inverted-index build: df + first-10 posting list per term
-    "q_inverted_index" -> ((s, dir) =>
-      functions.Retrieval.invertedIndex(t(s, dir, "documents"),
-        col("doc_id"), col("text"), maxPostings = 10)),
-
-    // the contrib/index analog, graded END-TO-END: build the sharded
-    // searchable-index ARTIFACT (posting lists bucketed by term, 8
-    // shards, parquet bloom), then answer a five-term query bag via
-    // bucket-pruned point probes — build once, probe the shards, as
-    // the reference's IndexUpdater + distribution-policy pipeline
-    // does. The oracle recomputes the probed terms' posting lists
-    // directly; ScaleSpec asserts the probes' SelectedBucketsCount
-    // plan contract
-    "q_search_index" -> ((s, dir) => {
-      val tbl = "graft_q_search_index"
-      functions.Retrieval.buildSearchIndex(t(s, dir, "documents"),
-        col("doc_id"), col("text"), tbl, shards = 8, maxPostings = 10)
-      functions.Retrieval.probeSearchIndex(s, tbl,
-        Seq("dup", "spark", "vector", "the", "window"))
-    }),
-
-    // in-engine deterministic corpus generation (the reference's
-    // RandomTextWriter as an operator, not a harness script): rows
-    // scale with the graded sf (one per documents row), counter-based
-    // randomness — a pure hash of (seed, row, draw) — so the corpus
-    // is partitioning-independent and the portable md5 idiom lets the
-    // oracle REGENERATE it bit-for-bit (full hash grade, not a
-    // rows-only smoke check)
-    "q_random_text" -> ((s, dir) =>
-      sources.Generate.randomText(s, rows = t(s, dir, "documents").count(),
-        minWords = 5, maxWords = 20, vocab = 500, seed = 42L)),
-
-    // the generator's FAST dial (portable = false, xxhash64 draws —
-    // the bulk-generation path a soak run uses): no external engine
-    // can recompute xxhash64, so this is the self-validating witness
-    // form (q_cms/q_cms_fast pattern) — invariants as booleans, the
-    // oracle states them as constants. Checks: row count (vs the
-    // documents table both sides read), partitioning-independence
-    // (two generations at different partition counts must agree
-    // text-for-text — the counter-based-randomness contract), word
-    // counts inside [minWords, maxWords], every token inside the
-    // declared vocabulary, and the integer-skew dial actually
-    // lowering the mean word index vs the uniform draw.
-    "q_random_text_fast" -> ((s, dir) => {
-      val n = t(s, dir, "documents").count()
-      def gen(parts: Int, skewed: Boolean) =
-        sources.Generate.randomText(s, rows = n, minWords = 5,
-          maxWords = 20, vocab = 500, seed = 42L, skewed = skewed,
-          numPartitions = parts, portable = false)
-      val g1 = gen(0, skewed = false)
-      val det = g1.alias("a")
-        .join(gen(7, skewed = false).alias("b"), "doc_id")
-        .agg((count(lit(1)) === lit(n) &&
-          min((col("a.text") === col("b.text")).cast("int")) === 1)
-          .as("deterministic"))
-      val shape = g1.select(split(col("text"), " ").as("w"))
-        .agg(
-          (min(size(col("w"))) >= 5 && max(size(col("w"))) <= 20)
-            .as("words_in_range"),
-          (min(forall(col("w"), x => x.rlike("^w[0-9]+$") &&
-            substring(x, 2, 10).cast("long") < 500).cast("int")) === 1)
-            .as("vocab_ok"))
-      def avgIdx(g: org.apache.spark.sql.DataFrame) =
-        g.select(explode(split(col("text"), " ")).as("tok"))
-          .agg(avg(substring(col("tok"), 2, 10).cast("long")).as("m"))
-      val skew = avgIdx(gen(0, skewed = true)).alias("sk")
-        .crossJoin(avgIdx(g1).alias("un"))
-        .select((col("sk.m") < col("un.m")).as("skew_lower"))
-      g1.agg(count(lit(1)).as("n_rows"))
-        .crossJoin(det).crossJoin(shape).crossJoin(skew)
-    }),
-
-    // the gridmix three-stage pipeline's SEMANTICS graded end-to-end
-    // (the soak measures the written form at bulk scale; this grades
-    // the keep/aggregate algebra): generated KV corpus on the
-    // portable dial, keep 10% map / 40% reduce -> 100%/77% ->
-    // 116%/91% with md5-residue sampling — DuckDB regenerates the
-    // corpus AND recomputes every residue, so the full pipeline
-    // hash-grades
-    "q_gridmix_pipeline" -> ((s, dir) => {
-      val kv = sources.Generate.randomKv(s,
-        rows = t(s, dir, "documents").count(),
-        keyMinWords = 2, keyMaxWords = 2,
-        valueMinWords = 5, valueMaxWords = 9,
-        vocab = 50, seed = 11L, portable = true)
-      Soak.threeStage(kv, portable = true)
-    }),
-
-    // the indirect-read family's iterative algebra graded (the soak
-    // measures the file-based form): 10 iterations, each folding a
-    // fresh corpus slice plus every previous iteration's output
-    // through a 50% key residue — the oracle replays all ten
-    // iterations as chained CTEs over the regenerated corpus
-    "q_gridmix_indirect" -> ((s, dir) => {
-      val kv = sources.Generate.randomKv(s,
-        rows = t(s, dir, "documents").count(),
-        keyMinWords = 2, keyMaxWords = 2,
-        valueMinWords = 5, valueMaxWords = 9,
-        vocab = 50, seed = 11L, portable = true)
-      Soak.indirectChain(kv, iterations = 10, portable = true)
-    }),
-
-    // the api_sort family's three-API agreement graded (the soak
-    // validates the WRITTEN form at bulk scale; this grades the
-    // row-identity witness, reference gridmix README:66-71): the
-    // SAME generated text sorted through the DataFrame API, SQL
-    // over a temp view, and an external C-locale `sort` process
-    // must agree in row count and content multiset, and each plan
-    // must validate globally sorted (C order = UTF-8 byte order =
-    // Spark's string order). Hash draws are engine-local, so the
-    // oracle states the witness invariants as constants (the
-    // q_random_text_fast pattern).
-    "q_gridmix_apisort" -> ((s, dir) => {
-      val n = t(s, dir, "documents").count()
-      val text = sources.Generate.randomKv(s, rows = n,
-        keyMinWords = 1, keyMaxWords = 4,
-        valueMinWords = 0, valueMaxWords = 8,
-        vocab = 200, seed = 7L, skewed = false,
-        numPartitions = 0, portable = false)
-        .select(col("k"), col("v"))
-      val parts = 8
-      def ranged = text.repartitionByRange(parts, col("k"))
-      val dfSorted = ranged.sortWithinPartitions(col("k"))
-      text.createOrReplaceTempView("graft_q_apisort")
-      val sqlSorted = s.sql(
-        "SELECT /*+ REPARTITION_BY_RANGE(k) */ k, v " +
-          "FROM graft_q_apisort SORT BY k")
-      val pipeSorted = operators.Pipe.pipe(ranged,
-        "env LC_ALL=C sort", col("k"), col("v"))
-      // order-insensitive content signature: decimal sum of a 64-bit
-      // line hash (decimal so ANSI overflow can't bite), plus count.
-      // The line framing mirrors Pipe.pipe's exactly (tab-joined,
-      // nulls as empty fields).
-      val lineOf = concat_ws("\t",
-        coalesce(col("k").cast("string"), lit("")),
-        coalesce(col("v").cast("string"), lit("")))
-      def sig(d: org.apache.spark.sql.DataFrame, line: Column) =
-        d.agg(sum(xxhash64(line).cast("decimal(38,0)")).as("h"),
-          count(lit(1)).as("n"))
-      val sDf = sig(dfSorted, lineOf).alias("d")
-      val sSql = sig(sqlSorted, lineOf).alias("q")
-      val sPipe = sig(pipeSorted, col("value")).alias("p")
-      val (okDf, _) = operators.Sorting.validateSorted(dfSorted, Seq("k"))
-      val (okSql, _) = operators.Sorting.validateSorted(sqlSorted, Seq("k"))
-      val (okPipe, _) =
-        operators.Sorting.validateSorted(pipeSorted, Seq("value"))
-      sDf.crossJoin(sSql).crossJoin(sPipe)
-        .select(col("d.n").as("n_rows"),
-          (col("d.n") === lit(n) && col("q.n") === lit(n) &&
-            col("p.n") === lit(n)).as("rows_agree"),
-          (col("d.h") === col("q.h") && col("d.h") === col("p.h"))
-            .as("content_agree"),
-          lit(okDf).as("df_sorted"), lit(okSql).as("sql_sorted"),
-          lit(okPipe).as("pipe_sorted"))
-    }),
-
-    // INCREMENTAL index update (the reference contrib/index
-    // DocumentAndOp / IndexUpdater semantics): build the updatable
-    // index on 3/4 of the corpus, then apply ONE delta batch —
-    // DELETE doc_id%10==0, UPDATE doc_id%10==1 (prepending a marker
-    // token; update of an absent doc degrades to insert), INSERT the
-    // held-out quarter — and probe. The delta appends term-routed
-    // segments + doc tombstones; base files are never rewritten.
-    // Probe-after-update must equal rebuild-from-scratch over the
-    // updated corpus, which is exactly what the oracle recomputes.
-    "q_search_index_update" -> ((s, dir) => {
-      val tbl = "graft_q_search_index_upd"
-      val docs = t(s, dir, "documents")
-      functions.Retrieval.buildUpdatableIndex(
-        docs.filter(col("doc_id") % 4 =!= 3),
-        col("doc_id"), col("text"), tbl, shards = 8)
-      val delta = docs.select(col("doc_id"), col("text"),
-          when(col("doc_id") % 10 === 0, "delete")
-            .when(col("doc_id") % 10 === 1, "update")
-            .when(col("doc_id") % 4 === 3, "insert").as("op"))
-        .filter(col("op").isNotNull)
-        .withColumn("text", when(col("op") === "update",
-          concat(lit("updatedterm "), col("text"))).otherwise(col("text")))
-      functions.Retrieval.updateSearchIndex(s, tbl, delta, col("op"),
-        col("doc_id"), col("text"), shards = 8)
-      functions.Retrieval.probeUpdatableIndex(s, tbl,
-        Seq("updatedterm", "dup", "spark", "the", "window"),
-        maxPostings = 10)
-    }),
-
-    // the same delta pipeline followed by COMPACTION (the Lucene
-    // segment-merge analog): fold the appended segments + tombstone
-    // ledger into one clean generation — an index-sized exchange,
-    // corpus never touched — then probe. Answers must be identical
-    // to the uncompacted index's, i.e. the same rebuilt-corpus
-    // oracle as q_search_index_update.
-    "q_search_index_compact" -> ((s, dir) => {
-      val tbl = "graft_q_search_index_cpt"
-      val docs = t(s, dir, "documents")
-      functions.Retrieval.buildUpdatableIndex(
-        docs.filter(col("doc_id") % 4 =!= 3),
-        col("doc_id"), col("text"), tbl, shards = 8)
-      val delta = docs.select(col("doc_id"), col("text"),
-          when(col("doc_id") % 10 === 0, "delete")
-            .when(col("doc_id") % 10 === 1, "update")
-            .when(col("doc_id") % 4 === 3, "insert").as("op"))
-        .filter(col("op").isNotNull)
-        .withColumn("text", when(col("op") === "update",
-          concat(lit("updatedterm "), col("text"))).otherwise(col("text")))
-      functions.Retrieval.updateSearchIndex(s, tbl, delta, col("op"),
-        col("doc_id"), col("text"), shards = 8)
-      functions.Retrieval.compactSearchIndex(s, tbl, shards = 8)
-      functions.Retrieval.probeUpdatableIndex(s, tbl,
-        Seq("updatedterm", "dup", "spark", "the", "window"),
-        maxPostings = 10)
-    }),
-
-    // MULTI-GENERATION index lifecycle — the steady state of a daily
-    // crawl (the reference's IndexUpdater run repeatedly): build →
-    // delta gen1 (delete %10==0, update %10==1 with a gen1 marker,
-    // insert the held-out quarter) → COMPACT → delta gen2 (REVIVE
-    // %20==0 — an insert after compaction folded its tombstone away —
-    // delete %10==2, update %10==3 with a gen2 marker) → probe.
-    // Interleaving update and compact generations is what
-    // q_search_index_update/compact each grade only half of; the
-    // oracle stays rebuild-from-scratch over the FINAL corpus.
-    "q_search_index_multigen" -> ((s, dir) => {
-      val tbl = "graft_q_search_index_mg"
-      val docs = t(s, dir, "documents")
-      functions.Retrieval.buildUpdatableIndex(
-        docs.filter(col("doc_id") % 4 =!= 3),
-        col("doc_id"), col("text"), tbl, shards = 8)
-      val d1 = docs.select(col("doc_id"), col("text"),
-          when(col("doc_id") % 10 === 0, "delete")
-            .when(col("doc_id") % 10 === 1, "update")
-            .when(col("doc_id") % 4 === 3, "insert").as("op"))
-        .filter(col("op").isNotNull)
-        .withColumn("text", when(col("op") === "update",
-          concat(lit("gen1term "), col("text"))).otherwise(col("text")))
-      functions.Retrieval.updateSearchIndex(s, tbl, d1, col("op"),
-        col("doc_id"), col("text"), shards = 8)
-      functions.Retrieval.compactSearchIndex(s, tbl, shards = 8)
-      val d2 = docs.select(col("doc_id"), col("text"),
-          when(col("doc_id") % 20 === 0, "insert")
-            .when(col("doc_id") % 10 === 2, "delete")
-            .when(col("doc_id") % 10 === 3, "update").as("op"))
-        .filter(col("op").isNotNull)
-        .withColumn("text", when(col("op") === "update",
-          concat(lit("gen2term "), col("text"))).otherwise(col("text")))
-      functions.Retrieval.updateSearchIndex(s, tbl, d2, col("op"),
-        col("doc_id"), col("text"), shards = 8)
-      functions.Retrieval.probeUpdatableIndex(s, tbl,
-        Seq("gen1term", "gen2term", "dup", "spark", "the"),
-        maxPostings = 10)
-    }),
-
-    // write-time z-order layout, graded end-to-end: cluster lineitem
-    // on (l_orderkey, l_partkey), then answer a 2-D box query THROUGH
-    // the clustered copy; the oracle answers the same box on the raw
-    // table, so the layout must be a pure reorganization (exact row
-    // multiset preserved). Box bounds scale with the data (fractions
-    // of each key's max — two longs collected, O(1) driver state) so
-    // the query stays ~5% selective at every sf. ScaleSpec asserts
-    // the locality contract (near-square file bounding boxes vs a
-    // single-column sort's full-range slivers) separately.
-    "q_zorder_box" -> ((s, dir) => {
-      val base = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-      val out = scratchDir(s, "zorder")
-      val tw0 = System.nanoTime()
-      sources.Layout.zorderWrite(base, out,
-        Seq("l_orderkey", "l_partkey"), bits = 6, outFiles = 8)
-      artifactWriteNanos.addAndGet(System.nanoTime() - tw0)
-      val mx = base.agg(max(col("l_orderkey")), max(col("l_partkey"))).head()
-      val (maxOk, maxPk) = (mx.getLong(0), mx.getLong(1))
-      // LONG bounds (ceil of lower, floor of upper — semantically
-      // identical to the fractional compare on an integer column, so
-      // the oracle's double arithmetic still matches): a double
-      // literal would wrap the column in a cast and defeat parquet
-      // min/max pushdown, which is the entire read-side payoff the
-      // layout buys (row-group stats skip the files whose tile
-      // misses the box)
-      s.read.parquet(out)
-        .filter(col("l_orderkey") >= lit(math.ceil(0.1 * maxOk).toLong) &&
-          col("l_orderkey") <= lit(math.floor(0.3 * maxOk).toLong) &&
-          col("l_partkey") >= lit(math.ceil(0.2 * maxPk).toLong) &&
-          col("l_partkey") <= lit(math.floor(0.45 * maxPk).toLong))
-    }),
-
-    // exact phi-heavy-hitters: capacity 30 < the corpus' 31-token
-    // vocabulary, so the Misra-Gries decrement path genuinely runs;
-    // phi=0.0335 > 1/31 keeps the no-missed-hitter guarantee
-    "q_heavy_hitters" -> ((s, dir) =>
-      functions.Sketches.phiHeavyHitters(
-        t(s, dir, "documents").select(explode(
-          functions.TextAnalysis.bpeishTokens(col("text"))).as("item")),
-        col("item"), phi = 0.0335, capacity = 30)),
-
-    // count-min sketch (Sketches.cmsTable/cmsEstimate): a
-    // depth×width-bounded frequency table answering ARBITRARY keys
-    // after the fact (vs Misra-Gries' survivors-only). Buckets are
-    // md5-derived, so the whole build+probe pipeline is re-derivable
-    // in SQL and the ESTIMATES themselves hash-grade — including
-    // where collisions inflate them (width 64 against a ~10k-word
-    // vocabulary guarantees real collisions at every scale). est >=
-    // exact is the sketch's deterministic lower-bound law.
-    "q_cms" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(explode(split(col("text"), "\\s+")).as("w"))
-        .filter(length(col("w")) > 0)
-      val table = functions.Sketches.cmsTable(words, col("w"),
-        depth = 4, width = 64)
-      val exact = words.groupBy(col("w")).agg(count(lit(1)).as("exact"))
-      val probes = exact.orderBy(col("exact").desc, col("w").asc).limit(20)
-      functions.Sketches.cmsEstimate(table, probes, col("w"),
-          depth = 4, width = 64)
-        .join(probes.withColumnRenamed("w", "key"), Seq("key"))
-        .select(col("key"), col("exact"), col("est"),
-          (col("est") >= col("exact")).as("lb_ok"))
-    }),
-
-    // the xxhash64 fast dial of the same sketch (portable = false —
-    // measured ~6× cheaper bucket hashing at sf10; the dial for
-    // sketches nothing outside Spark re-derives). Buckets are not
-    // SQL-recomputable, so this grades SELF-VALIDATING on the two
-    // laws that hold for ANY row-wise hash family: est >= exact on
-    // every probe (deterministic lower bound), and LINEARITY — the
-    // cell-wise sum of two disjoint-half sketches estimates exactly
-    // like the whole-corpus build (the merge law a 1000-executor
-    // partial-sketch build relies on). The oracle re-derives the
-    // probes' exact counts and states both laws as constants.
-    "q_cms_fast" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(split(col("text"), "\\s+")).as("w"))
-        .filter(length(col("w")) > 0)
-      val whole = functions.Sketches.cmsTable(words, col("w"),
-        depth = 4, width = 64, portable = false)
-      val merged = functions.Sketches.cmsTable(
-          words.filter(col("doc_id") % 2 === 0), col("w"),
-          depth = 4, width = 64, portable = false)
-        .unionByName(functions.Sketches.cmsTable(
-          words.filter(col("doc_id") % 2 === 1), col("w"),
-          depth = 4, width = 64, portable = false))
-        .groupBy(col("r"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
-      val exact = words.groupBy(col("w")).agg(count(lit(1)).as("exact"))
-      val probes = exact.orderBy(col("exact").desc, col("w").asc).limit(20)
-      functions.Sketches.cmsEstimate(whole, probes, col("w"),
-          depth = 4, width = 64, portable = false)
-        .join(functions.Sketches.cmsEstimate(merged, probes, col("w"),
-            depth = 4, width = 64, portable = false)
-          .withColumnRenamed("est", "est_merged"), Seq("key"))
-        .join(probes.withColumnRenamed("w", "key"), Seq("key"))
-        .select(col("key"), col("exact"),
-          (col("est") >= col("exact")).as("lb_ok"),
-          (col("est") === col("est_merged")).as("union_ok"))
-    }),
-
-    // mergeable DataSketches panel (Sketches.sketchPanel): one
-    // bookkeeping row per source carrying {theta, HLL, KLL} binary
-    // sketches + exact n — the artifact a 100 TB pipeline persists
-    // per day/source and rolls up WITHOUT rescanning the corpus.
-    // Grading exploits the exactness window: a theta sketch at
-    // lgk=20 retains every distinct hash at test scales, so its
-    // estimate hash-grades against DuckDB's COUNT(DISTINCT); the
-    // estimate-only sides grade as laws computed Spark-side (FALSE
-    // on violation) — HLL inside a 3-sigma relative-error envelope,
-    // the KLL median's exact rank interval covering 0.5 +/- the
-    // k=200 rank-error bound.
-    "q_sketch_panel" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val panel = functions.Sketches.sketchPanel(docs, col("source"),
-        col("n_chars"), col("n_chars"))
-      val est = panel.select(col("group").as("source"), col("n"),
-        call_function("theta_sketch_estimate", col("theta"))
-          .as("distinct_lens"),
-        call_function("hll_sketch_estimate", col("hll")).as("__hll"),
-        call_function("kll_sketch_get_quantile_double", col("kll"),
-          lit(0.5)).as("__p50"))
-      // exact rank interval of the KLL median (ties widen it) and
-      // the exact distinct count for the HLL envelope — one extra
-      // corpus pass, grading-only
-      val ranks = est.select(col("source"), col("__p50"))
-        .join(docs.select(col("source"), col("n_chars")), Seq("source"))
-        .groupBy(col("source"))
-        .agg(
-          (sum(when(col("n_chars") < col("__p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__rlo"),
-          (sum(when(col("n_chars") <= col("__p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__rhi"))
-      val exact = docs.groupBy(col("source"))
-        .agg(countDistinct(col("n_chars")).as("__dx"))
-      est.join(exact, Seq("source")).join(ranks, Seq("source"))
-        .select(col("source"), col("n"), col("distinct_lens"),
-          (abs(col("__hll") - col("__dx")) <=
-            greatest(col("__dx") * 0.05, lit(2.0))).as("hll_ok"),
-          (col("__rlo") <= 0.53 && col("__rhi") >= 0.47).as("p50_ok"))
-    }),
-
-    // the rollup half of the panel story: collapse the per-source
-    // panel to ONE global row — total n, global distinct (theta
-    // union of exact sketches = exact), merged-KLL p50/p95 — moving
-    // only sketch-sized rows. The corpus pass below is grading-only
-    // (rank intervals + the HLL envelope); production reads the
-    // panel alone.
-    "q_sketch_rollup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val roll = functions.Sketches.panelRollup(
-        functions.Sketches.sketchPanel(docs, col("source"),
-          col("n_chars"), col("n_chars")),
-        Seq(0.5, 0.95))
-      val exact = docs.agg(countDistinct(col("n_chars")).as("__dx"))
-      docs.select(col("n_chars")).crossJoin(broadcast(roll))
-        .agg(
-          first(col("n")).as("n"),
-          first(col("distinct_theta")).as("distinct_lens"),
-          first(col("distinct_hll")).as("__hll"),
-          (sum(when(col("n_chars") < col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r50lo"),
-          (sum(when(col("n_chars") <= col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r50hi"),
-          (sum(when(col("n_chars") < col("p95"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r95lo"),
-          (sum(when(col("n_chars") <= col("p95"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r95hi"))
-        .crossJoin(broadcast(exact))
-        .select(col("n"), col("distinct_lens"),
-          (abs(col("__hll") - col("__dx")) <=
-            greatest(col("__dx") * 0.05, lit(2.0))).as("hll_ok"),
-          (col("__r50lo") <= 0.53 && col("__r50hi") >= 0.47).as("p50_ok"),
-          (col("__r95lo") <= 0.98 && col("__r95hi") >= 0.92).as("p95_ok"))
-    }),
-
-    // the incremental-bookkeeping law in the graded surface: two
-    // "daily" panels built on disjoint corpus slices, UNIONED AS
-    // ROWS (a pure metadata append — the day-1 corpus is never
-    // re-read when day 2 arrives), must roll up to the whole-corpus
-    // answers. Theta union of exact sketches stays exact, n sums —
-    // so the global row hash-grades against the same oracle shape
-    // as q_sketch_rollup.
-    "q_sketch_union" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val day1 = docs.filter(col("doc_id") % 3 =!= 2)
-      val day2 = docs.filter(col("doc_id") % 3 === 2)
-      val panel = functions.Sketches.sketchPanel(day1, col("source"),
-          col("n_chars"), col("n_chars"))
-        .unionByName(functions.Sketches.sketchPanel(day2, col("source"),
-          col("n_chars"), col("n_chars")))
-      val roll = functions.Sketches.panelRollup(panel, Seq(0.5))
-      val exact = docs.agg(countDistinct(col("n_chars")).as("__dx"))
-      docs.select(col("n_chars")).crossJoin(broadcast(roll))
-        .agg(
-          first(col("n")).as("n"),
-          first(col("distinct_theta")).as("distinct_lens"),
-          first(col("distinct_hll")).as("__hll"),
-          (sum(when(col("n_chars") < col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r50lo"),
-          (sum(when(col("n_chars") <= col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r50hi"))
-        .crossJoin(broadcast(exact))
-        .select(col("n"), col("distinct_lens"),
-          (abs(col("__hll") - col("__dx")) <=
-            greatest(col("__dx") * 0.05, lit(2.0))).as("hll_ok"),
-          (col("__r50lo") <= 0.53 && col("__r50hi") >= 0.47).as("p50_ok"))
-    }),
-
-    // one-pass per-column data profiling (meta.Profiler.profile):
-    // the pre-ingest validation report — row count, per-column
-    // nulls, distinct (theta sketch: exact below capacity, the
-    // bounded-state path Advisor's exact_distinct_at_scale rule
-    // prescribes), min/max — all columns riding ONE aggregation
-    // pass. Every number recomputes directly in DuckDB.
-    "q_profile" -> ((s, dir) =>
-      meta.Profiler.profile(t(s, dir, "documents"),
-        Seq("doc_id", "lang", "source", "n_chars"))),
-
-    // per-column frequent items (meta.Profiler.profileTopK — the
-    // ValueHistogram "top items" report per column): Misra-Gries
-    // proposes per partition, exact counting decides, rank-by-
-    // (count desc, item asc) cuts. The graded columns (lang, source,
-    // a 16-bucket length quantization) each hold <= capacity
-    // distinct values, the regime where the report is
-    // unconditionally exact — so DuckDB recomputes it directly.
-    "q_profile_topk" -> ((s, dir) =>
-      meta.Profiler.profileTopK(
-        t(s, dir, "documents").withColumn("len_bucket",
-          (col("n_chars") % 16).cast("string")),
-        Seq("lang", "source", "len_bucket"), k = 3)),
-
-    // per-column quantiles in the profile's one-pass shape
-    // (meta.Profiler.profileQuantiles): KLL per column, graded as
-    // rank-law gates (the returned quantile's true rank must sit
-    // inside the sketch's error band — the q_sketch_regroup pattern,
-    // here per COLUMN instead of per group)
-    "q_profile_quantiles" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val rep = meta.Profiler.profileQuantiles(docs,
-        Seq("doc_id", "n_chars"), Seq(0.5, 0.95))
-      val vals = docs.select(explode(array(
-          struct(lit("doc_id").as("col_name"),
-            col("doc_id").cast("double").as("value")),
-          struct(lit("n_chars").as("col_name"),
-            col("n_chars").cast("double").as("value")))).as("p"))
-        .select(col("p.col_name").as("col_name"), col("p.value").as("value"))
-      val ranks = vals.join(rep, Seq("col_name"))
-        .groupBy(col("col_name"))
-        .agg(
-          (sum(when(col("value") < col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r50lo"),
-          (sum(when(col("value") <= col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r50hi"),
-          (sum(when(col("value") < col("p95"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r95lo"),
-          (sum(when(col("value") <= col("p95"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__r95hi"))
-      rep.join(ranks, Seq("col_name"))
-        .select(col("col_name"), col("n"),
-          (col("__r50lo") <= 0.53 && col("__r50hi") >= 0.47).as("p50_ok"),
-          (col("__r95lo") <= 0.98 && col("__r95hi") >= 0.92).as("p95_ok"))
-    }),
-
-    // profile DRIFT between two corpus drops (meta.Profiler.drift):
-    // the "after" drop nulls 20% of lang and 50x-es source
-    // cardinality — the report must flag exactly those columns, via
-    // integer cross-multiplied compares (no division, no doubles)
-    // over two k-row profile reports, so the diff moves kilobytes
-    // at any corpus size
-    "q_profile_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val cols = Seq("doc_id", "lang", "source", "n_chars")
-      val before = meta.Profiler.profile(docs, cols)
-      val mutated = docs
-        .withColumn("lang", when(col("doc_id") % 5 === 0,
-          lit(null).cast("string")).otherwise(col("lang")))
-        .withColumn("source", concat(col("source"), lit("#"),
-          (col("doc_id") % 50).cast("string")))
-      meta.Profiler.drift(before, meta.Profiler.profile(mutated, cols))
-    }),
-
-    // the re-slice half of the panel story: a panel built at
-    // (source, lang) grain rolls up BY LANG ALONE from its rows —
-    // the corpus is read once at build time, the re-group moves
-    // kilobytes. Same exactness window and law gates as
-    // q_sketch_panel, one output row per lang.
-    "q_sketch_regroup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val panel = functions.Sketches.sketchPanelBy(docs,
-        Seq(col("source"), col("lang")), col("n_chars"), col("n_chars"))
-      val roll = functions.Sketches.panelRollupBy(panel,
-        Seq(col("lang")), Seq(0.5))
-      val exact = docs.groupBy(col("lang"))
-        .agg(countDistinct(col("n_chars")).as("__dx"))
-      val ranks = roll.select(col("lang"), col("p50"))
-        .join(docs.select(col("lang"), col("n_chars")), Seq("lang"))
-        .groupBy(col("lang"))
-        .agg(
-          (sum(when(col("n_chars") < col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__rlo"),
-          (sum(when(col("n_chars") <= col("p50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("__rhi"))
-      roll.join(exact, Seq("lang")).join(ranks, Seq("lang"))
-        .select(col("lang"), col("n"),
-          col("distinct_theta").as("distinct_lens"),
-          (abs(col("distinct_hll") - col("__dx")) <=
-            greatest(col("__dx") * 0.05, lit(2.0))).as("hll_ok"),
-          (col("__rlo") <= 0.53 && col("__rhi") >= 0.47).as("p50_ok"))
-    }),
-
-    // multi-set theta algebra via the AGGREGATE forms: per-day user
-    // sketches (one groupBy), then theta_intersection_agg /
-    // theta_union_agg collapse N days to "active on ALL of them" /
-    // "active on ANY" — retention-style numbers with no multi-way
-    // self-join of the events table (the exact form is an N-way
-    // join or a HAVING count(DISTINCT day)=N regroup). Exact below
-    // capacity, so both hash-grade. Day 19723 = 2024-01-01, the
-    // fixture's first event day.
-    "q_theta_common" -> ((s, dir) => {
-      val sel = t(s, dir, "events")
-        .select(col("user_id"),
-          expr("ts div 1000000000 div 86400").as("day"))
-        .filter((col("day") - 19723L).isin(0L, 14L, 29L))
-      // all three selected days must be non-empty: the intersection
-      // aggregate happily intersects however many sketches exist,
-      // while the oracle's HAVING count(DISTINCT day)=3 would yield
-      // 0 — fail loudly instead of silently diverging if a scale or
-      // fixture change empties a day
-      sel.groupBy(col("day"))
-        .agg(call_function("theta_sketch_agg", col("user_id"), lit(20))
-          .as("sk"))
-        .agg(
-          call_function("theta_sketch_estimate",
-            call_function("theta_intersection_agg", col("sk")))
-            .as("n_all_days"),
-          call_function("theta_sketch_estimate",
-            call_function("theta_union_agg", col("sk"), lit(20)))
-            .as("n_any_day"),
-          count(lit(1)).as("__n_days"))
-        .select(
-          when(col("__n_days") === 3, col("n_all_days"))
-            .otherwise(raise_error(concat(
-              lit("q_theta_common: expected 3 non-empty event days, got "),
-              col("__n_days"))).cast("long")).as("n_all_days"),
-          col("n_any_day"))
-    }),
-
-    // snapshot overlap WITHOUT a join (Sketches.thetaOverlap): two
-    // crawl snapshots collapse to one theta sketch each and the six
-    // set cardinalities come from sketch algebra — the scale
-    // companion to the exact sourceOverlap, O(sketch) instead of a
-    // key-universe shuffle. Exact below 2^20 distinct keys per side,
-    // so every number hash-grades against DuckDB's set arithmetic.
-    "q_theta_overlap" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      functions.Sketches.thetaOverlap(
-        docs.filter(col("doc_id") % 4 =!= 3),
-        docs.filter(col("doc_id") % 10 =!= 0),
-        col("doc_id"))
-    }),
-
-    // URL canonicalization over doc_id-derived messy URLs (mixed
-    // case, default port, unsorted params, fragment) — the crawl
-    // frontier / source-dedup key
-    "q_canonical_url" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), concat(
-          lit("HTTP://Example"), (col("doc_id") % 7).cast("string"),
-          lit(".COM:80/Path"), (col("doc_id") % 3).cast("string"),
-          lit("?b="), (col("doc_id") % 5).cast("string"),
-          lit("&a=1#sec"), col("doc_id").cast("string")).as("url"))
-        .select(col("doc_id"),
-          functions.TextAnalysis.canonicalUrl(col("url")).as("canon"))),
-
-    // HTML boilerplate stripping over a corpus wrapped in a
-    // deterministic page skeleton (script/style/comment/tag noise +
-    // entity escapes) — the crawl-extraction step, graded against
-    // the same regex chain in DuckDB (patterns kept RE2-compatible
-    // on purpose: no backreferences, no lookaround)
-    "q_strip_html" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), concat(
-          lit("<html><head><style>p{color:red}</style>" +
-            "<script>var x=1 && y<2;</script></head><body>" +
-            "<!-- crawler noise --><p class=\"main\">"),
-          col("text"),
-          lit("</p><br/>&amp; more &lt;tags&gt; id="),
-          col("doc_id").cast("string"),
-          lit("</body></html>")).as("page"))
-        .select(col("doc_id"),
-          functions.TextAnalysis.stripHtml(col("page")).as("clean"))),
-
-    // Unicode NFC canonicalization over a corpus decorated with
-    // doc_id-keyed DECOMPOSED sequences (the fixture text is pure
-    // ASCII, where NFC is identity by construction — the decoration
-    // makes the compose step observable): native codegen'd
-    // expression, graded against DuckDB's nfc_normalize
-    "q_nfc" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), concat(col("text"),
-          when(col("doc_id") % 3 === 0, lit(" cafe\u0301"))
-            .when(col("doc_id") % 3 === 1, lit(" u\u0308ber"))
-            .otherwise(lit(" pin\u0303a"))).as("raw"))
-        .select(col("doc_id"),
-          functions.TextAnalysis.nfc(col("raw")).as("norm"))),
-
-    // PII scrub over a corpus with synthetic doc_id-derived contact
-    // lines (the plain documents text contains no PII to redact)
-    "q_scrub_pii" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com from 10."),
-          (col("doc_id") % 250).cast("string"), lit("."),
-          ((col("doc_id") * 7) % 250).cast("string"),
-          lit(".4 call 555-"),
-          lpad((col("doc_id") % 1000).cast("string"), 3, "0"),
-          lit("-"),
-          lpad(((col("doc_id") * 13) % 10000).cast("string"), 4, "0"))
-          .as("raw"))
-        .select(col("doc_id"),
-          functions.TextAnalysis.scrubPii(col("raw")).as("p"))
-        .select(col("doc_id"), col("p.clean").as("clean"),
-          col("p.n_emails").cast("long").as("n_emails"),
-          col("p.n_ips").cast("long").as("n_ips"),
-          col("p.n_phones").cast("long").as("n_phones"))),
-
-    // k-anonymity audit (Privacy.kAnonymityReport): the one-row
-    // export-gate summary over the (nation, segment) equivalence
-    // classes — one hash agg to the class table, one over it
-    "q_k_anonymity" -> ((s, dir) =>
-      functions.Privacy.kAnonymityReport(t(s, dir, "customer"),
-        Seq(col("c_nationkey"), col("c_mktsegment")), k = 10)),
-
-    // l-diversity audit (Privacy.lDiversityViolations): classes on
-    // (nation, account-balance band) whose segment column is
-    // near-homogeneous — the leak k-anonymity misses. The band is
-    // floor((bal+1000)/1000): floor-of-double-division is
-    // IEEE-identical across engines (a raw double->int cast is NOT —
-    // DuckDB rounds where Spark truncates)
-    "q_l_diversity" -> ((s, dir) =>
-      functions.Privacy.lDiversityViolations(t(s, dir, "customer"),
-        Seq(col("c_nationkey"),
-          floor((col("c_acctbal") + lit(1000.0)) / lit(1000.0))
-            .as("bal_band")),
-        col("c_mktsegment"), l = 3)),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_grep" ->
-      """SELECT m AS "match", count(*) AS cnt
-        |FROM (SELECT unnest(regexp_extract_all(text, 's[a-z]+')) AS m
-        |      FROM documents)
-        |GROUP BY 1 ORDER BY cnt DESC, m ASC""".stripMargin,
-
-    "q_wordcount" ->
-      """SELECT w AS word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split_regex(text, '\s+')) AS w
-        |      FROM documents)
-        |WHERE length(w) > 0
-        |GROUP BY 1""".stripMargin,
-
-    // generated digit-polynomial oracle — bit-identical Halton doubles
-    "q_pi" -> operators.Pi.oracleSql(100000L),
-
-    // the 6x10 pentomino count is public (2339, Dana Scott 1958); the
-    // validation columns are structural zeroes
-    "q_pentomino" ->
-      """SELECT CAST(2339 AS BIGINT) AS solutions,
-        |       CAST(2339 AS BIGINT) AS distinct_boards,
-        |       CAST(0 AS BIGINT) AS bad_boards""".stripMargin,
-
-    // proper puzzle: exactly one solution, zero validation failures
-    "q_sudoku" ->
-      """SELECT CAST(1 AS BIGINT) AS solutions,
-        |       CAST(0 AS BIGINT) AS bad_lines,
-        |       CAST(0 AS BIGINT) AS clue_mismatches""".stripMargin,
-
-    "q_field_selection" ->
-      """SELECT CAST(l_returnflag AS VARCHAR) AS f0,
-        |       CAST(l_suppkey AS VARCHAR) AS f1,
-        |       CAST(l_orderkey AS VARCHAR) AS f2,
-        |       CAST(l_partkey AS VARCHAR) AS f3,
-        |       CAST(CAST(l_shipdate AS DATE) AS VARCHAR) AS f4
-        |FROM lineitem""".stripMargin,
-
-    "q_inverse" ->
-      """SELECT n_nationkey AS key, n_name AS value FROM nation""".stripMargin,
-
-    "q_regex_filter" ->
-      """SELECT p_partkey, p_name FROM part
-        |WHERE regexp_matches(p_name, '^s.*dget')""".stripMargin,
-
-    "q_percent_filter" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 10 = 0""".stripMargin,
-
-    "q_md5_filter" ->
-      """SELECT o_orderkey, o_custkey FROM orders
-        |WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) = '0'""".stripMargin,
-
-    "q_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""".stripMargin,
-
-    "q_secondary_sort" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity,
-        |       CAST(rank() OVER (PARTITION BY l_orderkey
-        |                         ORDER BY l_linenumber) AS INT) AS rn
-        |FROM lineitem""".stripMargin,
-
-    "q_keyfield_sort" ->
-      s"""WITH kv AS ($kvCorpusSql)
-         |SELECT value FROM kv
-         |ORDER BY l_returnflag DESC, l_orderkey ASC, l_linenumber ASC
-         |LIMIT 100""".stripMargin,
-
-    "q_join_inner" ->
-      """SELECT c_custkey AS custkey, c_name, o_orderkey, o_totalprice
-        |FROM customer JOIN orders ON c_custkey = o_custkey""".stripMargin,
-
-    "q_join_outer" ->
-      """WITH c AS (SELECT c_custkey AS custkey, c_name FROM customer
-        |           WHERE c_custkey % 3 <> 0),
-        |     o AS (SELECT o_custkey AS custkey, count(*) AS n_orders
-        |           FROM orders WHERE o_orderkey % 5 = 0 GROUP BY 1)
-        |SELECT custkey, c_name, n_orders
-        |FROM c FULL OUTER JOIN o USING (custkey)""".stripMargin,
-
-    "q_join_override" ->
-      """WITH b AS (SELECT p_partkey, p_retailprice AS price FROM part),
-        |     o AS (SELECT l_partkey AS p_partkey, min(l_extendedprice) AS price,
-        |                  TRUE AS o_has
-        |           FROM lineitem GROUP BY 1)
-        |SELECT p_partkey,
-        |       CASE WHEN o_has THEN o.price ELSE b.price END AS price
-        |FROM b FULL OUTER JOIN o USING (p_partkey)""".stripMargin,
-
-    "q_join_semi" ->
-      """SELECT c_custkey AS custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_totalprice > 400000)""".stripMargin,
-
-    "q_join_anti" ->
-      """SELECT c_custkey AS custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 400000)""".stripMargin,
-
-    "q_composite_dsl" ->
-      """WITH io AS (
-        |  SELECT c_custkey, c_name, n_orders
-        |  FROM customer
-        |  JOIN (SELECT o_custkey AS c_custkey, count(*) AS n_orders
-        |        FROM orders GROUP BY 1) USING (c_custkey)),
-        |vip AS (SELECT DISTINCT o_custkey AS c_custkey, 1 AS vip
-        |        FROM orders WHERE o_totalprice > 400000)
-        |SELECT c_custkey, c_name, n_orders, vip
-        |FROM io FULL OUTER JOIN vip USING (c_custkey)""".stripMargin,
-
-    "q_data_join" ->
-      """SELECT c_custkey, c_name, o_orderkey, o_custkey, o_totalprice
-        |FROM customer JOIN orders ON c_custkey = o_custkey""".stripMargin,
-
-    "q_multi_inputs" ->
-      """SELECT c_name AS name, c_acctbal AS acctbal, 'C' AS src FROM customer
-        |UNION ALL
-        |SELECT s_name, s_acctbal, 'S' FROM supplier""".stripMargin,
-
-    "q_kv_text" ->
-      """SELECT CAST(l_orderkey AS VARCHAR) AS key,
-        |       concat_ws(chr(9), l_partkey, l_suppkey, l_linenumber,
-        |                 l_returnflag, CAST(l_shipdate AS DATE)) AS value
-        |FROM lineitem""".stripMargin,
-
-    "q_pipe" -> "SELECT upper(text) AS value FROM documents",
-
-    // q_pipe_aggregate: the mapper's descriptor lines replayed as
-    // SQL — "LongValueSum:<lang> -> 1" sums to per-lang doc counts,
-    // "UniqValueCount:langs -> <lang>" counts distinct langs
-    "q_pipe_aggregate" ->
-      """SELECT lang AS key, CAST(count(*) AS VARCHAR) AS value
-        |FROM documents GROUP BY lang
-        |UNION ALL
-        |SELECT 'langs' AS key, CAST(count(DISTINCT lang) AS VARCHAR) AS value
-        |FROM documents""".stripMargin,
-
-    "q_chain" ->
-      """SELECT w AS word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split_regex(text, '\s+')) AS w
-        |      FROM documents WHERE lang = 'en')
-        |WHERE length(w) > 0
-        |GROUP BY 1""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-        |      AS DECIMAL(28,4))) AS DOUBLE) AS sum_disc_price,
-        |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |        / count(*), 4) AS avg_qty,
-        |  count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_agg_lib" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS long_sum,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty_sum,
-        |  max(CAST(l_partkey AS BIGINT)) AS long_max,
-        |  min(CAST(l_partkey AS BIGINT)) AS long_min,
-        |  max(l_linestatus) AS str_max,
-        |  min(l_linestatus) AS str_min
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q_uniq_capped" ->
-      """SELECT l_returnflag,
-        |  least(count(DISTINCT l_partkey), 50) AS uniq_50,
-        |  least(count(DISTINCT l_partkey), 1000000) AS uniq_all
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q_json_record" ->
-      """SELECT CAST(json_extract(props, '$.k') AS INT) AS k,
-        |       count(*) AS cnt,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT user_id, event_id,
-        |  CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) AS v,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |    AS running_sum,
-        |  lag(event_id, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |    AS prev_event
-        |FROM events""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS cnt
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_ewma" ->
-      """WITH w AS (
-        |  SELECT user_id, value,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY ts, event_id) AS rn,
-        |         count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM events)
-        |SELECT user_id,
-        |  round(sum(CASE WHEN rn = 1 THEN value * power(0.5, n - 1)
-        |                 ELSE 0.5 * value * power(0.5, n - rn) END), 4)
-        |    AS ewma
-        |FROM w GROUP BY user_id""".stripMargin,
-
-    "q_replication_plan" ->
-      """WITH w AS (
-        |  SELECT user_id, value,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY ts, event_id) AS rn,
-        |         count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM events),
-        |h AS (
-        |  SELECT user_id,
-        |    round(sum(CASE WHEN rn = 1 THEN value * power(0.5, n - 1)
-        |                   ELSE 0.5 * value * power(0.5, n - rn) END), 4)
-        |      AS ewma
-        |  FROM w GROUP BY user_id)
-        |SELECT user_id, ewma,
-        |  CAST(7 - ntile(4) OVER (ORDER BY ewma DESC, user_id ASC) AS INT)
-        |    AS target_rep
-        |FROM h""".stripMargin,
-
-    "q_skip_bad" ->
-      """SELECT o_orderkey,
-        |       TRY_CAST(substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) AS INT)
-        |         AS d
-        |FROM orders
-        |WHERE TRY_CAST(substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) AS INT)
-        |      IS NOT NULL""".stripMargin,
-
-    "q_skip_bad_quarantine" ->
-      """SELECT o_orderkey, o_custkey
-        |FROM orders
-        |WHERE TRY_CAST(substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) AS INT)
-        |      IS NULL""".stripMargin,
-
-    "q_meta_du" ->
-      """SELECT concat('/corpus/', source) AS child,
-        |       CAST(sum(CAST(n_chars AS BIGINT)) AS BIGINT) AS length,
-        |       count(*) AS n_files
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_meta_count" ->
-      """SELECT CAST(0 AS BIGINT) AS dir_count,
-        |       count(*) AS file_count,
-        |       CAST(sum(CAST(n_chars AS BIGINT)) AS BIGINT) AS content_size
-        |FROM documents""".stripMargin,
-
-    // q_text_sink / q_getmerge: the same line set both ways (the
-    // merge must be content-preserving); rows compare sorted, so
-    // file order is not part of the hash
-    "q_text_sink" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) || chr(9) || n_name AS line
-        |FROM nation""".stripMargin,
-
-    // q_partitioned_sink / q_distcp / q_jdbc_roundtrip: lossless
-    // artifact round trips == base-table equality
-    "q_partitioned_sink" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-    "q_distcp" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-    "q_compaction" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-    "q_delete_keys" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey NOT IN (1, 2, 3)""".stripMargin,
-    "q_jdbc_roundtrip" ->
-      """SELECT n_nationkey, n_name FROM nation""",
-    "q_har_roundtrip" ->
-      """SELECT n_nationkey, n_name FROM nation""",
-    "q_multiple_outputs" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-
-    // q_seqfile_roundtrip: lossless (Text,Text) container round trip
-    // == base-table equality on the stringified pair
-    "q_seqfile_roundtrip" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) AS key, n_name AS value
-        |FROM nation""".stripMargin,
-
-    "q_seqfile_binary" ->
-      """SELECT n_nationkey, n_name FROM nation""",
-
-    // q_nline_splits: the oracle re-derives the row-exact dealing
-    // (64 consecutive doc_id-ordered rows per split) from row_number
-    "q_nline_splits" ->
-      """SELECT CAST(floor((rn - 1) / 64) AS INT) AS split_id,
-        |       count(*) AS n_rows,
-        |       min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rn
-        |      FROM documents)
-        |GROUP BY 1""".stripMargin,
-
-    // q_sort_validate: the validator must see every row and report
-    // the sort globally intact
-    "q_sort_validate" ->
-      """SELECT true AS is_sorted, count(*) AS checked_rows FROM events""",
-
-    // q_total_order_rank: rank read off the sorted partitions equals
-    // the true global row_number
-    "q_total_order_rank" ->
-      """SELECT c_custkey,
-        |       row_number() OVER (ORDER BY c_custkey) AS global_rank
-        |FROM customer""".stripMargin,
-
-    // q_skew_join: the salted plan vs the PLAIN join — multiplicity
-    // must be preserved exactly
-    "q_skew_join" ->
-      """SELECT s_nationkey, count(*) AS cnt,
-        |       CAST(sum(l_orderkey) AS BIGINT) AS key_sum
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1""".stripMargin,
-
-    // q_counters: both observe counters recomputed declaratively
-    "q_counters" ->
-      """SELECT 'english' AS counter,
-        |       count(*) FILTER (WHERE lang = 'en') AS value
-        |FROM documents
-        |UNION ALL
-        |SELECT 'records' AS counter, count(*) AS value FROM documents""".stripMargin,
-
-    // q_linesep: same reconstruction as q_text_sink — the 0x07
-    // delimiter must be invisible to the round trip
-    "q_linesep" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) || chr(9) || n_name AS line
-        |FROM nation""".stripMargin,
-
-    // q_bucketed_join: the zero-Exchange bucket contract vs the
-    // plain join
-    "q_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS cnt, max(o_orderkey) AS max_order
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1""".stripMargin,
-
-    // q_reduce_values: order-sensitive fold over the sorted value
-    // stream — string_agg skips the NULLs the rn>3 CASE produces
-    "q_reduce_values" ->
-      """SELECT o_custkey,
-        |       string_agg(CASE WHEN rn <= 3 THEN CAST(o_orderkey AS VARCHAR) END,
-        |                  ',' ORDER BY o_orderkey) AS first_orders,
-        |       count(*) AS n_orders
-        |FROM (SELECT o_custkey, o_orderkey,
-        |             row_number() OVER (PARTITION BY o_custkey
-        |                                ORDER BY o_orderkey) AS rn
-        |      FROM orders)
-        |GROUP BY 1""".stripMargin,
-
-    // q_mapfile_lookup: the two probed keys straight from the base
-    // table — the artifact path must neither lose nor invent rows
-    "q_mapfile_lookup" ->
-      """SELECT n_nationkey, n_name FROM nation
-        |WHERE n_nationkey IN (3, 14)""".stripMargin,
-    "q_getmerge" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) || chr(9) || n_name AS line
-        |FROM nation""".stripMargin,
-
-    // q_distch: tree-scoped CASE edits in op order (later wins);
-    // src1x/src2x sources exist at no fixture, but the LIKE guards
-    // mirror the operator's /a-vs-/abc tree semantics anyway
-    "q_distch" ->
-      """SELECT '/corpus/' || source || '/doc_' || doc_id AS path,
-        |       CASE WHEN source = 'src1' THEN 'curator'
-        |            ELSE 'etl' END AS owner,
-        |       CASE WHEN source = 'src1' THEN '600'
-        |            WHEN source = 'src2' THEN '400'
-        |            ELSE '644' END AS perm
-        |FROM documents""".stripMargin,
-
-    // q_logalyze: per-line occurrence counts of the pattern, summed
-    // over duplicate lines (rows are compared sorted, so the
-    // column-sort itself is exercised by the spec, not the hash)
-    "q_logalyze" ->
-      """WITH m AS (
-        |  SELECT text AS line,
-        |         len(regexp_extract_all(text, 'data')) AS c
-        |  FROM documents WHERE text IS NOT NULL)
-        |SELECT line, CAST(sum(c) AS BIGINT) AS cnt
-        |FROM m WHERE c > 0 GROUP BY line""".stripMargin,
-
-    // q_advisor: the triggered rule set is a CONSTANT of the fixture
-    // design (99%-hot key -> one busy reducer of N >= 4 -> impact
-    // >= 0.75; md5 filter keeps ~1/16 -> impact ~0.94; BNLJ present
-    // -> impact 1.0 — all 'high' at every scale and partition count)
-    "q_advisor" ->
-      """SELECT 'balanced_shuffle_partitioning' AS rule, 'high' AS severity
-        |UNION ALL SELECT 'cartesian_join', 'high'
-        |UNION ALL SELECT 'exact_distinct_at_scale', 'high'
-        |UNION ALL SELECT 'unpushed_filter', 'high'""".stripMargin,
-
-    "q_meta_fsck" ->
-      """WITH blocks AS (
-        |  SELECT concat('/corpus/', source) AS dir,
-        |         CAST(ceil(CAST(n_chars AS DOUBLE) / 256) AS INT) AS nb
-        |  FROM documents WHERE n_chars > 0)
-        |SELECT dir,
-        |       CAST(sum(CAST(nb AS BIGINT)) AS BIGINT) AS n_blocks,
-        |       CAST(0 AS BIGINT) AS under_replicated,
-        |       round(CAST(3 AS DOUBLE), 4) AS avg_replication
-        |FROM blocks GROUP BY dir""".stripMargin,
-
-    // balancer: the same md5 replica-placement model, utilization
-    // band classification, and move sizing in plain SQL
-    "q_balancer" ->
-      """WITH files AS (
-        |  SELECT '/corpus/' || source || '/doc_' || doc_id AS path,
-        |         CAST(n_chars AS BIGINT) AS len, 3 AS replication
-        |  FROM documents WHERE n_chars > 0),
-        |blocks AS (
-        |  SELECT path, len, replication,
-        |         unnest(range(CAST(ceil(CAST(len AS DOUBLE)/256)
-        |                      AS BIGINT))) AS block_idx
-        |  FROM files),
-        |reps AS (
-        |  SELECT path, block_idx, least(256, len - block_idx*256) AS bytes,
-        |         unnest(range(replication)) AS r
-        |  FROM blocks),
-        |assigned AS (
-        |  SELECT ('0x' || substr(md5(path || '#' || block_idx || '#' || r),
-        |                         1, 6))::BIGINT % 10 AS node,
-        |         bytes FROM reps),
-        |usage AS (
-        |  SELECT t.range AS node,
-        |         CAST(coalesce(sum(a.bytes), 0) AS BIGINT) AS used_bytes
-        |  FROM range(10) t LEFT JOIN assigned a ON a.node = t.range
-        |  GROUP BY 1),
-        |avgu AS (SELECT CAST(sum(used_bytes) AS DOUBLE)
-        |                / (10 * 100000) AS avg_util FROM usage)
-        |SELECT node, used_bytes,
-        |  round(CAST(used_bytes AS DOUBLE) / 100000, 4) AS util,
-        |  CASE WHEN CAST(used_bytes AS DOUBLE)/100000 > avg_util + 0.01
-        |         THEN 'over'
-        |       WHEN CAST(used_bytes AS DOUBLE)/100000 > avg_util
-        |         THEN 'above'
-        |       WHEN CAST(used_bytes AS DOUBLE)/100000 >= avg_util - 0.01
-        |         THEN 'below'
-        |       ELSE 'under' END AS node_class,
-        |  CASE WHEN CAST(used_bytes AS DOUBLE)/100000 > avg_util + 0.01
-        |         THEN CAST(floor((CAST(used_bytes AS DOUBLE)/100000
-        |                          - avg_util - 0.01) * 100000) AS BIGINT)
-        |       WHEN CAST(used_bytes AS DOUBLE)/100000 < avg_util - 0.01
-        |         THEN CAST(floor((avg_util - 0.01
-        |                          - CAST(used_bytes AS DOUBLE)/100000)
-        |                         * 100000) AS BIGINT)
-        |       ELSE 0 END AS bytes_to_move
-        |FROM usage CROSS JOIN avgu""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-        |       min(doc_id) AS keep_id, count(*) AS dup_cnt
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // q_snapshot_diff: status from id membership + fingerprint
-    // comparison of the same decorated new version
-    "q_snapshot_diff" ->
-      """WITH o AS (
-        |  SELECT doc_id,
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id % 5 <> 0),
-        |n AS (
-        |  SELECT doc_id,
-        |         md5(trim(regexp_replace(lower(
-        |           CASE WHEN doc_id % 7 = 0 THEN text || ' revised'
-        |                ELSE text END), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id % 3 <> 0)
-        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        |       CASE WHEN o.doc_id IS NULL THEN 'added'
-        |            WHEN n.doc_id IS NULL THEN 'removed'
-        |            WHEN o.fp IS NOT DISTINCT FROM n.fp THEN 'unchanged'
-        |            ELSE 'changed' END AS status
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""".stripMargin,
-
-    // q_keep_best: best-score survivor per fingerprint class; the
-    // fixture has no null-text docs, so the pass-through leg is
-    // covered by the spec, not the oracle
-    "q_keep_best" ->
-      """WITH scored AS (
-        |  SELECT doc_id, text, doc_id % 7 AS score,
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |ranked AS (
-        |  SELECT doc_id, score,
-        |         row_number() OVER (PARTITION BY fp
-        |           ORDER BY score DESC, doc_id) AS rn
-        |  FROM scored)
-        |SELECT doc_id, score FROM ranked WHERE rn = 1""".stripMargin,
-
-    // q_delta_dedup: within-delta min-id dedup (null-text rows all
-    // pass — no content to compare), then an anti-probe of the
-    // standing corpus's fingerprint set; md5 of NULL propagates NULL,
-    // which matches nothing
-    "q_delta_dedup" ->
-      """WITH corp AS (
-        |  SELECT DISTINCT
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id % 4 < 2 AND text IS NOT NULL),
-        |delta AS (
-        |  SELECT doc_id,
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id % 4 >= 2),
-        |win AS (
-        |  SELECT doc_id, fp,
-        |         CASE WHEN fp IS NULL THEN 1
-        |              ELSE row_number() OVER (PARTITION BY fp ORDER BY doc_id)
-        |         END AS rn
-        |  FROM delta)
-        |SELECT doc_id FROM win
-        |WHERE rn = 1 AND (fp IS NULL OR fp NOT IN (SELECT fp FROM corp))""".stripMargin,
-
-    // q_delta_dedup_bloom: the bloom prefilter is exact by
-    // construction (negatives definitive, positives re-verified), so
-    // the oracle is q_delta_dedup's verbatim
-    "q_delta_dedup_bloom" ->
-      """WITH corp AS (
-        |  SELECT DISTINCT
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id % 4 < 2 AND text IS NOT NULL),
-        |delta AS (
-        |  SELECT doc_id,
-        |         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id % 4 >= 2),
-        |win AS (
-        |  SELECT doc_id, fp,
-        |         CASE WHEN fp IS NULL THEN 1
-        |              ELSE row_number() OVER (PARTITION BY fp ORDER BY doc_id)
-        |         END AS rn
-        |  FROM delta)
-        |SELECT doc_id FROM win
-        |WHERE rn = 1 AND (fp IS NULL OR fp NOT IN (SELECT fp FROM corp))""".stripMargin,
-
-    // segment dedup: DuckDB elects winners on the raw segment text
-    // (engine-local), Spark on md5(segment) — identical winners up
-    // to 128-bit digest collisions
-    "q_segment_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents WHERE text IS NOT NULL),
-        |base AS (SELECT doc_id, tk FROM toks WHERE len(tk) > 0),
-        |segs AS (
-        |  SELECT doc_id,
-        |         unnest([{'i': i, 's': array_to_string(tk[i*5+1 : i*5+5], ' ')}
-        |                 for i in range((len(tk)-1)//5 + 1)]) AS u
-        |  FROM base),
-        |flat AS (SELECT doc_id, u.i AS seg_idx, u.s AS seg FROM segs),
-        |winners AS (
-        |  SELECT doc_id, seg_idx, seg
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY seg
-        |                    ORDER BY doc_id, seg_idx) AS rn FROM flat)
-        |  WHERE rn = 1),
-        |kept AS (
-        |  SELECT doc_id, count(*) AS n_kept,
-        |         string_agg(seg, ' ' ORDER BY seg_idx) AS text_kept
-        |  FROM winners GROUP BY 1),
-        |nseg AS (SELECT doc_id, count(*) AS n_segments FROM flat GROUP BY 1)
-        |SELECT n.doc_id, n.n_segments,
-        |       coalesce(k.n_kept, 0) AS n_kept, k.text_kept
-        |FROM nseg n LEFT JOIN kept k USING (doc_id)""".stripMargin,
-
-    "q_ngram_jaccard" -> ngramJaccardSql,
-
-    // q_canonical_url: the same extract/sort/reassemble chain in
-    // DuckDB (both engines return '' on a no-match extract)
-    "q_canonical_url" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |         'HTTP://Example' || CAST(doc_id % 7 AS VARCHAR)
-        |         || '.COM:80/Path' || CAST(doc_id % 3 AS VARCHAR)
-        |         || '?b=' || CAST(doc_id % 5 AS VARCHAR)
-        |         || '&a=1#sec' || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |parts AS (
-        |  SELECT doc_id,
-        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1) AS hp,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path,
-        |    regexp_extract(url, '\?([^#]*)', 1) AS q
-        |  FROM u),
-        |norm AS (
-        |  SELECT doc_id, scheme,
-        |    lower(regexp_extract(hp, '^([^:]*)', 1)) AS host,
-        |    regexp_extract(hp, ':([0-9]+)$', 1) AS port,
-        |    CASE WHEN path = '' THEN '/' ELSE path END AS path, q
-        |  FROM parts)
-        |SELECT doc_id,
-        |  scheme || '://' || host ||
-        |  CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-        |         OR (scheme = 'https' AND port = '443') THEN ''
-        |       ELSE ':' || port END ||
-        |  path ||
-        |  CASE WHEN q = '' THEN ''
-        |       ELSE '?' || array_to_string(list_sort(string_split(q, '&')), '&')
-        |  END AS canon
-        |FROM norm""".stripMargin,
-
-    // q_strip_html: the same RE2-compatible regex chain and
-    // amp-last entity order as TextAnalysis.stripHtml
-    "q_strip_html" ->
-      """WITH page AS (
-        |  SELECT doc_id,
-        |         '<html><head><style>p{color:red}</style><script>var x=1 && y<2;</script></head><body><!-- crawler noise --><p class="main">'
-        |         || text || '</p><br/>&amp; more &lt;tags&gt; id='
-        |         || CAST(doc_id AS VARCHAR) || '</body></html>' AS p
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(p,
-        |         '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS p FROM page),
-        |s2 AS (SELECT doc_id, regexp_replace(p,
-        |         '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS p FROM s1),
-        |s3 AS (SELECT doc_id, regexp_replace(p,
-        |         '(?s)<!--.*?-->', ' ', 'g') AS p FROM s2),
-        |s4 AS (SELECT doc_id, regexp_replace(p,
-        |         '<[^>]+>', ' ', 'g') AS p FROM s3),
-        |s5 AS (SELECT doc_id,
-        |         replace(replace(replace(replace(replace(replace(replace(p,
-        |           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |           '&#39;', ''''), '&apos;', ''''), '&nbsp;', ' '),
-        |           '&amp;', '&') AS p
-        |       FROM s4)
-        |SELECT doc_id, trim(regexp_replace(p, '\s+', ' ', 'g')) AS clean
-        |FROM s5""".stripMargin,
-
-    // q_nfc: DuckDB composes the same decomposed decorations via
-    // chr() codepoints (769/776/771 = combining acute/diaeresis/tilde)
-    "q_nfc" ->
-      """SELECT doc_id,
-        |       nfc_normalize(text || CASE doc_id % 3
-        |         WHEN 0 THEN ' cafe' || chr(769)
-        |         WHEN 1 THEN ' u' || chr(776) || 'ber'
-        |         ELSE ' pin' || chr(771) || 'a' END) AS norm
-        |FROM documents""".stripMargin,
-
-    // q_containment: ngramJaccardSql's blocking with the asymmetric
-    // per-side ratios; n_sh counts pre-prune distinct shingles (the
-    // Spark window runs before the df cap) while inter counts only
-    // kept ones — both engines agree on that asymmetry
-    "q_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(tk) >= 3
-        |           THEN [array_to_string(tk[i+1:i+3], ' ')
-        |                 for i in range(len(tk) - 2)]
-        |           ELSE [array_to_string(tk, ' ')] END) AS s
-        |  FROM toks),
-        |inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS s FROM sh),
-        |keep AS (SELECT s FROM inv GROUP BY s HAVING count(*) <= 1000),
-        |pr AS (SELECT i.* FROM inv i JOIN keep USING (s)),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |         a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-        |  FROM pr a JOIN pr b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT id_a, id_b,
-        |       round(CAST(inter AS DOUBLE) / na, 4) AS cont_a,
-        |       round(CAST(inter AS DOUBLE) / nb, 4) AS cont_b
-        |FROM pairs
-        |WHERE greatest(round(CAST(inter AS DOUBLE) / na, 4),
-        |               round(CAST(inter AS DOUBLE) / nb, 4)) >= 0.5""".stripMargin,
-
-    // q_containment_prefix: TRUE exact containment pairs — the
-    // routed min-side-prefix path scores FULL shingle sets with no
-    // df cap, so the oracle drops q_containment's `keep` CTE (and
-    // with it the kept-shingle-only intersection asymmetry)
-    "q_containment_prefix" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(tk) >= 3
-        |           THEN [array_to_string(tk[i+1:i+3], ' ')
-        |                 for i in range(len(tk) - 2)]
-        |           ELSE [array_to_string(tk, ' ')] END) AS s
-        |  FROM toks),
-        |inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS s FROM sh),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |         a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-        |  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT id_a, id_b,
-        |       round(CAST(inter AS DOUBLE) / na, 4) AS cont_a,
-        |       round(CAST(inter AS DOUBLE) / nb, 4) AS cont_b
-        |FROM pairs
-        |WHERE greatest(round(CAST(inter AS DOUBLE) / na, 4),
-        |               round(CAST(inter AS DOUBLE) / nb, 4)) >= 0.8""".stripMargin,
-
-    // q_ngram_prefix: TRUE exact pairs — no document-frequency prune
-    // (the prefix filter needs none; its rerank scores full sets), so
-    // the oracle drops ngramJaccardSql's `keep` CTE and adds the
-    // Spark side's blank/null-doc exclusion explicitly.
-    "q_ngram_prefix" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(tk) >= 3
-        |           THEN [array_to_string(tk[i+1:i+3], ' ')
-        |                 for i in range(len(tk) - 2)]
-        |           ELSE [array_to_string(tk, ' ')] END) AS s
-        |  FROM toks),
-        |inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS s FROM sh),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |         a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-        |  FROM inv a JOIN inv b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT id_a, id_b,
-        |       round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-        |FROM pairs
-        |WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5""".stripMargin,
-
-    // q_blocking_stats: the oracle re-derives the rarity-ranked
-    // prefix index (string shingles, (df, shingle) order — the same
-    // engine-portable order the operator uses) and the per-threshold
-    // candidate bounds with integer arithmetic. Thresholds are cast
-    // to DOUBLE so ceil(t * n_sh) does the identical IEEE math as the
-    // Spark side (the 1e-9 nudge absorbs representation error on
-    // exact-integer products in both engines).
-    "q_blocking_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(tk) >= 3
-        |           THEN [array_to_string(tk[i+1:i+3], ' ')
-        |                 for i in range(len(tk) - 2)]
-        |           ELSE [array_to_string(tk, ' ')] END) AS s
-        |  FROM toks),
-        |inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS s FROM sh),
-        |dfq AS (SELECT s, count(*) AS df FROM inv GROUP BY s),
-        |rk AS (SELECT i.doc_id, i.s, i.n_sh, d.df,
-        |              row_number() OVER (PARTITION BY i.doc_id
-        |                                 ORDER BY d.df, i.s) AS rk
-        |       FROM inv i JOIN dfq d USING (s)),
-        |pre AS (SELECT t.t AS threshold, r.s, count(*) AS c,
-        |               any_value(r.df) AS df
-        |        FROM rk r CROSS JOIN (SELECT unnest([0.5::DOUBLE,
-        |               0.8::DOUBLE, 0.9::DOUBLE]) AS t) t
-        |        WHERE r.rk <= r.n_sh
-        |              - ceil(t.t * r.n_sh - 0.000000001) + 1
-        |        GROUP BY 1, 2)
-        |SELECT threshold,
-        |       CAST(sum(c) AS BIGINT) AS prefix_entries,
-        |       CAST(sum(c * (c - 1) // 2) AS BIGINT)
-        |         AS jaccard_cand_rows,
-        |       CAST(sum(c * (df - 1)) AS BIGINT)
-        |         AS containment_cand_rows
-        |FROM pre GROUP BY threshold""".stripMargin,
-
-    // q_dup_spans: the oracle builds each doc's 5-gram positions with
-    // a list comprehension (ZERO spans under 5 tokens — range() of a
-    // non-positive bound is empty), counts document frequency per
-    // gram string (the Spark side keys on xxhash64 of the gram;
-    // collision-free on this corpus), and rolls up per doc.
-    "q_dup_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id,
-        |         unnest([array_to_string(tk[i+1:i+5], ' ')
-        |                 for i in range(greatest(len(tk) - 4, 0))]) AS g
-        |  FROM toks),
-        |dg AS (SELECT doc_id, g, count(*) AS cnt FROM pos GROUP BY 1, 2),
-        |nd AS (SELECT g, count(*) AS ndocs FROM dg GROUP BY g),
-        |per AS (
-        |  SELECT dg.doc_id,
-        |         sum(dg.cnt) AS n_spans,
-        |         sum(CASE WHEN nd.ndocs >= 2 THEN dg.cnt ELSE 0 END)
-        |           AS dup_spans
-        |  FROM dg JOIN nd USING (g) GROUP BY 1)
-        |SELECT t.doc_id,
-        |       CAST(coalesce(p.n_spans, 0) AS BIGINT) AS n_spans,
-        |       CAST(coalesce(p.dup_spans, 0) AS BIGINT) AS dup_spans,
-        |       CASE WHEN coalesce(p.n_spans, 0) > 0
-        |            THEN round(CAST(p.dup_spans AS DOUBLE) / p.n_spans, 4)
-        |            ELSE 0.0 END AS dup_frac
-        |FROM toks t LEFT JOIN per p USING (doc_id)""".stripMargin,
-
-    // q_source_overlap: same tokenization/gram space as q_dup_spans
-    // (docs under 5 tokens emit no grams), distinct per (source,
-    // gram), then the pair join — DuckDB carries gram strings where
-    // Spark carries 8-byte hashes; counts agree absent collisions
-    // (same trade q_dup_spans documents)
-    "q_source_overlap" ->
-      """WITH toks AS (
-        |  SELECT source,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |pos AS (
-        |  SELECT source,
-        |         unnest([array_to_string(tk[i+1:i+5], ' ')
-        |                 for i in range(greatest(len(tk) - 4, 0))]) AS g
-        |  FROM toks),
-        |sg AS (SELECT DISTINCT source, g FROM pos),
-        |cs AS (SELECT source, count(*) AS c FROM sg GROUP BY 1),
-        |pr AS (
-        |  SELECT a.source AS source_a, b.source AS source_b,
-        |         count(*) AS shared
-        |  FROM sg a JOIN sg b ON a.g = b.g AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT pr.source_a, pr.source_b,
-        |       CAST(pr.shared AS BIGINT) AS shared_grams,
-        |       round(CAST(pr.shared AS DOUBLE)
-        |             / (ca.c + cb.c - pr.shared), 4) AS jaccard
-        |FROM pr
-        |JOIN cs ca ON ca.source = pr.source_a
-        |JOIN cs cb ON cb.source = pr.source_b""".stripMargin,
-
-    // q_kfold: the fold thresholds are exact hex eighths of the md5
-    // space (0.25 * 2^32 = 0x40000000 ...), so the oracle re-derives
-    // every assignment with plain string compares
-    "q_kfold" ->
-      """SELECT doc_id,
-        |       CASE WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':42'),
-        |                            1, 8) < '40000000' THEN 0
-        |            WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':42'),
-        |                            1, 8) < '80000000' THEN 1
-        |            WHEN substring(md5(CAST(doc_id AS VARCHAR) || ':42'),
-        |                            1, 8) < 'c0000000' THEN 2
-        |            ELSE 3 END AS fold
-        |FROM documents""".stripMargin,
-
-    // q_quality_gate: rank cut re-derived with a window row_number —
-    // tiny in DuckDB, a single-partition funnel Spark must avoid
-    // (which is exactly what topFraction's range-exchange kernel does)
-    "q_quality_gate" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |         CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |                              x -> length(x) > 0)) AS BIGINT)
-        |           AS n_tokens
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, n_tokens,
-        |         CAST(row_number() OVER (ORDER BY n_tokens DESC, doc_id)
-        |              AS BIGINT) AS rnk,
-        |         count(*) OVER () AS n
-        |  FROM s)
-        |SELECT doc_id, n_tokens, rnk
-        |FROM r WHERE rnk <= floor(0.2 * n)""".stripMargin,
-
-    // q_funnel: the same greedy first-touch chain as chained CTEs —
-    // each step anchors at its first event strictly after the
-    // previous match and within the 1-day window (oracle time unit is
-    // epoch-us, Spark's is epoch-ns; only counts cross the boundary)
-    // q_retention: weekly cohort buckets in µs (the ns bucket / 1000);
-    // DuckDB's // is integer floor division on BIGINT
-    "q_retention" ->
-      """WITH ub AS (
-        |  SELECT DISTINCT user_id AS u,
-        |         epoch_us(ts) // 604800000000 AS b
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |coh AS (SELECT u, min(b) AS cohort FROM ub GROUP BY u)
-        |SELECT c.cohort, ub.b - c.cohort AS period, count(*) AS users
-        |FROM ub JOIN coh c USING (u)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_funnel" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t, event_type
-        |           FROM events),
-        |r1 AS (SELECT u, min(t) AS mt FROM e
-        |       WHERE event_type = 'view' GROUP BY 1),
-        |r2 AS (SELECT e.u, min(e.t) AS mt FROM e JOIN r1 USING (u)
-        |       WHERE e.event_type = 'click' AND e.t > r1.mt
-        |         AND e.t <= r1.mt + 86400000000 GROUP BY 1),
-        |r3 AS (SELECT e.u, min(e.t) AS mt FROM e JOIN r2 USING (u)
-        |       WHERE e.event_type = 'purchase' AND e.t > r2.mt
-        |         AND e.t <= r2.mt + 86400000000 GROUP BY 1)
-        |SELECT CAST(1 AS INTEGER) AS step_idx, 'view' AS step,
-        |       CAST((SELECT count(*) FROM r1) AS BIGINT) AS users
-        |UNION ALL
-        |SELECT 2, 'click', (SELECT count(*) FROM r2)
-        |UNION ALL
-        |SELECT 3, 'purchase', (SELECT count(*) FROM r3)""".stripMargin,
-
-    // q_dedup_classes: the same pair set as q_ngram_jaccard, closed
-    // transitively — DuckDB walks the closure with a recursive CTE,
-    // Spark with min-label propagation; both label a component by its
-    // smallest doc id.
-    "q_dedup_classes" ->
-      s"""WITH RECURSIVE pr AS ($ngramJaccardSql),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pr
-         |          UNION SELECT id_b, id_a FROM pr),
-         |walk(id, r) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-         |  UNION
-         |  SELECT e.a, w.r FROM edges e JOIN walk w ON e.b = w.id)
-         |SELECT id AS doc_id, min(r) AS class_rep
-         |FROM walk GROUP BY id""".stripMargin,
-
-    // q_keep_best_neardup: the recursive closure over the same pair
-    // set, then per-class argmax (score desc, id asc) with unpaired
-    // docs in salted singleton partitions
-    "q_keep_best_neardup" ->
-      s"""WITH RECURSIVE pr AS ($ngramJaccardSql),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pr
-         |          UNION SELECT id_b, id_a FROM pr),
-         |walk(id, r) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-         |  UNION
-         |  SELECT e.a, w.r FROM edges e JOIN walk w ON e.b = w.id),
-         |classes AS (SELECT id AS doc_id, min(r) AS class_rep
-         |            FROM walk GROUP BY id),
-         |scored AS (SELECT doc_id, doc_id % 7 AS score FROM documents)
-         |SELECT doc_id, score
-         |FROM scored LEFT JOIN classes USING (doc_id)
-         |QUALIFY row_number() OVER (
-         |  PARTITION BY coalesce(CAST(class_rep AS VARCHAR),
-         |                        'solo:' || CAST(doc_id AS VARCHAR))
-         |  ORDER BY score DESC, doc_id) = 1""".stripMargin,
-
-    // q_minhash_lsh: with bands = numHashes the LSH candidates cover
-    // every pair sharing any min value (miss p = 0.5^32 at J >= 0.5)
-    // and the exact rerank makes the output equal the exact n-gram
-    // Jaccard pair set — so the minhash path is graded against the
-    // SAME oracle as the exact path.
-    "q_minhash_lsh" -> ngramJaccardSql,
-
-    // q_minhash_banded: production r=2 banding graded as a witness —
-    // the output is keyed by the EXACT pair set (recomputable in
-    // SQL) and the banded path's recall over it is the found flag;
-    // the seeded hash family catches every graded-corpus pair, so
-    // found is the constant 1 (a miss grades as a row diff).
-    "q_minhash_banded" ->
-      s"""SELECT id_a, id_b, jaccard, 1 AS found
-         |FROM ($ngramJaccardSql)""".stripMargin,
-
-    // q_stream_neardup: the streaming LSH twin at the same
-    // oracle-parity banding — its appended pair set equals the batch
-    // operator's, so the exact-Jaccard oracle applies verbatim
-    "q_stream_neardup" -> ngramJaccardSql,
-
-    // q_simhash: self-validating witness row — the Spark side
-    // compares chunk-blocked pairs against the exact brute-force
-    // Hamming join; the oracle states the invariants (pigeonhole
-    // recall 1.0, rerank exactness, non-vacuity) as constants.
-    "q_simhash" ->
-      """SELECT CAST(0 AS BIGINT) AS missed_pairs,
-        |       CAST(0 AS BIGINT) AS extra_pairs,
-        |       round(CAST(1 AS DOUBLE), 4) AS recall,
-        |       TRUE AS non_empty""".stripMargin,
-
-    // q_embed_ann: per-query recall floor, stated as a constant; the
-    // Spark side computes recall@5 of the multiprobe ANN vs brute
-    // force and emits whether each query clears it.
-    "q_embed_ann" ->
-      """SELECT vec_id AS query_id, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    // q_embed_pq: same self-validating shape as q_embed_ann — the
-    // codebook is k-means-trained (not SQL-portable), so the gate is
-    // per-query recall of the PQ+rerank pipeline vs brute force,
-    // every query clearing the constant floor (0.6 = the measured
-    // min at sf0.01 AND sf1; one lost hit on the worst query fails)
-    "q_embed_pq" ->
-      """SELECT vec_id AS query_id, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    // q_embed_pq_disk: identical gate — the parquet round trip is
-    // binary-exact for byte/double columns, so the persisted index
-    // must clear the same floor
-    "q_embed_pq_disk" ->
-      """SELECT vec_id AS query_id, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    // q_embed_ivfpq: same self-validating shape, higher floor (0.8)
-    // — residual encoding is measurably better than flat PQ at the
-    // same code budget, and the gate pins that advantage
-    "q_embed_ivfpq" ->
-      """SELECT vec_id AS query_id, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    // q_embed_ivfpq_disk: identical gate through the persisted
-    // cluster-partitioned index — the round trip is binary-exact,
-    // so the disk probe must clear the same 0.8 floor
-    "q_embed_ivfpq_disk" ->
-      """SELECT vec_id AS query_id, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    // q_embed_ivf: nprobe = nlist scans every cluster, so IVF top-k
-    // provably equals brute-force top-k — checked row-for-row.
-    "q_embed_ivf" -> embedIvfSql,
-
-    // identical semantics through the persisted cluster-partitioned
-    // artifact — same oracle verbatim
-    "q_embed_ivf_disk" -> embedIvfSql,
-
-    // kNN vote replayed: exact cosine ranking (the embed_topk CTE),
-    // then majority vote with (votes DESC, label ASC) tie-break
-    "q_knn_predict" ->
-      """WITH c AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |           FROM embeddings WHERE label IS NOT NULL),
-        |q AS (SELECT vec_id AS query_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-        |      FROM embeddings WHERE vec_id < 20),
-        |s AS (SELECT query_id, vec_id, label,
-        |        round(list_dot_product(cv, qv) /
-        |              sqrt(list_dot_product(cv, cv) *
-        |                   list_dot_product(qv, qv)), 4) AS cos
-        |      FROM c CROSS JOIN q WHERE vec_id <> query_id),
-        |nn AS (SELECT query_id, label FROM s
-        |       QUALIFY row_number() OVER (PARTITION BY query_id
-        |                 ORDER BY cos DESC, vec_id ASC) <= 7),
-        |votes AS (SELECT query_id, label AS pred_label,
-        |                 count(*) AS n_votes
-        |          FROM nn GROUP BY query_id, label)
-        |SELECT query_id, pred_label, CAST(n_votes AS BIGINT) AS n_votes
-        |FROM votes
-        |QUALIFY row_number() OVER (PARTITION BY query_id
-        |          ORDER BY n_votes DESC, pred_label ASC) = 1""".stripMargin,
-
-    // q_embed_quantized: the quantized path's exact rerank makes its
-    // output equal brute-force top-k (overfetch keeps the true top-k
-    // among the approximate candidates), so the oracle is the full
-    // exact ranking
-    "q_embed_quantized" ->
-      """WITH c AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |           FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, cv AS qv FROM c WHERE vec_id < 10),
-        |s AS (SELECT query_id, vec_id,
-        |        round(list_dot_product(cv, qv) /
-        |              sqrt(list_dot_product(cv, cv) *
-        |                   list_dot_product(qv, qv)), 4) AS cos
-        |      FROM c CROSS JOIN q WHERE vec_id <> query_id)
-        |SELECT query_id, vec_id, cos,
-        |       CAST(row_number() OVER (PARTITION BY query_id
-        |              ORDER BY cos DESC, vec_id ASC) AS INT) AS rnk
-        |FROM s QUALIFY rnk <= 5""".stripMargin,
-
-    // q_hash_embed: the same md5-bucket counts assembled densely IN
-    // INDEX ORDER, normalized with the same 0 + x*x fold, scored with
-    // q_embed_topk's exact cosine formula — bit-identical FP both
-    // sides, so the hash compare holds on raw doubles
-    "q_hash_embed" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         unnest(list_filter(string_split_regex(text, '\s+'),
-        |                x -> length(x) > 0)) AS tk
-        |  FROM documents),
-        |bc AS (SELECT doc_id,
-        |         CAST(CAST(('0x' || substr(md5(tk || ':42'), 1, 8)) AS BIGINT)
-        |              % 16 AS INT) AS b,
-        |         count(*) AS c
-        |       FROM toks GROUP BY 1, 2),
-        |lst AS (SELECT doc_id, list({'b': b, 'c': c}) AS l FROM bc GROUP BY doc_id),
-        |raw AS (SELECT doc_id,
-        |          [CAST(coalesce(list_sum([s.c for s in l if s.b = i]), 0) AS DOUBLE)
-        |           for i in range(16)] AS r
-        |        FROM lst),
-        |emb AS (SELECT doc_id,
-        |          list_transform(r, x -> x / sqrt(list_dot_product(r, r))) AS cv
-        |        FROM raw),
-        |q AS (SELECT doc_id AS query_id, cv AS qv FROM emb WHERE doc_id < 3),
-        |s AS (SELECT query_id, doc_id AS vec_id,
-        |        round(list_dot_product(cv, qv) /
-        |              sqrt(list_dot_product(cv, cv) *
-        |                   list_dot_product(qv, qv)), 4) AS cos
-        |      FROM emb CROSS JOIN q WHERE doc_id <> query_id)
-        |SELECT query_id, vec_id, cos,
-        |       CAST(row_number() OVER (PARTITION BY query_id
-        |              ORDER BY cos DESC, vec_id ASC) AS INT) AS rnk
-        |FROM s QUALIFY rnk <= 5""".stripMargin,
-
-    // q_hard_negatives: q_embed_topk's oracle with the label-
-    // disagreement filter under the cross join (self never appears:
-    // it shares its own label)
-    "q_hard_negatives" ->
-      """WITH c AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |           FROM embeddings WHERE label IS NOT NULL),
-        |q AS (SELECT vec_id AS query_id, label AS qlbl, cv AS qv
-        |      FROM c WHERE vec_id < 3),
-        |s AS (SELECT query_id, vec_id,
-        |        round(list_dot_product(cv, qv) /
-        |              sqrt(list_dot_product(cv, cv) *
-        |                   list_dot_product(qv, qv)), 4) AS cos
-        |      FROM c CROSS JOIN q WHERE label <> qlbl)
-        |SELECT query_id, vec_id, cos,
-        |       CAST(row_number() OVER (PARTITION BY query_id
-        |              ORDER BY cos DESC, vec_id ASC) AS INT) AS rnk
-        |FROM s QUALIFY rnk <= 10""".stripMargin,
-
-    // q_embed_drift: the q_prototype sum CTEs once per half, joined
-    // per label, scored with the same in-order cosine formula
-    "q_embed_drift" ->
-      """WITH ex AS (
-        |  SELECT vec_id % 2 AS half, label AS lbl,
-        |         unnest([{'p': i, 'v': CAST(round(
-        |             CAST(embedding[i+1] AS DOUBLE) * 1000000) AS BIGINT)}
-        |                 for i in range(len(embedding))],
-        |                recursive := true)
-        |  FROM embeddings WHERE label IS NOT NULL AND embedding IS NOT NULL),
-        |ps AS (SELECT half, lbl, p, sum(v) AS s FROM ex GROUP BY 1, 2, 3),
-        |protos AS (SELECT half, lbl,
-        |             list_transform(list(s ORDER BY p),
-        |                            x -> CAST(x AS DOUBLE)) AS proto
-        |           FROM ps GROUP BY half, lbl),
-        |o AS (SELECT lbl, proto AS po FROM protos WHERE half = 0),
-        |n AS (SELECT lbl, proto AS pn FROM protos WHERE half = 1)
-        |SELECT coalesce(o.lbl, n.lbl) AS lbl,
-        |       CASE WHEN po IS NULL OR pn IS NULL THEN NULL
-        |            ELSE round(list_dot_product(po, pn) /
-        |                   sqrt(list_dot_product(po, po) *
-        |                        list_dot_product(pn, pn)), 4) END AS drift_cos
-        |FROM o FULL OUTER JOIN n ON o.lbl = n.lbl""".stripMargin,
-
-    // q_prototype: per-label integer micro-unit component sums (exact
-    // 64-bit arithmetic — order-independent, so engine-portable where
-    // a float mean is not; cosine is scale-invariant so the
-    // un-divided sum ranks identically to the mean), then
-    // nearest-prototype assignment
-    "q_prototype" ->
-      """WITH ex AS (
-        |  SELECT label AS lbl,
-        |         unnest([{'p': i, 'v': CAST(round(
-        |             CAST(embedding[i+1] AS DOUBLE) * 1000000) AS BIGINT)}
-        |                 for i in range(len(embedding))],
-        |                recursive := true)
-        |  FROM embeddings WHERE label IS NOT NULL AND embedding IS NOT NULL),
-        |ps AS (SELECT lbl, p, sum(v) AS s FROM ex GROUP BY 1, 2),
-        |protos AS (SELECT lbl,
-        |             list_transform(list(s ORDER BY p),
-        |                            x -> CAST(x AS DOUBLE)) AS proto
-        |           FROM ps GROUP BY lbl),
-        |q AS (SELECT vec_id AS query_id,
-        |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-        |      FROM embeddings),
-        |s AS (SELECT query_id, lbl,
-        |        round(list_dot_product(proto, qv) /
-        |              sqrt(list_dot_product(proto, proto) *
-        |                   list_dot_product(qv, qv)), 4) AS cos
-        |      FROM q CROSS JOIN protos)
-        |SELECT query_id, lbl AS pred_label, cos
-        |FROM s QUALIFY row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cos DESC, lbl ASC) = 1""".stripMargin,
-
-    "q_embed_topk" ->
-      """WITH c AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |           FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, cv AS qv FROM c WHERE vec_id < 3),
-        |s AS (SELECT query_id, vec_id,
-        |        round(list_dot_product(cv, qv) /
-        |              sqrt(list_dot_product(cv, cv) *
-        |                   list_dot_product(qv, qv)), 4) AS cos
-        |      FROM c CROSS JOIN q WHERE vec_id <> query_id)
-        |SELECT query_id, vec_id, cos,
-        |       CAST(row_number() OVER (PARTITION BY query_id
-        |              ORDER BY cos DESC, vec_id ASC) AS INT) AS rnk
-        |FROM s QUALIFY rnk <= 10""".stripMargin,
-
-    // the stratum threshold mirrors Sampling.rateThreshold exactly:
-    // rate = min(1, 500/n); hex = floor(rate * 2^32) as %08x (IEEE
-    // double arithmetic in the same order on both engines), compared
-    // lexicographically against substr(md5(id || ':42'), 1, 8)
-    "q_embed_neardup" ->
-      """WITH c AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |           FROM embeddings),
-        |thr AS (SELECT CASE WHEN least(1.0, 500.0 / greatest(count(*), 1))
-        |                         * 4294967296.0 >= 4294967296.0 THEN 'g'
-        |               ELSE printf('%08x', CAST(floor(
-        |                 least(1.0, 500.0 / greatest(count(*), 1))
-        |                 * 4294967296.0) AS BIGINT)) END AS t
-        |        FROM c),
-        |s AS (SELECT vec_id, cv FROM c, thr
-        |      WHERE substr(md5(CAST(vec_id AS VARCHAR) || ':42'), 1, 8) < t)
-        |SELECT DISTINCT
-        |       least(a.vec_id, b.vec_id) AS id_a,
-        |       greatest(a.vec_id, b.vec_id) AS id_b,
-        |       round(list_dot_product(a.cv, b.cv) /
-        |             sqrt(list_dot_product(a.cv, a.cv) *
-        |                  list_dot_product(b.cv, b.cv)), 4) AS cos
-        |FROM c a JOIN s b ON a.vec_id <> b.vec_id
-        |WHERE round(list_dot_product(a.cv, b.cv) /
-        |            sqrt(list_dot_product(a.cv, a.cv) *
-        |                 list_dot_product(b.cv, b.cv)), 4) >= 0.4""".stripMargin,
-
-    // q_embed_blocked: DuckDB rederives the planted-twin corpus
-    // (md5-unit jitter, the plantedEmbeddings arithmetic verbatim —
-    // lambda index i is 1-based here, 0-based in Spark, hence i-1)
-    // and brute-forces ALL pairs >= 0.9; the Spark side's banded-LSH
-    // output must equal that set row-for-row.
-    "q_embed_blocked" ->
-      """WITH base AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |  FROM embeddings),
-        |jit AS (
-        |  SELECT vec_id + 1000000 AS jid,
-        |         list_transform(cv, (x, i) -> x + 0.001 *
-        |           ((('0x' || substr(md5(vec_id || ':' || (i - 1)), 1, 15))
-        |               ::BIGINT / 1152921504606846976.0) - 0.5)) AS cv
-        |  FROM base),
-        |c AS (SELECT vec_id, cv FROM base
-        |      UNION ALL SELECT jid, cv FROM jit)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |       round(list_dot_product(a.cv, b.cv) /
-        |             sqrt(list_dot_product(a.cv, a.cv) *
-        |                  list_dot_product(b.cv, b.cv)), 4) AS cos
-        |FROM c a JOIN c b ON a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.cv, b.cv) /
-        |            sqrt(list_dot_product(a.cv, a.cv) *
-        |                 list_dot_product(b.cv, b.cv)), 4) >= 0.9""".stripMargin,
-
-    // q_semdedup: global ≥0.98 pair graph over the corpus ∪ its
-    // exact copy, closed with a recursive CTE; kept = class minima +
-    // unpaired. The Spark side only compares within k-means clusters
-    // — equality with this GLOBAL oracle is exactly the exact-twin
-    // co-clustering guarantee the query comment derives.
-    "q_semdedup" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        |  FROM embeddings),
-        |c AS (SELECT vec_id, cv FROM base
-        |      UNION ALL SELECT vec_id + 1000000, cv FROM base),
-        |pr AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM c a JOIN c b ON a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.cv, b.cv) /
-        |              sqrt(list_dot_product(a.cv, a.cv) *
-        |                   list_dot_product(b.cv, b.cv)), 4) >= 0.98),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pr
-        |          UNION SELECT id_b, id_a FROM pr),
-        |walk(id, r) AS (
-        |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-        |  UNION
-        |  SELECT e.a, w.r FROM edges e JOIN walk w ON e.b = w.id),
-        |rep AS (SELECT id, min(r) AS rep FROM walk GROUP BY id)
-        |SELECT c.vec_id
-        |FROM c LEFT JOIN rep ON c.vec_id = rep.id
-        |WHERE rep.id IS NULL OR rep.rep = c.vec_id""".stripMargin,
-
-    "q_quality" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(length(text) AS INT) AS n_chars,
-        |  CAST(len(tk) AS INT) AS n_tokens,
-        |  round(CAST(length(text) AS DOUBLE) / greatest(len(tk), 1), 4)
-        |    AS chars_per_token,
-        |  round(CAST(length(regexp_replace(text, '[^!-/:-@\[-`{-~]', '', 'g'))
-        |        AS DOUBLE) / greatest(length(text), 1), 4) AS punct_ratio,
-        |  round(CAST(len(list_filter(
-        |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                      x -> length(x) > 0),
-        |          x -> list_contains(
-        |          ['the','a','and','of','to','in','is','it'], x)))
-        |        AS DOUBLE) / greatest(len(tk), 1), 4) AS stopword_ratio
-        |FROM t""".stripMargin,
-
-    // q_bpe_pairs: the same word-frequency-weighted adjacent
-    // character-pair counts — substr is character-indexed in both
-    // engines, and the top-50 cut is total-ordered (cnt, lhs, rhs)
-    "q_bpe_pairs" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-        |                x -> length(x) > 0)) AS w
-        |  FROM documents),
-        |wf AS (SELECT w, count(*) AS f FROM toks GROUP BY w),
-        |ix AS (SELECT w, f, unnest(range(1, length(w))) AS i FROM wf),
-        |pairs AS (SELECT substr(w, CAST(i AS INT), 1) AS lhs,
-        |                 substr(w, CAST(i AS INT) + 1, 1) AS rhs, f
-        |          FROM ix)
-        |SELECT lhs, rhs, CAST(sum(f) AS BIGINT) AS cnt
-        |FROM pairs GROUP BY 1, 2
-        |ORDER BY cnt DESC, lhs, rhs LIMIT 50""".stripMargin,
-
-    // q_bpe_merges: the full 8-round trainer replayed in SQL — see
-    // bpeMergesSql for the per-round CTE construction
-    "q_bpe_merges" -> bpeMergesSql(8),
-
-    "q_langid" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, lang,
-        |    len(list_filter(tk, x -> list_contains(
-        |      ['the','a','and','of','to','in','is','it'], x))) AS s_en,
-        |    len(list_filter(tk, x -> list_contains(
-        |      ['der','die','das','und','zu','ist','ein'], x))) AS s_de,
-        |    len(list_filter(tk, x -> list_contains(
-        |      ['el','la','de','que','y','en','un','es'], x))) AS s_es,
-        |    len(list_filter(tk, x -> list_contains(
-        |      ['le','la','de','et','un','est','que'], x))) AS s_fr
-        |  FROM t)
-        |SELECT doc_id, lang,
-        |  CASE WHEN s_en IS NULL
-        |         OR greatest(s_en, s_de, s_es, s_fr) = 0 THEN NULL
-        |       WHEN s_fr = greatest(s_en, s_de, s_es, s_fr) THEN 'fr'
-        |       WHEN s_es = greatest(s_en, s_de, s_es, s_fr) THEN 'es'
-        |       WHEN s_en = greatest(s_en, s_de, s_es, s_fr) THEN 'en'
-        |       ELSE 'de' END AS pred_lang
-        |FROM s""".stripMargin,
-
-    // unigram LM: identical tokenization and ln arithmetic; the
-    // per-doc sum of tf·ln(p) rounds to 4 decimals on both engines
-    // q_bigram_lm: unigram counts from every tokenizable doc, bigram
-    // instances from docs with >= 2 tokens; the interpolation weight
-    // is written (1.0 - 0.7), NOT 0.3 — Spark computes 1-lambda and
-    // the two literals differ in their last IEEE bit
-    "q_bigram_lm" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |uni AS (SELECT term, count(*) AS ucnt
-        |        FROM (SELECT unnest(tk) AS term FROM toks WHERE len(tk) > 0)
-        |        GROUP BY 1),
-        |tot AS (SELECT sum(ucnt) AS total FROM uni),
-        |inst AS (
-        |  SELECT doc_id, dl,
-        |         unnest([{'p': tk[i+1], 'c': tk[i+2]} for i in range(dl - 1)],
-        |                recursive := true)
-        |  FROM (SELECT doc_id, len(tk) AS dl, tk FROM toks
-        |        WHERE len(tk) >= 2)),
-        |bf AS (SELECT doc_id, dl, p, c, count(*) AS bf
-        |       FROM inst GROUP BY 1, 2, 3, 4),
-        |cbg AS (SELECT p, c, sum(bf) AS cbg FROM bf GROUP BY 1, 2),
-        |sums AS (
-        |  SELECT doc_id, dl,
-        |         CAST(sum(bf * CAST(round(ln(
-        |             0.7 * (CAST(cbg AS DOUBLE) / CAST(up.ucnt AS DOUBLE)) +
-        |             (1.0 - 0.7) * (CAST(uc.ucnt AS DOUBLE) /
-        |                            CAST(total AS DOUBLE))
-        |           ) * 1e6, 0) AS BIGINT)) AS BIGINT) AS s
-        |  FROM bf JOIN cbg USING (p, c)
-        |       JOIN uni up ON up.term = bf.p
-        |       JOIN uni uc ON uc.term = bf.c
-        |       CROSS JOIN tot
-        |  GROUP BY doc_id, dl)
-        |SELECT doc_id, CAST(dl - 1 AS BIGINT) AS n_bigrams,
-        |       CAST((CASE WHEN s < 0 THEN -1 ELSE 1 END) *
-        |            ((2 * abs(s) + 100 * (dl - 1)) // (200 * (dl - 1)))
-        |         AS BIGINT) / 1e4 AS avg_logprob
-        |FROM sums""".stripMargin,
-
-    "q_unigram_lm" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, dl, term, count(*) AS tf
-        |  FROM (SELECT doc_id, len(tk) AS dl, unnest(tk) AS term
-        |        FROM toks WHERE len(tk) > 0)
-        |  GROUP BY 1, 2, 3),
-        |cnt AS (SELECT term, sum(tf) AS cnt FROM tf GROUP BY 1),
-        |tot AS (SELECT sum(cnt) AS total FROM cnt),
-        |sums AS (
-        |  SELECT doc_id, dl,
-        |         CAST(sum(tf * CAST(round(
-        |           ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))
-        |           * 1e6, 0) AS BIGINT)) AS BIGINT) AS s
-        |  FROM tf JOIN cnt USING (term) CROSS JOIN tot
-        |  GROUP BY doc_id, dl)
-        |SELECT doc_id, CAST(dl AS BIGINT) AS n_tokens,
-        |       CAST((CASE WHEN s < 0 THEN -1 ELSE 1 END) *
-        |            ((2 * abs(s) + 100 * dl) // (200 * dl)) AS BIGINT)
-        |         / 1e4 AS avg_logprob
-        |FROM sums""".stripMargin,
-
-    "q_corpus_stats" ->
-      """WITH t AS (
-        |  SELECT lang, text,
-        |         len(list_filter(string_split_regex(text, '\s+'),
-        |                         x -> length(x) > 0)) AS ntok
-        |  FROM documents)
-        |SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(CAST(ntok AS BIGINT)) AS BIGINT) AS n_tokens,
-        |       CAST(sum(CAST(length(text) AS BIGINT)) AS BIGINT) AS n_chars,
-        |       round(CAST(sum(length(text)) AS DOUBLE) / count(*), 4)
-        |         AS avg_chars
-        |FROM t GROUP BY lang""".stripMargin,
-
-    "q_source_report" ->
-      """WITH t AS (
-        |  SELECT source, lang, text, md5(text) AS digest,
-        |         len(list_filter(string_split_regex(text, '\s+'),
-        |                         x -> length(x) > 0)) AS ntok
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        |       count(DISTINCT lang) AS n_langs,
-        |       CAST(sum(CAST(length(text) AS BIGINT)) AS BIGINT)
-        |         AS total_chars,
-        |       CAST(sum(CAST(ntok AS BIGINT)) AS BIGINT) AS total_tokens,
-        |       count(DISTINCT digest) AS n_unique,
-        |       round(coalesce(
-        |         1.0 - CAST(count(DISTINCT digest) AS DOUBLE)
-        |               / nullif(count(digest), 0), 0.0), 4) AS dup_rate
-        |FROM t GROUP BY source""".stripMargin,
-
-    // chunk starts are 0, stride, …, stopping once a window reaches
-    // the doc end (nChunks = max(1, ceil((len-20)/15)+1)); DuckDB
-    // list slicing is 1-based inclusive, so chunk i =
-    // tk[i·15+1 : i·15+20]
-    "q_chunking" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents WHERE text IS NOT NULL),
-        |ch AS (
-        |  SELECT doc_id,
-        |         unnest([{'c': i, 's': tk[i*15+1 : i*15+20]}
-        |                 for i in range(CASE WHEN len(tk) <= 20 THEN 1
-        |                   ELSE (len(tk) - 20 + 14) // 15 + 1 END)]) AS u
-        |  FROM toks WHERE len(tk) > 0)
-        |SELECT doc_id, CAST(u.c AS BIGINT) AS chunk_id,
-        |       CAST(len(u.s) AS BIGINT) AS n_tokens,
-        |       array_to_string(u.s, ' ') AS chunk_text
-        |FROM ch""".stripMargin,
-
-    // export = the chunking oracle's chunks joined to lang, then the
-    // pack-shards oracle's exclusive-prefix-sum shard id over
-    // (doc_id, chunk_id) order within each language
-    "q_export" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents WHERE text IS NOT NULL),
-        |ch AS (
-        |  SELECT doc_id,
-        |         unnest([{'c': i, 'n': least(20, len(tk) - i*15)}
-        |                 for i in range(CASE WHEN len(tk) <= 20 THEN 1
-        |                   ELSE (len(tk) - 20 + 14) // 15 + 1 END)]) AS u
-        |  FROM toks WHERE len(tk) > 0),
-        |chunks AS (
-        |  SELECT c.doc_id, CAST(c.u.c AS BIGINT) AS chunk_id, d.lang,
-        |         CAST(c.u.n AS BIGINT) AS n_tokens
-        |  FROM ch c JOIN documents d USING (doc_id))
-        |SELECT doc_id, chunk_id, lang, n_tokens,
-        |  CAST(coalesce(sum(n_tokens) OVER (
-        |         PARTITION BY lang ORDER BY doc_id, chunk_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |       // 500 AS BIGINT) AS shard
-        |FROM chunks""".stripMargin,
-
-    // repetition metrics re-derived exactly: token occurrence counts
-    // per (doc, token), bigram shingles via the winnowing oracle's
-    // indexed-list-comprehension pattern, deterministic arg-max via
-    // QUALIFY with the same (count DESC, gram DESC) tie-break
-    "q_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents WHERE text IS NOT NULL),
-        |tc AS (
-        |  SELECT doc_id, tok, count(*) AS c, length(tok) AS l
-        |  FROM (SELECT doc_id, unnest(tk) AS tok FROM toks)
-        |  GROUP BY doc_id, tok),
-        |per_doc AS (
-        |  SELECT doc_id,
-        |         CAST(sum(c) AS BIGINT) AS n_tokens,
-        |         round(CAST(sum(c) - count(*) AS DOUBLE)
-        |               / CAST(sum(c) AS DOUBLE), 4) AS dup_token_frac,
-        |         round(CAST(sum((c - 1) * l) AS DOUBLE)
-        |               / CAST(sum(c * l) AS DOUBLE), 4)
-        |           AS dup_token_char_frac,
-        |         CAST(sum(c * l) AS BIGINT) AS tok_chars
-        |  FROM tc GROUP BY doc_id),
-        |sh AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(tk) >= 2
-        |           THEN [array_to_string(tk[i+1:i+2], ' ')
-        |                 for i in range(len(tk) - 1)]
-        |           ELSE [array_to_string(tk, ' ')] END AS s
-        |  FROM toks),
-        |sc AS (
-        |  SELECT doc_id, ng, count(*) AS nc
-        |  FROM (SELECT doc_id, unnest(s) AS ng FROM sh)
-        |  GROUP BY doc_id, ng),
-        |top AS (
-        |  SELECT doc_id, ng AS top_ngram, nc AS top_ngram_cnt
-        |  FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY doc_id
-        |                             ORDER BY nc DESC, ng DESC) = 1)
-        |SELECT p.doc_id, p.n_tokens, p.dup_token_frac,
-        |       p.dup_token_char_frac, t.top_ngram,
-        |       CAST(t.top_ngram_cnt AS BIGINT) AS top_ngram_cnt,
-        |       round(CAST(t.top_ngram_cnt AS DOUBLE)
-        |             * length(replace(t.top_ngram, ' ', ''))
-        |             / CAST(p.tok_chars AS DOUBLE), 4) AS top_ngram_frac
-        |FROM per_doc p JOIN top t USING (doc_id)""".stripMargin,
-
-    "q_winnowing" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents WHERE text IS NOT NULL),
-        |sh AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(tk) >= 3
-        |           THEN [array_to_string(tk[i+1:i+3], ' ')
-        |                 for i in range(len(tk) - 2)]
-        |           ELSE [array_to_string(tk, ' ')] END AS s
-        |  FROM toks),
-        |inv AS (
-        |  SELECT doc_id, n_sh, u.p AS pos, u.h AS h FROM (
-        |    SELECT doc_id, len(s) AS n_sh,
-        |           unnest([{'p': i, 'h': substr(md5(s[i+1]), 1, 16)}
-        |                   for i in range(len(s))]) AS u
-        |    FROM sh)),
-        |wmin AS (
-        |  SELECT doc_id, pos, n_sh,
-        |         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
-        |  FROM inv)
-        |SELECT DISTINCT doc_id, fp FROM wmin
-        |WHERE pos >= 3 OR (n_sh < 4 AND pos = n_sh - 1)""".stripMargin,
-
-    // the q_winnowing pipeline with a split flag carried through,
-    // then the fingerprint semi-join aggregated per test doc
-    "q_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         coalesce(substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8)
-        |           < '80000000', FALSE) AS is_train,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents WHERE text IS NOT NULL),
-        |sh AS (
-        |  SELECT doc_id, is_train,
-        |         CASE WHEN len(tk) >= 3
-        |           THEN [array_to_string(tk[i+1:i+3], ' ')
-        |                 for i in range(len(tk) - 2)]
-        |           ELSE [array_to_string(tk, ' ')] END AS s
-        |  FROM toks),
-        |inv AS (
-        |  SELECT doc_id, is_train, n_sh, u.p AS pos, u.h AS h FROM (
-        |    SELECT doc_id, is_train, len(s) AS n_sh,
-        |           unnest([{'p': i, 'h': substr(md5(s[i+1]), 1, 16)}
-        |                   for i in range(len(s))]) AS u
-        |    FROM sh)),
-        |wmin AS (
-        |  SELECT doc_id, is_train, pos, n_sh,
-        |         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |                      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
-        |  FROM inv),
-        |fps AS (
-        |  SELECT DISTINCT doc_id, is_train, fp FROM wmin
-        |  WHERE pos >= 3 OR (n_sh < 4 AND pos = n_sh - 1)),
-        |trainfp AS (SELECT DISTINCT fp FROM fps WHERE is_train),
-        |test AS (SELECT doc_id, fp FROM fps WHERE NOT is_train)
-        |SELECT t.doc_id,
-        |       count(*) AS n_prints,
-        |       CAST(sum(CASE WHEN tf.fp IS NOT NULL THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_shared,
-        |       round(CAST(sum(CASE WHEN tf.fp IS NOT NULL THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / count(*), 4) AS overlap,
-        |       round(CAST(sum(CASE WHEN tf.fp IS NOT NULL THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / count(*), 4) >= 0.2 AS contaminated
-        |FROM test t LEFT JOIN trainfp tf ON t.fp = tf.fp
-        |GROUP BY 1""".stripMargin,
-
-    "q_pipeline" ->
-      """WITH scored AS (
-        |  SELECT doc_id, lang, text,
-        |         len(list_filter(string_split_regex(text, '\s+'),
-        |                         x -> length(x) > 0)) AS nt
-        |  FROM documents),
-        |filtered AS (SELECT * FROM scored WHERE nt >= 10),
-        |deduped AS (
-        |  SELECT * FROM filtered
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-        |    ORDER BY doc_id) = 1)
-        |SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(CAST(nt AS BIGINT)) AS BIGINT) AS n_tokens
-        |FROM deduped GROUP BY lang""".stripMargin,
-
-    "q_pipeline_neardup" ->
-      """WITH RECURSIVE scored AS (
-        |  SELECT doc_id, lang, text,
-        |         len(list_filter(string_split_regex(text, '\s+'),
-        |                         x -> length(x) > 0)) AS nt
-        |  FROM documents),
-        |filtered AS (SELECT * FROM scored WHERE nt >= 10),
-        |deduped AS (
-        |  SELECT * FROM filtered
-        |  QUALIFY row_number() OVER (
-        |    PARTITION BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-        |    ORDER BY doc_id) = 1),
-        |toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM deduped),
-        |sh AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(tk) >= 3
-        |           THEN [array_to_string(tk[i+1:i+3], ' ')
-        |                 for i in range(len(tk) - 2)]
-        |           ELSE [array_to_string(tk, ' ')] END) AS s
-        |  FROM toks),
-        |inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS s FROM sh),
-        |keep AS (SELECT s FROM inv GROUP BY s HAVING count(*) <= 1000),
-        |pr0 AS (SELECT i.* FROM inv i JOIN keep USING (s)),
-        |prs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |         a.n_sh AS na, b.n_sh AS nb, count(*) AS inter
-        |  FROM pr0 a JOIN pr0 b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2, 3, 4),
-        |np AS (SELECT id_a, id_b FROM prs
-        |       WHERE round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM np
-        |          UNION SELECT id_b, id_a FROM np),
-        |walk(id, r) AS (
-        |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-        |  UNION
-        |  SELECT e.a, w.r FROM edges e JOIN walk w ON e.b = w.id),
-        |classes AS (SELECT id AS doc_id, min(r) AS class_rep
-        |            FROM walk GROUP BY id),
-        |survivors AS (
-        |  SELECT d.* FROM deduped d LEFT JOIN classes c USING (doc_id)
-        |  WHERE c.class_rep IS NULL OR c.class_rep = d.doc_id)
-        |SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(CAST(nt AS BIGINT)) AS BIGINT) AS n_tokens
-        |FROM survivors GROUP BY lang""".stripMargin,
-
-    // q_image_neardup: the engine must recover exactly the same-class
-    // pairs (class = doc_id % 5) among the 40 synthesized PNGs, each
-    // at Hamming 0 — pure doc_id arithmetic on the oracle side, a
-    // real decode + perceptual hash + blocking pipeline on the Spark
-    // side. hamming is Spark's bit_count type (INT).
-    "q_image_neardup" ->
-      """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       CAST(0 AS INT) AS hamming
-        |FROM documents a JOIN documents b
-        |  ON a.doc_id % 5 = b.doc_id % 5 AND a.doc_id < b.doc_id
-        |WHERE a.doc_id < 40 AND b.doc_id < 40""".stripMargin,
-
-    // q_video_neardup: doc_id arithmetic again — all 3 designed
-    // frames shared within a class, none across classes
-    "q_video_neardup" ->
-      """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       CAST(3 AS BIGINT) AS shared,
-        |       round(CAST(1 AS DOUBLE), 4) AS overlap
-        |FROM documents a JOIN documents b
-        |  ON a.doc_id % 5 = b.doc_id % 5 AND a.doc_id < b.doc_id
-        |WHERE a.doc_id < 40 AND b.doc_id < 40""".stripMargin,
-
-    // q_audio_neardup: same doc_id-arithmetic oracle as
-    // q_image_neardup — the engine side swaps codec and fingerprint,
-    // the truth set does not change
-    "q_audio_neardup" ->
-      """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       CAST(0 AS INT) AS hamming
-        |FROM documents a JOIN documents b
-        |  ON a.doc_id % 5 = b.doc_id % 5 AND a.doc_id < b.doc_id
-        |WHERE a.doc_id < 40 AND b.doc_id < 40""".stripMargin,
-
-    "q_multimodal_meta" ->
-      """SELECT doc_id, 'image/fake' AS media_type,
-        |       CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |       md5(text) AS digest,
-        |       CAST(64 + octet_length(encode(text)) % 577 AS INT) AS width,
-        |       CAST(64 + (octet_length(encode(text)) * 31) % 433 AS INT) AS height
-        |FROM documents""".stripMargin,
-
-    "q_accumulate" ->
-      """WITH kv AS (
-        |  SELECT CASE WHEN n_nationkey % 2 = 0 THEN 'l:even_keys'
-        |              ELSE 's:odd_names' END AS key,
-        |         CASE WHEN n_nationkey % 2 = 0 THEN CAST(n_nationkey AS VARCHAR)
-        |              ELSE n_name END AS value
-        |  FROM nation)
-        |SELECT key,
-        |  CASE WHEN key LIKE 'l:%'
-        |         THEN CAST(sum(TRY_CAST(value AS BIGINT)) AS VARCHAR)
-        |       ELSE string_agg(value, ';' ORDER BY value) END AS value
-        |FROM kv GROUP BY key""".stripMargin,
-
-    "q_percentiles" ->
-      """WITH t AS (
-        |  SELECT lang,
-        |         CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |                  x -> length(x) > 0)) AS BIGINT) AS v
-        |  FROM documents)
-        |SELECT lang AS grp, count(*) AS n,
-        |       round(CAST(quantile_cont(v, 0.5) AS DOUBLE), 4) AS p50,
-        |       round(CAST(quantile_cont(v, 0.9) AS DOUBLE), 4) AS p90,
-        |       round(CAST(quantile_cont(v, 0.99) AS DOUBLE), 4) AS p99
-        |FROM t GROUP BY lang""".stripMargin,
-
-    "q_histogram" ->
-      """WITH freq AS (
-        |  SELECT l_returnflag, CAST(l_quantity AS VARCHAR) AS v,
-        |         count(*) AS freq
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT l_returnflag,
-        |  count(*) AS n_values,
-        |  min(freq) AS min_freq,
-        |  median(freq) AS median_freq,
-        |  max(freq) AS max_freq,
-        |  round(CAST(sum(freq) AS DOUBLE) / count(*), 4) AS avg_freq,
-        |  round(sqrt(CAST(sum(freq * freq) AS DOUBLE) / count(*)
-        |        - power(CAST(sum(freq) AS DOUBLE) / count(*), 2)), 4)
-        |    AS stddev_freq
-        |FROM freq GROUP BY l_returnflag""".stripMargin,
-
-    // deterministic md5-prefix samples: the oracle re-derives the
-    // EXACT sample (the operators' portability contract — hex-prefix
-    // compare is lexicographic = numeric). Thresholds: rate × 16⁸.
-    "q_sample_hash" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8)
-        |      < '40000000'""".stripMargin,
-
-    // q_weighted_sample: the oracle re-derives the exact A-ES draw —
-    // same md5 uniform, same pow; both engines' libm pow agree on
-    // these inputs and the 9-sig-fig compare absorbs ulp noise
-    "q_weighted_sample" -> weightedSampleSql,
-
-    // q_stream_sample: the batch oracle VERBATIM — the streaming
-    // twin's window holds the whole corpus and the A-ES draw is
-    // arrival-order-free, so the flushed sample must equal the batch
-    // operator's top-20 exactly (draw bits included)
-    "q_stream_sample" -> weightedSampleSql,
-
-    // deterministic shuffle: the permutation is a pure function of
-    // (content hash, seed) — one window re-derives it exactly
-    "q_shuffle" ->
-      """SELECT doc_id,
-        |       row_number() OVER (
-        |         ORDER BY substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 8),
-        |                  CAST(doc_id AS VARCHAR)) AS "rank"
-        |FROM documents""".stripMargin,
-
-    "q_sample_stratified" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8)
-        |      < CASE lang WHEN 'en' THEN '80000000'
-        |                  WHEN 'de' THEN '40000000'
-        |                  ELSE '19999999' END""".stripMargin,
-
-    "q_sample_stratum_k" ->
-      """SELECT doc_id, lang FROM documents
-        |QUALIFY row_number() OVER (
-        |  PARTITION BY lang
-        |  ORDER BY substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8),
-        |           doc_id) <= 20""".stripMargin,
-
-    // the mix rates re-derived exactly: c = min(n/w) over weighted
-    // groups, rate = min(1, c*w/n), then the same md5-prefix
-    // threshold as the other sampling oracles (to_hex is uppercase
-    // in DuckDB -> lower())
-    "q_mix_weights" ->
-      """WITH cnt AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-        |wt(lang, w) AS (VALUES ('en', CAST(0.6 AS DOUBLE)),
-        |                       ('de', CAST(0.25 AS DOUBLE)),
-        |                       ('zh', CAST(0.15 AS DOUBLE))),
-        |sc AS (SELECT min(CAST(n AS DOUBLE) / w) AS c
-        |       FROM cnt JOIN wt USING (lang)),
-        |r AS (SELECT lang,
-        |             least(CAST(1.0 AS DOUBLE),
-        |                   (SELECT c FROM sc) * w / CAST(n AS DOUBLE)) AS rate
-        |      FROM cnt JOIN wt USING (lang))
-        |SELECT d.doc_id, d.lang
-        |FROM documents d JOIN r USING (lang)
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8) <
-        |      CASE WHEN CAST(floor(rate * 4294967296.0) AS BIGINT)
-        |                >= 4294967296 THEN 'g'
-        |           ELSE lower(lpad(to_hex(CAST(floor(rate * 4294967296.0)
-        |                                       AS BIGINT)), 8, '0')) END""".stripMargin,
-
-    // curation = the repetition oracle's dup fraction as a filter,
-    // then the mix oracle's rate derivation over the SURVIVORS
-    "q_curation" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(text, '\s+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents WHERE text IS NOT NULL),
-        |tc AS (
-        |  SELECT doc_id, tok, count(*) AS c
-        |  FROM (SELECT doc_id, unnest(tk) AS tok FROM toks)
-        |  GROUP BY doc_id, tok),
-        |pd AS (
-        |  SELECT doc_id,
-        |         round(CAST(sum(c) - count(*) AS DOUBLE)
-        |               / CAST(sum(c) AS DOUBLE), 4) AS dup
-        |  FROM tc GROUP BY doc_id),
-        |kept AS (
-        |  SELECT d.doc_id, d.lang
-        |  FROM documents d JOIN pd USING (doc_id)
-        |  WHERE pd.dup <= 0.55),
-        |cnt AS (SELECT lang, count(*) AS n FROM kept GROUP BY lang),
-        |wt(lang, w) AS (VALUES ('en', CAST(0.5 AS DOUBLE)),
-        |                       ('de', CAST(0.25 AS DOUBLE)),
-        |                       ('es', CAST(0.25 AS DOUBLE))),
-        |sc AS (SELECT min(CAST(n AS DOUBLE) / w) AS c
-        |       FROM cnt JOIN wt USING (lang)),
-        |r AS (SELECT lang,
-        |             least(CAST(1.0 AS DOUBLE),
-        |                   (SELECT c FROM sc) * w / CAST(n AS DOUBLE)) AS rate
-        |      FROM cnt JOIN wt USING (lang))
-        |SELECT k.doc_id, k.lang
-        |FROM kept k JOIN r USING (lang)
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8) <
-        |      CASE WHEN CAST(floor(rate * 4294967296.0) AS BIGINT)
-        |                >= 4294967296 THEN 'g'
-        |           ELSE lower(lpad(to_hex(CAST(floor(rate * 4294967296.0)
-        |                                       AS BIGINT)), 8, '0')) END""".stripMargin,
-
-    "q_pack_shards" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |         CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |                  x -> length(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT doc_id, lang, n_tokens,
-        |  CAST(coalesce(sum(n_tokens) OVER (
-        |         PARTITION BY lang ORDER BY doc_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |       // 2000 AS BIGINT) AS shard
-        |FROM t""".stripMargin,
-
-    // ASOF LEFT JOIN is the oracle's native form of the union-and-
-    // sweep as-of; ts surfaces as epoch MICROS on both sides (DuckDB
-    // truncates the parquet NANOS to its microsecond TIMESTAMP, and
-    // `ts div 1000` on the Spark side is the same truncation)
-    "q_asof_join" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_us(ts) AS ts
-        |           FROM events WHERE event_id % 7 != 0),
-        |     r AS (SELECT user_id, epoch_us(ts) AS ts, value
-        |           FROM events WHERE event_id % 7 = 0)
-        |SELECT l.event_id, l.user_id, l.ts, r.value AS snap_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    // q_stream_windows: the streamed tumbling-window aggregation's
-    // final (complete-mode) state must equal the plain batch GROUP BY
-    // — day floors via integer division, sums via exact DECIMAL
-    "q_stream_windows" ->
-      """SELECT (epoch_us(ts) // 1000000 // 86400) * 86400 AS w_start,
-        |       event_type, count(*) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // q_stream_dedup: the appended stream-dedup survivors are exactly
-    // the distinct key set (watermark outlives the replay span; only
-    // key columns emitted, so arrival order is invisible)
-    "q_stream_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-
-    // q_stream_sketch: per-day theta distinct estimates are exact
-    // below capacity, so they equal COUNT(DISTINCT) per window; the
-    // -1 row is the cross-window sketch union = global distinct
-    "q_stream_sketch" ->
-      """SELECT (epoch_us(ts) // 1000000 // 86400) * 86400
-        |         AS window_start,
-        |       CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_est
-        |FROM events GROUP BY 1
-        |UNION ALL
-        |SELECT CAST(-1 AS BIGINT) AS window_start,
-        |       CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_est
-        |FROM events""".stripMargin,
-
-    // q_stream_sessions: final complete-mode session-window state vs
-    // the batch lag-form. Spark's session_window merges an event at
-    // EXACTLY gap distance (merge condition start <= current end), so
-    // the break is strictly greater-than; session end = last event +
-    // gap.
-    // q_stream_retention: the streamed fold must converge to the
-    // batch cohort matrix — q_retention's oracle verbatim
-    "q_stream_retention" ->
-      """WITH ub AS (
-        |  SELECT DISTINCT user_id AS u,
-        |         epoch_us(ts) // 604800000000 AS b
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |coh AS (SELECT u, min(b) AS cohort FROM ub GROUP BY u)
-        |SELECT c.cohort, ub.b - c.cohort AS period, count(*) AS users
-        |FROM ub JOIN coh c USING (u)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_stream_sessions" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 1000000 AS t,
-        |                  CAST(value AS DECIMAL(18,2)) AS v FROM events),
-        |y AS (SELECT user_id, t, v,
-        |        CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
-        |                  > 43200 THEN 1 ELSE 0 END AS nw
-        |      FROM e),
-        |z AS (SELECT user_id, t, v,
-        |        sum(nw) OVER (PARTITION BY user_id ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |      FROM y)
-        |SELECT min(t) AS s_start, max(t) + 43200 AS s_end, user_id,
-        |       count(*) AS n, CAST(sum(v) AS DOUBLE) AS total
-        |FROM z GROUP BY user_id, sid""".stripMargin,
-
-    // q_stream_asof: identical oracle to q_asof_join — the ordered
-    // replay makes the O(1)-state streaming enrichment equal the
-    // batch as-of join row for row
-    "q_stream_asof" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_us(ts) AS ts
-        |           FROM events WHERE event_id % 7 != 0),
-        |     r AS (SELECT user_id, epoch_us(ts) AS ts, value
-        |           FROM events WHERE event_id % 7 = 0)
-        |SELECT l.event_id, l.user_id, l.ts, r.value AS snap_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    // q_stream_heavy: append-mode emission = exactly the day windows
-    // whose end is strictly before the max event second (the final
-    // watermark with zero delay); capacity exceeds the distinct item
-    // count, so sketch lower bounds are exact counts
-    "q_stream_heavy" ->
-      """WITH e AS (SELECT epoch_us(ts) // 1000000 AS t, event_type
-        |           FROM events
-        |           WHERE event_type IS NOT NULL AND ts IS NOT NULL),
-        |g AS (SELECT (t // 86400) * 86400 AS w_start, event_type AS item,
-        |             count(*) AS min_count
-        |      FROM e GROUP BY 1, 2),
-        |tot AS (SELECT w_start, CAST(sum(min_count) AS BIGINT) AS n
-        |        FROM g GROUP BY 1)
-        |SELECT g.w_start, g.item, g.min_count, tot.n
-        |FROM g JOIN tot USING (w_start), (SELECT max(t) AS mt FROM e) mx
-        |WHERE g.w_start + 86400 < mx.mt""".stripMargin,
-
-    // q_stream_heavy_pressure: the sketch only proposes and the exact
-    // recount decides, so the oracle is the plain per-closed-window
-    // φ-heavy-hitters GROUP BY — the Misra-Gries guarantee
-    // (φ = 0.05 > 1/(capacity+1) = 0.04) makes the decided output
-    // equal it even though the sketch decrements throughout
-    "q_stream_heavy_pressure" ->
-      """WITH e AS (
-        |  SELECT t, item FROM (
-        |    SELECT epoch_us(ts) // 1000000 AS t,
-        |           CASE WHEN event_id % 2 = 0 THEN event_type
-        |                ELSE 'u' || CAST(event_id % 499 AS VARCHAR) END
-        |             AS item
-        |    FROM events WHERE ts IS NOT NULL)
-        |  WHERE item IS NOT NULL),
-        |g AS (SELECT (t // 86400) * 86400 AS w_start, item,
-        |             count(*) AS cnt
-        |      FROM e GROUP BY 1, 2),
-        |tot AS (SELECT w_start, CAST(sum(cnt) AS BIGINT) AS n
-        |        FROM g GROUP BY 1)
-        |SELECT g.w_start, g.item, g.cnt, tot.n
-        |FROM g JOIN tot USING (w_start), (SELECT max(t) AS mt FROM e) mx
-        |WHERE g.w_start + 86400 < mx.mt
-        |  AND g.cnt >= ceil(0.05 * tot.n)""".stripMargin,
-
-    // q_stream_heat: the throttled-EWMA policy fold replayed as a
-    // recursive CTE — seed raw on first access, then skip when
-    // t <= ewma + 30000 else blend 0.5/0.5; lastUpdate moves only on
-    // applied updates. Equal-millisecond ties are order-invariant
-    // (see the query comment), so the CTE's row_number order is free
-    "q_stream_heat" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, epoch_us(ts) // 1000 AS t,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY epoch_us(ts) // 1000) AS rn
-        |  FROM events),
-        |mx AS (SELECT user_id, max(rn) AS n FROM ev GROUP BY user_id),
-        |s AS (
-        |  SELECT user_id, rn, CAST(t AS DOUBLE) AS ewma, t AS last
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.user_id, s.rn + 1,
-        |         CASE WHEN e2.t <= s.ewma + 30000 THEN s.ewma
-        |              ELSE 0.5 * s.ewma + 0.5 * e2.t END,
-        |         CASE WHEN e2.t <= s.ewma + 30000 THEN s.last
-        |              ELSE e2.t END
-        |  FROM s JOIN ev e2
-        |    ON e2.user_id = s.user_id AND e2.rn = s.rn + 1)
-        |SELECT s.user_id, s.ewma, s.last AS last_update_ms
-        |FROM s JOIN mx ON s.user_id = mx.user_id AND s.rn = mx.n""".stripMargin,
-
-    // q_stream_replication: the q_stream_heat fold, then the policy
-    // tail in closed form — exempt files (user_id % 5 = 0) pin at 3;
-    // multi-block files ntile(4) into reps 6..3 by (ewma DESC, id);
-    // used = 1000·Σrep vs capacity 3500·n at top 0.8 always breaches
-    // (used ≥ 3000·n > 2800·n), so the coldest floor(half) of every
-    // bucket above 3 — ranked (ewma ASC, id ASC) within the ORIGINAL
-    // assignment, which equals the reference's ascending sweep over
-    // mutable buckets — drops one level
-    "q_stream_replication" -> streamReplicationSql,
-
-    // row-identical to the uninterrupted run by construction — the
-    // recovery replay feeds the SAME events through a mid-replay
-    // kill + checkpoint resume, so the graded contract is "restart
-    // changes nothing": the oracle is shared verbatim
-    "q_stream_replication_recovery" -> streamReplicationSql,
-
-    "q_sessionize" ->
-      """WITH x AS (SELECT user_id, epoch_us(ts) AS t, value FROM events),
-        |y AS (SELECT user_id, t, value,
-        |        CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
-        |                  > 43200000000 THEN 1 ELSE 0 END AS nw
-        |      FROM x),
-        |z AS (SELECT user_id, t, value,
-        |        CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY t
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |             AS BIGINT) AS session_id
-        |      FROM y)
-        |SELECT user_id AS key, session_id,
-        |       min(t) AS start_t, max(t) AS end_t,
-        |       count(*) AS n_events,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 4)
-        |         AS sum_value
-        |FROM z GROUP BY 1, 2""".stripMargin,
-
-    // DuckDB's IEJoin evaluates the BETWEEN predicate natively — the
-    // oracle is the plain inequality join the bucket blocking avoids
-    "q_range_join" ->
-      """WITH x AS (SELECT user_id, epoch_us(ts) AS t FROM events),
-        |y AS (SELECT user_id, t,
-        |        CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
-        |                  > 43200000000 THEN 1 ELSE 0 END AS nw
-        |      FROM x),
-        |z AS (SELECT user_id, t,
-        |        sum(nw) OVER (PARTITION BY user_id ORDER BY t
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |      FROM y),
-        |sess AS (SELECT user_id, sid, min(t) AS start_t, max(t) AS end_t
-        |         FROM z GROUP BY 1, 2),
-        |err AS (SELECT event_id, epoch_us(ts) AS t FROM events
-        |        WHERE event_type = 'error')
-        |SELECT e.event_id, count(*) AS n_active
-        |FROM err e JOIN sess s ON e.t BETWEEN s.start_t AND s.end_t
-        |GROUP BY 1""".stripMargin,
-
-    // q_range_join's CTEs with a LEFT join: the sweep keeps
-    // zero-coverage points (count 0), the inner bucketed join drops
-    // them — count(s.start_t) makes the unmatched row count 0
-    "q_active_count" ->
-      """WITH x AS (SELECT user_id, epoch_us(ts) AS t FROM events),
-        |y AS (SELECT user_id, t,
-        |        CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t)
-        |                  > 43200000000 THEN 1 ELSE 0 END AS nw
-        |      FROM x),
-        |z AS (SELECT user_id, t,
-        |        sum(nw) OVER (PARTITION BY user_id ORDER BY t
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |      FROM y),
-        |sess AS (SELECT user_id, sid, min(t) AS start_t, max(t) AS end_t
-        |         FROM z GROUP BY 1, 2),
-        |err AS (SELECT event_id, epoch_us(ts) AS t FROM events
-        |        WHERE event_type = 'error' AND ts IS NOT NULL)
-        |SELECT e.event_id, count(s.start_t) AS n_active
-        |FROM err e LEFT JOIN sess s ON e.t BETWEEN s.start_t AND s.end_t
-        |GROUP BY 1""".stripMargin,
-
-    // BM25 replayed termwise: identical integer operands (tf, dl, df,
-    // N) cast to DOUBLE through the identical expression shape, so
-    // ln/round agree bit-for-bit
-    "q_bm25" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |stats AS (
-        |  SELECT count(*) AS n_docs,
-        |         CAST(sum(len(tk)) AS DOUBLE) / count(*) AS avgdl
-        |  FROM toks WHERE tk IS NOT NULL),
-        |tf AS (
-        |  SELECT doc_id, dl, term, count(*) AS tf
-        |  FROM (SELECT doc_id, len(tk) AS dl, unnest(tk) AS term FROM toks)
-        |  WHERE term IN ('dup', 'spark', 'vector')
-        |  GROUP BY 1, 2, 3),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |         round(CAST(sum(CAST(round(
-        |           ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-        |              / (CAST(df AS DOUBLE) + 0.5) + 1.0)
-        |           * (CAST(tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0))
-        |           / (CAST(tf AS DOUBLE)
-        |              + 1.2 * (1.0 - 0.75
-        |                       + 0.75 * CAST(dl AS DOUBLE) / avgdl))
-        |           * 1e6, 0) AS BIGINT)) AS DOUBLE) / 1e6, 4)
-        |           AS score
-        |  FROM tf JOIN df USING (term) CROSS JOIN stats
-        |  GROUP BY 1)
-        |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
-        |         AS rnk,
-        |       doc_id, score
-        |FROM scored
-        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-
-    // TF-IDF: identical tokenization, ln(N/df) idf, rank on the
-    // rounded score with term tie-break → the same top-3 per doc
-    "q_tfidf" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |n AS (SELECT count(*) AS n_docs FROM toks WHERE tk IS NOT NULL),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(tk) AS term FROM toks)
-        |  GROUP BY 1, 2),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf,
-        |         round(CAST(tf AS DOUBLE)
-        |               * ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)),
-        |               4) AS score
-        |  FROM tf JOIN df USING (term) CROSS JOIN n)
-        |SELECT doc_id, CAST(rnk AS INT) AS rnk, term, tf, score
-        |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |                  ORDER BY score DESC, term) AS rnk
-        |      FROM scored)
-        |WHERE rnk <= 3""".stripMargin,
-
-    // inverted index: distinct (doc, term) pairs, windowed cut at 10
-    // postings, df from the full partition count
-    "q_inverted_index" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |dt AS (
-        |  SELECT DISTINCT doc_id, term
-        |  FROM (SELECT doc_id, unnest(tk) AS term FROM toks)),
-        |ranked AS (
-        |  SELECT term, doc_id,
-        |         row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn,
-        |         count(*) OVER (PARTITION BY term) AS dfc
-        |  FROM dt)
-        |SELECT term, CAST(max(dfc) AS BIGINT) AS df,
-        |       array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
-        |FROM ranked WHERE rn <= 10 GROUP BY term""".stripMargin,
-
-    // the probe terms' posting lists, recomputed directly — the
-    // sharded artifact must answer exactly what a fresh index build
-    // would
-    "q_search_index" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM documents),
-        |dt AS (
-        |  SELECT DISTINCT doc_id, term
-        |  FROM (SELECT doc_id, unnest(tk) AS term FROM toks)),
-        |ranked AS (
-        |  SELECT term, doc_id,
-        |         row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn,
-        |         count(*) OVER (PARTITION BY term) AS dfc
-        |  FROM dt)
-        |SELECT term, CAST(max(dfc) AS BIGINT) AS df,
-        |       array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
-        |FROM ranked
-        |WHERE rn <= 10 AND term IN ('dup', 'spark', 'vector', 'the', 'window')
-        |GROUP BY term""".stripMargin,
-
-    // q_random_text: the oracle regenerates the corpus with the same
-    // counter-based md5 draws — word count 5 + h%16, word ids h%500,
-    // identical key strings — so text hash-compares bit-for-bit
-    "q_random_text" ->
-      """WITH ids AS (
-        |  SELECT unnest(range(0, (SELECT count(*) FROM documents))) AS id),
-        |n AS (
-        |  SELECT id, 5 + CAST(('0x' || substr(md5('42:' || id || ':n'),
-        |           1, 8)) AS BIGINT) % 16 AS nw
-        |  FROM ids)
-        |SELECT id AS doc_id,
-        |       array_to_string(
-        |         ['w' || (CAST(('0x' || substr(md5('42:' || id || ':w:' ||
-        |             i), 1, 8)) AS BIGINT) % 500)
-        |          for i in range(1, CAST(nw AS INT) + 1)], ' ') AS text
-        |FROM n""".stripMargin,
-
-    // q_random_text_fast: xxhash64 draws are engine-local, so the
-    // oracle states the witness invariants as constants (row count
-    // recomputes from the documents table both sides size from)
-    "q_random_text_fast" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |       TRUE AS deterministic, TRUE AS words_in_range,
-        |       TRUE AS vocab_ok, TRUE AS skew_lower
-        |FROM documents""".stripMargin,
-
-    // q_gridmix_pipeline: regenerate the KV corpus with the same
-    // counter-based md5 draws (key = 2 words tagged kw, value 5-9
-    // words tagged vn/vw), then replay the three keep/aggregate
-    // stages with the same md5-residue samples
-    "q_gridmix_pipeline" ->
-      """WITH ids AS (
-        |  SELECT unnest(range(0, (SELECT count(*) FROM documents))) AS id),
-        |kv AS (
-        |  SELECT id,
-        |    array_to_string(
-        |      ['w' || (('0x' || substr(md5('11:' || id || ':kw:' || i),
-        |          1, 8))::BIGINT % 50) for i in range(1, 3)], ' ') AS k,
-        |    array_to_string(
-        |      ['w' || (('0x' || substr(md5('11:' || id || ':vw:' || i),
-        |          1, 8))::BIGINT % 50)
-        |       for i in range(1, CAST(5 + ('0x' || substr(
-        |          md5('11:' || id || ':vn'), 1, 8))::BIGINT % 5 AS INT)
-        |          + 1)], ' ') AS v
-        |  FROM ids),
-        |s1 AS (
-        |  SELECT k, CAST(count(*) AS BIGINT) AS n, max(v) AS v
-        |  FROM kv
-        |  WHERE ('0x' || substr(md5(k || ':m1'), 1, 8))::BIGINT
-        |        % 1000 < 100
-        |  GROUP BY k
-        |  HAVING ('0x' || substr(md5(k || ':r1'), 1, 8))::BIGINT
-        |         % 1000 < 400),
-        |s2 AS (
-        |  SELECT k, CAST(sum(n) AS BIGINT) AS n, max(v) AS v
-        |  FROM s1 GROUP BY k
-        |  HAVING ('0x' || substr(md5(k || ':r2'), 1, 8))::BIGINT
-        |         % 1000 < 770),
-        |s3pre AS (
-        |  SELECT k, n, v FROM s2
-        |  UNION ALL
-        |  SELECT k, n, v FROM s2
-        |  WHERE ('0x' || substr(md5(k || ':m3'), 1, 8))::BIGINT
-        |        % 1000 < 160)
-        |SELECT k, CAST(sum(n) AS BIGINT) AS n, max(v) AS v
-        |FROM s3pre GROUP BY k
-        |HAVING ('0x' || substr(md5(k || ':r3'), 1, 8))::BIGINT
-        |       % 1000 < 910""".stripMargin,
-
-    // q_gridmix_indirect: the same regenerated corpus as
-    // q_gridmix_pipeline, then ten chained CTEs — iteration i unions
-    // slice i with every previous output and folds through the
-    // ind<i> residue
-    "q_gridmix_indirect" -> {
-      val kvCte =
-        """WITH ids AS (
-          |  SELECT unnest(range(0, (SELECT count(*) FROM documents))) AS id),
-          |kv AS (
-          |  SELECT id,
-          |    array_to_string(
-          |      ['w' || (('0x' || substr(md5('11:' || id || ':kw:' || i),
-          |          1, 8))::BIGINT % 50) for i in range(1, 3)], ' ') AS k,
-          |    array_to_string(
-          |      ['w' || (('0x' || substr(md5('11:' || id || ':vw:' || i),
-          |          1, 8))::BIGINT % 50)
-          |       for i in range(1, CAST(5 + ('0x' || substr(
-          |          md5('11:' || id || ':vn'), 1, 8))::BIGINT % 5 AS INT)
-          |          + 1)], ' ') AS v
-          |  FROM ids)""".stripMargin
-      def keepSql(salt: String) =
-        s"('0x' || substr(md5(k || ':$salt'), 1, 8))::BIGINT % 1000 < 500"
-      val iters = (0 until 10).map { i =>
-        val prev = (0 until i).map(j => s"SELECT k, v FROM o$j")
-        val union = (s"SELECT k, v FROM kv WHERE id % 10 = $i" +: prev)
-          .mkString("\n    UNION ALL ")
-        s"""o$i AS (
-           |  SELECT k, max(v) AS v FROM (
-           |    $union) u
-           |  WHERE ${keepSql(s"ind$i")}
-           |  GROUP BY k)""".stripMargin
-      }.mkString(",\n")
-      s"$kvCte,\n$iters\nSELECT k, v FROM o9"
-    },
-
-    // q_gridmix_apisort: engine-local hash draws -> the oracle
-    // states the three-API agreement witness as constants (row count
-    // recomputes from the documents table both sides size from)
-    "q_gridmix_apisort" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |       TRUE AS rows_agree, TRUE AS content_agree,
-        |       TRUE AS df_sorted, TRUE AS sql_sorted,
-        |       TRUE AS pipe_sorted
-        |FROM documents""".stripMargin,
-
-    // q_search_index_update: the updated index must answer exactly
-    // what a fresh build over the post-delta corpus would — the
-    // oracle applies the delta's set algebra to the corpus (present
-    // iff doc_id%10<>0: deletes kill their base docs, every held-out
-    // doc is inserted or update-inserted; %10==1 carries the marker
-    // prefix) and recomputes the probed terms' posting lists.
-    "q_search_index_update" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 10 = 1 THEN 'updatedterm ' || text
-        |              ELSE text END AS text
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM corpus),
-        |dt AS (
-        |  SELECT DISTINCT doc_id, term
-        |  FROM (SELECT doc_id, unnest(tk) AS term FROM toks)),
-        |ranked AS (
-        |  SELECT term, doc_id,
-        |         row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn,
-        |         count(*) OVER (PARTITION BY term) AS dfc
-        |  FROM dt)
-        |SELECT term, CAST(max(dfc) AS BIGINT) AS df,
-        |       array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
-        |FROM ranked
-        |WHERE rn <= 10
-        |  AND term IN ('updatedterm', 'dup', 'spark', 'the', 'window')
-        |GROUP BY term""".stripMargin,
-
-    // q_search_index_compact: compaction is answer-preserving — the
-    // identical rebuilt-corpus recompute grades the compacted index
-    "q_search_index_compact" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 10 = 1 THEN 'updatedterm ' || text
-        |              ELSE text END AS text
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM corpus),
-        |dt AS (
-        |  SELECT DISTINCT doc_id, term
-        |  FROM (SELECT doc_id, unnest(tk) AS term FROM toks)),
-        |ranked AS (
-        |  SELECT term, doc_id,
-        |         row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn,
-        |         count(*) OVER (PARTITION BY term) AS dfc
-        |  FROM dt)
-        |SELECT term, CAST(max(dfc) AS BIGINT) AS df,
-        |       array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
-        |FROM ranked
-        |WHERE rn <= 10
-        |  AND term IN ('updatedterm', 'dup', 'spark', 'the', 'window')
-        |GROUP BY term""".stripMargin,
-
-    // q_search_index_multigen: two delta generations with a
-    // compaction between them — final-corpus membership is the set
-    // algebra of both deltas (%10 in {0,2} dead unless %20==0
-    // revived; %10==1 carries the gen1 marker, %10==3 the gen2
-    // marker) and the probe must equal a fresh build over it
-    "q_search_index_multigen" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 10 = 1 THEN 'gen1term ' || text
-        |              WHEN doc_id % 10 = 3 THEN 'gen2term ' || text
-        |              ELSE text END AS text
-        |  FROM documents
-        |  WHERE doc_id % 10 NOT IN (0, 2) OR doc_id % 20 = 0),
-        |toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |                     x -> length(x) > 0) AS tk
-        |  FROM corpus),
-        |dt AS (
-        |  SELECT DISTINCT doc_id, term
-        |  FROM (SELECT doc_id, unnest(tk) AS term FROM toks)),
-        |ranked AS (
-        |  SELECT term, doc_id,
-        |         row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn,
-        |         count(*) OVER (PARTITION BY term) AS dfc
-        |  FROM dt)
-        |SELECT term, CAST(max(dfc) AS BIGINT) AS df,
-        |       array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
-        |FROM ranked
-        |WHERE rn <= 10
-        |  AND term IN ('gen1term', 'gen2term', 'dup', 'spark', 'the')
-        |GROUP BY term""".stripMargin,
-
-    // q_zorder_box: the clustered copy must answer a 2-D box query
-    // with exactly the raw table's rows — the layout is a pure
-    // reorganization. Both sides derive the box from the same integer
-    // maxima with the same IEEE-double arithmetic (the DOUBLE casts
-    // matter: a bare 0.1 is DECIMAL in DuckDB, and exact-decimal
-    // bounds could disagree with Spark's double bounds at an
-    // integer-valued product).
-    "q_zorder_box" ->
-      """SELECT l_orderkey, l_partkey, l_quantity
-        |FROM lineitem
-        |WHERE l_orderkey >= CAST(0.1 AS DOUBLE) * (SELECT max(l_orderkey) FROM lineitem)
-        |  AND l_orderkey <= CAST(0.3 AS DOUBLE) * (SELECT max(l_orderkey) FROM lineitem)
-        |  AND l_partkey >= CAST(0.2 AS DOUBLE) * (SELECT max(l_partkey) FROM lineitem)
-        |  AND l_partkey <= CAST(0.45 AS DOUBLE) * (SELECT max(l_partkey) FROM lineitem)""".stripMargin,
-
-    // exact phi-heavy-hitters: the sketch only proposes candidates,
-    // exact counting decides — so plain GROUP BY + HAVING is the oracle
-    "q_heavy_hitters" ->
-      """WITH t AS (
-        |  SELECT unnest(list_filter(
-        |           string_split_regex(lower(text), '[^a-z0-9'']+'),
-        |           x -> length(x) > 0)) AS item
-        |  FROM documents),
-        |n AS (SELECT count(*) AS n FROM t)
-        |SELECT item, count(*) AS cnt
-        |FROM t CROSS JOIN n
-        |GROUP BY item, n.n
-        |HAVING count(*) >= CAST(ceil(CAST(0.0335 AS DOUBLE) * n.n)
-        |                        AS BIGINT)""".stripMargin,
-
-    // q_stream_cms: the sketch TABLE re-derived (q_cms's tbl stage)
-    // — the streaming window holds the whole corpus' word stream and
-    // cell sums are order-free, so the flushed table is the batch
-    // table exactly. The extra 'closer' heartbeat word lands in a
-    // later window that never closes, so it cannot leak into the
-    // graded window-0 rows.
-    "q_stream_cms" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-        |                x -> length(x) > 0)) AS w
-        |  FROM documents)
-        |SELECT i AS r,
-        |       CAST(('0x' || substr(md5(w || ':' || i), 1, 8)) AS BIGINT)
-        |         % 64 AS bucket,
-        |       CAST(count(*) AS BIGINT) AS cnt
-        |FROM toks, unnest([0, 1, 2, 3]) AS u(i)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // q_cms: the full sketch pipeline re-derived — same md5 buckets,
-    // same (r, bucket) counts, same min-over-rows estimate; the
-    // estimates hash-compare exactly, collisions included
-    "q_cms" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-        |                x -> length(x) > 0)) AS w
-        |  FROM documents),
-        |tbl AS (
-        |  SELECT i AS r,
-        |         CAST(('0x' || substr(md5(w || ':' || i), 1, 8)) AS BIGINT)
-        |           % 64 AS bucket,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM toks, unnest([0, 1, 2, 3]) AS u(i)
-        |  GROUP BY 1, 2),
-        |exact AS (SELECT w, CAST(count(*) AS BIGINT) AS exact
-        |          FROM toks GROUP BY w),
-        |probes AS (SELECT w, exact FROM exact
-        |           ORDER BY exact DESC, w LIMIT 20),
-        |pb AS (
-        |  SELECT p.w, p.exact, i AS r,
-        |         CAST(('0x' || substr(md5(p.w || ':' || i), 1, 8)) AS BIGINT)
-        |           % 64 AS bucket
-        |  FROM probes p, unnest([0, 1, 2, 3]) AS u(i)),
-        |est AS (
-        |  SELECT pb.w, pb.exact,
-        |         CAST(min(coalesce(tbl.cnt, 0)) AS BIGINT) AS est
-        |  FROM pb LEFT JOIN tbl ON tbl.r = pb.r AND tbl.bucket = pb.bucket
-        |  GROUP BY pb.w, pb.exact)
-        |SELECT w AS key, exact, est, est >= exact AS lb_ok
-        |FROM est""".stripMargin,
-
-    // q_cms_fast: xxhash64 buckets are engine-internal, so the
-    // oracle re-derives only the probe keys + exact counts and
-    // states the two hash-family-independent sketch laws (lower
-    // bound, merge linearity) as constants — the Spark side computes
-    // both sides of each law and would emit FALSE on violation.
-    "q_cms_fast" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-        |                x -> length(x) > 0)) AS w
-        |  FROM documents),
-        |exact AS (SELECT w, CAST(count(*) AS BIGINT) AS exact
-        |          FROM toks GROUP BY w),
-        |probes AS (SELECT w, exact FROM exact
-        |           ORDER BY exact DESC, w LIMIT 20)
-        |SELECT w AS key, exact, TRUE AS lb_ok, TRUE AS union_ok
-        |FROM probes""".stripMargin,
-
-    // q_sketch_panel: theta at lgk=20 is exact at every test scale,
-    // so n and the distinct count recompute directly; the HLL
-    // envelope and the KLL rank-interval laws are stated as
-    // constants (the Spark side computes both sides and emits FALSE
-    // on violation)
-    "q_sketch_panel" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(count(DISTINCT n_chars) AS BIGINT) AS distinct_lens,
-        |       TRUE AS hll_ok, TRUE AS p50_ok
-        |FROM documents GROUP BY source""".stripMargin,
-
-    // q_sketch_rollup: the global row — theta union of exact
-    // sketches stays exact, the estimate-only laws are constants
-    "q_sketch_rollup" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-        |       CAST(count(DISTINCT n_chars) AS BIGINT) AS distinct_lens,
-        |       TRUE AS hll_ok, TRUE AS p50_ok, TRUE AS p95_ok
-        |FROM documents""".stripMargin,
-
-    // q_sketch_union: union-of-daily-panels must equal the
-    // whole-corpus rollup — same oracle shape as q_sketch_rollup
-    "q_sketch_union" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-        |       CAST(count(DISTINCT n_chars) AS BIGINT) AS distinct_lens,
-        |       TRUE AS hll_ok, TRUE AS p50_ok
-        |FROM documents""".stripMargin,
-
-    // q_profile: per-column counters recompute directly; the theta
-    // distinct is exact below capacity so it hash-grades too
-    "q_profile" ->
-      """SELECT 'doc_id' AS col_name, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(count(*) - count(doc_id) AS BIGINT) AS n_null,
-        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_distinct,
-        |       CAST(min(doc_id) AS VARCHAR) AS min_s,
-        |       CAST(max(doc_id) AS VARCHAR) AS max_s
-        |FROM documents
-        |UNION ALL
-        |SELECT 'lang', CAST(count(*) AS BIGINT),
-        |       CAST(count(*) - count(lang) AS BIGINT),
-        |       CAST(count(DISTINCT lang) AS BIGINT),
-        |       CAST(min(lang) AS VARCHAR), CAST(max(lang) AS VARCHAR)
-        |FROM documents
-        |UNION ALL
-        |SELECT 'source', CAST(count(*) AS BIGINT),
-        |       CAST(count(*) - count(source) AS BIGINT),
-        |       CAST(count(DISTINCT source) AS BIGINT),
-        |       CAST(min(source) AS VARCHAR), CAST(max(source) AS VARCHAR)
-        |FROM documents
-        |UNION ALL
-        |SELECT 'n_chars', CAST(count(*) AS BIGINT),
-        |       CAST(count(*) - count(n_chars) AS BIGINT),
-        |       CAST(count(DISTINCT n_chars) AS BIGINT),
-        |       CAST(min(n_chars) AS VARCHAR), CAST(max(n_chars) AS VARCHAR)
-        |FROM documents""".stripMargin,
-
-    // q_profile_topk: every graded column's cardinality sits below
-    // the sketch capacity, so the frequent-items report is exact —
-    // a plain count/rank recompute per column
-    "q_profile_topk" ->
-      """WITH items AS (
-        |  SELECT 'lang' AS col_name, lang AS item FROM documents
-        |    WHERE lang IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'source', source FROM documents WHERE source IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'len_bucket', CAST(n_chars % 16 AS VARCHAR)
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |counted AS (
-        |  SELECT col_name, item, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM items GROUP BY col_name, item),
-        |ranked AS (
-        |  SELECT col_name, item, cnt,
-        |         row_number() OVER (PARTITION BY col_name
-        |           ORDER BY cnt DESC, item) AS rnk
-        |  FROM counted)
-        |SELECT col_name, CAST(rnk AS INT) AS rnk, item, cnt
-        |FROM ranked WHERE rnk <= 3""".stripMargin,
-
-    // q_profile_quantiles: non-null counts recompute; the rank gates
-    // are law constants (KLL k=200 rank error <= 1.65% at 99% conf.,
-    // bands at +-0.03)
-    "q_profile_quantiles" ->
-      """SELECT 'doc_id' AS col_name,
-        |       CAST(count(doc_id) AS BIGINT) AS n,
-        |       TRUE AS p50_ok, TRUE AS p95_ok FROM documents
-        |UNION ALL
-        |SELECT 'n_chars', CAST(count(n_chars) AS BIGINT), TRUE, TRUE
-        |FROM documents""".stripMargin,
-
-    // q_profile_drift: recompute both profiles and the same integer
-    // cross-multiplied flags (null-safe IS DISTINCT FROM for the
-    // range shift, exactly Spark's <=> negation)
-    "q_profile_drift" ->
-      """WITH after_t AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 5 = 0 THEN NULL ELSE lang END AS lang,
-        |         source || '#' || CAST(doc_id % 50 AS VARCHAR) AS source,
-        |         n_chars
-        |  FROM documents),
-        |bf AS (
-        |  SELECT 'doc_id' AS col_name, count(*) AS n,
-        |         count(*) - count(doc_id) AS nnull,
-        |         count(DISTINCT doc_id) AS d,
-        |         CAST(min(doc_id) AS VARCHAR) AS mn,
-        |         CAST(max(doc_id) AS VARCHAR) AS mx FROM documents
-        |  UNION ALL
-        |  SELECT 'lang', count(*), count(*) - count(lang),
-        |         count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-        |         CAST(max(lang) AS VARCHAR) FROM documents
-        |  UNION ALL
-        |  SELECT 'source', count(*), count(*) - count(source),
-        |         count(DISTINCT source), CAST(min(source) AS VARCHAR),
-        |         CAST(max(source) AS VARCHAR) FROM documents
-        |  UNION ALL
-        |  SELECT 'n_chars', count(*), count(*) - count(n_chars),
-        |         count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-        |         CAST(max(n_chars) AS VARCHAR) FROM documents),
-        |af AS (
-        |  SELECT 'doc_id' AS col_name, count(*) AS n,
-        |         count(*) - count(doc_id) AS nnull,
-        |         count(DISTINCT doc_id) AS d,
-        |         CAST(min(doc_id) AS VARCHAR) AS mn,
-        |         CAST(max(doc_id) AS VARCHAR) AS mx FROM after_t
-        |  UNION ALL
-        |  SELECT 'lang', count(*), count(*) - count(lang),
-        |         count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-        |         CAST(max(lang) AS VARCHAR) FROM after_t
-        |  UNION ALL
-        |  SELECT 'source', count(*), count(*) - count(source),
-        |         count(DISTINCT source), CAST(min(source) AS VARCHAR),
-        |         CAST(max(source) AS VARCHAR) FROM after_t
-        |  UNION ALL
-        |  SELECT 'n_chars', count(*), count(*) - count(n_chars),
-        |         count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-        |         CAST(max(n_chars) AS VARCHAR) FROM after_t)
-        |SELECT b.col_name,
-        |       CAST(b.n AS BIGINT) AS n_before,
-        |       CAST(a.n AS BIGINT) AS n_after,
-        |       (1000 * a.nnull * b.n >
-        |        1000 * b.nnull * a.n + 50 * a.n * b.n)
-        |         AS null_rate_jumped,
-        |       (1000 * a.d > 2000 * b.d) AS distinct_blowup,
-        |       (b.mn IS DISTINCT FROM a.mn OR b.mx IS DISTINCT FROM a.mx)
-        |         AS range_shifted
-        |FROM bf b JOIN af a USING (col_name)""".stripMargin,
-
-    // q_sketch_regroup: the (source, lang) panel re-grouped by lang
-    // recomputes directly per lang; gates are constants
-    "q_sketch_regroup" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(count(DISTINCT n_chars) AS BIGINT) AS distinct_lens,
-        |       TRUE AS hll_ok, TRUE AS p50_ok
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // q_theta_common: intersection/union aggregates over per-day
-    // user sketches = the exact day-count regroup below capacity
-    "q_theta_common" ->
-      """WITH sel AS (
-        |  SELECT user_id, epoch_us(ts) // 1000000 // 86400 AS day
-        |  FROM events
-        |  WHERE epoch_us(ts) // 1000000 // 86400 - 19723 IN (0, 14, 29))
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM
-        |    (SELECT user_id FROM sel GROUP BY user_id
-        |     HAVING count(DISTINCT day) = 3)) AS n_all_days,
-        |  (SELECT CAST(count(DISTINCT user_id) AS BIGINT) FROM sel)
-        |    AS n_any_day""".stripMargin,
-
-    // q_theta_overlap: exact-mode theta set algebra = plain set
-    // arithmetic over the two snapshot predicates
-    "q_theta_overlap" ->
-      """SELECT
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents
-        |   WHERE doc_id % 4 <> 3) AS n_a,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents
-        |   WHERE doc_id % 10 <> 0) AS n_b,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents
-        |   WHERE doc_id % 4 <> 3 AND doc_id % 10 <> 0) AS n_both,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents
-        |   WHERE doc_id % 4 <> 3 OR doc_id % 10 <> 0) AS n_either,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents
-        |   WHERE doc_id % 4 <> 3 AND doc_id % 10 = 0) AS n_a_only,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents
-        |   WHERE doc_id % 10 <> 0 AND doc_id % 4 = 3) AS n_b_only""".stripMargin,
-
-    // PII scrub: same Java/RE2-portable patterns, 'g' for global
-    // replace; counts are per-pattern matches on the raw text
-    "q_scrub_pii" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |         text || ' contact user' || doc_id || '@example.com from 10.'
-        |           || (doc_id % 250) || '.' || ((doc_id * 7) % 250)
-        |           || '.4 call 555-'
-        |           || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-'
-        |           || lpad(CAST((doc_id * 13) % 10000 AS VARCHAR), 4, '0')
-        |           AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        |       regexp_replace(regexp_replace(regexp_replace(raw,
-        |         '[A-Za-z0-9._%+-]+@(?:[A-Za-z0-9.-]+\.[A-Za-z]{2,}|\d{1,3}(?:\.\d{1,3}){3})',
-        |         '<EMAIL>', 'g'),
-        |         '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |         '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g') AS clean,
-        |       len(regexp_extract_all(raw,
-        |         '[A-Za-z0-9._%+-]+@(?:[A-Za-z0-9.-]+\.[A-Za-z]{2,}|\d{1,3}(?:\.\d{1,3}){3})'))
-        |         AS n_emails,
-        |       len(regexp_extract_all(raw,
-        |         '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ips,
-        |       len(regexp_extract_all(raw,
-        |         '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS n_phones
-        |FROM raw""".stripMargin,
-
-    // q_k_anonymity: the class table then the one-row summary with
-    // the identical (x * 100.0) / t double ops; DuckDB's HUGEINT
-    // sums are cast back to BIGINT
-    "q_k_anonymity" ->
-      """WITH cls AS (
-        |  SELECT c_nationkey, c_mktsegment, count(*) AS class_size
-        |  FROM customer GROUP BY 1, 2)
-        |SELECT count(*) AS n_classes,
-        |       CAST(min(class_size) AS BIGINT) AS k_anonymity,
-        |       CAST(coalesce(sum(CASE WHEN class_size < 10
-        |                              THEN class_size END), 0)
-        |            AS BIGINT) AS n_rows_below_k,
-        |       round(CAST(coalesce(sum(CASE WHEN class_size < 10
-        |                                    THEN class_size END), 0)
-        |                  AS DOUBLE) * 100.0 /
-        |             CAST(sum(class_size) AS DOUBLE), 4)
-        |         AS pct_rows_below_k
-        |FROM cls""".stripMargin,
-
-    // q_l_diversity: floor((bal+1000)/1000) is IEEE-identical in
-    // both engines (floor of a double division; never a raw
-    // double->int cast, which DuckDB rounds and Spark truncates)
-    "q_l_diversity" ->
-      """SELECT c_nationkey,
-        |       CAST(floor((c_acctbal + 1000.0) / 1000.0) AS BIGINT)
-        |         AS bal_band,
-        |       count(*) AS class_size,
-        |       count(DISTINCT c_mktsegment) AS distinct_sensitive
-        |FROM customer
-        |GROUP BY 1, 2
-        |HAVING count(DISTINCT c_mktsegment) < 3""".stripMargin,
-  )
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,9 +8,7 @@ object Verify {
     // optional third arg: comma-separated query subset for fast local
     // iteration (the driver always runs the full set)
     val subset = if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.session(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt, appName = "graft-verify")
+    val spark = Graft.querySession("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.forall(_.contains(name)) }

@@ -8,6 +8,13 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every query has an oracle — no rows-only holes") {
+    // one registry entry per name: a repeated name would shadow the
+    // first entry in the derived maps
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct == names,
+      s"duplicate query names: ${names.diff(names.distinct)}")
+    val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty)
+    assert(blank.isEmpty, s"empty oracles: ${blank.map(_.name)}")
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet
     assert(os.subsetOf(qs), s"orphan oracles: ${os -- qs}")
