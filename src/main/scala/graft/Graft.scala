@@ -76,10 +76,10 @@ object Graft {
         sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_CHECKSUM", "false"))
       .config("spark.ui.enabled", "false")
     // caller confs last so a probe can pin context-creation-time
-    // settings the dials don't cover (scheduler mode, pool files)
-    val builder = extraConfs.foldLeft(builder0) {
-      case (b, (k, v)) => b.config(k, v)
-    }
+    // settings the dials don't cover (scheduler mode, pool files);
+    // the warehouse default only where the caller sets none
+    val confs = extraConfs ++ warehouseDecision(extraConfs).map(WarehouseConf -> _)
+    val builder = confs.foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
     // streaming state backend selectable per run: heap (Spark's
     // default) or rocksdb (the disk-backed scale path for
     // within-watermark key cardinalities past executor heap) — see
@@ -130,6 +130,27 @@ object Graft {
 
   private val advisorWired = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  private[graft] val WarehouseConf = "spark.sql.warehouse.dir"
+
+  /** The warehouse dir a session is given, or None when the caller's
+    * extraConfs or a -D system property already sets one (SparkConf
+    * loads spark.* sys props itself, so nothing is applied). The
+    * default is a per-JVM temp dir swept at exit: Spark's own default
+    * is `spark-warehouse/` under the working directory, where every
+    * saveAsTable of the graded queries would leave its managed table.
+    */
+  private[graft] def warehouseDecision(
+      extraConfs: Map[String, String],
+      props: collection.Map[String, String] = sys.props): Option[String] =
+    Option.unless(extraConfs.contains(WarehouseConf) ||
+      props.contains(WarehouseConf))(defaultWarehouse)
+
+  private lazy val defaultWarehouse: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Replay.rmTree(dir)))
+    dir.toString
+  }
 
   /** The changelog-checkpointing value the rocksdb branch applies to
     * the builder, or None when an external decision already reaches

@@ -12,7 +12,7 @@ import org.apache.spark.sql.DataFrame
   *
   * PUBLIC because long-lived sessions need the other half of the
   * contract: operators that return a DataFrame riding a pinned
-  * lineage (the guarded pair family, `rerankExact`, the tf pins —
+  * lineage (the guarded pair family, `verifyPairs`, the tf pins —
   * each documents it) cannot free their own blocks, and waiting for
   * ContextCleaner GC lets pins accumulate across hundreds of calls
   * (exactly the pattern that grew the sf1 bench heap until

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -72,33 +74,41 @@ object Dedup {
     * content to compare); without the guard the null fingerprint
     * group would silently keep one of them and drop the rest.
     */
-  def exactDedup(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val fp = TextAnalysis.fingerprint(text)
-    // null-fingerprint rows must pass through wholesale, but they
-    // must NOT share one window partition: partitionBy groups all
-    // nulls together, so a corpus slice with a large null-text
-    // fraction would funnel through a single task just to compute a
-    // row_number the filter then ignores. Salting the partition key
-    // per-row for the null class gives each such row its own
-    // singleton partition (row_number 1 — survives naturally) while
-    // staying a SINGLE scan: a filter-and-union form would read a
-    // nondeterministic upstream twice and could classify a row
-    // differently per branch. The "null:" prefix cannot collide
-    // with a real fingerprint (md5 hex is exactly 32 [0-9a-f]
-    // chars; 'n' is not a hex digit). Rows need distinct ids — the
-    // same contract the min-id survivor rule already imposes. A NULL
-    // id would make the salt itself null (concat propagates nulls),
-    // silently collapsing every null-text+null-id row into one class
-    // and dropping all but one; salting the null-id case with a
-    // per-row monotonic id keeps each such row a singleton partition
-    // so they all pass through, as the docstring promises.
+  def exactDedup(df: DataFrame, id: Column, text: Column): DataFrame =
+    firstPerContent(df, id, text, id.asc)
+
+  /** One row per content fingerprint, the first under `order`, the
+    * full schema preserved — the survivor window of [[exactDedup]] and
+    * [[keepBest]].
+    *
+    * Null-fingerprint rows must pass through wholesale, but they
+    * must NOT share one window partition: partitionBy groups all
+    * nulls together, so a corpus slice with a large null-text
+    * fraction would funnel through a single task just to compute a
+    * row_number the filter then ignores. Salting the partition key
+    * per-row for the null class gives each such row its own
+    * singleton partition (row_number 1 — survives naturally) while
+    * staying a SINGLE scan: a filter-and-union form would read a
+    * nondeterministic upstream twice and could classify a row
+    * differently per branch. The "null:" prefix cannot collide
+    * with a real fingerprint (md5 hex is exactly 32 [0-9a-f]
+    * chars; 'n' is not a hex digit). Rows need distinct ids — the
+    * same contract the min-id survivor rule already imposes. A NULL
+    * id would make the salt itself null (concat propagates nulls),
+    * silently collapsing every null-text+null-id row into one class
+    * and dropping all but one; salting the null-id case with a
+    * per-row monotonic id keeps each such row a singleton partition
+    * so they all pass through.
+    */
+  private def firstPerContent(df: DataFrame, id: Column, text: Column,
+                              order: Column*): DataFrame = {
     val p = graft.Names.fresh("__ded", df.columns)
-    val part = coalesce(fp,
+    val part = coalesce(TextAnalysis.fingerprint(text),
       concat(lit("null:"),
         coalesce(id.cast("string"),
           concat(lit("mono:"), monotonically_increasing_id()))))
-    val w = Window.partitionBy(part).orderBy(id.asc)
-    df.withColumn(s"${p}_rn", row_number().over(w))
+    df.withColumn(s"${p}_rn",
+        row_number().over(Window.partitionBy(part).orderBy(order: _*)))
       .filter(col(s"${p}_rn") === 1)
       .drop(s"${p}_rn")
   }
@@ -146,18 +156,8 @@ object Dedup {
     * exchange on the fingerprint, full schema preserved.
     */
   def keepBest(df: DataFrame, id: Column, text: Column,
-               score: Column): DataFrame = {
-    val fp = TextAnalysis.fingerprint(text)
-    val p = graft.Names.fresh("__ded", df.columns)
-    val part = coalesce(fp,
-      concat(lit("null:"),
-        coalesce(id.cast("string"),
-          concat(lit("mono:"), monotonically_increasing_id()))))
-    val w = Window.partitionBy(part).orderBy(score.desc_nulls_last, id.asc)
-    df.withColumn(s"${p}_rn", row_number().over(w))
-      .filter(col(s"${p}_rn") === 1)
-      .drop(s"${p}_rn")
-  }
+               score: Column): DataFrame =
+    firstPerContent(df, id, text, score.desc_nulls_last, id.asc)
 
   /** Incremental ingest dedup — the daily-batch form: within the
     * delta keep one row per content class ([[exactDedup]] semantics:
@@ -341,15 +341,19 @@ object Dedup {
       .otherwise(raise_error(
         lit(s"lshCandidates: bands=$bands exceeds the signature length — " +
           "every band slice would be empty")))
-    val rowsPerBand = floor(size(col("__sig")) / bands).cast("int")
-    // bucket = hash of the band slice, hashed as the long array itself
-    // (xxhash64 folds array elements natively — no per-element string
-    // materialization)
     sigs.select(col("doc_id"), sigChecked.as("__sig"))
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(b, slice(col("__sig"), b * rowsPerBand + 1, rowsPerBand)))))
+      .select(col("doc_id"), posexplode(bandBuckets(col("__sig"), bands)))
       .toDF("doc_id", "band", "bucket")
+  }
+
+  /** The `bands` LSH bucket keys of a signature (band b = xxhash64 of
+    * its `size(sig) / bands`-row slice, hashed as the long array —
+    * no per-element strings); [[bandedKeys]] and the streaming twin
+    * share it. */
+  private[graft] def bandBuckets(sig: Column, bands: Int): Column = {
+    val rowsPerBand = floor(size(sig) / bands).cast("int")
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(b, slice(sig, b * rowsPerBand + 1, rowsPerBand)))
   }
 
   /** Bucket-local candidate-pair expansion over [[bandedKeys]]. */
@@ -408,18 +412,29 @@ object Dedup {
   private[graft] def boundedGroupPairs(rows: DataFrame, keys: Seq[Column],
                                        member: Column, cap: Int,
                                        site: String): DataFrame = {
-    val n = graft.Names.fresh("__n", rows.columns)
-    val counted = rows
-      .withColumn(n, count(lit(1)).over(Window.partitionBy(keys: _*)))
-      .observe(s"graft.$site.${obsId.incrementAndGet()}",
-        sum(when(col(n) > cap, 1L).otherwise(0L)).as("rows_in_dropped_groups"),
-        max(col(n)).as("max_group"))
-    val grouped = counted
-      .filter(col(n).between(2, cap))
-      .groupBy(keys: _*)
-      .agg(sort_array(collect_list(member)).as("__ms"))
-    expandGroupPairs(grouped)
+    val (counted, n) =
+      sizedGroups(rows, keys, cap, site, "rows_in_dropped_groups")
+    expandGroupPairs(cappedMembers(counted, n, keys, member, cap))
   }
+
+  /** The sizing step of [[boundedGroupPairs]]: rows with their group
+    * size (a window count, column name returned), observed as
+    * `graft.<site>.<n>` — `overCap` rows past `cap`, `max_group`. */
+  private def sizedGroups(rows: DataFrame, keys: Seq[Column], cap: Int,
+                          site: String, overCap: String): (DataFrame, String) = {
+    val n = graft.Names.fresh("__n", rows.columns)
+    (rows.withColumn(n, count(lit(1)).over(Window.partitionBy(keys: _*)))
+      .observe(s"graft.$site.${obsId.incrementAndGet()}",
+        sum(when(col(n) > cap, 1L).otherwise(0L)).as(overCap),
+        max(col(n)).as("max_group")), n)
+  }
+
+  /** Sorted member arrays (`__ms`) of the counted groups whose size
+    * `n` lies in [2, cap]. */
+  private def cappedMembers(counted: DataFrame, n: String, keys: Seq[Column],
+                            member: Column, cap: Int): DataFrame =
+    counted.filter(col(n).between(2, cap)).groupBy(keys: _*)
+      .agg(sort_array(collect_list(member)).as("__ms"))
 
   /** Ordered-pair stream from grouped sorted member arrays (column
     * `__ms`): posexplode the left element, then explode the tail
@@ -457,28 +472,13 @@ object Dedup {
       s"bands ($bands) must be in [1, numHashes=$numHashes] and divide it " +
         "evenly: bands > numHashes makes every band slice empty (all docs " +
         "one bucket); a non-divisor silently ignores trailing hashes")
-    // blank/null docs all share the single shingle "" — k of them
-    // would emit k²/2 degenerate jaccard-1.0 pairs (the same
-    // degeneracy simhashSigsNonEmpty excludes); exact dedup owns
-    // identical-empty duplicates. r17: they are excluded from the
-    // SIGNATURE pass too, not just the rerank — a degenerate doc
-    // could previously only ever occupy bucket slots (its pairs died
-    // in the rerank join), so dropping it up front is
-    // output-preserving and stops blank floods from evicting real
-    // pairs via maxBucket.
-    val nonBlank = df.filter(text.isNotNull && length(trim(text)) > 0)
-    // ONE corpus tokenize (r17): the distinct shingle array is bound
-    // once and derives BOTH the sorted rerank set and the minhash
-    // signature (min over a set equals min over the multiset, so the
-    // distinct array is exact for MinhashSig) — the old shape
-    // tokenized the corpus twice (signature pass + rerank-set pass)
-    // and pinned each separately.
-    val base = spread(nonBlank, id)
-      .select(id.as("doc_id"), shingles(text, shingleN).as("__arr"))
-      .select(col("doc_id"),
-        graft.plans.SortedXxhash64Array(col("__arr")).as("sh"),
-        graft.plans.MinhashSig(col("__arr"), numHashes).as("sig"))
-      .localCheckpoint()
+    // blank docs are excluded from the SIGNATURE pass, not just the
+    // rerank (r17): a degenerate doc could only ever occupy bucket
+    // slots (its pairs died in the rerank join), so dropping it up
+    // front is output-preserving and stops blank floods from evicting
+    // real pairs via maxBucket
+    val base = minhashDocs(spread(nonBlank(df, text), id), id, text,
+      shingleN, numHashes).localCheckpoint()
     val docs = base.select(col("doc_id"), col("sh"))
     // banded keys derive lazily from the pinned base: each consumer
     // (gate bound, pair expansion) re-runs only a projection +
@@ -486,14 +486,11 @@ object Dedup {
     // dropped
     val banded = bandedKeys(base.select(col("doc_id"), col("sig")), bands)
     if (maxCandidates > 0) {
-      // gate 1 (family contract): Σ_{2 <= c <= maxBucket} C(c, 2)
-      // over the (band, bucket) membership counts — dropped buckets
-      // contribute nothing, exactly like boundedGroupPairs
-      val candBound = banded
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("c"))
-        .filter(col("c") <= maxBucket)
-        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L))
-          .cast("long")).head.getLong(0)
+      // gate 1 (family contract) over the (band, bucket) membership
+      // counts — dropped buckets contribute nothing, exactly like
+      // boundedGroupPairs
+      val candBound =
+        pairBound(banded, Seq(col("band"), col("bucket")), maxBucket)
       requireCandidateBound("minhashNearDups", maxCandidates, candBound)
       // gate 2 (the disk gate this operator specifically needs): the
       // exact rerank shuffles BOTH candidate docs' full shingle-hash
@@ -523,21 +520,42 @@ object Dedup {
           "raise rerankBudgetBytes for a deliberate run at this volume, " +
           "or pass maxCandidates <= 0 to run unguarded.")
     }
-    rerankExact(docs, threshold, bandedPairs(banded, maxBucket))
+    verifyPairs(bandedPairs(banded, maxBucket), docs,
+      jaccardAtLeast(threshold))
   }
 
-  /** Exact Jaccard rerank of candidate pairs against pinned per-doc
-    * sorted shingle-hash sets — the shared verify kernel of the
-    * candidate-generating near-dup paths ([[minhashNearDups]],
-    * [[prefixJaccardPairs]]). `cands` must expose (id_a, id_b).
-    *
-    * The per-doc sets are pinned once (SORTED — the kernel is a
-    * linear merge over sorted sets): the rerank joins them on id_a
-    * AND id_b, and aliased subtrees defeat exchange reuse — so
-    * without the pin the tokenize+shingle pass (the most expensive
-    * stage, ~half the pipeline) runs twice more. localCheckpoint is
-    * disk-backed block storage, the 100 TB-safe form of "write the
-    * shingle index once, read it per rerank side".
+  /** Documents with non-blank text — the universe of every near-dup
+    * pair operator. Blank/null docs all share the single shingle "",
+    * so k of them would pair as k²/2 degenerate jaccard-1.0 matches
+    * (the degeneracy simhashSigsNonEmpty excludes); exact dedup owns
+    * identical-empty duplicates. */
+  private[graft] def nonBlank(df: DataFrame, text: Column): DataFrame =
+    df.filter(text.isNotNull && length(trim(text)) > 0)
+
+  /** (doc_id, sh, sig, carry…): the per-doc sorted shingle-hash set
+    * and MinHash signature of [[minhashNearDups]] and its streaming
+    * twin. ONE tokenize (r17): the distinct shingle array is bound once
+    * and derives both (min over a set equals min over the multiset). */
+  private[graft] def minhashDocs(df: DataFrame, id: Column, text: Column,
+                                 shingleN: Int, numHashes: Int,
+                                 carry: String*): DataFrame =
+    df.select(id.as("doc_id") +: shingles(text, shingleN).as("__arr") +:
+        carry.map(col): _*)
+      .select(col("doc_id") +:
+        graft.plans.SortedXxhash64Array(col("__arr")).as("sh") +:
+        graft.plans.MinhashSig(col("__arr"), numHashes).as("sig") +:
+        carry.map(col): _*)
+
+  /** The (doc_id, sh) per-doc sorted shingle-hash sets the exact
+    * verify step ([[verifyPairs]]) reads, pinned once (SORTED — the
+    * kernel is a linear merge over sorted sets): the verify joins
+    * them on id_a AND id_b, and aliased subtrees defeat exchange
+    * reuse — so without the pin the tokenize+shingle pass (the most
+    * expensive stage, ~half the pipeline) runs twice more.
+    * localCheckpoint is disk-backed block storage, the 100 TB-safe
+    * form of "write the shingle index once, read it per rerank side".
+    * Blank/null docs excluded, compute spread across the cluster
+    * before the heavy shingle+hash+sort pass.
     *
     * The sets carry xxhash64(shingle), not the shingle strings: the
     * two rerank joins shuffle every candidate pair's full set, and
@@ -548,42 +566,57 @@ object Dedup {
     * on the graded corpora, so the oracle-equality contract with
     * [[ngramJaccardPairs]] is unaffected).
     */
-  private[functions] def pinnedShingleSets(nonBlank: DataFrame, id: Column,
-                                           text: Column,
-                                           shingleN: Int): DataFrame =
-    pinnableShingleSets(nonBlank, id, text, shingleN).localCheckpoint()
-
-  /** The lazy (doc_id, sh sorted-hash-set) projection behind
-    * [[pinnedShingleSets]] — blank/null docs excluded, compute spread
-    * across the cluster before the heavy shingle+hash+sort pass. */
-  private def pinnableShingleSets(df: DataFrame, id: Column, text: Column,
-                                  shingleN: Int): DataFrame =
-    spread(df.filter(text.isNotNull && length(trim(text)) > 0), id)
+  private def shingleSets(df: DataFrame, id: Column, text: Column,
+                          shingleN: Int): DataFrame =
+    spread(nonBlank(df, text), id)
       .select(id.as("doc_id"),
         graft.plans.SortedXxhash64Array(shingles(text, shingleN)).as("sh"))
 
-  private def rerankExact(docs: DataFrame, threshold: Double,
-                          cands: DataFrame): DataFrame = {
-    // the docs side is hinted as the shuffle-hash BUILD side: cands
-    // comes out of a pair EXPANSION, whose size Catalyst estimates
-    // linearly — at blocking-saturated scales (sf10 measured: ~40M
-    // candidate pairs from a corpus whose every shingle is frequent)
-    // the planner's "broadcast the small cands side" becomes a
-    // GB-scale driver collect that dies on maxResultSize. The docs
-    // side is the honestly-bounded build: corpus/partitions rows per
-    // task, and the candidate stream never materializes.
+  /** Scores rows carrying `inter` given each side's set size, keeps
+    * those reaching the threshold, projects (id_a, id_b, score…). */
+  private type Score = (DataFrame, Column, Column) => DataFrame
+
+  /** round(|A∩B| / |A∪B|, 4) >= t, as `jaccard`. */
+  private def jaccardAtLeast(t: Double): Score = (d, na, nb) =>
+    d.withColumn("jaccard", round(col("inter").cast("double") /
+        (na + nb - col("inter")), 4))
+      .filter(col("jaccard") >= t)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
+  /** Both containments `cont_a` = |A∩B|/|A| and `cont_b` = |A∩B|/|B|
+    * (rounded to 4 places), kept when the larger reaches t. */
+  private def containmentAtLeast(t: Double): Score = (d, na, nb) =>
+    d.withColumn("cont_a", round(col("inter").cast("double") / na, 4))
+      .withColumn("cont_b", round(col("inter").cast("double") / nb, 4))
+      .filter(greatest(col("cont_a"), col("cont_b")) >= t)
+      .select(col("id_a"), col("id_b"), col("cont_a"), col("cont_b"))
+
+  /** Exact verify of candidate pairs (id_a, id_b) against the pinned
+    * per-doc sorted shingle-hash sets ([[shingleSets]]) — the one
+    * verify step of the candidate-generating near-dup paths
+    * ([[minhashNearDups]], [[prefixJaccardPairs]],
+    * [[prefixContainmentPairs]]); `score` decides what survives.
+    *
+    * The docs side is hinted as the shuffle-hash BUILD side: cands
+    * comes out of a pair EXPANSION, whose size Catalyst estimates
+    * linearly — at blocking-saturated scales (sf10 measured: ~40M
+    * candidate pairs from a corpus whose every shingle is frequent)
+    * the planner's "broadcast the small cands side" becomes a
+    * GB-scale driver collect that dies on maxResultSize. The docs
+    * side is the honestly-bounded build: corpus/partitions rows per
+    * task, and the candidate stream never materializes.
+    */
+  private def verifyPairs(cands: DataFrame, docs: DataFrame,
+                          score: Score): DataFrame = {
     val a = docs.alias("da").hint("shuffle_hash")
     val b = docs.alias("db").hint("shuffle_hash")
-    cands.join(a, col("id_a") === col("da.doc_id"))
-      .join(b, col("id_b") === col("db.doc_id"))
-      // native merge-count (codegen'd, no per-row hash set) — equals
-      // size(array_intersect(...)) on these distinct sorted sets
-      .withColumn("inter",
-        graft.plans.SortedIntersectCount(col("da.sh"), col("db.sh")))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (size(col("da.sh")) + size(col("db.sh")) - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    score(cands.join(a, col("id_a") === col("da.doc_id"))
+        .join(b, col("id_b") === col("db.doc_id"))
+        // native merge-count (codegen'd, no per-row hash set) — equals
+        // size(array_intersect(...)) on these distinct sorted sets
+        .withColumn("inter",
+          graft.plans.SortedIntersectCount(col("da.sh"), col("db.sh"))),
+      size(col("da.sh")), size(col("db.sh")))
   }
 
   /** Default pre-flight cap on the exact-pair family's blocking
@@ -633,47 +666,53 @@ object Dedup {
           "size, or pass maxCandidates <= 0 to run unguarded.")
     }
 
+  /** The pair-family candidate bound Σ C(c, 2) over groups of size
+    * c <= cap — what [[boundedGroupPairs]] would expand — in one
+    * aggregation job, no pair explosion. */
+  private def pairBound(rows: DataFrame, keys: Seq[Column], cap: Int): Long =
+    rows.groupBy(keys: _*).agg(count(lit(1)).as("c"))
+      .filter(col("c") <= cap)
+      .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L))
+        .cast("long")).head.getLong(0)
+
+  /** Prefix filter over a ranked index: each doc's first
+    * n_sh - ceil(t·n_sh) + 1 shingles; the 1e-9 nudge keeps an exact
+    * integer t·n_sh from rounding UP (a short prefix loses recall). */
+  private def inPrefix(t: Double): Column =
+    col("__rk") <= col("n_sh") - ceil(lit(t) * col("n_sh") - lit(1e-9)) + 1
+
   /** Pin the shared index subtree when the pre-flight gate will read
     * it: the gate is eager (it runs `head()` before the pair plan is
     * even returned), so without the pin the corpus would tokenize
     * once for the bound and again for the join — localCheckpoint is
     * the same disk-backed "write the shingle index once, read it per
-    * consumer" trade [[rerankExact]] documents. Unguarded calls
+    * consumer" trade [[shingleSets]] documents. Unguarded calls
     * (maxCandidates <= 0) stay fully lazy and unpinned.
     */
   private def pinIfGuarded(base: DataFrame, maxCandidates: Long): DataFrame =
     if (maxCandidates > 0) base.localCheckpoint() else base
 
-  /** The shared doc×distinct-shingle inverted-index base (hashed
-    * 8-byte keys, blank docs excluded) the pair operators block on —
-    * also the input to their pre-flight candidate bounds, so gate and
-    * operator count the same keys. Columns: doc_id, n_sh, s.
+  /** (doc_id, n_sh, s) exploded view of a (doc_id, sh) sorted-set
+    * relation — the shared doc×distinct-shingle inverted index
+    * (hashed 8-byte keys, blank docs excluded) the pair operators
+    * block on and their pre-flight bounds count, so gate and operator
+    * count the same keys. Zero exchanges: n_sh is the array size.
     *
     * r17 shape: derived MAP-SIDE from the native distinct-shingle
     * array — per-doc distinctness comes from `shingles` (WordShingles
     * distinct=true) and the per-doc size rides the array, so the old
     * corpus-wide dropDuplicates exchange AND the n_sh window exchange
-    * are gone; the only exchange left before the pin is the
-    * compute-spreading repartition(id). Hash-collision exposure is
-    * exactly the rerank sets' (the index rows ARE the exploded
-    * [[SortedXxhash64Array]] set): two distinct shingles of one doc
-    * colliding in 64 bits leave a duplicate (doc_id, s) row where the
-    * old post-hash dedup collapsed it — P ≈ n²/2⁶⁵, pinned zero on
-    * the graded corpora, and under a collision the OLD code was
-    * already inconsistent (its n_sh disagreed with the rerank's
-    * size(sh)); the new derivation makes index and rerank count the
-    * same universe by construction. */
-  private def hashedInvBase(df: DataFrame, id: Column, text: Column,
-                            shingleN: Int): DataFrame =
-    invFromSets(pinnableShingleSets(df, id, text, shingleN))
-
-  /** (doc_id, n_sh, s) exploded view of a (doc_id, sh) sorted-set
-    * relation — zero exchanges (n_sh is the array size). */
+    * are gone. Hash-collision exposure is exactly the rerank sets'
+    * (the index rows ARE the exploded [[SortedXxhash64Array]] set):
+    * two distinct shingles of one doc colliding in 64 bits leave a
+    * duplicate (doc_id, s) row — P ≈ n²/2⁶⁵, pinned zero on the
+    * graded corpora — and index and rerank count the same universe
+    * by construction. */
   private def invFromSets(sets: DataFrame): DataFrame =
     sets.select(col("doc_id"), size(col("sh")).cast("int").as("n_sh"),
       explode(col("sh")).as("s"))
 
-  /** [[hashedInvBase]] + global (df asc, hash asc) rank — the
+  /** [[invFromSets]] + global (df asc, hash asc) rank — the
     * prefix-filter ordering both prefix operators and their
     * pre-flight bounds share. Columns: doc_id, s, n_sh, __dfreq,
     * __rk. */
@@ -685,46 +724,48 @@ object Dedup {
           .orderBy(col("__dfreq"), col("s"))))
   }
 
+  /** The thresholds from which [[ngramJaccardPairs]] and
+    * [[containmentPairs]] route to their prefix plans — measured sf1
+    * crossovers (SCALE.md), quoted in each operator's doc. */
+  private val JaccardPrefixFrom = 0.5
+  private val ContainmentPrefixFrom = 0.7
+
   /** N-gram Jaccard pairs — the exact (LSH-free) near-dup entry
-    * point. DEFAULT ROUTING: at `threshold >= routeThreshold` this
-    * DELEGATES to [[prefixJaccardPairs]], the scale-safe exact plan.
-    * The inverted-index general form below blocks on EVERY shared
-    * shingle, so its candidate population is threshold-independent
-    * (flat cost as t rises) and grows ~quadratically as a corpus
-    * densifies; the prefix-filtered plan indexes only each doc's
-    * `n - ceil(t*n) + 1` globally-rarest shingles, so candidates
-    * collapse as t rises. Measured head-to-head (sf1, warm, same
-    * exact output at every t): 14.8 vs 17.4 s at t=0.5, 6.7 vs
-    * 16.0 s at t=0.7, 3.5 vs 15.7 s at t=0.9 — the prefix plan wins
-    * everywhere in the routed range, hence routeThreshold = 0.5.
-    * The crossover is SCALE-dependent: at sf0.1 the prefix plan's
-    * extra stages (df join, per-doc rank, set rerank) cost more than
-    * the inverted index's whole candidate population (~3.5 vs
-    * ~2.0 s at t=0.5), and the gap inverts by sf1. The default
-    * routes for the scale direction — candidate populations grow
-    * ~quadratically with corpus density while the prefix overhead
-    * stays linear, so the small-corpus penalty is the cheap side of
-    * the trade; a latency-critical small-corpus caller can pin the
-    * inverted form via routeThreshold.
+    * point. DEFAULT ROUTING: at `threshold >=` 0.5
+    * ([[JaccardPrefixFrom]]) this DELEGATES to [[prefixJaccardPairs]],
+    * the scale-safe exact plan. The inverted-index general form below
+    * blocks on EVERY shared shingle, so its candidate population is
+    * threshold-independent (flat cost as t rises) and grows
+    * ~quadratically as a corpus densifies; the prefix-filtered plan
+    * indexes only each doc's `n - ceil(t*n) + 1` globally-rarest
+    * shingles, so candidates collapse as t rises. Measured
+    * head-to-head (sf1, warm, same exact output at every t): 14.8 vs
+    * 17.4 s at t=0.5, 6.7 vs 16.0 s at t=0.7, 3.5 vs 15.7 s at
+    * t=0.9. The crossover is SCALE-dependent: at sf0.1 the prefix plan's extra stages (df
+    * join, per-doc rank, set rerank) cost more than the inverted
+    * index's whole candidate population (~3.5 vs ~2.0 s at t=0.5),
+    * and the gap inverts by sf1. The route is set for the scale
+    * direction — candidate populations grow ~quadratically with
+    * corpus density while the prefix overhead stays linear, so the
+    * small-corpus penalty is the cheap side of the trade.
     *
     * Semantics when routed: the output is the TRUE exact pair set —
     * `maxDf` is NOT applied (the prefix path needs no df prune; its
     * own `maxGroup` guard caps only prefix tokens, each doc's
     * rarest). That set is a superset-or-equal of the df-capped
     * result: on a corpus where a stopword shingle exceeds `maxDf`,
-    * routing RESTORES the pairs the cap would silently lose. Callers
-    * that specifically want the df-capped inverted-index blocking
-    * (e.g. to bound worst-case cost below exactness) pass
-    * `routeThreshold = 2.0` to disable routing.
+    * routing RESTORES the pairs the cap would silently lose, so the
+    * df-capped blocking is only worth running below the route
+    * threshold, where it is the faster plan.
     *
     * The general form: pairs sharing >= 1 shingle via
     * shingle-inverted-index self-join, scored exactly up to 64-bit
     * shingle-hash collisions (the index keys on xxhash64(shingle),
-    * P ≈ n²/2⁶⁵ per corpus — see the inline note). The shingle join
-    * IS the blocking — all-pairs never materializes; skew guard:
-    * drop shingles appearing in more than `maxDf` docs (stopword
-    * shingles would quadratically blow up a 100 TB run). Candidate
-    * growth is observable: [[boundedGroupPairs]]'s
+    * P ≈ n²/2⁶⁵ per corpus — see [[sharedShingleCounts]]). The
+    * shingle join IS the blocking — all-pairs never materializes;
+    * skew guard: drop shingles appearing in more than `maxDf` docs
+    * (stopword shingles would quadratically blow up a 100 TB run).
+    * Candidate growth is observable: [[boundedGroupPairs]]'s
     * `graft.ngram_shingles.<n>` metric reports max group size and
     * capped-row counts per run.
     *
@@ -736,50 +777,23 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
                         shingleN: Int = 3, threshold: Double = 0.5,
                         maxDf: Int = 1000,
-                        routeThreshold: Double = 0.5,
-                        maxCandidates: Long = defaultMaxCandidates): DataFrame = {
-    if (threshold >= routeThreshold)
-      return prefixJaccardPairs(df, id, text, shingleN, threshold,
+                        maxCandidates: Long = defaultMaxCandidates): DataFrame =
+    if (threshold >= JaccardPrefixFrom)
+      prefixJaccardPairs(df, id, text, shingleN, threshold,
         maxCandidates = maxCandidates)
-    // guarded: pin the index base so the pre-flight bound and the
-    // pair plan tokenize the corpus ONCE (the guard is an extra
-    // aggregation over pinned blocks, not a second corpus scan)
-    val base = pinIfGuarded(hashedInvBase(df, id, text, shingleN),
+    else ngramJaccardGeneral(df, id, text, shingleN, threshold, maxDf,
       maxCandidates)
-    requireCandidateBound("ngramJaccardPairs", maxCandidates, {
-      base.groupBy(col("s")).agg(count(lit(1)).as("c"))
-        .filter(col("c") <= maxDf)
-        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L))
-          .cast("long")).head.getLong(0)
-    })
-    // the index keys on xxhash64(shingle): the identity of a shingle
-    // is all the dedup, the df-prune and the pair grouping need, and
-    // an 8-byte key cuts the exchanges ~3× vs the ~25-byte strings.
-    // Per-doc distinctness and n_sh both ride the native shingle
-    // array map-side now (hashedInvBase), so no dedup exchange and no
-    // n_sh window remain. Distinct counts / pair intersections are
-    // unchanged unless two distinct shingles of one corpus collide in
-    // 64 bits (DedupSpec pins zero collisions on the graded corpus;
-    // at 100 TB a collision shifts one pair's jaccard by ~1/n_sh with
-    // P ≈ n²/2⁶⁵ — noise well under the threshold granularity).
-    // same blank-doc exclusion as minhashNearDups (degenerate "" pairs)
-    val inv = base
-    // group the inverted index by shingle: the group size IS the
-    // document-frequency prune, and the member list is the pair
-    // source — one exchange, no self-join, no persisted index;
-    // boundedGroupPairs counts before collecting, so a stopword
-    // shingle's members are dropped before they can buffer.
-    boundedGroupPairs(inv, Seq(col("s")),
-        struct(col("doc_id"), col("n_sh")), maxDf, "ngram_shingles")
-      .select(col("__a.doc_id").as("id_a"), col("__a.n_sh").as("na"),
-        col("__b.doc_id").as("id_b"), col("__b.n_sh").as("nb"))
-      .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+
+  /** The general (df-capped inverted-index) form of
+    * [[ngramJaccardPairs]] at any threshold. */
+  private[graft] def ngramJaccardGeneral(df: DataFrame, id: Column,
+                                         text: Column, shingleN: Int,
+                                         threshold: Double, maxDf: Int,
+                                         maxCandidates: Long): DataFrame =
+    jaccardAtLeast(threshold)(
+      sharedShingleCounts("ngramJaccardPairs", "ngram_shingles", df, id,
+        text, shingleN, maxDf, maxCandidates),
+      col("na"), col("nb"))
 
   /** Containment pairs — the ASYMMETRIC near-dup Jaccard misses: a
     * short quote fully contained in a long article has containment
@@ -790,21 +804,20 @@ object Dedup {
     * reaches `threshold`, with BOTH directions reported:
     * (id_a, id_b, cont_a = inter/|A|, cont_b = inter/|B|).
     *
-    * DEFAULT ROUTING: at `threshold >= routeThreshold` this
-    * DELEGATES to [[prefixContainmentPairs]], whose min-side prefix
-    * blocking indexes only each doc's `n - ceil(t*n) + 1`
-    * globally-rarest shingles — candidates collapse as t rises,
-    * where the general form's every-shared-shingle candidates stay
-    * flat. Measured head-to-head (sf1, warm): prefix 17.0 vs 28.0 s
-    * at t=0.7 and 12.8 vs 16.3 s at t=0.9, while at t=0.5 the
-    * general form wins (17.4 vs 29.5 s — half of every doc's
-    * shingles land in its prefix and join FULL posting lists), hence
-    * routeThreshold = 0.7. On the routed path the output is the TRUE
-    * exact pair set on full shingle sets (no maxDf recall cap, no
-    * kept-shingle-only intersection asymmetry) — a superset-or-equal
-    * of the df-capped result. Callers that specifically want the
-    * df-capped blocking at a high threshold pass
-    * `routeThreshold = 2.0` to disable routing.
+    * DEFAULT ROUTING: at `threshold >=` 0.7
+    * ([[ContainmentPrefixFrom]]) this DELEGATES to
+    * [[prefixContainmentPairs]], whose min-side prefix blocking
+    * indexes only each doc's `n - ceil(t*n) + 1` globally-rarest
+    * shingles — candidates collapse as t rises, where the general
+    * form's every-shared-shingle candidates stay flat. Measured
+    * (sf1, warm): prefix 17.0 vs 28.0 s at t=0.7 and 12.8 vs 16.3 s
+    * at t=0.9, while at t=0.5 the general form wins (17.4 vs 29.5 s —
+    * half of every doc's shingles land in its prefix and join FULL
+    * posting lists). On the routed path the output is the TRUE exact pair set on full shingle sets
+    * (no maxDf recall cap, no kept-shingle-only intersection
+    * asymmetry) — a superset-or-equal of the df-capped result, so the
+    * df-capped blocking is only worth running below the route
+    * threshold, where it is the faster plan.
     *
     * The general form: same inverted-index blocking + group-local
     * pair counting as [[ngramJaccardPairs]] (one exchange,
@@ -822,35 +835,60 @@ object Dedup {
   def containmentPairs(df: DataFrame, id: Column, text: Column,
                        shingleN: Int = 3, threshold: Double = 0.8,
                        maxDf: Int = 1000,
-                       routeThreshold: Double = 0.7,
-                       maxCandidates: Long = defaultMaxCandidates): DataFrame = {
-    if (threshold >= routeThreshold)
-      return prefixContainmentPairs(df, id, text, shingleN, threshold,
+                       maxCandidates: Long = defaultMaxCandidates): DataFrame =
+    if (threshold >= ContainmentPrefixFrom)
+      prefixContainmentPairs(df, id, text, shingleN, threshold,
         maxCandidates = maxCandidates)
-    // pinned like ngramJaccardPairs: one tokenize pass feeds the
-    // pre-flight bound and the pair plan
-    val base = pinIfGuarded(hashedInvBase(df, id, text, shingleN),
+    else containmentGeneral(df, id, text, shingleN, threshold, maxDf,
       maxCandidates)
-    requireCandidateBound("containmentPairs", maxCandidates, {
-      base.groupBy(col("s")).agg(count(lit(1)).as("c"))
-        .filter(col("c") <= maxDf)
-        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L))
-          .cast("long")).head.getLong(0)
-    })
-    val inv = base
-    boundedGroupPairs(inv, Seq(col("s")),
-        struct(col("doc_id"), col("n_sh")), maxDf, "containment_shingles")
-      .select(col("__a.doc_id").as("id_a"), col("__a.n_sh").as("na"),
-        col("__b.doc_id").as("id_b"), col("__b.n_sh").as("nb"))
-      .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("cont_a",
-        round(col("inter").cast("double") / col("na"), 4))
-      .withColumn("cont_b",
-        round(col("inter").cast("double") / col("nb"), 4))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-      .select(col("id_a"), col("id_b"), col("cont_a"), col("cont_b"))
+
+  /** The general (df-capped inverted-index) form of
+    * [[containmentPairs]] at any threshold. */
+  private[graft] def containmentGeneral(df: DataFrame, id: Column,
+                                        text: Column, shingleN: Int,
+                                        threshold: Double, maxDf: Int,
+                                        maxCandidates: Long): DataFrame =
+    containmentAtLeast(threshold)(
+      sharedShingleCounts("containmentPairs", "containment_shingles", df,
+        id, text, shingleN, maxDf, maxCandidates),
+      col("na"), col("nb"))
+
+  /** The general form's blocking, unscored: (id_a, id_b, na, nb, inter)
+    * for every pair sharing a shingle held by at most `maxDf` docs,
+    * `inter` counting those shingles. Guarded (`maxCandidates > 0`),
+    * the index is pinned so the pre-flight bound (an extra
+    * aggregation over pinned blocks) and the pair plan tokenize the
+    * corpus ONCE. The index keys on xxhash64(shingle) ([[invFromSets]]):
+    * the identity of a shingle is all the df-prune and the pair
+    * grouping need, and an 8-byte key cuts the exchanges ~3× vs the
+    * ~25-byte strings.
+    */
+  private def sharedShingleCounts(op: String, site: String, df: DataFrame,
+                                  id: Column, text: Column, shingleN: Int,
+                                  maxDf: Int,
+                                  maxCandidates: Long): DataFrame = {
+    val inv = pinIfGuarded(invFromSets(shingleSets(df, id, text, shingleN)),
+      maxCandidates)
+    requireCandidateBound(op, maxCandidates,
+      pairBound(inv, Seq(col("s")), maxDf))
+    sharedKeyCounts(inv, "n_sh", maxDf, site)
   }
+
+  /** Shared-key pair counts over a (doc_id, `size`, s) index: group by
+    * the key `s` — the group size IS the document-frequency prune and
+    * the member list is the pair source (one exchange, no self-join;
+    * [[boundedGroupPairs]] counts before collecting, so a stopword
+    * key's members are dropped before they can buffer) — then count
+    * each pair's shared keys. Returns (id_a, id_b, na, nb, `counted`),
+    * na/nb being each side's `size`. */
+  private[graft] def sharedKeyCounts(index: DataFrame, size: String, cap: Int,
+                                     site: String, counted: String = "inter"): DataFrame =
+    boundedGroupPairs(index, Seq(col("s")),
+        struct(col("doc_id"), col(size)), cap, site)
+      .select(col("__a.doc_id").as("id_a"), col(s"__a.$size").as("na"),
+        col("__b.doc_id").as("id_b"), col(s"__b.$size").as("nb"))
+      .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
+      .agg(count(lit(1)).as(counted))
 
   /** Prefix-filtered EXACT containment pairs — the scale twin of
     * [[containmentPairs]]'s every-shared-shingle blocking, via the
@@ -888,37 +926,28 @@ object Dedup {
       s"threshold must be in (0, 1], got $threshold — at 0 the prefix " +
         "is the whole set and the candidate set is all co-occurring pairs")
     // ONE corpus tokenize: the pinned per-doc sorted-hash sets feed
-    // the exploded inverted index (ranked below) AND the exact rerank
-    // tail — the old shape tokenized twice (once inside rankedPrefix,
-    // once for the rerank's pinnedShingleSets)
-    val docsSets = pinnedShingleSets(df, id, text, shingleN)
+    // the exploded inverted index (ranked below) AND the exact verify
+    val docsSets = shingleSets(df, id, text, shingleN).localCheckpoint()
     // the ranked index is pinned once (when guarded): the pre-flight
     // bound, the prefix filter AND the full-index join side all read
     // the same blocks — its derivation from the pinned sets costs no
     // second corpus scan
     val ranked = pinIfGuarded(rankedFromInv(invFromSets(docsSets)),
       maxCandidates)
+    // the final round(., 4) >= t filter's slack folded into the
+    // prefix: a pair at true ratio t - 0.00004 rounds UP to t and must
+    // not be lost to a one-too-short prefix
+    val prefix = ranked.filter(inPrefix(threshold - 5e-5))
     requireCandidateBound("prefixContainmentPairs", maxCandidates, {
       // Σ c_s·(df_s − 1): the prefix→full-index join rows before the
       // min-side direction filter — blockingStats' containment bound,
       // on the same hashed keys the operator shuffles
-      ranked
-        .filter(col("__rk") <= col("n_sh") -
-          ceil((lit(threshold) - lit(5e-5)) * col("n_sh") - lit(1e-9)) + 1)
+      prefix
         .groupBy(col("s"))
         .agg(count(lit(1)).as("c"), first(col("__dfreq")).as("__f"))
         .agg(coalesce(sum(col("c") * (col("__f") - 1)), lit(0L))
           .cast("long")).head.getLong(0)
     })
-    // prefix length n_sh - ceil(t*n_sh) + 1, with the final
-    // round(., 4) >= t filter's slack folded in: a pair at true
-    // ratio t - 0.00004 rounds UP to t and must not be lost to a
-    // one-too-short prefix; the 1e-9 nudge keeps an exactly-integer
-    // product from rounding up on float error (mirrors
-    // [[prefixJaccardPairs]])
-    val prefix = ranked
-      .filter(col("__rk") <= col("n_sh") -
-        ceil((lit(threshold) - lit(5e-5)) * col("n_sh") - lit(1e-9)) + 1)
     val cands = prefix
       .select(col("s"), col("doc_id").as("__pid"), col("n_sh").as("__pn"))
       .join(ranked.select(col("s"), col("doc_id").as("__fid"),
@@ -931,21 +960,7 @@ object Dedup {
       .select(least(col("__pid"), col("__fid")).as("id_a"),
         greatest(col("__pid"), col("__fid")).as("id_b"))
       .distinct()
-    // shuffle-hash-build the docs side for the same reason as
-    // [[rerankExact]]: the pair-expanded cands side is what the
-    // planner mistakes for broadcast-small
-    val a = docsSets.alias("da").hint("shuffle_hash")
-    val b = docsSets.alias("db").hint("shuffle_hash")
-    cands.join(a, col("id_a") === col("da.doc_id"))
-      .join(b, col("id_b") === col("db.doc_id"))
-      .withColumn("inter",
-        graft.plans.SortedIntersectCount(col("da.sh"), col("db.sh")))
-      .withColumn("cont_a",
-        round(col("inter").cast("double") / size(col("da.sh")), 4))
-      .withColumn("cont_b",
-        round(col("inter").cast("double") / size(col("db.sh")), 4))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-      .select(col("id_a"), col("id_b"), col("cont_a"), col("cont_b"))
+    verifyPairs(cands, docsSets, containmentAtLeast(threshold))
   }
 
   /** Prefix-filtered EXACT Jaccard pairs — the sublinear-candidate
@@ -961,7 +976,7 @@ object Dedup {
     * while a stopword shingle shared by half the corpus almost never
     * ranks inside anyone's prefix. Candidates then pass a size filter
     * (J >= t implies min(n)/max(n) >= t) and the shared
-    * [[rerankExact]] verify, so the output is the TRUE exact pair set
+    * [[verifyPairs]] step, so the output is the TRUE exact pair set
     * — no maxDf recall trade like [[ngramJaccardPairs]] — at a
     * candidate count that shrinks as the threshold rises.
     *
@@ -986,34 +1001,23 @@ object Dedup {
         "is the whole set and the candidate set is all co-occurring pairs")
     // ONE corpus tokenize (r17): the pinned per-doc sorted-hash sets
     // feed BOTH the exploded inverted index below and the exact
-    // rerank tail — the old shape tokenized the corpus twice. Global
-    // token order = (document frequency asc, hash asc) via
-    // [[rankedFromInv]]; prefix length n_sh - ceil(t*n_sh) + 1; the
-    // 1e-9 nudge keeps an exactly-integer t*n_sh from rounding UP on
-    // float error (a too-short prefix silently loses recall; too
-    // long only costs). When guarded, the second pin lands on the
-    // FILTERED prefix — the only subtree both the pre-flight bound
-    // and the pair plan read — so that checkpoint write is the
+    // verify tail. Global token order = (document frequency asc, hash
+    // asc) via [[rankedFromInv]]. When guarded, the second pin lands
+    // on the FILTERED prefix — the only subtree both the pre-flight
+    // bound and the pair plan read — so that checkpoint write is the
     // prefix's ~(1-t)·index rows, not the whole ranked index
     // (measured: the full-index pin cost the guarded path ~20% at
     // sf1/t=0.5 over the unguarded lazy plan; this one is the
     // cheapest shared cut), and it derives from the pinned sets, not
     // a second corpus scan.
-    val docsSets = pinnedShingleSets(df, id, text, shingleN)
+    val docsSets = shingleSets(df, id, text, shingleN).localCheckpoint()
     val prefix = pinIfGuarded(
-      rankedFromInv(invFromSets(docsSets))
-        .filter(col("__rk") <=
-          col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1),
+      rankedFromInv(invFromSets(docsSets)).filter(inPrefix(threshold)),
       maxCandidates)
-    requireCandidateBound("prefixJaccardPairs", maxCandidates, {
-      // Σ_{c ≤ maxGroup} C(c, 2) over prefix-token group sizes —
-      // blockingStats' jaccard bound with the boundedGroupPairs cap
-      // folded in (groups past maxGroup are dropped, not exploded)
-      prefix.groupBy(col("s")).agg(count(lit(1)).as("c"))
-        .filter(col("c") <= maxGroup)
-        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L))
-          .cast("long")).head.getLong(0)
-    })
+    // blockingStats' jaccard bound with the boundedGroupPairs cap
+    // folded in
+    requireCandidateBound("prefixJaccardPairs", maxCandidates,
+      pairBound(prefix, Seq(col("s")), maxGroup))
     val cands = boundedGroupPairs(prefix, Seq(col("s")),
         struct(col("doc_id"), col("n_sh")), maxGroup, "prefix_tokens")
       .select(col("__a.doc_id").as("id_a"), col("__a.n_sh").as("na"),
@@ -1024,12 +1028,12 @@ object Dedup {
       // pair-distinct exchange. The 1e-6 slack keeps float error in
       // t*max from excluding an exact-boundary TRUE pair (na=4,
       // nb=5, t=0.8: 0.8*5 computes as 4.0000000000000002 > 4);
-      // over-inclusion is harmless — the rerank is exact
+      // over-inclusion is harmless — the verify is exact
       .filter(least(col("na"), col("nb")).cast("double") >=
         lit(threshold) * greatest(col("na"), col("nb")) - lit(1e-6))
       .select(col("id_a"), col("id_b"))
       .distinct()
-    rerankExact(docsSets, threshold, cands)
+    verifyPairs(cands, docsSets, jaccardAtLeast(threshold))
   }
 
   /** Pre-flight candidate-population report for the exact near-dup
@@ -1066,7 +1070,7 @@ object Dedup {
     require(thresholds.nonEmpty &&
       thresholds.forall(t => t > 0.0 && t <= 1.0),
       s"thresholds must be in (0, 1], got $thresholds")
-    val inv = spread(df.filter(text.isNotNull && length(trim(text)) > 0), id)
+    val inv = spread(nonBlank(df, text), id)
       .select(id.as("doc_id"), explode(shinglesRaw(text, shingleN)).as("s"))
       .dropDuplicates("doc_id", "s")
       .withColumn("n_sh",
@@ -1080,8 +1084,7 @@ object Dedup {
     // a handful, the branches are post-aggregation tiny
     thresholds.map { t =>
       ranked
-        .filter(col("__rk") <= col("n_sh") -
-          ceil(lit(t) * col("n_sh") - lit(1e-9)) + 1)
+        .filter(inPrefix(t))
         .groupBy(col("s"))
         .agg(count(lit(1)).as("c"), first(col("__df")).as("__f"))
         .agg(
@@ -1130,9 +1133,7 @@ object Dedup {
     // tokenize + shingle + explode corpus pass
     val grams = spread(df, id)
       .select(id.as("doc_id"),
-        explode(when(TextAnalysis.tokenCount(text) >= n,
-            shinglesRaw(text, n))
-          .otherwise(array().cast("array<string>"))).as("g"))
+        explode(spanGrams(text, n)).as("g"))
       .groupBy(col("doc_id"), xxhash64(col("g")).as("gh"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
@@ -1154,6 +1155,13 @@ object Dedup {
           round(col("dup_spans").cast("double") / col("n_spans"), 4))
         .otherwise(lit(0.0)))
   }
+
+  /** The word n-grams of a doc with at least `n` tokens; none for a
+    * shorter or null doc (shinglesRaw would pad it to one whole-doc
+    * gram). */
+  private def spanGrams(text: Column, n: Int): Column =
+    when(TextAnalysis.tokenCount(text) >= n, shinglesRaw(text, n))
+      .otherwise(array().cast("array<string>"))
 
   /** Cross-source content-overlap matrix: for every pair of sources,
     * how many DISTINCT word n-grams they share, and the n-gram
@@ -1193,9 +1201,7 @@ object Dedup {
     // |sources|²-bounded output, not the input pass
     val sg = df
       .select(source.as("src"),
-        explode(when(TextAnalysis.tokenCount(text) >= n,
-            shinglesRaw(text, n))
-          .otherwise(array().cast("array<string>"))).as("g"))
+        explode(spanGrams(text, n)).as("g"))
       .select(col("src"), xxhash64(col("g")).as("gh"))
       .distinct()
       .localCheckpoint()
@@ -1361,19 +1367,11 @@ object Dedup {
     // chunk-local pair expansion (same shape as lshCandidates): one
     // exchange instead of a self-join that would recompute the
     // 64-aggregate signature pipeline for both sides
-    val n = graft.Names.fresh("__n", chunked.columns)
-    val member = struct(col("doc_id"), col("sig"))
-    val counted = chunked
-      .withColumn(n, count(lit(1))
-        .over(Window.partitionBy(col("chunk"), col("ckey"))))
-      .observe(s"graft.simhash_chunks.${obsId.incrementAndGet()}",
-        sum(when(col(n) > maxBucket, 1L).otherwise(0L))
-          .as("rows_in_subblocked_groups"),
-        max(col(n)).as("max_group"))
-    val direct = counted
-      .filter(col(n).between(2, maxBucket))
-      .groupBy(col("chunk"), col("ckey"))
-      .agg(sort_array(collect_list(member)).as("__ms"))
+    val keys = Seq(col("chunk"), col("ckey"))
+    val (counted, n) = sizedGroups(chunked, keys, maxBucket,
+      "simhash_chunks", "rows_in_subblocked_groups")
+    val direct = cappedMembers(counted, n, keys,
+      struct(col("doc_id"), col("sig")), maxBucket)
     // level 2: compress chunk i's bits out of the signature (they are
     // constant within the bucket), then chunk what remains
     def remBits(i: Int): Column =
@@ -1474,13 +1472,8 @@ object Dedup {
     // on q_semdedup at sf10 against the ~0.3 s of driver-action
     // scheduling it saved at sf0.1.
     val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
-    val integral = p.schema.forall(f => f.dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    })
+    val integral = p.schema.forall(f =>
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
     if (integral && smallGraphEdges > 0 && p.count() <= smallGraphEdges) {
       // the null probe rides the collect (driver-side scan of ≤ ~16 MB
       // of pinned rows) instead of its own head(1) job
@@ -1517,18 +1510,16 @@ object Dedup {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val narrow: Long => Any = idType match {
-        case org.apache.spark.sql.types.ByteType => (x: Long) => x.toByte
-        case org.apache.spark.sql.types.ShortType => (x: Long) => x.toShort
-        case org.apache.spark.sql.types.IntegerType => (x: Long) => x.toInt
-        case _ => (x: Long) => x
+        case ByteType => _.toByte
+        case ShortType => _.toShort
+        case IntegerType => _.toInt
+        case _ => x => x
       }
       val out = parent.keys.toArray.sorted.map(x =>
         org.apache.spark.sql.Row(narrow(x), narrow(find(x))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", idType,
-          nullable = false),
-        org.apache.spark.sql.types.StructField("class_rep", idType,
-          nullable = false)))
+      val schema = StructType(Seq(
+        StructField("doc_id", idType, nullable = false),
+        StructField("class_rep", idType, nullable = false)))
       return spark.createDataFrame(
         spark.sparkContext.parallelize(out.toIndexedSeq,
           math.max(1, math.min(out.length / 5000, 32))), schema)
@@ -1609,16 +1600,8 @@ object Dedup {
     */
   def nearDupDedup(df: DataFrame, id: Column, text: Column,
                    shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
-    // pin the input once: the pair graph and the keep-one join both
-    // read it, and without the pin an expensive upstream (scoring,
-    // window dedup) would execute twice
-    val pinned = df.localCheckpoint()
-    // join-column names grown past any caller column, so a user
-    // 'class_rep' column is never shadowed or dropped
-    val p = graft.Names.fresh("__cc", pinned.columns)
-    val classes = connectedComponents(
-      ngramJaccardPairs(pinned, id, text, shingleN, threshold))
-      .select(col("doc_id").as(s"${p}_id"), col("class_rep").as(s"${p}_rep"))
+    val (pinned, classes, p) =
+      nearDupClasses(df, id, text, shingleN, threshold, "__cc")
     pinned.join(classes, id === col(s"${p}_id"), "left_outer")
       .filter(col(s"${p}_rep").isNull || col(s"${p}_rep") === id)
       .drop(s"${p}_id", s"${p}_rep")
@@ -1639,11 +1622,8 @@ object Dedup {
   def nearDupDedupBest(df: DataFrame, id: Column, text: Column,
                        score: Column, shingleN: Int = 3,
                        threshold: Double = 0.5): DataFrame = {
-    val pinned = df.localCheckpoint()
-    val p = graft.Names.fresh("__cb", pinned.columns)
-    val classes = connectedComponents(
-      ngramJaccardPairs(pinned, id, text, shingleN, threshold))
-      .select(col("doc_id").as(s"${p}_id"), col("class_rep").as(s"${p}_rep"))
+    val (pinned, classes, p) =
+      nearDupClasses(df, id, text, shingleN, threshold, "__cb")
     val part = coalesce(col(s"${p}_rep").cast("string"),
       concat(lit("solo:"), id.cast("string")))
     val w = Window.partitionBy(part).orderBy(score.desc_nulls_last, id.asc)
@@ -1651,6 +1631,23 @@ object Dedup {
       .withColumn(s"${p}_rn", row_number().over(w))
       .filter(col(s"${p}_rn") === 1)
       .drop(s"${p}_id", s"${p}_rep", s"${p}_rn")
+  }
+
+  /** The input pinned once — the pair graph and the keep-one join
+    * both read it, and without the pin an expensive upstream
+    * (scoring, window dedup) would execute twice — with its near-dup
+    * classes as (`<p>_id`, `<p>_rep`), `p` grown from `prefix` past
+    * every caller column so a user 'class_rep' column is never
+    * shadowed or dropped. */
+  private def nearDupClasses(df: DataFrame, id: Column, text: Column,
+                             shingleN: Int, threshold: Double,
+                             prefix: String): (DataFrame, DataFrame, String) = {
+    val pinned = df.localCheckpoint()
+    val p = graft.Names.fresh(prefix, pinned.columns)
+    val classes = connectedComponents(
+      ngramJaccardPairs(pinned, id, text, shingleN, threshold))
+      .select(col("doc_id").as(s"${p}_id"), col("class_rep").as(s"${p}_rep"))
+    (pinned, classes, p)
   }
 
   /** Free a `localCheckpoint` DataFrame's materialized blocks
@@ -1731,16 +1728,14 @@ object Dedup {
     val joined = bf.withColumn("__bf", lit(1))
       .join(blockedInStrat.withColumn("__bl", lit(1)),
         Seq("id_a", "id_b", "hamming"), "full_outer")
-    joined.agg(
-      coalesce(sum(when(col("__bl").isNull, 1L).otherwise(0L)), lit(0L))
-        .as("missed_pairs"),
-      coalesce(sum(when(col("__bf").isNull, 1L).otherwise(0L)), lit(0L))
-        .as("extra_pairs"),
-      round(lit(1.0) -
-        coalesce(sum(when(col("__bl").isNull, 1L).otherwise(0L)), lit(0L)) /
-        greatest(coalesce(sum(col("__bf")), lit(0L)), lit(1L)), 4)
+    def absent(c: String) =
+      coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L))
+    val exact = coalesce(sum(col("__bf")), lit(0L))
+    joined.agg(absent("__bl").as("missed_pairs"),
+      absent("__bf").as("extra_pairs"),
+      round(lit(1.0) - absent("__bl") / greatest(exact, lit(1L)), 4)
         .as("recall"),
-      (coalesce(sum(col("__bf")), lit(0L)) > 0).as("non_empty"))
+      (exact > 0).as("non_empty"))
   }
 
   /** Sub-document (segment-level) exact dedup — the C4-style pass

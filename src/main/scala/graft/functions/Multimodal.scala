@@ -465,11 +465,15 @@ object Multimodal {
     * drop (logged by the caller's row-count delta, same contract as
     * every gate in this module). Narrow map; bytes never shuffle.
     */
-  def dHashes(media: Dataset[MediaRow]): DataFrame = {
+  def dHashes(media: Dataset[MediaRow]): DataFrame = sigTable(media, dHash64)
+
+  /** (doc_id, sig) for every row whose payload `hash` accepts. */
+  private def sigTable(media: Dataset[MediaRow],
+                       hash: Array[Byte] => Option[Long]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { rows =>
-      rows.flatMap(r => dHash64(r.bytes).map(s => (r.doc_id, s)))
+      rows.flatMap(r => hash(r.bytes).map(s => (r.doc_id, s)))
     }.toDF("doc_id", "sig")
   }
 
@@ -564,13 +568,8 @@ object Multimodal {
   /** Audio-hash signatures as a (doc_id, sig) table — the audio
     * counterpart of [[dHashes]].
     */
-  def audioHashes(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.flatMap(r => audioHash64(r.bytes).map(s => (r.doc_id, s)))
-    }.toDF("doc_id", "sig")
-  }
+  def audioHashes(media: Dataset[MediaRow]): DataFrame =
+    sigTable(media, audioHash64)
 
   /** Audio near-dup pairs — [[audioHash64]] through the shared
     * pigeonhole Hamming blocking. Returns (id_a, id_b, hamming).
@@ -607,12 +606,8 @@ object Multimodal {
       .withColumn("n_fr", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("doc_id"))).cast("int"))
-    Dedup.boundedGroupPairs(sigs, Seq(col("s")),
-        struct(col("doc_id"), col("n_fr")), maxDf, "video_frames")
-      .select(col("__a.doc_id").as("id_a"), col("__a.n_fr").as("na"),
-        col("__b.doc_id").as("id_b"), col("__b.n_fr").as("nb"))
-      .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("shared"))
+    Dedup.sharedKeyCounts(sigs, "n_fr", maxDf, "video_frames",
+        counted = "shared")
       .withColumn("overlap", round(col("shared").cast("double") /
         least(col("na"), col("nb")), 4))
       .filter(col("overlap") >= minOverlap)

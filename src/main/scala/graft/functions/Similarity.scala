@@ -517,15 +517,13 @@ object Similarity {
       .toDF("id_a", "id_b")
       .distinct()
     // shuffle-hash-build the pinned vector side (same reason as
-    // Dedup.rerankExact): cands is pair-expansion output whose size
+    // Dedup.verifyPairs): cands is pair-expansion output whose size
     // the planner estimates linearly — broadcasting it is a GB-scale
     // driver collect once blocking saturates; the vecs side is the
     // honestly-bounded per-partition build
-    cands
-      .join(vecs.select(col("vec_id").as("id_a"), col("v").as("va"))
-        .hint("shuffle_hash"), Seq("id_a"))
-      .join(vecs.select(col("vec_id").as("id_b"), col("v").as("vb"))
-        .hint("shuffle_hash"), Seq("id_b"))
+    def side(s: String) = vecs.select(col("vec_id").as(s"id_$s"),
+      col("v").as(s"v$s")).hint("shuffle_hash")
+    cands.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
       // raw-cosine gate before the per-row BigDecimal round — same
       // exactness argument as semDedup (HALF_UP can promote at most
       // 5e-5 below the threshold; the rounded filter still decides)

@@ -233,7 +233,10 @@ object Sorting {
 
   /** Apply a unix-sort key spec to a line-oriented DataFrame: split
     * `value` on `sep`, sort by the spec'd fields (numeric casts where
-    * `n`), descending where `r`.
+    * `n`), descending where `r`. Lines that tie on every spec'd field
+    * are ordered by the whole `value`, ascending and byte-wise — Unix
+    * `sort`'s last-resort comparison without `-s` — so the order is
+    * total and a top-k cut is deterministic.
     */
   def keyFieldSort(df: DataFrame, value: Column, spec: String,
                    sep: String = "\t"): DataFrame = {
@@ -260,7 +263,7 @@ object Sorting {
     }
     val order = specs.zipWithIndex.map { case (s, i) =>
       if (s.reverse) col(s"$prefix$i").desc else col(s"$prefix$i").asc
-    }
+    } :+ value.asc
     keyed.orderBy(order: _*).drop(specs.indices.map(i => s"$prefix$i"): _*)
   }
 

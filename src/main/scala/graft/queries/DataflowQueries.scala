@@ -142,7 +142,8 @@ object DataflowQueries {
         .limit(100),
       s"""WITH kv AS ($kvCorpusSql)
          |SELECT value FROM kv
-         |ORDER BY l_returnflag DESC, l_orderkey ASC, l_linenumber ASC
+         |ORDER BY l_returnflag DESC, l_orderkey ASC, l_linenumber ASC,
+         |         value ASC
          |LIMIT 100""".stripMargin),
 
     // ---- §2.3 joins -------------------------------------------------

@@ -513,7 +513,7 @@ object DedupQueries {
     // minhashNearDups' reranked output — provably the same rows. The
     // banded output is by construction candidates ∩ {J >= 0.5} on the
     // SAME hashed shingle sets and round(.,4) the exact side scores
-    // (rerankExact is the shared kernel), so banded ⊆ exact: the old
+    // (verifyPairs is the shared kernel), so banded ⊆ exact: the old
     // full_outer could never emit a banded-only row, and for every
     // exact pair "banded found it" ⟺ "it is a candidate". Joining
     // candidates directly skips the banded branch's second tokenize/

@@ -82,18 +82,6 @@ object Layout {
       .toSeq.map(_.distinct.sorted)
   }
 
-  /** The z-value as ONE column expression — for plan inspection and
-    * ad-hoc use only. The rank subtree (an interpreted higher-order
-    * `filter`, no codegen, no CSE) is embedded in every interleave
-    * term, so this form evaluates each rank `bits` times per row;
-    * [[zorderWrite]] stages ranks through their own projection and
-    * must stay the bulk path (measured 10×+ on a 600k-row write).
-    */
-  def zValue(df: DataFrame, zcols: Seq[String], bits: Int = 8): Column =
-    interleave(zcols.zip(quantileBounds(df, zcols, bits)).map {
-      case (c, b) => bucketOf(col(c), b)
-    }, bits)
-
   /** Write `df` clustered on the z-curve over `zcols`: range-exchange
     * into `outFiles` curve segments, sort each segment, drop the
     * helper columns, write parquet. Each output file (and each row

@@ -136,30 +136,22 @@ object StreamNearDup {
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Stateless prep: per-doc signature + sorted shingle-hash set,
-    * exploded to one row per band. Blank/null docs are excluded up
-    * front (the batch operator's rerank drops them via its inner
-    * join on non-blank docs).
+    * exploded to one row per band — the batch operator's own per-doc
+    * projection ([[graft.functions.Dedup.minhashDocs]], blank/null
+    * docs excluded) and band keys
+    * ([[graft.functions.Dedup.bandBuckets]]), so signatures, buckets
+    * and rerank sets equal the batch ones by construction. `docs`
+    * carries the event time as `__et`.
     */
   private def banded(docs: DataFrame, id: Column, text: Column,
-                     et: Column, shingleN: Int, numHashes: Int,
+                     shingleN: Int, numHashes: Int,
                      bands: Int): Dataset[Banded] = {
-    import graft.functions.Dedup.{shingles, shinglesRaw}
-    val rows = numHashes / bands
-    val prep = docs
-      .filter(text.isNotNull && length(trim(text)) > 0)
-      .select(id.cast("long").as("docId"),
-        shinglesRaw(text, shingleN).as("__shRaw"),
-        sort_array(transform(shingles(text, shingleN),
-          s => xxhash64(s))).as("sh"),
-        et.as("et"))
-      .select(col("docId"), col("sh"), col("et"),
-        transform(sequence(lit(0), lit(numHashes - 1)),
-          i => array_min(transform(col("__shRaw"),
-            s => xxhash64(i, s)))).as("sig"))
+    import graft.functions.Dedup
     implicit val enc = Encoders.product[Banded]
-    prep.select(col("docId"), col("sig"), col("sh"), col("et"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(b, slice(col("sig"), b * rows + 1, lit(rows))))))
+    Dedup.minhashDocs(Dedup.nonBlank(docs, text), id.cast("long"), text,
+        shingleN, numHashes, "__et")
+      .select(col("doc_id"), col("sig"), col("sh"), col("__et"),
+        posexplode(Dedup.bandBuckets(col("sig"), bands)))
       .toDF("docId", "sig", "sh", "et", "band", "bucket")
       .as[Banded]
   }
@@ -298,8 +290,8 @@ object StreamNearDup {
             ledger: Boolean = false): Dataset[Pair] = {
     checkParams(numHashes, bands, maxBucket, maxPairsPerTrigger)
     pairsImpl(
-      banded(docs, id, text, timestamp_millis(lit(0L)), shingleN,
-        numHashes, bands),
+      banded(docs.withColumn("__et", timestamp_millis(lit(0L))), id, text,
+        shingleN, numHashes, bands),
       numHashes, bands, threshold, maxBucket, ttlMs = None,
       maxPairsPerTrigger, site, ledger)
   }
@@ -325,7 +317,7 @@ object StreamNearDup {
     val withEt = docs.withColumn("__et", timestamp_millis(tsCol))
       .withWatermark("__et", s"$allowedLatenessMs milliseconds")
     pairsImpl(
-      banded(withEt, id, text, col("__et"), shingleN, numHashes, bands),
+      banded(withEt, id, text, shingleN, numHashes, bands),
       numHashes, bands, threshold, maxBucket, ttlMs = Some(ttlMs),
       maxPairsPerTrigger, site, ledger)
   }

@@ -63,6 +63,19 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(Graft.changelogDecision(Map(key -> "false"), None).isEmpty)
   }
 
+  test("the warehouse defaults to a temp dir; a preset value is kept") {
+    val wh = Graft.WarehouseConf
+    val dflt = Graft.warehouseDecision(Map.empty, props = Map.empty)
+    assert(dflt.exists(_.startsWith(System.getProperty("java.io.tmpdir"))),
+      dflt)
+    assert(Graft.warehouseDecision(Map(wh -> "/elsewhere"), Map.empty).isEmpty)
+    assert(Graft.warehouseDecision(Map.empty, Map(wh -> "/elsewhere")).isEmpty)
+    // SparkSpec's per-JVM warehouse (a -D style system property) wins
+    val conf = TestSpark.spark.conf.get(wh)
+    assert(conf.stripSuffix("/").endsWith(sys.props(wh).stripSuffix("/")),
+      s"$conf vs ${sys.props(wh)}")
+  }
+
   test("sessions use 1 MB Tungsten pages, not Spark's heap-derived size") {
     val sc = TestSpark.spark.sparkContext
     assert(org.apache.spark.GraftTestAccess.pageSizeBytes(sc) == 1L << 20)

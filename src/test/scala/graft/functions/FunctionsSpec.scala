@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class TextAnalysisSpec extends SparkSpec {
@@ -696,7 +697,7 @@ class DedupSpec extends SparkSpec {
     }
     intercept[IllegalStateException] {
       containmentPairs(df, $"id", $"text", threshold = 0.5,
-        routeThreshold = 2.0, maxCandidates = 10)
+        maxCandidates = 10)
     }
     intercept[IllegalStateException] {
       prefixContainmentPairs(df, $"id", $"text", threshold = 0.8,
@@ -710,11 +711,36 @@ class DedupSpec extends SparkSpec {
     // explicit unguarded override (maxCandidates <= 0) still runs
     assert(ngramJaccardPairs(df, $"id", $"text", threshold = 0.3,
       maxCandidates = 0).count() == 40L * 39 / 2)
-    // an unsaturated corpus under the cap is untouched by the guard
-    val clean = Seq((1L, "one two three four"), (2L, "one two three five"),
-      (3L, "six seven eight nine")).toDF("id", "text")
-    assert(ngramJaccardPairs(clean, $"id", $"text", threshold = 0.3,
-      maxCandidates = 10).count() >= 1)
+    // an unsaturated corpus under the cap is untouched by the guard:
+    // every operator returns the same pair set guarded (the default
+    // cap, which pins its index and runs the pre-flight) as unguarded
+    val clean = Seq((1L, "one two three four five six"),
+      (2L, "one two three four five seven"),
+      (3L, "one two three four eight nine ten eleven"),
+      (4L, "six seven eight nine"), (5L, "eight nine ten eleven"))
+      .toDF("id", "text")
+    val operators: Seq[(String, Long => DataFrame)] = Seq(
+      "ngramJaccardPairs t=0.3 (general form)" -> (cap =>
+        ngramJaccardPairs(clean, $"id", $"text", threshold = 0.3,
+          maxCandidates = cap)),
+      "prefixJaccardPairs t=0.5" -> (cap =>
+        prefixJaccardPairs(clean, $"id", $"text", threshold = 0.5,
+          maxCandidates = cap)),
+      "containmentPairs t=0.5 (general form)" -> (cap =>
+        containmentPairs(clean, $"id", $"text", threshold = 0.5,
+          maxCandidates = cap)),
+      "prefixContainmentPairs t=0.8" -> (cap =>
+        prefixContainmentPairs(clean, $"id", $"text", threshold = 0.8,
+          maxCandidates = cap)),
+      "minhashNearDups" -> (cap =>
+        minhashNearDups(clean, $"id", $"text", numHashes = 16, bands = 16,
+          threshold = 0.5, maxCandidates = cap)))
+    for ((name, op) <- operators) {
+      def pairs(cap: Long) = op(cap).collect().map(_.toSeq).toSet
+      val unguarded = pairs(0L)
+      assert(unguarded.nonEmpty, name)
+      assert(pairs(defaultMaxCandidates) == unguarded, name)
+    }
   }
 
   test("minhashNearDups pre-flight: candidate cap, rerank-bytes budget") {
@@ -889,10 +915,11 @@ class DedupSpec extends SparkSpec {
       (6L, "a b"), (7L, ""), (8L, null.asInstanceOf[String]) // short + blank + null
     ).toDF("id", "text")
     for (t <- Seq(0.5, 0.7, 0.9, 1.0)) {
-      // routeThreshold = 2.0 + uncapped maxDf pins the EXACT
-      // inverted-index general form as the reference
-      val want = containmentPairs(df, $"id", $"text", threshold = t,
-          maxDf = 1000000, routeThreshold = 2.0)
+      // the general form with an uncapped maxDf is the EXACT
+      // inverted-index reference (the default routes t >= 0.7 to the
+      // prefix plan under test)
+      val want = Dedup.containmentGeneral(df, $"id", $"text", 3, t,
+          maxDf = 1000000, maxCandidates = Dedup.defaultMaxCandidates)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
       val got = prefixContainmentPairs(df, $"id", $"text", threshold = t)
@@ -909,8 +936,8 @@ class DedupSpec extends SparkSpec {
     val routed = site(containmentPairs(df, $"id", $"text", threshold = 0.7))
     assert(routed.contains("graft.containment_prefix.") &&
       !routed.contains("graft.containment_shingles."), routed.take(2000))
-    val general = site(containmentPairs(df, $"id", $"text",
-      threshold = 0.7, routeThreshold = 2.0))
+    val general = site(Dedup.containmentGeneral(df, $"id", $"text", 3,
+      0.7, 1000, Dedup.defaultMaxCandidates))
     assert(general.contains("graft.containment_shingles."), general.take(2000))
     val low = site(containmentPairs(df, $"id", $"text", threshold = 0.5))
     assert(low.contains("graft.containment_shingles."), low.take(2000))
@@ -941,11 +968,10 @@ class DedupSpec extends SparkSpec {
       (5L, "a b"), (6L, ""), (7L, null.asInstanceOf[String]) // short + blank + null
     ).toDF("id", "text")
     for (t <- Seq(0.3, 0.5, 0.8)) {
-      // routeThreshold = 2.0 pins the inverted-index GENERAL form:
-      // the default would route t >= 0.5 to prefixJaccardPairs and
-      // make this equality vacuous
-      val want = ngramJaccardPairs(df, $"id", $"text", threshold = t,
-          maxDf = 1000000, routeThreshold = 2.0)
+      // the inverted-index GENERAL form: the default would route
+      // t >= 0.5 to prefixJaccardPairs and make this equality vacuous
+      val want = Dedup.ngramJaccardGeneral(df, $"id", $"text", 3, t,
+          maxDf = 1000000, maxCandidates = Dedup.defaultMaxCandidates)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val got = prefixJaccardPairs(df, $"id", $"text", threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -964,8 +990,8 @@ class DedupSpec extends SparkSpec {
     val routed = site(ngramJaccardPairs(df, $"id", $"text", threshold = 0.5))
     assert(routed.contains("graft.prefix_tokens.") &&
       !routed.contains("graft.ngram_shingles."), routed.take(2000))
-    val general = site(ngramJaccardPairs(df, $"id", $"text",
-      threshold = 0.5, routeThreshold = 2.0))
+    val general = site(Dedup.ngramJaccardGeneral(df, $"id", $"text", 3,
+      0.5, 1000, Dedup.defaultMaxCandidates))
     assert(general.contains("graft.ngram_shingles."), general.take(2000))
     val low = site(ngramJaccardPairs(df, $"id", $"text", threshold = 0.3))
     assert(low.contains("graft.ngram_shingles."), low.take(2000))

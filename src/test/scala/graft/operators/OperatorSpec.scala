@@ -87,6 +87,21 @@ class SortingSpec extends SparkSpec {
     assert(got == Seq("a\t10", "b\t2", "c\t2"))
   }
 
+  test("keyFieldSort breaks full key ties on the whole line, byte-wise") {
+    import spark.implicits._
+    // every line ties on -k2,2n except the first; Unix sort without -s
+    // falls back to comparing whole lines, whatever the input order
+    val lines = Seq("c\t1\tx", "a\t0", "b\t1\tz", "a\t1\ty", "B\t1")
+    val want = Seq("a\t0", "B\t1", "a\t1\ty", "b\t1\tz", "c\t1\tx")
+    for (in <- Seq(lines, lines.reverse)) {
+      val df = in.toDF("value").repartition(3)
+      val sorted = keyFieldSort(df, col("value"), "-k2,2n")
+      assert(sorted.collect().map(_.getString(0)).toSeq == want)
+      assert(sorted.limit(3).collect().map(_.getString(0)).toSeq ==
+        want.take(3))
+    }
+  }
+
   test("keyFieldSort tolerates duplicate passthrough columns and __sk names") {
     import spark.implicits._
     // post-join frame with two columns named 'tag' plus a caller
