@@ -61,19 +61,6 @@ object Graft {
       // us-layout fixtures read as timestamp and are normalized to the
       // same ns-long contract in `table` below
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's ChecksumCheckpointFileManager writes a companion
-      // .checksum file for every streaming-checkpoint file (offsets,
-      // commits, state deltas/snapshots) — doubling the small-file
-      // create+fsync count every micro-batch pays. The replay
-      // harness's checkpoints are ephemeral temp dirs on local disk
-      // (single writer, no partial-network-write exposure), so the
-      // integrity sidecars buy nothing here; a deployment whose
-      // checkpoint volume CAN tear writes (object stores) re-enables
-      // via SPARK_GRAFT_CHECKPOINT_CHECKSUM=true. Scale-neutral: the
-      // per-batch fixed cost this removes grows with state partitions
-      // (Replay.StatePartitions).
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_CHECKSUM", "false"))
       .config("spark.ui.enabled", "false")
     // caller confs last so a probe can pin context-creation-time
     // settings the dials don't cover (scheduler mode, pool files);

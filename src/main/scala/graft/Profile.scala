@@ -143,7 +143,9 @@ object Profile {
     val replay = Replay.unordered(spark, spark.range(keys).select(
       expr("timestamp '2026-01-01 00:00:00'").as("ts"),
       md5(col("id").cast("string")).as("k")))
-    graft.streaming.StateBackend.withProvider(spark, provider) {
+    // the replays' state width and checkpoint settings (Replay's scope)
+    Replay.withStateWidth(spark)(
+        graft.streaming.StateBackend.withProvider(spark, provider) {
       val dd = graft.streaming.StreamDedup.withinWatermark(
         replay.stream, "ts", "3650 days", Seq("k"))
       val t0 = System.nanoTime()
@@ -167,6 +169,6 @@ object Profile {
           s""""state_mem_bytes":${s0.memoryUsedBytes},""" +
           s""""post_gc_heap_mb":$heapMb,"custom":$custom}"""
       } finally q.stop()
-    }
+    })
   }
 }

@@ -33,13 +33,27 @@ private[graft] object Replay {
     */
   val StatePartitions = 8
 
-  /** Run `body` at [[StatePartitions]] shuffle partitions, restoring
-    * the previous value before any frame `body` returns is run.
+  /** Spark 4.1 writes a companion checksum file (`<file>.crc`) beside
+    * every state-store checkpoint file (deltas and snapshots),
+    * doubling the small-file creates every micro-batch pays per state
+    * partition. A replay's checkpoint is a temp dir on local
+    * disk with a single writer, so those sidecars buy nothing there;
+    * every other stream keeps Spark's default (on), the safe setting
+    * on a checkpoint volume that can tear writes (object stores).
+    */
+  private val ChecksumConf = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+
+  /** Run `body` at [[StatePartitions]] shuffle partitions and without
+    * checkpoint checksum sidecars, restoring both previous values
+    * before any frame `body` returns is run. Every stream on a
+    * replay's [[Staged.checkpoint]] runs inside this scope.
     */
   def withStateWidth[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    val scoped = Seq("spark.sql.shuffle.partitions" -> StatePartitions.toString,
+      ChecksumConf -> "false")
+    val prev = scoped.map { case (k, _) => k -> s.conf.get(k) }
+    scoped.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
   }
 
   /** A staged replay: the stream reads `source`; `checkpoint` and

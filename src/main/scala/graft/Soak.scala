@@ -233,13 +233,9 @@ object Soak {
         def size(f: java.io.File): Long =
           if (f.isFile) f.length
           else Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
         val bytes = paths.map { p =>
           val f = new java.io.File(p)
-          val b = size(f); rm(f); b
+          val b = size(f); Replay.rmTree(f); b
         }.sum
         out.updateWith(fam)(_.map(r => r.copy(
           outBytes = math.max(0L, r.outBytes) + bytes)))
@@ -644,13 +640,7 @@ object Soak {
     val workDir = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR",
       "/tmp/graft_soak")
     val dir = new java.io.File(workDir)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir)
-    }
+    if (dir.exists()) Replay.rmTree(dir)
     // SPARK_GRAFT_SOAK_FAIR: run the concurrent soak under the FAIR
     // scheduler with the two weighted pools (api_sort -> bulk,
     // everything else -> short) instead of the FIFO default

@@ -198,28 +198,6 @@ object AggregateLib {
     ()
   }
 
-  /** Sketch-path ValueHistogram for 100 TB: same report shape, but
-    * the median of frequencies comes from `percentile_approx`
-    * (KLL-style bounded state) instead of the exact
-    * ObjectHashAggregate percentile. Use when the per-group distinct
-    * value count itself is huge.
-    */
-  def valueHistogramApprox(df: DataFrame, groupCols: Seq[Column],
-                           value: Column, accuracy: Int = 10000): DataFrame = {
-    val freq = df.groupBy(groupCols :+ value.cast("string").as("__v"): _*)
-      .agg(count(lit(1)).as("__freq"))
-    freq.groupBy(groupCols: _*).agg(
-      count(lit(1)).as("n_values"),
-      min(col("__freq")).as("min_freq"),
-      percentile_approx(col("__freq"), lit(0.5), lit(accuracy)).as("median_freq"),
-      max(col("__freq")).as("max_freq"),
-      round(sum(col("__freq")).cast("double") / count(lit(1)), 4).as("avg_freq"),
-      round(sqrt(
-        sum(col("__freq").cast("double") * col("__freq")) / count(lit(1)) -
-        pow(sum(col("__freq")).cast("double") / count(lit(1)), 2)), 4)
-        .as("stddev_freq"))
-  }
-
   /** ValueHistogram (reference: ValueHistogram.java:78-133): per group
     * key, build the value→frequency table, then report
     * (#distinct values, min/median/max/mean/stddev of the

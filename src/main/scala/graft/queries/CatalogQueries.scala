@@ -459,7 +459,7 @@ object CatalogQueries {
       """SELECT n_nationkey, n_name FROM nation"""),
 
     // HAR graded END-TO-END: one small file per nation row packed
-    // into the archive (concatenated part blobs + parquet index),
+    // into the archive (concatenated part blobs + stock text index),
     // then EVERY file read back through the ranged part reader and
     // decoded — pack, index, seek arithmetic, and byte fidelity all
     // on the hash-checked path. The driver materializes the 25

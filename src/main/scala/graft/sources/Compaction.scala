@@ -25,15 +25,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    pool), so many small directories don't serialize behind the
   *    driver loop.
   *
-  * Crash consistency: like [[MultiIO.harPack]]'s generation protocol,
-  * the new files are written additively under a dot-prefixed temp dir
-  * (invisible to parquet readers) and swapped in per-partition with
-  * delete-old-files → move-new-files-in. The delete→move window is
-  * the only exposure (a crash inside it leaves that partition's rows
-  * only in the temp dir, recoverable by hand; a RE-RUN of compact
-  * never double-counts because the temp dir is never read as data).
-  * Run it in a maintenance window, not under concurrent readers —
-  * plain directories have no atomic multi-file commit.
+  * Crash consistency ([[InPlaceRewrite]]): the new files are written
+  * additively under a dot-prefixed temp dir (invisible to parquet
+  * readers) and swapped in per-partition with delete-old-files →
+  * move-new-files-in. The delete→move window is the only exposure: a
+  * crash inside it leaves that partition's rows only in the temp
+  * dir, and a swap that fails (a rename returning false) throws and
+  * keeps the temp root, so those rows stay recoverable by hand. A
+  * RE-RUN of compact never double-counts because the temp dir is
+  * never read as data. Run it in a maintenance window, not under
+  * concurrent readers — plain directories have no atomic multi-file
+  * commit.
   *
   * Returns one report row per partition directory:
   * `(partition, bytes, files_before, files_after, rewritten)` with
@@ -90,48 +92,27 @@ object Compaction {
         (st.bytes + targetBytes - 1) / targetBytes).toInt
       (st, need, st.files.length > need)
     }
-    val tmpRoot = new Path(base,
-      s".compact-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxConcurrent, math.max(1, planned.count(_._3))))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    import scala.concurrent.{Await, Future}
-    try {
-      val rewrites = planned.filter(_._3).map { case (st, need, _) =>
-        Future {
-          val liveDir = if (st.partition.isEmpty) base
-            else new Path(base, st.partition)
-          val tmpDir = new Path(tmpRoot,
-            if (st.partition.isEmpty) "__root" else st.partition)
-          // scan → coalesce → write: narrows splits into `need`
-          // tasks, no exchange. Partition-VALUE columns live in the
-          // directory name, not the files, so a per-dir read/write
-          // round-trips them untouched.
-          spark.read.parquet(liveDir.toString).coalesce(need)
-            .write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
-          val newFiles = fs.listStatus(tmpDir).toSeq
-            .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-          // swap: delete the old generation, then move the new one
-          // in (Spark task-UUID file names cannot collide)
-          st.files.foreach(f => fs.delete(f, false))
-          newFiles.foreach(s =>
-            fs.rename(s.getPath, new Path(liveDir, s.getPath.getName)))
-          st.partition -> newFiles.length
-        }
-      }
-      val after = Await.result(Future.sequence(rewrites),
-        scala.concurrent.duration.Duration.Inf).toMap
-      import spark.implicits._
-      planned.map { case (st, _, rewrote) =>
-        (st.partition, st.bytes, st.files.length,
-          after.getOrElse(st.partition, st.files.length), rewrote)
-      }.toDF("partition", "bytes", "files_before", "files_after",
-        "rewritten")
-    } finally {
-      pool.shutdown()
-      fs.delete(tmpRoot, true)
-    }
+    val rewrites = planned.collect { case (st, need, true) => (st, need) }
+    val moved = InPlaceRewrite.run(fs, base, "compact",
+      rewrites.map { case (st, need) =>
+        val liveDir = if (st.partition.isEmpty) base
+          else new Path(base, st.partition)
+        // scan → coalesce → write: narrows splits into `need` tasks,
+        // no exchange. Partition-VALUE columns live in the directory
+        // name, not the files, so a per-dir read/write round-trips
+        // them untouched. Spark task-UUID file names cannot collide.
+        InPlaceRewrite.Rewrite(
+          if (st.partition.isEmpty) "__root" else st.partition,
+          st.files, liveDir, tmpDir =>
+            spark.read.parquet(liveDir.toString).coalesce(need)
+              .write.mode(SaveMode.Overwrite).parquet(tmpDir.toString))
+      }, maxConcurrent)
+    val after = rewrites.map(_._1.partition).zip(moved).toMap
+    import spark.implicits._
+    planned.map { case (st, _, rewrote) =>
+      (st.partition, st.bytes, st.files.length,
+        after.getOrElse(st.partition, st.files.length), rewrote)
+    }.toDF("partition", "bytes", "files_before", "files_after",
+      "rewritten")
   }
 }

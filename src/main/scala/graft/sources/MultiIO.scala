@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Heterogeneous-source input and multi-sink output (reference:
   * src/mapred/org/apache/hadoop/mapred/lib/MultipleInputs.java:131 +
@@ -233,16 +235,25 @@ object MultiIO {
       .parquet(dst)
   }
 
-  /** Hadoop-archive-style small-file packing (reference:
-    * src/core/org/apache/hadoop/fs/HarFileSystem.java — `_index` +
-    * `part-N` layout; src/tools/org/apache/hadoop/tools/
-    * HadoopArchives.java — the archiving job). Many small files
-    * become a few concatenated `part-NNNNN` blobs plus a PARQUET
-    * index (path, part, offset, length) — parquet instead of the
-    * reference's text `_index`/`_masterindex` pair because predicate
-    * pushdown on `path` then IS the master index: a point lookup
-    * prunes index row groups by the path stats and issues one ranged
-    * read, O(file) not O(archive).
+  /** Hadoop-archive small-file packing in STOCK HADOOP's layout
+    * (reference: src/core/org/apache/hadoop/fs/HarFileSystem.java —
+    * `_index` + `part-N`; src/tools/org/apache/hadoop/tools/
+    * HadoopArchives.java:480-604 — the archiving job). Many small
+    * files become a few concatenated bare `part-N` blobs plus the text
+    * `_index`/`_masterindex` pair exactly as `hadoop archive` writes
+    * them: hash-sorted `_index` lines `<path> file <part-N> <offset>
+    * <length> ` for files and `<path> dir none 0 0 <children...> `
+    * for directories; `_masterindex` = version line `1 ` then
+    * `<startHash> <endHash> <startPos> <endPos> ` stores, one per
+    * `entriesPerStore` index lines. Archives this writes are
+    * consumable by a stock `HarFileSystem` client, and [[readHar]] /
+    * [[harLookup]] read stock-written ones.
+    *
+    * Archive paths are rooted (`/<relative>`), mirroring the
+    * reference's `makeRelative` (HadoopArchives.java:451-455). The
+    * text format is space-delimited with no escaping — the same
+    * limitation the reference has — so paths containing whitespace
+    * are refused at pack time rather than corrupting the index.
     *
     * Shape at scale: the driver handles FILE METADATA only (one
     * (path, size) pair per file — the same driver-side planning the
@@ -253,71 +264,38 @@ object MultiIO {
     *
     * Crash consistency (generation protocol): a re-pack writes its
     * parts under FRESH part numbers (continuing above any existing
-    * `part-N`), swaps the new `_index` in via temp+rename, and only
-    * THEN deletes the previous generation's parts. A failure at any
-    * point before the index swap leaves the old index + old parts
-    * fully readable; orphaned new-generation parts are swept by the
-    * next successful pack (their numbers sit below its generation).
+    * `part-N`), swaps the new index files in via temp+rename
+    * (`_index` first), and only THEN deletes the previous
+    * generation's parts. A failure at any point before the index
+    * swap leaves the old index + old parts fully readable; orphaned
+    * new-generation parts are swept by the next successful pack
+    * (their numbers sit below its generation). A crash between the
+    * two index renames leaves bulk reads (index-driven) consistent
+    * and only `_masterindex`-driven point lookups stale until the
+    * next pack — the one residual window, and it moves no data.
+    *
+    * Returns the archive's file entries (path, part_file, offset,
+    * length).
     */
   def harPack(spark: SparkSession, srcDir: String, dstDir: String,
-              partSizeBytes: Long = 64L * 1024 * 1024): DataFrame = {
-    val prep = packParts(spark, srcDir, dstDir, partSizeBytes,
-      partName = pid => f"part-$pid%05d")
-    import spark.implicits._
-    // INDEX SWAP: write the new index to a temp dir first, then swap
-    // it in (delete-then-rename — HDFS rename won't replace a dir).
-    // Everything before the swap is additive, so a crash up to here
-    // leaves the old index + old parts fully consistent; the
-    // delete→rename window is the only residual exposure and it
-    // contains no data movement. Old-generation parts are deleted
-    // only AFTER the new index is live.
-    val idxDf = prep.index.toDF("path", "part", "offset", "length")
-    val idxTmp = prep.dstBase + s"._index.tmp-gen${prep.partStart}"
-    idxDf.repartition(1).write.mode(SaveMode.Overwrite).parquet(idxTmp)
-    val fs = prep.fs
-    val idxFinal = new org.apache.hadoop.fs.Path(prep.dstBase + "_index")
-    fs.delete(idxFinal, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(idxTmp), idxFinal))
-      throw new java.io.IOException(
-        s"harPack: could not commit index $idxTmp -> $idxFinal")
-    deleteOldGenerations(prep)
-    spark.read.parquet(prep.dstBase + "_index")
-  }
-
-  /** Shared pack state: qualified src/dst bases, this generation's
-    * first part number, and the (relPath, part, offset, length)
-    * assignment with part blobs already committed.
-    */
-  private final case class PackPrep(
-      fs: org.apache.hadoop.fs.FileSystem, srcBase: String, dstBase: String,
-      partStart: Int, nextPart: Int, partName: Int => String,
-      index: Seq[(String, Int, Long, Long)])
-
-  /** Steps shared by both index layouts: walk the source, first-fit
-    * files into part budgets, stream the part blobs task-side under
-    * the crash-consistent generation/rename protocol. Everything
-    * here is ADDITIVE with respect to any previous generation; only
-    * the caller's index commit makes the new generation live.
-    */
-  private def packParts(spark: SparkSession, srcDir: String, dstDir: String,
-                        partSizeBytes: Long,
-                        partName: Int => String): PackPrep = {
+              partSizeBytes: Long = 64L * 1024 * 1024,
+              entriesPerStore: Int = 1000): DataFrame = {
     require(partSizeBytes > 0, s"partSizeBytes must be > 0, got $partSizeBytes")
+    require(entriesPerStore >= 1,
+      s"entriesPerStore must be >= 1, got $entriesPerStore")
     val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcDir)
+    val src = new Path(srcDir)
     val fs = src.getFileSystem(conf)
     // recursive listing, archive-relative paths, name-sorted
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         if (st.isDirectory) walk(st.getPath) else Seq(st)
       }
-    val base = fs.makeQualified(src).toString.stripSuffix("/") + "/"
+    val srcBase = fs.makeQualified(src).toString.stripSuffix("/") + "/"
     val files = walk(src)
-      .map(st => (fs.makeQualified(st.getPath).toString.stripPrefix(base),
+      .map(st => (fs.makeQualified(st.getPath).toString.stripPrefix(srcBase),
         st.getLen))
       .sortBy(_._1)
-    // first-fit part assignment: (path, part, offset, length); a file
-    // larger than the budget still gets its own part (never split).
     // Per-file cap: the read model is one (path, bytes) row, and a
     // byte-array cell tops out at Int.MaxValue — refuse at PACK time
     // rather than letting readHar fail at lookup time
@@ -326,30 +304,32 @@ object MultiIO {
         s"harPack: $p is $len bytes; files >= 2 GiB exceed the " +
           "(path, bytes) row model — split or store such files unpacked")
     }
-    val dst = new org.apache.hadoop.fs.Path(dstDir)
+    files.foreach { case (rel, _) =>
+      require(!rel.exists(c => c == ' ' || c == '\n' || c == '\r' || c == '\t'),
+        s"harPack: '$rel' contains whitespace; the stock " +
+          "text index format cannot encode it")
+    }
+    val dst = new Path(dstDir)
     fs.mkdirs(dst)
     // GENERATION: new parts continue numbering above every existing
     // part (committed or orphaned), so nothing already on disk is
     // ever overwritten or deleted before the new index commits — a
     // crash anywhere in this job leaves the previous archive intact.
     // Orphaned attempt temps of dead runs are cleared now (readers
-    // never see dot-prefixed names; a single packer is the contract).
+    // never see dot-prefixed names; a single packer is the contract),
+    // and so are the index temps a crash between index-write and
+    // rename orphans (`._index.tmp-gen<N>`, `._masterindex.tmp-gen<N>`;
+    // the N never matches a later pack's, since partStart only grows)
     val existing = fs.listStatus(dst).map(_.getPath)
-    existing.filter(_.getName.startsWith(".part-"))
-      .foreach(p => fs.delete(p, false))
-    // a crash between index-write and rename orphans a
-    // `._index.tmp-gen<N>` DIRECTORY (parquet layout) or
-    // `._index.tmp-gen<N>`/`._masterindex.tmp-gen<N>` FILES (text
-    // layout); the N never matches a later pack's (partStart only
-    // grows), so sweep all of them here — dot-prefixed, so no reader
-    // ever saw them
-    existing.filter(p => p.getName.startsWith("._index.tmp-") ||
-        p.getName.startsWith("._masterindex.tmp-"))
+    existing.filter(p => Seq(".part-", "._index.tmp-", "._masterindex.tmp-")
+        .exists(p.getName.startsWith))
       .foreach(p => fs.delete(p, true))
     val partStart = existing.map(_.getName)
       .filter(_.matches("part-\\d+"))
       .map(_.stripPrefix("part-").toInt)
       .foldLeft(-1)(math.max) + 1
+    // first-fit part assignment: (path, part, offset, length); a file
+    // larger than the budget still gets its own part (never split)
     val assigned = Seq.newBuilder[(String, Int, Long, Long)]
     var part = partStart; var off = 0L
     files.foreach { case (p, len) =>
@@ -358,57 +338,53 @@ object MultiIO {
       off += len
     }
     val index = assigned.result()
-    val srcBase = base
     val dstBase = fs.makeQualified(dst).toString.stripSuffix("/") + "/"
     // one task per part; each streams its own files into its blob.
     // numSlices = nParts so the copy parallelism is the part count.
     // The session's Hadoop conf must reach the tasks (fs.s3a.*
     // credentials, HA nameservices live there; a bare Configuration()
-    // on an executor knows none of it) — Configuration itself is not
-    // serializable, so ship its entries and overlay them task-side.
-    val confEntries = hadoopConfEntries(conf)
-    val nParts = part - partStart + 1
+    // on an executor knows none of it).
+    val sconf = new SerializableConfiguration(conf)
     val byPart = index.groupBy(_._2).toSeq.sortBy(_._1)
-    spark.sparkContext.parallelize(byPart, nParts).foreach { case (pid, slice) =>
-      val hconf = rebuildHadoopConf(confEntries)
-      // write-to-attempt-temp then atomic rename: a retried or
-      // speculative attempt writing the final path directly would
-      // truncate-and-interleave with a concurrent attempt (the job
-      // still reports success over the corrupt blob). With the
-      // rename protocol each attempt owns a private temp; the first
-      // rename wins, losers see the destination exists (identical
-      // bytes — the input slice is deterministic) and discard.
-      val finalPath = new org.apache.hadoop.fs.Path(dstBase + partName(pid))
-      val tc = org.apache.spark.TaskContext.get()
-      val attempt = if (tc == null) 0L else tc.taskAttemptId()
-      val tmpPath = new org.apache.hadoop.fs.Path(
-        s"$dstBase.${partName(pid)}.attempt-$attempt")
-      val pfs = finalPath.getFileSystem(hconf)
-      val out = pfs.create(tmpPath, true)
-      try slice.sortBy(_._3).foreach { case (rel, _, _, _) =>
-        val inPath = new org.apache.hadoop.fs.Path(srcBase + rel)
-        val in = inPath.getFileSystem(hconf).open(inPath)
-        try {
-          val buf = new Array[Byte](64 * 1024)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        } finally in.close()
-      } finally out.close()
-      // commit = bare rename, NEVER delete-then-rename: a task-side
-      // delete would let a late zombie attempt remove a part another
-      // attempt already committed (and a kill between its delete and
-      // rename loses the part for good). Rename does not overwrite,
-      // so the first attempt wins; a loser's rename fails with the
-      // destination present and its (byte-identical) temp is dropped.
-      // This generation's part numbers are fresh (above every
-      // pre-existing part), so a present destination here can only
-      // be a sibling attempt's commit.
-      if (!pfs.rename(tmpPath, finalPath)) {
-        if (pfs.exists(finalPath)) pfs.delete(tmpPath, false)
-        else throw new java.io.IOException(
-          s"harPack: could not commit $tmpPath -> $finalPath")
+    spark.sparkContext.parallelize(byPart, part - partStart + 1)
+      .foreach { case (pid, slice) =>
+        // write-to-attempt-temp then atomic rename: a retried or
+        // speculative attempt writing the final path directly would
+        // truncate-and-interleave with a concurrent attempt (the job
+        // still reports success over the corrupt blob). With the
+        // rename protocol each attempt owns a private temp; the first
+        // rename wins, losers see the destination exists (identical
+        // bytes — the input slice is deterministic) and discard.
+        val finalPath = new Path(s"${dstBase}part-$pid")
+        val tc = org.apache.spark.TaskContext.get()
+        val attempt = if (tc == null) 0L else tc.taskAttemptId()
+        val tmpPath = new Path(s"$dstBase.part-$pid.attempt-$attempt")
+        val pfs = finalPath.getFileSystem(sconf.value)
+        val out = pfs.create(tmpPath, true)
+        try slice.sortBy(_._3).foreach { case (rel, _, _, _) =>
+          val inPath = new Path(srcBase + rel)
+          val in = inPath.getFileSystem(sconf.value).open(inPath)
+          try {
+            val buf = new Array[Byte](64 * 1024)
+            var n = in.read(buf)
+            while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+          } finally in.close()
+        } finally out.close()
+        // commit = bare rename, NEVER delete-then-rename: a task-side
+        // delete would let a late zombie attempt remove a part another
+        // attempt already committed (and a kill between its delete and
+        // rename loses the part for good). Rename does not overwrite,
+        // so the first attempt wins; a loser's rename fails with the
+        // destination present and its (byte-identical) temp is dropped.
+        // This generation's part numbers are fresh (above every
+        // pre-existing part), so a present destination here can only
+        // be a sibling attempt's commit.
+        if (!pfs.rename(tmpPath, finalPath)) {
+          if (pfs.exists(finalPath)) pfs.delete(tmpPath, false)
+          else throw new java.io.IOException(
+            s"harPack: could not commit $tmpPath -> $finalPath")
+        }
       }
-    }
     // sweep temp files of killed/superseded attempts (dot-prefixed,
     // so readers never see them as parts). Safe against a still-
     // running zombie attempt: deleting its open temp only makes its
@@ -417,64 +393,39 @@ object MultiIO {
     fs.listStatus(dst).map(_.getPath)
       .filter(_.getName.startsWith(".part-"))
       .foreach(p => fs.delete(p, false))
-    PackPrep(fs, srcBase, dstBase, partStart, part + 1, partName, index)
-  }
-
-  /** Previous generations (committed parts of the pack this one
-    * replaces, and orphans of crashed packs) all sit below the new
-    * generation's partStart — delete them only AFTER the new index
-    * is live.
-    */
-  private def deleteOldGenerations(prep: PackPrep): Unit =
-    prep.fs.listStatus(new org.apache.hadoop.fs.Path(prep.dstBase))
-      .map(_.getPath)
+    val (indexText, masterText) = stockIndex(index, entriesPerStore)
+    // INDEX SWAP, `_index` first (see scaladoc): write each file to a
+    // dot-prefixed temp, then replace the live one (delete-then-rename
+    // — HDFS rename won't replace; recursive, so an `_index` DIRECTORY
+    // left by an older layout is replaced too). Old-generation parts
+    // are deleted only AFTER the new index is live.
+    Seq("index" -> indexText, "masterindex" -> masterText).foreach {
+      case (name, content) =>
+        val tmp = new Path(s"${dstBase}._$name.tmp-gen$partStart")
+        val fin = new Path(s"${dstBase}_$name")
+        val out = fs.create(tmp, true)
+        try out.write(content.getBytes("UTF-8")) finally out.close()
+        fs.delete(fin, true)
+        if (!fs.rename(tmp, fin))
+          throw new java.io.IOException(s"harPack: could not commit $tmp -> $fin")
+    }
+    fs.listStatus(dst).map(_.getPath)
       .filter { p =>
         p.getName.matches("part-\\d+") &&
-          p.getName.stripPrefix("part-").toInt < prep.partStart
+          p.getName.stripPrefix("part-").toInt < partStart
       }
-      .foreach(p => prep.fs.delete(p, false))
+      .foreach(p => fs.delete(p, false))
+    harIndex(spark, dstDir)
+  }
 
-  /** [[harPack]] with STOCK HADOOP's index layout: text `_index` /
-    * `_masterindex` exactly as `hadoop archive` writes them
-    * (HadoopArchives.java:480-604 — hash-sorted lines
-    * `<path> file <part-N> <offset> <length> ` for files and
-    * `<path> dir none 0 0 <children...> ` for directories;
-    * `_masterindex` = version line `1 ` then
-    * `<startHash> <endHash> <startPos> <endPos> ` stores, one per
-    * `entriesPerStore` index lines), bare `part-N` blob names.
-    * Archives this writes are consumable by a stock `HarFileSystem`
-    * client AND by [[readReferenceHar]]/[[referenceHarLookup]];
-    * use plain [[harPack]] when only this engine reads the archive
-    * (the parquet index scans distributed and predicate-pruned).
-    *
-    * Archive paths are rooted (`/<relative>`), mirroring the
-    * reference's `makeRelative` (HadoopArchives.java:451-455). The
-    * text format is space-delimited with no escaping — the same
-    * limitation the reference has — so paths containing whitespace
-    * are refused at pack time rather than corrupting the index.
-    *
-    * Crash consistency: part blobs follow [[harPack]]'s generation
-    * protocol (additive until index commit). The two index files
-    * commit via temp+rename, `_index` first: a crash between the
-    * two renames leaves bulk reads (index-driven) fully consistent
-    * and only `_masterindex`-driven point lookups stale until the
-    * next pack — the one residual window, and it moves no data.
+  /** The text `_index` and `_masterindex` of `index`'s
+    * (relative path, part, offset, length) entries.
     */
-  def harPackReference(spark: SparkSession, srcDir: String, dstDir: String,
-                       partSizeBytes: Long = 64L * 1024 * 1024,
-                       entriesPerStore: Int = 1000): DataFrame = {
-    require(entriesPerStore >= 1,
-      s"entriesPerStore must be >= 1, got $entriesPerStore")
-    val prep = packParts(spark, srcDir, dstDir, partSizeBytes,
-      partName = pid => s"part-$pid")
-    prep.index.foreach { case (rel, _, _, _) =>
-      require(!rel.exists(c => c == ' ' || c == '\n' || c == '\r' || c == '\t'),
-        s"harPackReference: '$rel' contains whitespace; the stock " +
-          "text index format cannot encode it")
-    }
-    val fileLines = prep.index.map { case (rel, pid, off, len) =>
+  private def stockIndex(index: Seq[(String, Int, Long, Long)],
+                         entriesPerStore: Int): (String, String) = {
+    val fileLines = index.map { case (rel, pid, off, len) =>
       val p = "/" + rel
-      (p, s"$p file ${prep.partName(pid)} $off $len ")
+      (p, s"$p file part-$pid $off $len ")
     }
     // directory entries: every ancestor dir, children listed by NAME
     // (the reference archiver receives them from its input listing;
@@ -484,7 +435,7 @@ object MultiIO {
     def parentOf(p: String): String = {
       val i = p.lastIndexOf('/'); if (i <= 0) "/" else p.substring(0, i)
     }
-    prep.index.foreach { case (rel, _, _, _) =>
+    index.foreach { case (rel, _, _, _) =>
       var p = "/" + rel
       while (p != "/") {
         val par = parentOf(p)
@@ -521,116 +472,23 @@ object MultiIO {
     }
     if (written > 0)
       stores += s"$startIndex $lastHash $startPos $bytePos \n"
-    val masterContent = "1 \n" + stores.result().mkString
-    // temp+rename commit, _index first (see scaladoc). Recursive
-    // delete: the destination may be a previous PARQUET-layout
-    // `_index` directory being converted in place.
-    def commitTextFile(name: String, content: String): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"${prep.dstBase}._$name.tmp-gen${prep.partStart}")
-      val fin = new org.apache.hadoop.fs.Path(prep.dstBase + "_" + name)
-      val out = prep.fs.create(tmp, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      prep.fs.delete(fin, true)
-      if (!prep.fs.rename(tmp, fin))
-        throw new java.io.IOException(
-          s"harPackReference: could not commit $tmp -> $fin")
-    }
-    commitTextFile("index", idxSb.toString)
-    commitTextFile("masterindex", masterContent)
-    deleteOldGenerations(prep)
-    readReferenceHarIndex(spark, dstDir)
+    (idxSb.toString, "1 \n" + stores.result().mkString)
   }
 
-  /** Read a [[harPack]] archive back as (path, bytes): ranged reads
-    * against the part blobs, driven by the parquet index. Index rows
-    * are range-partitioned by (part, offset) so each task reads ONE
-    * part handle sequentially forward — the archive-scan access
-    * pattern HarFileSystem's readers use; bytes never shuffle.
-    * `pathFilter` (an index predicate, e.g. `col("path").startsWith
-    * ("logs/")`) prunes with parquet pushdown before any blob is
-    * opened.
+  /** Parse an archive's text `_index` (HarFileSystem.java:33-44) into
+    * the (path, part_file, offset, length) relation the ranged reader
+    * consumes. File entries only — HAR directories carry no bytes.
     */
-  def readHar(spark: SparkSession, harDir: String,
-              pathFilter: Option[Column] = None): DataFrame = {
-    val dstBase = harDir.stripSuffix("/") + "/"
-    val idx0 = spark.read.parquet(dstBase + "_index")
-    val idx = pathFilter.map(idx0.filter).getOrElse(idx0)
-      .select(col("path"),
-        format_string("part-%05d", col("part")).as("part_file"),
-        col("offset"), col("length"))
-    rangedPartReads(spark, dstBase, idx)
-  }
-
-  /** One forward sequential scan per part blob, shared by the parquet
-    * and reference-text index paths: range-partition entries by
-    * (part file, offset), keep one open handle per task, seek forward
-    * only. Bytes never shuffle.
-    */
-  // public: the row encoder's generated code instantiates it — a
-  // private class fails janino compilation task-side
-  final case class PartEntry(path: String, part_file: String,
-                             offset: Long, length: Long)
-  private def rangedPartReads(spark: SparkSession, dstBase: String,
-                              idx: DataFrame): DataFrame = {
-    val confEntries = hadoopConfEntries(
-      spark.sparkContext.hadoopConfiguration)
-    import spark.implicits._
-    idx.repartitionByRange(col("part_file"), col("offset"))
-      .sortWithinPartitions(col("part_file"), col("offset"))
-      .as[PartEntry]
-      .mapPartitions { rows =>
-        val hconf = rebuildHadoopConf(confEntries)
-        var open: Option[(String, org.apache.hadoop.fs.FSDataInputStream)] = None
-        // the handle must close even when the iterator is NOT drained
-        // (limit/take, downstream failure) — tie it to task completion
-        Option(org.apache.spark.TaskContext.get()).foreach {
-          _.addTaskCompletionListener[Unit] { _ =>
-            open.foreach(_._2.close()); open = None
-          }
-        }
-        rows.map { case PartEntry(path, partFile, offset, length) =>
-          // harPack enforces this at pack time; a foreign (reference-
-          // written) index must be re-checked at read time
-          require(length < Int.MaxValue.toLong,
-            s"$path is $length bytes; >= 2 GiB exceeds the (path, bytes) " +
-              "row model")
-          if (!open.exists(_._1 == partFile)) {
-            open.foreach(_._2.close())
-            val p = new org.apache.hadoop.fs.Path(dstBase + partFile)
-            open = Some((partFile, p.getFileSystem(hconf).open(p)))
-          }
-          val in = open.get._2
-          val buf = new Array[Byte](length.toInt)
-          in.seek(offset)
-          in.readFully(buf)
-          (path, buf)
-        }
-      }.toDF("path", "bytes")
-  }
-
-  /** Parse a STOCK-HADOOP archive's text `_index` (the reference
-    * layout this engine's parquet index deliberately diverges from —
-    * HarFileSystem.java:33-44; written by HadoopArchives.java:480-604
-    * as hash-sorted lines `<path> file <part-N> <offset> <length> `
-    * for files and `<path> dir none 0 0 <children...> ` for
-    * directories) into the same (path, part_file, offset, length)
-    * relation the ranged reader consumes. File entries only — HAR
-    * directories carry no bytes.
-    */
-  def readReferenceHarIndex(spark: SparkSession, harDir: String): DataFrame = {
-    val dstBase = harDir.stripSuffix("/") + "/"
+  private def harIndex(spark: SparkSession, harDir: String): DataFrame = {
     // the underscore prefix marks the file HIDDEN to every Spark/
     // Hadoop file-source listing (spark.read.text returns zero rows;
     // FileInputFormat's glob refuses the explicit path), so the index
     // is read driver-side through the raw FileSystem — exactly what
     // the reference's HarFileSystem client does with this same file
-    // (HarFileSystem.java:386-398). The index is file METADATA (one
-    // line per archived file); a deployment archiving enough files
-    // for that to strain the driver should convert once to the
-    // parquet index (readReferenceHarIndex -> write), which
-    // thereafter scans distributed and predicate-pruned.
-    val idxPath = new org.apache.hadoop.fs.Path(dstBase + "_index")
+    // (HarFileSystem.java:386-398). The index is file METADATA, one
+    // line per archived file: the same (path, size) list the packer
+    // already holds on the driver.
+    val idxPath = new Path(harDir.stripSuffix("/") + "/_index")
     val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lines = {
       val in = fs.open(idxPath)
@@ -648,18 +506,67 @@ object MultiIO {
         col("f").getItem(4).cast("long").as("length"))
   }
 
-  /** Read an archive produced by STOCK Hadoop (`hadoop archive`) —
-    * text `_index`/`_masterindex`, bare `part-N` names — back as
-    * (path, bytes), so reference-written archives are consumable
-    * without conversion. Same scan shape as [[readHar]]; the path
-    * filter prunes the (metadata-sized) index before any blob opens.
+  /** Read an archive — one [[harPack]] wrote, or one stock Hadoop
+    * (`hadoop archive`) wrote — back as (path, bytes): ranged reads
+    * against the part blobs, driven by the text `_index`. Index rows
+    * are range-partitioned by (part, offset) so each task reads ONE
+    * part handle sequentially forward — the archive-scan access
+    * pattern HarFileSystem's readers use; bytes never shuffle.
+    * `pathFilter` (an index predicate, e.g. `col("path").startsWith
+    * ("/logs/")`) prunes the (metadata-sized) index before any blob
+    * is opened.
     */
-  def readReferenceHar(spark: SparkSession, harDir: String,
-                       pathFilter: Option[Column] = None): DataFrame = {
-    val dstBase = harDir.stripSuffix("/") + "/"
-    val idx0 = readReferenceHarIndex(spark, harDir)
-    rangedPartReads(spark, dstBase,
+  def readHar(spark: SparkSession, harDir: String,
+              pathFilter: Option[Column] = None): DataFrame = {
+    val idx0 = harIndex(spark, harDir)
+    rangedPartReads(spark, harDir.stripSuffix("/") + "/",
       pathFilter.map(idx0.filter).getOrElse(idx0))
+  }
+
+  // public: the row encoder's generated code instantiates it — a
+  // private class fails janino compilation task-side
+  final case class PartEntry(path: String, part_file: String,
+                             offset: Long, length: Long)
+
+  /** One forward sequential scan per part blob: range-partition
+    * entries by (part file, offset), keep one open handle per task,
+    * seek forward only. Bytes never shuffle.
+    */
+  private def rangedPartReads(spark: SparkSession, dstBase: String,
+                              idx: DataFrame): DataFrame = {
+    val sconf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    import spark.implicits._
+    idx.repartitionByRange(col("part_file"), col("offset"))
+      .sortWithinPartitions(col("part_file"), col("offset"))
+      .as[PartEntry]
+      .mapPartitions { rows =>
+        var open: Option[(String, org.apache.hadoop.fs.FSDataInputStream)] = None
+        // the handle must close even when the iterator is NOT drained
+        // (limit/take, downstream failure) — tie it to task completion
+        Option(org.apache.spark.TaskContext.get()).foreach {
+          _.addTaskCompletionListener[Unit] { _ =>
+            open.foreach(_._2.close()); open = None
+          }
+        }
+        rows.map { case PartEntry(path, partFile, offset, length) =>
+          // harPack enforces this at pack time; a foreign (stock-
+          // written) index must be re-checked at read time
+          require(length < Int.MaxValue.toLong,
+            s"$path is $length bytes; >= 2 GiB exceeds the (path, bytes) " +
+              "row model")
+          if (!open.exists(_._1 == partFile)) {
+            open.foreach(_._2.close())
+            val p = new Path(dstBase + partFile)
+            open = Some((partFile, p.getFileSystem(sconf.value).open(p)))
+          }
+          val in = open.get._2
+          val buf = new Array[Byte](length.toInt)
+          in.seek(offset)
+          in.readFully(buf)
+          (path, buf)
+        }
+      }.toDF("path", "bytes")
   }
 
   /** The reference's path hash (HarFileSystem.java:360-362):
@@ -667,23 +574,23 @@ object MultiIO {
     * key and the `_masterindex` range key.
     */
   private[graft] def harHash(path: String): Int =
-    new org.apache.hadoop.fs.Path(path).toString.hashCode & 0x7fffffff
+    new Path(path).toString.hashCode & 0x7fffffff
 
-  /** Point lookup against a stock-Hadoop archive via the text
-    * `_masterindex`, mirroring HarFileSystem.fileStatusInIndex
+  /** Point lookup of one rooted archive path (`/a/b.txt`) via the
+    * text `_masterindex`, mirroring HarFileSystem.fileStatusInIndex
     * (HarFileSystem.java:386-448): hash the path, collect the index
     * byte ranges whose [startHash, endHash] cover it, scan ONLY those
     * `_index` slices for the entry, then one ranged read from its
     * part blob — O(slice + file), never O(archive). Driver-side, like
-    * the reference's client path.
+    * the reference's client path. None if the path isn't archived.
     */
-  def referenceHarLookup(spark: SparkSession, harDir: String,
-                         path: String): Option[Array[Byte]] = {
+  def harLookup(spark: SparkSession, harDir: String,
+                path: String): Option[Array[Byte]] = {
     val dstBase = harDir.stripSuffix("/") + "/"
     val conf = spark.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(path)
+    val target = new Path(path)
     val hash = harHash(path)
-    val masterPath = new org.apache.hadoop.fs.Path(dstBase + "_masterindex")
+    val masterPath = new Path(dstBase + "_masterindex")
     val fs = masterPath.getFileSystem(conf)
     val master = {
       val in = fs.open(masterPath)
@@ -696,7 +603,7 @@ object MultiIO {
       val f = line.trim.split(" ")
       (f(0).toInt, f(1).toInt, f(2).toLong, f(3).toLong)
     }.filter { case (lo, hi, _, _) => lo <= hash && hash <= hi }
-    val idxPath = new org.apache.hadoop.fs.Path(dstBase + "_index")
+    val idxPath = new Path(dstBase + "_index")
     // lazily: stop at the first store slice that holds the entry
     // (iterator.toSeq would eagerly read EVERY covering slice), and
     // seek one open stream instead of reopening _index per store
@@ -709,7 +616,7 @@ object MultiIO {
           in.readFully(buf)
           new String(buf, "UTF-8").split("\n").iterator.map(_.split(" "))
             .find(f => f.length >= 5 && f(1) == "file" &&
-              new org.apache.hadoop.fs.Path(f(0)).compareTo(target) == 0)
+              new Path(f(0)).compareTo(target) == 0)
             .map(f => (f(2), f(3).toLong, f(4).toLong))
         }.collectFirst { case Some(e) => e }
       } finally in.close()
@@ -717,7 +624,7 @@ object MultiIO {
     entry.map { case (partFile, offset, length) =>
       require(length < Int.MaxValue.toLong,
         s"$path is $length bytes; >= 2 GiB exceeds the byte-array model")
-      val p = new org.apache.hadoop.fs.Path(dstBase + partFile)
+      val p = new Path(dstBase + partFile)
       val in = p.getFileSystem(conf).open(p)
       try {
         val buf = new Array[Byte](length.toInt)
@@ -727,33 +634,4 @@ object MultiIO {
       } finally in.close()
     }
   }
-
-  /** Configuration is not serializable: ship its (k, v) entries and
-    * overlay them onto a fresh task-side conf (defaults load first,
-    * driver settings — fs.s3a credentials, nameservices — win).
-    */
-  private def hadoopConfEntries(
-      conf: org.apache.hadoop.conf.Configuration): Array[(String, String)] = {
-    val it = conf.iterator()
-    val b = Array.newBuilder[(String, String)]
-    while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
-    b.result()
-  }
-
-  private def rebuildHadoopConf(
-      entries: Array[(String, String)]): org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration()
-    entries.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  /** Point lookup: one file out of the archive in O(file) — the
-    * index scan is parquet-pruned on the path predicate (row-group
-    * stats over the sorted path column), then exactly one ranged
-    * read against one part blob. None if the path isn't archived.
-    */
-  def harLookup(spark: SparkSession, harDir: String,
-                path: String): Option[Array[Byte]] =
-    readHar(spark, harDir, Some(col("path") === path))
-      .collect().headOption.map(_.getAs[Array[Byte]]("bytes"))
 }

@@ -27,12 +27,15 @@ import org.apache.spark.sql.functions._
   *  - Cost is O(hit files), not O(table): with bucketed/bloom layout
   *    a k-key request touches at most k files.
   *
-  * Crash consistency, same stance as [[Compaction.compact]]: the
-  * replacement is written additively under a dot-prefixed temp dir
-  * (invisible to readers), then swapped in per-file with delete-old
-  * → move-new. The per-file window is the only exposure; a re-run
-  * of the same request is idempotent (the keys are already gone from
-  * every completed file, so it rewrites nothing).
+  * Crash consistency, the same commit as [[Compaction.compact]]
+  * ([[InPlaceRewrite]]): the replacement is written additively under
+  * a dot-prefixed temp dir (invisible to readers), then swapped in
+  * per-file with delete-old → move-new, so a deleted key is never
+  * readable beside its replacement. The per-file window is the only
+  * exposure; a swap that fails throws and keeps the temp root, whose
+  * replacement files hold the file's remaining rows, recoverable by
+  * hand. A re-run of the same request is idempotent (the keys are
+  * already gone from every completed file, so it rewrites nothing).
   *
   * Returns one report row per hit file:
   * `(file, rows_removed, emptied)`.
@@ -58,47 +61,25 @@ object Redaction {
       .agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
     if (hits.isEmpty) return empty
-    val tmpRoot = new Path(base,
-      s".redact-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxConcurrent, hits.length))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    import scala.concurrent.{Await, Future}
-    try {
-      val done = hits.zipWithIndex.map { case ((uri, removed), i) =>
-        Future {
-          val live = new Path(new java.net.URI(uri))
-          val tmpDir = new Path(tmpRoot, s"f$i")
-          spark.read.parquet(live.toString)
+    val emptied = InPlaceRewrite.run(fs, base, "redact",
+      hits.zipWithIndex.map { case ((uri, _), i) =>
+        val live = new Path(new java.net.URI(uri))
+        val conf = spark.sessionState.newHadoopConf()
+        InPlaceRewrite.Rewrite(s"f$i", Seq(live), live.getParent,
+          write = tmpDir => spark.read.parquet(live.toString)
             .filter(!col(key).isInCollection(keys))
             .coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
+            .write.mode(SaveMode.Overwrite).parquet(tmpDir.toString),
           // a fully-deleted file writes a schema-only parquet; its
           // footer (driver-side metadata, no job) says 0 records —
           // drop it rather than litter the table with empty files
-          val conf = spark.sessionState.newHadoopConf()
-          val replacement = fs.listStatus(tmpDir).toSeq
-            .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-            .filter { s =>
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromPath(s.getPath, conf))
-              try r.getRecordCount > 0 finally r.close()
-            }
-          fs.delete(live, false)
-          replacement.foreach(s => fs.rename(s.getPath,
-            new Path(live.getParent, s.getPath.getName)))
-          (uri, removed, replacement.isEmpty)
-        }
-      }
-      Await.result(Future.sequence(done),
-          scala.concurrent.duration.Duration.Inf)
-        .toDF("file", "rows_removed", "emptied")
-    } finally {
-      pool.shutdown()
-      fs.delete(tmpRoot, true)
-    }
+          keep = { f =>
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+            try r.getRecordCount > 0 finally r.close()
+          })
+      }, maxConcurrent).map(_ == 0)
+    hits.zip(emptied).map { case ((uri, removed), e) => (uri, removed, e) }
+      .toDF("file", "rows_removed", "emptied")
   }
 }

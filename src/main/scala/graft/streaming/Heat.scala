@@ -237,32 +237,4 @@ object Heat {
       demoteSweepBatch(assigned, key, heatCol, minRep)
     else assigned
   }
-
-  /** Scalable tiering: the global-window `ntile` above is exact but
-    * single-partition (fine for heat tables up to ~10^7 files); this
-    * variant computes approximate quantile cutoffs in one distributed
-    * aggregation and assigns tiers by comparison — no global sort,
-    * no single partition, at the cost of quantile-sketch error on
-    * tier boundaries. Tie caveat (beyond sketch error): assignment
-    * compares `cutoff < heat` strictly, so a heavily tied
-    * distribution (e.g. most files at heat 0.0) collapses every tied
-    * row into the LOWEST tier — the exact rank form splits ties by
-    * rank. Null heat also lands in the lowest tier here; the exact
-    * form ranks it. Use the exact [[replicationPlan]] when ties
-    * carry meaning.
-    */
-  def replicationPlanByThreshold(heat: DataFrame, key: Column, heatCol: Column,
-                                 minRep: Int = 3, maxRep: Int = 6): DataFrame = {
-    require(maxRep >= minRep,
-      s"maxRep ($maxRep) must be >= minRep ($minRep)")
-    val tiers = maxRep - minRep + 1
-    val probs = (1 until tiers).map(i => i.toDouble / tiers)
-    val cuts = heat.agg(
-      percentile_approx(heatCol, lit(probs.toArray), lit(10000)).as("cuts"))
-    // tier = count of cutoffs strictly below this heat -> minRep+tier
-    heat.crossJoin(broadcast(cuts))
-      .withColumn("target_rep",
-        (lit(minRep) + size(filter(col("cuts"), c => c < heatCol))).cast("int"))
-      .drop("cuts")
-  }
 }

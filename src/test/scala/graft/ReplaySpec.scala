@@ -42,6 +42,29 @@ class ReplaySpec extends SparkSpec {
     spark.read.parquet(r.sink).as[HeatStream.HeatRecord].collect().toSeq
       .sortBy(h => (h.path, h.lastUpdateMs, h.ewma))
 
+  test("the replay scope turns checkpoint checksums off, then restores") {
+    val key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    // a checksum sidecar is `<file>.crc` beside its file; the local
+    // file system's own checksums are dot-prefixed (`.<file>.crc`)
+    def sidecars(dir: String): Seq[String] = {
+      def walk(f: File): Seq[String] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f.getName)
+      walk(new File(dir)).filter(n => n.endsWith(".crc") && !n.startsWith("."))
+    }
+    assert(spark.conf.get(key) == "true")
+    val outside = Replay.unordered(spark, accesses)
+    runHeat(outside)
+    val inside = Replay.withStateWidth(spark) {
+      assert(spark.conf.get(key) == "false")
+      val r = Replay.unordered(spark, accesses)
+      runHeat(r); r
+    }
+    assert(spark.conf.get(key) == "true")
+    assert(sidecars(outside.checkpoint).nonEmpty)
+    assert(sidecars(inside.checkpoint).isEmpty,
+      sidecars(inside.checkpoint).take(5).toString)
+  }
+
   test("ordered replay delivers micro-batches in slice order") {
     val ranges = new java.util.concurrent.ConcurrentSkipListMap[Long, (Long, Long)]()
     val q = Replay.ordered(spark, accesses, col("tsMs")).stream

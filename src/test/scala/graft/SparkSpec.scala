@@ -8,7 +8,8 @@ object TestSpark {
   lazy val spark: SparkSession = {
     // fresh warehouse per JVM: saveAsTable locations must not collide
     // with a previous run's leftovers (in-memory catalog, durable dir)
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Replay.rmTree(wh)))
     System.setProperty("spark.sql.warehouse.dir", wh.toString)
     Graft.session(master = "local[4]", shufflePartitions = 4,
       appName = "graft-test")

@@ -287,36 +287,30 @@ class MultiIOSpec extends SparkSpec {
       java.nio.file.Files.write(java.nio.file.Paths.get(src, p), b) }
     val idx = MultiIO.harPack(spark, src, base + "/har",
       partSizeBytes = 64L)
-    // index covers every file with its true length
+    // index covers every file (rooted archive paths) with its true length
     val byPath = idx.collect()
-      .map(r => r.getString(0) -> (r.getInt(1), r.getLong(2), r.getLong(3)))
+      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2), r.getLong(3)))
       .toMap
-    assert(byPath.keySet == contents.keySet)
-    assert(contents.forall { case (p, b) => byPath(p)._3 == b.length })
+    assert(byPath.keySet == contents.keySet.map("/" + _))
+    assert(contents.forall { case (p, b) => byPath("/" + p)._3 == b.length })
     // multiple parts were cut, and every referenced part blob exists
     val parts = byPath.values.map(_._1).toSet
     assert(parts.size > 1, s"expected >1 parts, got $parts")
     parts.foreach { p =>
       assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(base, "har", f"part-$p%05d"))) }
+        java.nio.file.Paths.get(base, "har", p))) }
     // full scan round-trips every byte
     val back = MultiIO.readHar(spark, base + "/har").collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]]("bytes")).toMap
-    assert(back.keySet == contents.keySet)
+    assert(back.keySet == contents.keySet.map("/" + _))
     contents.foreach { case (p, b) =>
-      assert(java.util.Arrays.equals(back(p), b), s"bytes differ for $p") }
+      assert(java.util.Arrays.equals(back("/" + p), b), s"bytes differ for $p") }
     // point lookup: exact bytes; absent path -> None
-    assert(MultiIO.harLookup(spark, base + "/har", "bin.dat")
+    assert(MultiIO.harLookup(spark, base + "/har", "/bin.dat")
       .exists(java.util.Arrays.equals(_, contents("bin.dat"))))
-    assert(MultiIO.harLookup(spark, base + "/har", "f13.txt")
+    assert(MultiIO.harLookup(spark, base + "/har", "/f13.txt")
       .exists(java.util.Arrays.equals(_, contents("f13.txt"))))
-    assert(MultiIO.harLookup(spark, base + "/har", "missing").isEmpty)
-    // the lookup's index scan pushes the path predicate to parquet
-    val plan = MultiIO.readHar(spark, base + "/har",
-        Some($"path" === "bin.dat"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(path), EqualTo(path,bin.dat)]"),
-      plan)
+    assert(MultiIO.harLookup(spark, base + "/har", "/missing").isEmpty)
     // idempotent re-pack: same layout
     val idx2 = MultiIO.harPack(spark, src, base + "/har2",
       partSizeBytes = 64L)
@@ -337,10 +331,10 @@ class MultiIOSpec extends SparkSpec {
       .map(_.getName).filter(_.matches("part-\\d+")).toSet
     assert(gen0Parts.nonEmpty)
     // simulate a CRASHED earlier re-pack: an orphaned part with a
-    // number above gen 0, never referenced by the live index, AND the
-    // temp index DIRECTORY that a crash between index-write and
-    // rename leaves behind (its gen number never recurs, so only the
-    // pre-job sweep can ever reclaim it)
+    // number above gen 0, never referenced by the live index, AND a
+    // temp index that a crash between index-write and rename leaves
+    // behind (a directory, as an older layout wrote it; its gen
+    // number never recurs, so only the pre-job sweep can reclaim it)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(base, "har", "part-00042"),
       "orphan-garbage".getBytes("UTF-8"))
@@ -363,14 +357,14 @@ class MultiIOSpec extends SparkSpec {
     val back = MultiIO.readHar(spark, base + "/har").collect()
       .map(r => r.getString(0) -> new String(
         r.getAs[Array[Byte]]("bytes"), "UTF-8")).toMap
-    assert(back("f0.txt").startsWith("v2-CHANGED"), back("f0.txt"))
-    assert(back.keySet == (0 until 6).map(i => s"f$i.txt").toSet)
+    assert(back("/f0.txt").startsWith("v2-CHANGED"), back("/f0.txt"))
+    assert(back.keySet == (0 until 6).map(i => s"/f$i.txt").toSet)
     // no temp index dirs left behind
     assert(!new java.io.File(base, "har").listFiles()
       .exists(_.getName.startsWith("._index.tmp")), "index temp leaked")
   }
 
-  test("readReferenceHar consumes a stock-Hadoop text-layout archive") {
+  test("readHar consumes a stock-Hadoop text-layout archive") {
     // hand-build the reference layout byte-for-byte
     // (HarFileSystem.java:33-44, HadoopArchives.java:480-604):
     // bare part-N names, text _index sorted by the path hash with
@@ -411,26 +405,26 @@ class MultiIOSpec extends SparkSpec {
     java.nio.file.Files.write(har.resolve("_masterindex"),
       master.getBytes("UTF-8"))
     // bulk read: every file round-trips, the dir entry is excluded
-    val back = MultiIO.readReferenceHar(spark, har.toString).collect()
+    val back = MultiIO.readHar(spark, har.toString).collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]]("bytes")).toMap
     assert(back.keySet == contents.keySet, back.keySet.toString)
     contents.foreach { case (p, b) =>
       assert(java.util.Arrays.equals(back(p), b), s"bytes differ for $p") }
     // filtered read prunes to one entry
-    val one = MultiIO.readReferenceHar(spark, har.toString,
+    val one = MultiIO.readHar(spark, har.toString,
       Some($"path" === "/user/b.bin")).collect()
     assert(one.length == 1 &&
       java.util.Arrays.equals(one.head.getAs[Array[Byte]]("bytes"),
         contents("/user/b.bin")))
     // point lookups via the masterindex hash ranges (both stores)
     contents.foreach { case (p, b) =>
-      assert(MultiIO.referenceHarLookup(spark, har.toString, p)
+      assert(MultiIO.harLookup(spark, har.toString, p)
         .exists(java.util.Arrays.equals(_, b)), s"lookup failed for $p") }
-    assert(MultiIO.referenceHarLookup(spark, har.toString,
+    assert(MultiIO.harLookup(spark, har.toString,
       "/user/missing.txt").isEmpty)
   }
 
-  test("harPackReference writes a stock-consumable text-layout archive") {
+  test("harPack writes a stock-consumable text-layout archive") {
     val base = Files.createTempDirectory("graft-refpack")
     val src = base.resolve("src")
     java.nio.file.Files.createDirectories(src.resolve("sub"))
@@ -444,20 +438,20 @@ class MultiIOSpec extends SparkSpec {
     val har = base.resolve("out.har").toString
     // small part budget -> several parts; entriesPerStore=2 -> the
     // masterindex store arithmetic is exercised beyond one store
-    MultiIO.harPackReference(spark, src.toString, har,
+    MultiIO.harPack(spark, src.toString, har,
       partSizeBytes = 8, entriesPerStore = 2)
 
     // bulk read through the stock-layout reader: rooted paths, bytes
-    val back = MultiIO.readReferenceHar(spark, har).collect()
+    val back = MultiIO.readHar(spark, har).collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]]("bytes")).toMap
     assert(back.keySet == contents.keySet.map("/" + _), back.keySet.toString)
     contents.foreach { case (p, b) =>
       assert(java.util.Arrays.equals(back("/" + p), b), s"bytes differ: $p") }
     // point lookups via the masterindex hash ranges
     contents.foreach { case (p, b) =>
-      assert(MultiIO.referenceHarLookup(spark, har, "/" + p)
+      assert(MultiIO.harLookup(spark, har, "/" + p)
         .exists(java.util.Arrays.equals(_, b)), s"lookup failed for /$p") }
-    assert(MultiIO.referenceHarLookup(spark, har, "/missing").isEmpty)
+    assert(MultiIO.harLookup(spark, har, "/missing").isEmpty)
 
     // BYTE-LAYOUT: _index lines are `<path> <kind> ...` with the
     // reference's trailing space, hash-sorted
@@ -507,9 +501,9 @@ class MultiIOSpec extends SparkSpec {
     }
 
     // re-pack: a fresh generation commits and stays readable
-    MultiIO.harPackReference(spark, src.toString, har,
+    MultiIO.harPack(spark, src.toString, har,
       partSizeBytes = 1024, entriesPerStore = 1000)
-    val again = MultiIO.readReferenceHar(spark, har).collect()
+    val again = MultiIO.readHar(spark, har).collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]]("bytes")).toMap
     contents.foreach { case (p, b) =>
       assert(java.util.Arrays.equals(again("/" + p), b),
@@ -518,7 +512,7 @@ class MultiIOSpec extends SparkSpec {
     java.nio.file.Files.write(src.resolve("bad name.txt"),
       "x".getBytes("UTF-8"))
     intercept[IllegalArgumentException] {
-      MultiIO.harPackReference(spark, src.toString,
+      MultiIO.harPack(spark, src.toString,
         base.resolve("bad.har").toString)
     }
   }

@@ -104,19 +104,6 @@ class HeatBatchSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
   import spark.implicits._
 
-  test("threshold-based plan agrees with ntile tiers away from boundaries") {
-    val heat = (1 to 100).map(i => (i.toLong, i.toDouble)).toDF("user_id", "ewma")
-    val exact = Heat.replicationPlan(heat, col("user_id"), col("ewma"))
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    val approx = Heat.replicationPlanByThreshold(heat, col("user_id"), col("ewma"))
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
-    // identical except possibly at the 3 tier boundaries
-    val diffs = exact.keys.count(k => exact(k) != approx(k))
-    assert(diffs <= 3, s"$diffs tier assignments differ")
-    assert(approx.values.toSet.subsetOf(Set(3, 4, 5, 6)))
-    assert(approx(100L) == 6 && approx(1L) == 3)
-  }
-
   test("replicationPlan matches standard ntile fill without a global window") {
     // n=10, 4 tiers: q=2, r=2 -> tile sizes 3,3,2,2 over ewma desc
     val heat = (1 to 10).map(i => (i.toLong, i.toDouble)).toDF("user_id", "ewma")
@@ -269,26 +256,6 @@ class HeatBatchSpec extends SparkSpec {
       // 300 / 4 tiers = exactly 75 per tier
       assert(sizes == Map(6 -> 75, 5 -> 75, 4 -> 75, 3 -> 75), sizes.toString)
     } finally q.stop()
-  }
-}
-
-class AggApproxSpec extends SparkSpec {
-  import org.apache.spark.sql.functions._
-  import spark.implicits._
-
-  test("valueHistogramApprox matches exact report on modest data") {
-    val df = (Seq.fill(3)("a") ++ Seq("b") ++ Seq.fill(2)("c"))
-      .map(("g", _)).toDF("g", "v")
-    val exact = graft.operators.AggregateLib
-      .valueHistogram(df, Seq($"g"), $"v").collect().head
-    val approx = graft.operators.AggregateLib
-      .valueHistogramApprox(df, Seq($"g"), $"v").collect().head
-    assert(exact.getLong(1) == approx.getLong(1))       // n_values
-    assert(exact.getLong(2) == approx.getLong(2))       // min
-    assert(exact.getLong(4) == approx.getLong(4))       // max
-    assert(exact.getDouble(5) == approx.getDouble(5))   // avg
-    // approx median is the discrete percentile (2); exact interpolates
-    assert(math.abs(approx.getLong(3) - exact.getDouble(3)) <= 1)
   }
 }
 
