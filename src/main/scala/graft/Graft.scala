@@ -105,15 +105,19 @@ object Graft {
     spark
   }
 
-  /** The session Verify, Bench and Explain run queries in:
-    * `local[N]` with N shuffle partitions, N = `SPARK_GRAFT_CPUS`
-    * (default 4), so Explain prints the plans the other two run.
+  /** Local cores and shuffle partitions of every main's session:
+    * `SPARK_GRAFT_CPUS`, default 4.
     */
-  def querySession(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    session(master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = appName)
-  }
+  lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The session every main runs in: `local[N]` with N shuffle
+    * partitions, N = [[cpus]], so Explain prints the plans Verify and
+    * Bench run.
+    */
+  def querySession(appName: String,
+                   extraConfs: Map[String, String] = Map.empty): SparkSession =
+    session(master = s"local[$cpus]", shufflePartitions = cpus,
+      appName = appName, extraConfs = extraConfs)
 
   private val advisorWired = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())

@@ -14,9 +14,7 @@ object IoBench {
     val mb = args.headOption.map(_.toInt).getOrElse(512)
     val out = if (args.length > 1) args(1)
               else java.nio.file.Files.createTempDirectory("graft-iobench").toString + "/data"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt, appName = "graft-iobench")
+    val spark = Graft.querySession("graft-iobench")
     import spark.implicits._
 
     // 104 logical bytes/row (8B id + 32B md5 key + 64B filler) —

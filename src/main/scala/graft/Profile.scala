@@ -43,9 +43,7 @@ object Profile {
       case (a, i) if !a.startsWith("--") &&
         !(i > 0 && args(i - 1) == "--streamphases" && a.startsWith("q_")) => a
     }.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt, appName = "graft-profile")
+    val spark = Graft.querySession("graft-profile")
     try {
       if (m == "--streamphases") {
         // default: the three slowest sf10 sweep entries
@@ -112,8 +110,8 @@ object Profile {
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(q)(spark, sfDir).queryExecution.toRdd.count()
       println(f"[profile] $q%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-      // progress events ride the async listener bus; drain briefly
-      Thread.sleep(2000)
+      // progress events ride the async listener bus
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       val opSplit =
         if (q == "q_stream_neardup")
           graft.streaming.StreamNearDup.emissionMetrics().map { m =>

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * failure).
   *
   * The six families (gridmix's five plus gridmix2's combiner class),
-  * each scaled by a row dial instead of the
+  * sized by one scale dial instead of the
   * reference's fixed 500 GB inputs (all corpora come from
   * [[graft.sources.Generate.randomKv]] on the FAST hash dial — bulk
   * generation is what that dial exists for):
@@ -65,13 +65,35 @@ import org.apache.spark.sql.functions._
   * filters, groupings are hash aggregations with map-side combine,
   * sorts are range exchanges. Nothing collects data rows to the
   * driver; driver state is O(partitions) (the sort validators).
-  * At 100 TB the dials are row counts and `spark.sql.shuffle
+  * At 100 TB the dials are the scale and `spark.sql.shuffle
   * .partitions`; the shapes are unchanged.
   */
 object Soak {
 
+  /** One family's wall clock, output rows, used heap after it, and
+    * the bytes it wrote.
+    */
   final case class FamilyResult(seconds: Double, rows: Long,
-                                usedHeapMb: Long, outBytes: Long = -1L)
+                                usedHeapMb: Long, outBytes: Long)
+
+  /** One schedule's run: its wall clock and per-family results. */
+  final case class Leg(seconds: Double, families: Seq[(String, FamilyResult)])
+
+  /** Corpus rows of the fixed-width (`three_stage`), variable-width
+    * (`var_sort`) and text families (the other three) at `scale`:
+    * 2,000,000 / 300,000 / 1,000,000 at scale 1, the ratio every
+    * recorded soak kept.
+    */
+  private final case class Rows(fixed: Long, variable: Long, text: Long)
+
+  private def rows(scale: Double): Rows = {
+    require(scale > 0, s"scale must be > 0, got $scale")
+    def of(n: Long): Long = math.max(1L, math.round(n * scale))
+    Rows(of(2000000L), of(300000L), of(1000000L))
+  }
+
+  /** Corpus seed; each family offsets it. */
+  private val Seed = 42L
 
   /** Deterministic keep-`permille` filter on a column — the
     * reference's "keep X% of records" dial, reproducible across
@@ -162,16 +184,13 @@ object Soak {
     (rt.totalMemory() - rt.freeMemory()) >> 20
   }
 
-  /** Run the five families sequentially under `workDir`; returns
-    * per-family (seconds, output rows, post-family used heap).
-    * `parts` sizes the generation/sort parallelism (the bench host's
-    * core count locally; executor count × cores on a cluster).
+  /** Run the six families sequentially under `workDir` at `scale`;
+    * returns per-family results. With `reclaim` each family's
+    * artifacts are deleted once nothing downstream reads them.
     */
-  def run(spark: SparkSession, workDir: String, fixRows: Long,
-          varRows: Long, textRows: Long, parts: Int,
-          seed: Long = 42L,
-          reclaim: Boolean = false): Seq[(String, FamilyResult)] =
-    runFamilies(spark, workDir, fixRows, varRows, textRows, parts, seed,
+  def run(spark: SparkSession, workDir: String, scale: Double,
+          reclaim: Boolean = true): Seq[(String, FamilyResult)] =
+    runFamilies(spark, workDir, rows(scale),
       Set("three_stage", "var_sort", "ref_select", "indirect_read",
         "api_sort", "combiner"), reclaim)
 
@@ -209,36 +228,32 @@ object Soak {
   }
 
   private def runFamilies(spark: SparkSession, workDir: String,
-                          fixRows: Long, varRows: Long, textRows: Long,
-                          parts: Int, seed: Long,
-                          only: Set[String],
-                          reclaim: Boolean = false): Seq[(String, FamilyResult)] = {
+                          rows: Rows, only: Set[String],
+                          reclaim: Boolean): Seq[(String, FamilyResult)] = {
     import graft.sources.Generate
+    val parts = spark.sparkContext.defaultParallelism
     val out = scala.collection.mutable.LinkedHashMap
       .empty[String, FamilyResult]
     def family(name: String)(body: => Long): Unit = if (only(name)) {
       val t0 = System.nanoTime()
-      val rows = body
-      out(name) = FamilyResult((System.nanoTime() - t0) / 1e9, rows,
-        usedHeapMb())
+      val n = body
+      out(name) = FamilyResult((System.nanoTime() - t0) / 1e9, n,
+        usedHeapMb(), 0L)
     }
-    // Big-dial disk discipline (the reference's 2.5 TB gridmix runs
-    // under an HDFS quota and reclaims between jobs): once nothing
-    // downstream reads a family's artifacts, delete them — validated
-    // counts were already taken inside the family. The measured
-    // output volume is credited to the family record (out_mb) so the
-    // run's cumulative write volume stays visible after the delete.
-    def reclaimDirs(fam: String, paths: String*): Unit =
-      if (reclaim && only(fam)) {
-        def size(f: java.io.File): Long =
-          if (f.isFile) f.length
-          else Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
-        val bytes = paths.map { p =>
-          val f = new java.io.File(p)
-          val b = size(f); Replay.rmTree(f); b
-        }.sum
-        out.updateWith(fam)(_.map(r => r.copy(
-          outBytes = math.max(0L, r.outBytes) + bytes)))
+    // The family's output volume is credited to its record (out_mb).
+    // With reclaim — big-dial disk discipline, as the reference's
+    // 2.5 TB gridmix runs reclaim between jobs under an HDFS quota —
+    // the artifacts are then deleted: validated counts were already
+    // taken inside the family, and nothing downstream reads them.
+    def settle(fam: String, paths: String*): Unit = if (only(fam)) {
+      def size(f: java.io.File): Long =
+        if (f.isFile) f.length
+        else Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
+      val files = paths.map(new java.io.File(_))
+      val bytes = files.map(size).sum
+      out.updateWith(fam)(_.map(r => r.copy(outBytes = r.outBytes + bytes)))
+      if (reclaim) {
+        files.foreach(Replay.rmTree)
         // the other half of the quota discipline: a finished family's
         // shuffle files sit in spark.local.dir until its dead
         // ShuffleDependency objects are GC'd and ContextCleaner
@@ -247,19 +262,20 @@ object Soak {
         // what actually broke api_sort's external-sort children
         // (GNU sort exit 2 = temp write failed) after the artifact
         // reclaim alone. A GC tick per reclaimed family lets the
-        // cleaner fire while the next family ramps. NOT done outside
-        // reclaim mode: the unreclaimed soak deliberately measures
-        // accumulation behavior.
+        // cleaner fire while the next family ramps. It frees only
+        // unreachable state: a reachable leak (say, persisted blocks
+        // still registered) still shows in used_heap_mb.
         System.gc()
       }
+    }
     def readBack(path: String): DataFrame = spark.read.parquet(path)
 
     // ---- 1. three-stage pipeline (FIXCOMPSEQ: k=5 words, v=100) ----
     family("three_stage") {
-      val fix = Generate.randomKv(spark, fixRows,
+      val fix = Generate.randomKv(spark, rows.fixed,
         keyMinWords = 5, keyMaxWords = 5,
         valueMinWords = 100, valueMaxWords = 100,
-        vocab = 5000, seed = seed, skewed = true,
+        vocab = 5000, seed = Seed, skewed = true,
         numPartitions = parts, portable = false)
       val c1 = s"$workDir/three_stage/c1"
       stage1(fix).write.mode(SaveMode.Overwrite).parquet(c1)
@@ -271,15 +287,15 @@ object Soak {
       require(got > 0, "three_stage: empty final stage")
       got
     }
-    reclaimDirs("three_stage", s"$workDir/three_stage")
+    settle("three_stage", s"$workDir/three_stage")
 
     // ---- 2. large sort of variable k/v (VARCOMPSEQ) ---------------
     family("var_sort") {
       val dst = s"$workDir/var_sort/out"
-      def sortedPlan = Generate.randomKv(spark, varRows,
+      def sortedPlan = Generate.randomKv(spark, rows.variable,
         keyMinWords = 5, keyMaxWords = 10,
         valueMinWords = 100, valueMaxWords = 1000,
-        vocab = 5000, seed = seed + 1, skewed = false,
+        vocab = 5000, seed = Seed + 1, skewed = false,
         numPartitions = parts, portable = false)
         .repartitionByRange(parts, col("k"))
         .sortWithinPartitions(col("k"))
@@ -296,8 +312,9 @@ object Soak {
       val (ok, n) = graft.operators.Sorting.validateSorted(
         sortedPlan, Seq("k"))
       require(ok, "var_sort: output failed the sort validator")
-      require(n == varRows, s"var_sort: sorted $n of $varRows rows")
-      require(readBack(dst).count() == varRows,
+      require(n == rows.variable,
+        s"var_sort: sorted $n of ${rows.variable} rows")
+      require(readBack(dst).count() == rows.variable,
         "var_sort: artifact row count diverged")
       n
     }
@@ -314,20 +331,17 @@ object Soak {
       readBack(dst).count()
     }
     // var_sort's artifact is only now consumable-free (ref_select
-    // reads it), so both reclaim here; when ref_select is not in this
-    // lane's set, var_sort reclaims its own output
-    if (only("ref_select")) {
-      reclaimDirs("ref_select", s"$workDir/ref_select")
-      reclaimDirs("var_sort", s"$workDir/var_sort")
-    } else reclaimDirs("var_sort", s"$workDir/var_sort")
+    // reads it), so both settle here
+    settle("ref_select", s"$workDir/ref_select")
+    settle("var_sort", s"$workDir/var_sort")
 
     // ---- 4. indirect read (10 iterations, path-list inputs) -------
     family("indirect_read") {
       val base = s"$workDir/indirect/base"
-      Generate.randomKv(spark, textRows,
+      Generate.randomKv(spark, rows.text,
         keyMinWords = 5, keyMaxWords = 5,
         valueMinWords = 20, valueMaxWords = 20,
-        vocab = 2000, seed = seed + 2, skewed = true,
+        vocab = 2000, seed = Seed + 2, skewed = true,
         numPartitions = parts, portable = false)
         .withColumn("slice", pmod(col("id"), lit(10L)))
         .select(col("k"), col("v"), col("slice"))
@@ -349,14 +363,14 @@ object Soak {
       require(lastRows > 0, "indirect_read: empty final iteration")
       lastRows
     }
-    reclaimDirs("indirect_read", s"$workDir/indirect")
+    settle("indirect_read", s"$workDir/indirect")
 
     // ---- 5. API text sort (DataFrame / SQL / external pipe) -------
     family("api_sort") {
-      val text = Generate.randomKv(spark, textRows,
+      val text = Generate.randomKv(spark, rows.text,
         keyMinWords = 1, keyMaxWords = 10,
         valueMinWords = 0, valueMaxWords = 200,
-        vocab = 5000, seed = seed + 3, skewed = false,
+        vocab = 5000, seed = Seed + 3, skewed = false,
         numPartitions = parts, portable = false)
         .select(col("k"), col("v"))
       val dfDst = s"$workDir/api_sort/df"
@@ -383,9 +397,9 @@ object Soak {
       val nDf = readBack(dfDst).count()
       val nSql = readBack(sqlDst).count()
       val nPipe = readBack(pipeDst).count()
-      require(nDf == textRows && nSql == textRows && nPipe == textRows,
+      require(Seq(nDf, nSql, nPipe).forall(_ == rows.text),
         s"api_sort: row counts diverged df=$nDf sql=$nSql pipe=$nPipe " +
-          s"expected=$textRows")
+          s"expected=${rows.text}")
       // validate the PLANS (see var_sort: read-back reorders files)
       val (okDf, _) = graft.operators.Sorting.validateSorted(
         dfSorted, Seq("k"))
@@ -395,7 +409,7 @@ object Soak {
         s"api_sort: sort validation failed df=$okDf pipe=$okPipe")
       nDf
     }
-    reclaimDirs("api_sort", s"$workDir/api_sort")
+    settle("api_sort", s"$workDir/api_sort")
 
     // ---- 6. combiner (gridmix2's wordcount-with-combiner class) ---
     // the high map-output-ratio family: every value explodes into
@@ -403,10 +417,10 @@ object Soak {
     // map-side combine is what keeps the exchange survivable — the
     // gridmix2 job this models exists to punish engines without one
     family("combiner") {
-      val corpus = Generate.randomKv(spark, textRows,
+      val corpus = Generate.randomKv(spark, rows.text,
         keyMinWords = 1, keyMaxWords = 3,
         valueMinWords = 5, valueMaxWords = 60,
-        vocab = 3000, seed = seed + 4, skewed = true,
+        vocab = 3000, seed = Seed + 4, skewed = true,
         numPartitions = parts, portable = false)
         .select(col("k"), col("v"))
       val dst = s"$workDir/combiner/out"
@@ -428,7 +442,7 @@ object Soak {
         s"combiner: histogram mass $total != corpus token count $expect")
       readBack(dst).count()
     }
-    reclaimDirs("combiner", s"$workDir/combiner")
+    settle("combiner", s"$workDir/combiner")
 
     out.toSeq
   }
@@ -441,60 +455,43 @@ object Soak {
     * stage scheduling, shared block-manager/shuffle pressure, and
     * catalog contention (the SQL leg's temp view is made
     * thread-unique). The ref_select family consumes var_sort's
-    * output, so those two stay a sequential chain inside one thread;
-    * the other families race freely. On a cluster the same shape
-    * runs under FAIR scheduler pools; locally FIFO interleaves at
-    * stage granularity, which is the contention we want.
+    * output, so those two stay a sequential chain inside one lane;
+    * the other families race freely. Each lane sets its scheduler
+    * pool, which takes effect on a FAIR session
+    * ([[fairSchedulerConfs]]) as [[soak]] runs it; under FIFO the
+    * lanes interleave at stage granularity.
     *
-    * Returns the same per-family splits (their wall clocks now
+    * Returns the same per-family results (their wall clocks now
     * overlap — total wall < the sum is the point).
     */
-  def runConcurrent(spark: SparkSession, workDir: String, fixRows: Long,
-                    varRows: Long, textRows: Long, parts: Int,
-                    seed: Long = 42L,
-                    reclaim: Boolean = false): Seq[(String, FamilyResult)] = {
+  def runConcurrent(spark: SparkSession, workDir: String, scale: Double,
+                    reclaim: Boolean = true): Seq[(String, FamilyResult)] = {
     import java.util.concurrent.{Executors, TimeUnit}
-    val pool = Executors.newFixedThreadPool(5)
+    // each lane is an independent runFamilies cut down to its families
+    // under a distinct sub-workdir (artifacts are named per family, so
+    // lanes never collide on paths)
+    val lanes = Seq("pipe" -> Set("three_stage"),
+      "sort" -> Set("var_sort", "ref_select"),
+      "ind" -> Set("indirect_read"), "api" -> Set("api_sort"),
+      "comb" -> Set("combiner"))
+    val pool = Executors.newFixedThreadPool(lanes.size)
     val results =
       new java.util.concurrent.ConcurrentLinkedQueue[(String, FamilyResult)]()
     val failures =
       new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    // each lane is an independent run() cut down to its families via
-    // a distinct sub-workdir (run() names artifacts per family, so
-    // lanes never collide on paths)
-    def submit(lane: String)(body: => Seq[(String, FamilyResult)]): Unit =
+    lanes.foreach { case (lane, families) =>
       pool.execute { () =>
-        // lane → scheduler pool (effective only when the session was
-        // created with spark.scheduler.mode=FAIR; a no-op under the
-        // FIFO default): api_sort is the saturating bulk lane — the
-        // reference's "large job" — and every other family shares
-        // the weighted short pool, so none of them can be starved
-        // behind api_sort's long task queue (the contrib
+        // lane → scheduler pool: api_sort is the saturating bulk lane
+        // — the reference's "large job" — and every other family
+        // shares the weighted short pool, so none of them can be
+        // starved behind api_sort's long task queue (the contrib
         // fair-scheduler guarantee, as Spark configuration)
         spark.sparkContext.setLocalProperty("spark.scheduler.pool",
           if (lane == "api") "bulk" else "short")
-        try body.foreach(results.add)
+        try runFamilies(spark, s"$workDir/lane_$lane", rows(scale),
+          families, reclaim).foreach(results.add)
         catch { case t: Throwable => failures.add(t) }
       }
-    submit("pipeline") {
-      runFamilies(spark, s"$workDir/lane_pipe", fixRows, varRows,
-        textRows, parts, seed, Set("three_stage"), reclaim)
-    }
-    submit("sorts") {
-      runFamilies(spark, s"$workDir/lane_sort", fixRows, varRows,
-        textRows, parts, seed, Set("var_sort", "ref_select"), reclaim)
-    }
-    submit("indirect") {
-      runFamilies(spark, s"$workDir/lane_ind", fixRows, varRows,
-        textRows, parts, seed, Set("indirect_read"), reclaim)
-    }
-    submit("api") {
-      runFamilies(spark, s"$workDir/lane_api", fixRows, varRows,
-        textRows, parts, seed, Set("api_sort"), reclaim)
-    }
-    submit("combiner") {
-      runFamilies(spark, s"$workDir/lane_comb", fixRows, varRows,
-        textRows, parts, seed, Set("combiner"), reclaim)
     }
     pool.shutdown()
     // awaitTermination returning false means lanes are STILL RUNNING
@@ -510,6 +507,47 @@ object Soak {
     if (!failures.isEmpty) throw failures.peek()
     import scala.jdk.CollectionConverters._
     results.asScala.toSeq.sortBy(_._1)
+  }
+
+  /** The soak as `main` runs it: the sequential leg, then the
+    * concurrent leg, each in its own subdirectory of a fresh work dir
+    * that is swept afterwards. Throws unless every family returned
+    * the same rows under both schedules (generation and keeps are
+    * deterministic). Run it on a FAIR session ([[fairSchedulerConfs]])
+    * for the concurrent lanes' pools to apply; the sequential leg
+    * sets no pool, so FAIR leaves it as FIFO would.
+    */
+  def soak(spark: SparkSession, scale: Double): (Leg, Leg) =
+    withWorkDir { dir =>
+      def leg(body: => Seq[(String, FamilyResult)]): Leg = {
+        val t0 = System.nanoTime()
+        val families = body
+        Leg((System.nanoTime() - t0) / 1e9, families)
+      }
+      val sequential = leg(run(spark, s"$dir/sequential", scale))
+      val concurrent = leg(runConcurrent(spark, s"$dir/concurrent", scale))
+      checkLegs(sequential, concurrent)
+      (sequential, concurrent)
+    }
+
+  /** Throws unless both legs ran the same families to the same rows. */
+  private[graft] def checkLegs(sequential: Leg, concurrent: Leg): Unit = {
+    def rowsOf(l: Leg) = l.families.map { case (n, r) => n -> r.rows }.toMap
+    if (rowsOf(sequential) != rowsOf(concurrent))
+      throw new IllegalStateException("soak: family rows differ across " +
+        s"schedules: sequential ${rowsOf(sequential)}, " +
+        s"concurrent ${rowsOf(concurrent)}")
+  }
+
+  /** Runs `body` in a fresh `graft-soak*` directory under
+    * `java.io.tmpdir` and deletes it afterwards (or at JVM exit, if
+    * the run is killed): the soak only ever deletes what it created.
+    * A big run points `-Djava.io.tmpdir` at a large disk.
+    */
+  private[graft] def withWorkDir[T](body: java.io.File => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-soak").toFile
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Replay.rmTree(dir)))
+    try body(dir) finally Replay.rmTree(dir)
   }
 
   /** Two weighted scheduler pools — the Spark-configuration form of
@@ -599,79 +637,47 @@ object Soak {
     * pair. Task count scales with cores so the bulk queue outlives
     * the probe's 1 s head start at any local[N].
     */
-  private def schedulerMain(cpus: Int): Unit = {
-    val bulkTasks = cpus * 24
+  private def schedulerMain(): Unit = {
+    val bulkTasks = Graft.cpus * 24
     def leg(label: String, confs: Map[String, String]): (Double, Double) = {
-      val s = Graft.session(master = s"local[$cpus]",
-        shufflePartitions = cpus, appName = s"graft-sched-$label",
-        extraConfs = confs)
+      val s = Graft.querySession(s"graft-sched-$label", confs)
       try schedulerProbe(s, bulkTasks = bulkTasks) finally s.stop()
     }
     val (fifoShort, fifoBulk) = leg("fifo", Map.empty)
     val (fairShort, fairBulk) = leg("fair", fairSchedulerConfs())
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    println(s"""{"probe":"scheduler","cpus":$cpus,""" +
+    println(s"""{"probe":"scheduler","cpus":${Graft.cpus},""" +
       s""""bulk_tasks":$bulkTasks,""" +
-      s""""fifo_short_latency_s":${fmt(fifoShort)},""" +
-      s""""fair_short_latency_s":${fmt(fairShort)},""" +
-      s""""fifo_bulk_s":${fmt(fifoBulk)},"fair_bulk_s":${fmt(fairBulk)}}""")
+      s""""fifo_short_latency_s":${fmt(fifoShort, 3)},""" +
+      s""""fair_short_latency_s":${fmt(fairShort, 3)},""" +
+      s""""fifo_bulk_s":${fmt(fifoBulk, 3)},""" +
+      s""""fair_bulk_s":${fmt(fairBulk, 3)}}""")
   }
 
-  /** Runs the soak (or, with `--scheduler`, [[schedulerMain]]) and
-    * prints one JSON line: total wall, per-family seconds/rows/heap.
-    * Env dials: `SPARK_GRAFT_CPUS` (cores and partitions, default 32),
-    * `SPARK_GRAFT_SOAK_FIX_ROWS` / `_VAR_ROWS` / `_TEXT_ROWS` (family
-    * input sizes), `SPARK_GRAFT_SOAK_DIR` (work dir),
-    * `SPARK_GRAFT_SOAK_CONCURRENT` (non-empty = simultaneous-submission
-    * mode), `SPARK_GRAFT_SOAK_FAIR` (non-empty = the concurrent soak
-    * under FAIR pools) and `SPARK_GRAFT_SOAK_RECLAIM` (non-empty =
-    * reclaim each family's data as it finishes).
+  private def fmt(v: Double, places: Int): String =
+    BigDecimal(v).setScale(places, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** Runs [[soak]] (or, with `--scheduler`, [[schedulerMain]]) on a
+    * FAIR session of `local[SPARK_GRAFT_CPUS]` and prints one JSON
+    * line: the corpus sizes, then per leg its wall and per family its
+    * seconds, rows, used heap and written MB. `SPARK_GRAFT_SOAK_SCALE`
+    * (default 1) multiplies the corpus sizes.
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    if (args.contains("--scheduler")) { schedulerMain(cpus); return }
-    val fixRows = sys.env.getOrElse("SPARK_GRAFT_SOAK_FIX_ROWS",
-      "2000000").toLong
-    val varRows = sys.env.getOrElse("SPARK_GRAFT_SOAK_VAR_ROWS",
-      "300000").toLong
-    val textRows = sys.env.getOrElse("SPARK_GRAFT_SOAK_TEXT_ROWS",
-      "1000000").toLong
-    val workDir = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR",
-      "/tmp/graft_soak")
-    val dir = new java.io.File(workDir)
-    if (dir.exists()) Replay.rmTree(dir)
-    // SPARK_GRAFT_SOAK_FAIR: run the concurrent soak under the FAIR
-    // scheduler with the two weighted pools (api_sort -> bulk,
-    // everything else -> short) instead of the FIFO default
-    val fair = sys.env.get("SPARK_GRAFT_SOAK_FAIR").exists(_.nonEmpty)
-    val spark = Graft.session(master = s"local[$cpus]",
-      shufflePartitions = cpus, appName = "graft-soak",
-      extraConfs = if (fair) fairSchedulerConfs() else Map.empty)
-    val concurrent = sys.env.get("SPARK_GRAFT_SOAK_CONCURRENT")
-      .exists(_.nonEmpty)
-    val reclaim = sys.env.get("SPARK_GRAFT_SOAK_RECLAIM")
-      .exists(_.nonEmpty)
-    val t0 = System.nanoTime()
-    val results =
-      if (concurrent) runConcurrent(spark, workDir, fixRows, varRows,
-        textRows, parts = cpus, reclaim = reclaim)
-      else run(spark, workDir, fixRows, varRows, textRows, parts = cpus,
-        reclaim = reclaim)
-    val total = (System.nanoTime() - t0) / 1e9
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val fams = results.map { case (n, r) =>
-      s""""$n":{"sec":${fmt(r.seconds)},"rows":${r.rows},""" +
-        s""""used_heap_mb":${r.usedHeapMb}""" +
-        (if (r.outBytes >= 0) s""","out_mb":${r.outBytes >> 20}}"""
-         else "}")
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"soak_total","value":${fmt(total)},""" +
-      s""""unit":"sec","mode":"${if (concurrent) "concurrent"
-        else "sequential"}","scheduler":"${if (fair) "fair"
-        else "fifo"}","families":$fams,"fix_rows":$fixRows,""" +
-      s""""var_rows":$varRows,"text_rows":$textRows}""")
-    spark.stop()
+    if (args.contains("--scheduler")) { schedulerMain(); return }
+    val scale = sys.env.get("SPARK_GRAFT_SOAK_SCALE").fold(1.0)(_.toDouble)
+    val spark = Graft.querySession("graft-soak", fairSchedulerConfs())
+    try {
+      val (sequential, concurrent) = soak(spark, scale)
+      def json(l: Leg): String = l.families.map { case (n, r) =>
+        s""""$n":{"sec":${fmt(r.seconds, 2)},"rows":${r.rows},""" +
+          s""""used_heap_mb":${r.usedHeapMb},""" +
+          s""""out_mb":${fmt(r.outBytes / 1048576.0, 3)}}"""
+      }.mkString(s"""{"sec":${fmt(l.seconds, 2)},"families":{""", ",", "}}")
+      val r = rows(scale)
+      println(s"""{"metric":"soak","scale":$scale,"fix_rows":${r.fixed},""" +
+        s""""var_rows":${r.variable},"text_rows":${r.text},""" +
+        s""""sequential":${json(sequential)},""" +
+        s""""concurrent":${json(concurrent)}}""")
+    } finally spark.stop()
   }
 }

@@ -211,16 +211,9 @@ object Advisor {
       qe.executedPlan.execute().foreachPartition(
         (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
           it.foreach(_ => ()))
-      // listener delivery is asynchronous; wait for a quiet period
-      // (no new task events) before reading the stats
-      var last = -1
-      var quiet = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (quiet < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val n = buf.size
-        if (n == last) quiet += 1 else { quiet = 0; last = n }
-      }
+      // every task end is posted before the action returns; wait for
+      // the asynchronous bus to hand them all to the listener
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     val fs = findings(qe.executedPlan, buf.asScala.toSeq,

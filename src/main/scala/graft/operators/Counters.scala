@@ -1,79 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.sql.execution.QueryExecution
-
-import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** Job counters (reference: src/mapred/org/apache/hadoop/mapred/
   * Counters.java:53,135,370 — named counters aggregated from tasks,
   * the engine's only global-aggregate side channel).
   *
   * Spark-native form: `Dataset.observe` metrics — aggregated on the
-  * fly during the job with no extra pass, delivered via listener.
-  * Use for row counts / quarantine counts / bytes tallies alongside
-  * the main result, exactly what MR counters were for.
+  * fly during the job with no extra pass. Use for row counts /
+  * quarantine counts / bytes tallies alongside the main result,
+  * exactly what MR counters were for.
   */
 object Counters {
 
-  // per-session metric rows, WEAKLY keyed by the session object:
-  // reference equality makes cross-session collision impossible
-  // (identity hashes are not unique across object lifetimes, so a
-  // string key derived from one could alias a dead session's rows),
-  // and a stopped, unreferenced session's entries evaporate with it
-  // instead of accumulating across session churn. Within ONE
-  // session, concurrent queries sharing a name still last-write-win
-  // — scope names per job there.
-  private val results = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession, TrieMap[String, Row]]
-
-  private def sessionRows(
-      s: org.apache.spark.sql.SparkSession): TrieMap[String, Row] =
-    results.synchronized {
-      var m = results.get(s)
-      if (m == null) { m = TrieMap.empty[String, Row]; results.put(s, m) }
-      m
-    }
-
-  /** Attach named observed metrics to a DataFrame. Metrics surface in
-    * [[lastObserved]] after an action completes.
+  /** Attach named observed metrics to a DataFrame. Returns the frame
+    * and its `Observation`, whose `get` blocks until the first
+    * action on that frame has finished and then holds that action's
+    * metrics: each call gets its own, whatever the name.
     */
-  def observed(df: DataFrame, name: String, metrics: (String, Column)*): DataFrame = {
-    val spark = df.sparkSession
-    // single lock: WeakHashMap-backed sets are not thread-safe, so
-    // even the fast-path check must be inside the synchronized
-    registered.synchronized {
-      if (!registered.contains(spark)) {
-        spark.listenerManager.register(listener)
-        registered.add(spark)
-      }
-    }
+  def observed(df: DataFrame, name: String,
+               metrics: (String, Column)*): (DataFrame, Observation) = {
+    val obs = Observation(name)
     val cols = metrics.map { case (n, c) => c.as(n) }
-    df.observe(name, cols.head, cols.tail: _*)
+    (df.observe(obs, cols.head, cols.tail: _*), obs)
   }
-
-  // weak too: a strong registration set would pin every session ever
-  // observed, defeating the weak results map's eviction
-  private val registered = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean])
-
-  private val listener = new QueryExecutionListener {
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      val rows = sessionRows(qe.sparkSession)
-      qe.observedMetrics.foreach { case (name, row) => rows(name) = row }
-    }
-    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-  }
-
-  /** The most recent observed metrics row for `name`, if any action
-    * has completed. (Listener delivery is asynchronous — tests call
-    * `spark.sparkContext.listenerBus.waitUntilEmpty()` equivalent via
-    * polling.)
-    */
-  def lastObserved(spark: org.apache.spark.sql.SparkSession,
-                   name: String): Option[Row] =
-    results.synchronized { Option(results.get(spark)) }
-      .flatMap(_.get(name))
 }

@@ -269,23 +269,15 @@ object CatalogQueries {
     // back after the action and emitted as rows; the oracle
     // recomputes both counts declaratively
     Query("q_counters", (s, dir) => {
-      val name = "graft.q_counters"
-      val obs = Counters.observed(
-        t(s, dir, "documents").select(col("lang")), name,
+      val (obs, counters) = Counters.observed(
+        t(s, dir, "documents").select(col("lang")), "graft.q_counters",
         "records" -> count(lit(1)),
         "english" -> count(when(col("lang") === "en", lit(1))))
       obs.write.format("noop").mode("overwrite").save()
-      // listener delivery is async — poll (bounded) like the specs do
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var row = Counters.lastObserved(s, name)
-      while (row.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(20); row = Counters.lastObserved(s, name)
-      }
-      val r = row.getOrElse(
-        sys.error("q_counters: observed metrics never delivered"))
+      val r = counters.get
       import s.implicits._
-      Seq(("english", r.getAs[Long]("english")),
-        ("records", r.getAs[Long]("records"))).toDF("counter", "value")
+      Seq("english", "records").map(c => (c, r(c).asInstanceOf[Long]))
+        .toDF("counter", "value")
     },
       // q_counters: both observe counters recomputed declaratively
       """SELECT 'english' AS counter,

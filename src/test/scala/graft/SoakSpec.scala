@@ -1,26 +1,26 @@
 package graft
 
-/** Pins the gridmix-style soak harness at miniature scale: all five
-  * job families run end-to-end in sequence, every family's internal
-  * validation (row counts, sort validators, non-empty stages) holds,
-  * and the result shape is stable. The measured run is `graft.Soak`
-  * at the SCALE.md dials; this spec keeps the harness itself from
-  * rotting between measured rounds.
+/** Pins the gridmix-style soak harness at miniature scale: all six
+  * job families run end-to-end under both schedules, every family's
+  * internal validation (row counts, sort validators, non-empty
+  * stages) holds, and the result shape is stable. The measured run is
+  * `graft.Soak` at the SCALE.md scales; this spec keeps the harness
+  * itself from rotting between measured rounds.
   */
 class SoakSpec extends SparkSpec {
 
   test("all six gridmix families run and validate at miniature scale") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-soak").toString
-    val got = Soak.run(spark, dir, fixRows = 4000, varRows = 1500,
-      textRows = 3000, parts = 4)
+    val dir = java.nio.file.Files.createTempDirectory("soak-all").toString
+    // scale 0.002: 4000 fixed-width, 600 variable-width, 2000 text rows
+    val got = Soak.run(spark, dir, scale = 0.002)
     assert(got.map(_._1) == Seq("three_stage", "var_sort", "ref_select",
       "indirect_read", "api_sort", "combiner"))
     val byName = got.toMap
     // three_stage funnels: 10% of 4000 keys, then two keep-stages
     val ts = byName("three_stage").rows
     assert(ts > 0 && ts < 400, s"three_stage rows $ts")
-    assert(byName("var_sort").rows == 1500)
-    assert(byName("api_sort").rows == 3000)
+    assert(byName("var_sort").rows == 600)
+    assert(byName("api_sort").rows == 2000)
     assert(byName("indirect_read").rows > 0)
     assert(byName("combiner").rows > 0)
     got.foreach { case (n, r) =>
@@ -28,29 +28,61 @@ class SoakSpec extends SparkSpec {
     }
   }
 
+  private def soakDirs(): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+      .map(_.getName).filter(_.startsWith("graft-soak")).toSet
+
   test("concurrent submission mode runs all six families and matches " +
       "the sequential results row-for-row") {
-    val seqDir = java.nio.file.Files.createTempDirectory("soak-seq").toString
-    val conDir = java.nio.file.Files.createTempDirectory("soak-con").toString
-    val s = Soak.run(spark, seqDir, fixRows = 3000, varRows = 1000,
-      textRows = 2000, parts = 4)
-    val c = Soak.runConcurrent(spark, conDir, fixRows = 3000,
-      varRows = 1000, textRows = 2000, parts = 4)
-    assert(c.map(_._1).sorted == s.map(_._1).sorted)
+    val existing = soakDirs()
+    // both legs, as graft.Soak runs them, on the spec's session
+    val (s, c) = Soak.soak(spark, scale = 0.0015)
+    assert(s.families.map(_._1) == Seq("three_stage", "var_sort",
+      "ref_select", "indirect_read", "api_sort", "combiner"))
+    assert(c.families.map(_._1).sorted == s.families.map(_._1).sorted)
     // deterministic generation + residue keeps: identical row counts
     // whichever way the jobs were scheduled
-    val sm = s.toMap; val cm = c.toMap
+    val sm = s.families.toMap; val cm = c.families.toMap
     sm.keys.foreach { k =>
       assert(cm(k).rows == sm(k).rows,
         s"$k: concurrent ${cm(k).rows} != sequential ${sm(k).rows}")
     }
+    assert(s.seconds > 0 && c.seconds > 0)
+    assert(soakDirs() == existing, "the soak left its work dir behind")
+  }
+
+  test("the soak's work dir is one it created: a pre-existing " +
+      "directory is never deleted") {
+    // a directory that looks like the soak's own, made beforehand
+    val before = java.nio.file.Files.createTempDirectory("graft-soak")
+    val marker = java.nio.file.Files.writeString(before.resolve("keep"), "x")
+    var used: java.io.File = null
+    var fresh = false
+    intercept[java.io.IOException](Soak.withWorkDir { d =>
+      used = d; fresh = d.isDirectory && d.list().isEmpty
+      java.nio.file.Files.writeString(d.toPath.resolve("artifact"), "y")
+      throw new java.io.IOException("family failed")
+    })
+    assert(fresh && used.toPath != before)
+    assert(used.getParent == before.getParent.toString)
+    assert(!used.exists(), "a failed run left its work dir behind")
+    assert(java.nio.file.Files.exists(marker), "a pre-existing dir was touched")
+    Replay.rmTree(before.toFile)
+  }
+
+  test("the cross-leg check throws when a family's rows differ") {
+    def leg(rows: Long*) = Soak.Leg(1.0, rows.zipWithIndex.map {
+      case (n, i) => s"f$i" -> Soak.FamilyResult(1.0, n, 1L, 1L) })
+    Soak.checkLegs(leg(5, 7), leg(5, 7))
+    intercept[IllegalStateException](Soak.checkLegs(leg(5, 7), leg(5, 8)))
+    intercept[IllegalStateException](Soak.checkLegs(leg(5, 7), leg(5)))
   }
 
   test("indirectChain (the graded algebra) equals the soak's " +
       "file-based indirect_read family row-for-row") {
     val dir = java.nio.file.Files.createTempDirectory("soak-ind").toString
-    Soak.run(spark, dir, fixRows = 2000, varRows = 800,
-      textRows = 2500, parts = 4)
+    // scale 0.0025: 2500 text rows; artifacts kept for the witness
+    Soak.run(spark, dir, scale = 0.0025, reclaim = false)
     // regenerate family 4's corpus (content is partitioning-
     // independent, so parts needn't match) and run the algebra twin
     val kv = sources.Generate.randomKv(spark, 2500,
@@ -144,10 +176,9 @@ class SoakSpec extends SparkSpec {
       "out_mb credited") {
     val dir = java.nio.file.Files.createTempDirectory("soak-rec").toString
     val plain = Soak.run(spark, java.nio.file.Files
-      .createTempDirectory("soak-pl").toString, fixRows = 3000,
-      varRows = 1000, textRows = 2000, parts = 4)
-    val rec = Soak.run(spark, dir, fixRows = 3000, varRows = 1000,
-      textRows = 2000, parts = 4, reclaim = true)
+      .createTempDirectory("soak-pl").toString, scale = 0.0015,
+      reclaim = false)
+    val rec = Soak.run(spark, dir, scale = 0.0015)
     val pm = plain.toMap; val rm = rec.toMap
     pm.keys.foreach(k => assert(rm(k).rows == pm(k).rows,
       s"$k rows moved under reclaim"))
@@ -158,7 +189,5 @@ class SoakSpec extends SparkSpec {
     }
     rm.values.foreach(r => assert(r.outBytes >= 0))
     assert(rm.values.map(_.outBytes).sum > 0)
-    // the unreclaimed run reports no volume (sentinel)
-    pm.values.foreach(r => assert(r.outBytes == -1L))
   }
 }

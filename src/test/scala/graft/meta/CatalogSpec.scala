@@ -185,37 +185,35 @@ class CountersSpec extends SparkSpec {
   import spark.implicits._
 
   test("observed metrics aggregate during the job") {
-    val df = Seq(1, 2, 3, 4).toDF("n")
-    val obs = Counters.observed(df, "counters_test",
-      "rows" -> count(lit(1)), "total" -> sum($"n"))
+    val (obs, counters) = Counters.observed(Seq(1, 2, 3, 4).toDF("n"),
+      "counters_test", "rows" -> count(lit(1)), "total" -> sum($"n"))
     obs.collect()
-    // listener delivery is async; poll briefly
-    var r: Option[org.apache.spark.sql.Row] = None
-    val deadline = System.currentTimeMillis() + 10000
-    while (r.isEmpty && System.currentTimeMillis() < deadline) {
-      r = Counters.lastObserved(spark, "counters_test")
-      if (r.isEmpty) Thread.sleep(100)
+    assert(counters.get == Map("rows" -> 4L, "total" -> 10L))
+  }
+
+  test("two runs under one name in one session each read their own " +
+      "counts") {
+    def run(ns: Seq[Int]): Map[String, Any] = {
+      val (obs, counters) = Counters.observed(ns.toDF("n"),
+        "counters_rerun", "rows" -> count(lit(1)), "total" -> sum($"n"))
+      obs.collect()
+      counters.get
     }
-    assert(r.isDefined)
-    assert(r.get.getLong(0) == 4L && r.get.getLong(1) == 10L)
+    assert(run(Seq(1, 2, 3, 4)) == Map("rows" -> 4L, "total" -> 10L))
+    assert(run(Seq(10, 20)) == Map("rows" -> 2L, "total" -> 30L))
   }
 
   test("sessions are isolated: a clone's metrics never leak across") {
-    // the results map is weakly keyed BY SESSION OBJECT — two
-    // sessions using the same metric name must read their own rows
+    // two sessions observing the same metric name read their own rows
     val s2 = spark.newSession()
+    val (base, baseCounters) = Counters.observed(Seq(1, 2, 3).toDF("n"),
+      "counters_iso", "rows" -> count(lit(1)))
     import s2.implicits._
-    val obs2 = Counters.observed(Seq(7, 8).toDF("n"), "counters_iso",
-      "rows" -> count(lit(1)))
+    val (obs2, counters2) = Counters.observed(Seq(7, 8).toDF("n"),
+      "counters_iso", "rows" -> count(lit(1)))
     obs2.collect()
-    var r2: Option[org.apache.spark.sql.Row] = None
-    val deadline = System.currentTimeMillis() + 10000
-    while (r2.isEmpty && System.currentTimeMillis() < deadline) {
-      r2 = Counters.lastObserved(s2, "counters_iso")
-      if (r2.isEmpty) Thread.sleep(100)
-    }
-    assert(r2.isDefined && r2.get.getLong(0) == 2L)
-    // the base session never observed this name
-    assert(Counters.lastObserved(spark, "counters_iso").isEmpty)
+    base.collect()
+    assert(counters2.get == Map("rows" -> 2L))
+    assert(baseCounters.get == Map("rows" -> 3L))
   }
 }
