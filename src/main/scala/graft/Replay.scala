@@ -142,15 +142,16 @@ private[graft] object Replay {
     finally SparkEntry.replayWriteNanos.addAndGet(System.nanoTime() - t0)
   }
 
-  /** Scratch dir for a write-then-read artifact: stable per (slot,
-    * tag), so a re-run overwrites it and a later reader in the slot
-    * (Bench's zorder stats) finds it.
+  /** Scratch dir for a write-then-read artifact: a fresh temp dir the
+    * first time a (slot, tag) asks, the same dir after, so a re-run
+    * overwrites it and a later reader in the slot (Bench's zorder
+    * stats) finds it. A temp dir, not a name derived from the slot,
+    * because two JVMs can share a slot name.
     */
   def scratchDir(s: SparkSession, tag: String): String = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-$tag-${slot(s)}").toFile
-    track(p.toString, p)
-    p.toString
+    sweepAtExit
+    live.computeIfAbsent(s"scratch $tag ${slot(s)}",
+      _ => Files.createTempDirectory(s"graft-$tag").toFile).toString
   }
 
   def rmTree(f: File): Unit = {

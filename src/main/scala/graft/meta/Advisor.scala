@@ -3,7 +3,7 @@ package graft.meta
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec,
-  InputAdapter, ProjectExec, ReusedSubqueryExec, SparkPlan,
+  InputAdapter, ProjectExec, SparkPlan,
   WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
@@ -157,18 +157,24 @@ object Advisor {
     Finding(rule, severity(impact),
       math.rint(impact * 100) / 100, evidence, prescription)
 
+  /** A node's children through the AQE / query-stage wrappers. A
+    * reused exchange leads to the plan it reuses only with
+    * `followReuse`: that plan ran once, for all its consumers. (A
+    * reused subquery is a leaf either way.)
+    */
+  private def children(p: SparkPlan, followReuse: Boolean): Seq[SparkPlan] =
+    p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => if (followReuse) Seq(r.child) else Nil
+      case _ => p.children
+    }
+
   /** Flatten an executed plan through AQE / query-stage / codegen
     * wrappers (and into subqueries) so rules see every operator.
     */
-  private[graft] def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case _ => p.children
-    }
-    p +: (kids ++ p.subqueries).flatMap(flatten)
-  }
+  private[graft] def flatten(p: SparkPlan, followReuse: Boolean = true): Seq[SparkPlan] =
+    p +: (children(p, followReuse) ++ p.subqueries).flatMap(flatten(_, followReuse))
 
   /** Node metric by its SQLMetric map key (numOutputRows, numFiles,
     * filesSize, spillSize, dataSize, shuffleBytesWritten, ...).
@@ -415,21 +421,7 @@ object Advisor {
     // the child plan there is the reused instance, which executed
     // once — descending through a reused subquery would double-count
     // its scan and flag a plan whose subquery ran exactly once.
-    def noReuseFlatten(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _: ReusedExchangeExec => Seq.empty
-        case _: ReusedSubqueryExec => Seq.empty
-        case _ => p.children
-      }
-      val subs = p match {
-        case _: ReusedSubqueryExec => Seq.empty
-        case _ => p.subqueries
-      }
-      p +: (kids ++ subs).flatMap(noReuseFlatten)
-    }
-    val executedScans = noReuseFlatten(plan).collect {
+    val executedScans = flatten(plan, followReuse = false).collect {
       case f: FileSourceScanExec => f
     }
     // key on location + pushed filters, NOT read schema: the defect
@@ -491,15 +483,7 @@ object Advisor {
     // aggregate. A subtree max would let a big scan below a reducing
     // filter/join inflate the estimate into false positives.
     def nearestRows(n: SparkPlan): Long = metric(n, "numOutputRows")
-      .getOrElse {
-        val kids = n match {
-          case aq: AdaptiveSparkPlanExec => Seq(aq.executedPlan)
-          case q: QueryStageExec => Seq(q.plan)
-          case r: ReusedExchangeExec => Seq(r.child)
-          case _ => n.children
-        }
-        kids.map(nearestRows).sum
-      }
+      .getOrElse(children(n, followReuse = true).map(nearestRows).sum)
     val objAggEst = nodes.collect { case a: ObjectHashAggregateExec =>
       val groups = metric(a, "numOutputRows").getOrElse(0L)
       val inRows = a.children.map(nearestRows).sum

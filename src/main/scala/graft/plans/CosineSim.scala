@@ -58,61 +58,16 @@ case class CosineSim(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    // composable-form parity: zip_with over mismatched lengths pads
-    // with null and the sum nulls out — so do we; same for null
-    // elements
-    if (a.numElements() != b.numElements()) return null
-    val aD = elemIsDouble(left); val bD = elemIsDouble(right)
-    val n = a.numElements()
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (aD) a.getDouble(i) else a.getFloat(i).toDouble
-      val y = if (bD) b.getDouble(i) else b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na * nb)
-    // zero-norm guard: 0/0 would be NaN, and Spark's double ordering
-    // ranks NaN ABOVE every value — a zero vector (padding / failed
-    // embedding) would win every top-k and pass every >= threshold
-    // filter. Cosine with a zero vector is "no similarity": 0.0.
-    if (denom == 0.0) 0.0 else dot / denom
+    val v = CosineSim.cosine(a, b, elemIsDouble(left), elemIsDouble(right))
+    if (java.lang.Double.isNaN(v) && CosineSim.isNull(a, b)) null else v
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val getA = if (elemIsDouble(left)) s"$a.getDouble($i)"
-                 else s"(double) $a.getFloat($i)"
-      val getB = if (elemIsDouble(right)) s"$b.getDouble($i)"
-                 else s"(double) $b.getFloat($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $x = $getA;
-         |    double $y = $getB;
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if (!${ev.isNull}) {
-         |    double ${dot}_den = java.lang.Math.sqrt($na * $nb);
-         |    ${ev.value} = ${dot}_den == 0.0 ? 0.0 : $dot / ${dot}_den;
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      ${ev.value} = graft.plans.CosineSim$$.MODULE$$.cosine(
+        $a, $b, ${elemIsDouble(left)}, ${elemIsDouble(right)});
+      ${ev.isNull} = java.lang.Double.isNaN(${ev.value})
+        && graft.plans.CosineSim$$.MODULE$$.isNull($a, $b);""")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
@@ -124,4 +79,39 @@ object CosineSim {
   def apply(a: Column, b: Column): Column =
     GraftColumnBridge.column(
       CosineSim(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+
+  /** The kernel, for eval and generated code alike. A null result
+    * comes back as NaN, which a NaN element also yields: [[isNull]]
+    * tells the two apart, and runs only on a NaN.
+    */
+  def cosine(a: ArrayData, b: ArrayData, aDouble: Boolean,
+             bDouble: Boolean): Double = {
+    // composable-form parity: zip_with over mismatched lengths pads
+    // with null and the sum nulls out — so do we; same for null
+    // elements
+    if (a.numElements() != b.numElements()) return Double.NaN
+    val n = a.numElements()
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return Double.NaN
+      val x = if (aDouble) a.getDouble(i) else a.getFloat(i).toDouble
+      val y = if (bDouble) b.getDouble(i) else b.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val denom = math.sqrt(na * nb)
+    // zero-norm guard: 0/0 would be NaN, and Spark's double ordering
+    // ranks NaN ABOVE every value — a zero vector (padding / failed
+    // embedding) would win every top-k and pass every >= threshold
+    // filter. Cosine with a zero vector is "no similarity": 0.0.
+    if (denom == 0.0) 0.0 else dot / denom
+  }
+
+  /** Whether the cosine of `a` and `b` is null: mismatched lengths or
+    * a null element on either side.
+    */
+  def isNull(a: ArrayData, b: ArrayData): Boolean =
+    a.numElements() != b.numElements() ||
+      (0 until a.numElements()).exists(i => a.isNullAt(i) || b.isNullAt(i))
 }

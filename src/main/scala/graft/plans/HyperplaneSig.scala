@@ -55,66 +55,12 @@ case class HyperplaneSig(child: Expression, bits: Int)
   private def elemIsDouble: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val isD = elemIsDouble
-    var i = 0
-    while (i < n) { // any null element -> every dot null -> sig 0
-      if (a.isNullAt(i)) return 0L
-      i += 1
-    }
-    var sig = 0L
-    var j = 0
-    while (j < bits) {
-      val seed = XXH64.hashInt(j, 42L)
-      var dot = 0.0
-      i = 0
-      while (i < n) {
-        val x = if (isD) a.getDouble(i) else a.getFloat(i).toDouble
-        dot += (if ((XXH64.hashInt(i, seed) & 1L) == 0L) x else -x)
-        i += 1
-      }
-      if (dot > 0) sig |= 1L << j
-      j += 1
-    }
-    sig
-  }
+  override def nullSafeEval(input: Any): Any =
+    HyperplaneSig.sig(input.asInstanceOf[ArrayData], bits, elemIsDouble)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val sig = ctx.freshName("sig")
-      val dot = ctx.freshName("dot")
-      val seed = ctx.freshName("seed")
-      val anyNull = ctx.freshName("anyNull")
-      val x = ctx.freshName("x")
-      val get = if (elemIsDouble) s"$a.getDouble($i)"
-                else s"(double) $a.getFloat($i)"
-      s"""
-         |int $n = $a.numElements();
-         |boolean $anyNull = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { $anyNull = true; break; }
-         |}
-         |long $sig = 0L;
-         |if (!$anyNull) {
-         |  for (int $j = 0; $j < $bits; $j++) {
-         |    long $seed = $xxh.hashInt($j, 42L);
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $x = $get;
-         |      $dot += (($xxh.hashInt($i, $seed) & 1L) == 0L) ? $x : -$x;
-         |    }
-         |    if ($dot > 0) $sig |= 1L << $j;
-         |  }
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"graft.plans.HyperplaneSig$$.MODULE$$.sig($a, $bits, $elemIsDouble)")
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =
     copy(child = newChild)
@@ -127,4 +73,29 @@ object HyperplaneSig {
       GraftColumnBridge.column(
         HyperplaneSig(GraftColumnBridge.expression(vec), bits)),
       org.apache.spark.sql.functions.lit(0L))
+
+  /** The kernel, for eval and generated code alike; never null. */
+  def sig(a: ArrayData, bits: Int, isDouble: Boolean): Long = {
+    val n = a.numElements()
+    var i = 0
+    while (i < n) { // any null element -> every dot null -> sig 0
+      if (a.isNullAt(i)) return 0L
+      i += 1
+    }
+    var sig = 0L
+    var j = 0
+    while (j < bits) {
+      val seed = XXH64.hashInt(j, 42L)
+      var dot = 0.0
+      i = 0
+      while (i < n) {
+        val x = if (isDouble) a.getDouble(i) else a.getFloat(i).toDouble
+        dot += (if ((XXH64.hashInt(i, seed) & 1L) == 0L) x else -x)
+        i += 1
+      }
+      if (dot > 0) sig |= 1L << j
+      j += 1
+    }
+    sig
+  }
 }

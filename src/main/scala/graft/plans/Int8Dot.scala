@@ -46,41 +46,14 @@ case class Int8Dot(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val n = a.numElements()
-    var dot = 0L
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      dot += a.getByte(i).toLong * b.getByte(i).toLong
-      i += 1
-    }
-    dot
+    val v = Int8Dot.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+    if (v == Int8Dot.Null) null else v
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  long $dot = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $dot += (long) $a.getByte($i) * (long) $b.getByte($i);
-         |  }
-         |  if (!${ev.isNull}) {
-         |    ${ev.value} = $dot;
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      ${ev.value} = graft.plans.Int8Dot$$.MODULE$$.dot($a, $b);
+      ${ev.isNull} = ${ev.value} == java.lang.Long.MIN_VALUE;""")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Int8Dot =
@@ -92,4 +65,25 @@ object Int8Dot {
   def apply(a: Column, b: Column): Column =
     GraftColumnBridge.column(
       Int8Dot(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+
+  /** [[dot]]'s null result: |dot| ≤ 2³¹ · 128² < 2⁶³, so no sum
+    * reaches it (generated code spells it `Long.MIN_VALUE`).
+    */
+  val Null: Long = Long.MinValue
+
+  /** The kernel, for eval and generated code alike; [[Null]] stands
+    * for a null result.
+    */
+  def dot(a: ArrayData, b: ArrayData): Long = {
+    if (a.numElements() != b.numElements()) return Null
+    val n = a.numElements()
+    var dot = 0L
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return Null
+      dot += a.getByte(i).toLong * b.getByte(i).toLong
+      i += 1
+    }
+    dot
+  }
 }

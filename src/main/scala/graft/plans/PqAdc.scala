@@ -49,42 +49,15 @@ case class PqAdc(left: Expression, right: Expression, ksub: Int)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val codes = l.asInstanceOf[ArrayData]
     val table = r.asInstanceOf[ArrayData]
-    val m = codes.numElements()
-    val tn = table.numElements()
-    var sum = 0.0
-    var i = 0
-    while (i < m) {
-      if (codes.isNullAt(i)) return null
-      val idx = i * ksub + (codes.getByte(i) & 0xFF)
-      if (idx >= tn || table.isNullAt(idx)) return null
-      sum += table.getDouble(idx)
-      i += 1
-    }
-    sum
+    val v = PqAdc.adc(codes, table, ksub)
+    if (java.lang.Double.isNaN(v) && PqAdc.isNull(codes, table, ksub)) null else v
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, t) => {
-      val m = ctx.freshName("m")
-      val tn = ctx.freshName("tn")
-      val i = ctx.freshName("i")
-      val idx = ctx.freshName("idx")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $m = $c.numElements();
-         |int $tn = $t.numElements();
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $m; $i++) {
-         |  if ($c.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  int $idx = $i * $ksub + ($c.getByte($i) & 0xFF);
-         |  if ($idx >= $tn || $t.isNullAt($idx)) { ${ev.isNull} = true; break; }
-         |  $sum += $t.getDouble($idx);
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $sum;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (c, t) => s"""
+      ${ev.value} = graft.plans.PqAdc$$.MODULE$$.adc($c, $t, $ksub);
+      ${ev.isNull} = java.lang.Double.isNaN(${ev.value})
+        && graft.plans.PqAdc$$.MODULE$$.isNull($c, $t, $ksub);""")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdc =
@@ -97,4 +70,36 @@ object PqAdc {
     GraftColumnBridge.column(
       PqAdc(GraftColumnBridge.expression(codes),
         GraftColumnBridge.expression(table), ksub))
+
+  // table index of subspace i's code, or -1 if the code or its table
+  // entry is null or the code is past the table
+  private def entry(codes: ArrayData, table: ArrayData, ksub: Int, i: Int): Int =
+    if (codes.isNullAt(i)) -1
+    else {
+      val idx = i * ksub + (codes.getByte(i) & 0xFF)
+      if (idx >= table.numElements() || table.isNullAt(idx)) -1 else idx
+    }
+
+  /** The kernel, for eval and generated code alike. A null result
+    * comes back as NaN, which a NaN table entry also yields:
+    * [[isNull]] tells the two apart, and runs only on a NaN.
+    */
+  def adc(codes: ArrayData, table: ArrayData, ksub: Int): Double = {
+    val m = codes.numElements()
+    var sum = 0.0
+    var i = 0
+    while (i < m) {
+      val idx = entry(codes, table, ksub, i)
+      if (idx < 0) return Double.NaN
+      sum += table.getDouble(idx)
+      i += 1
+    }
+    sum
+  }
+
+  /** Whether the ADC score is null: some code is null, past the
+    * table, or looks up a null entry.
+    */
+  def isNull(codes: ArrayData, table: ArrayData, ksub: Int): Boolean =
+    (0 until codes.numElements()).exists(entry(codes, table, ksub, _) < 0)
 }

@@ -53,12 +53,9 @@ case class PqEncode(left: Expression, right: Expression, m: Int, ksub: Int)
       m, ksub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cb) => {
-      s"""
-         |${ev.value} = graft.plans.PqEncode.compute($v, $cb, $m, $ksub);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, cb) => s"""
+      ${ev.value} = graft.plans.PqEncode$$.MODULE$$.compute($v, $cb, $m, $ksub);
+      ${ev.isNull} = ${ev.value} == null;""")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqEncode =

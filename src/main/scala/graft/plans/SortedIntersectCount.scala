@@ -68,52 +68,16 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val na = a.numElements()
-    val nb = b.numElements()
-    var i = 0
-    var j = 0
-    var cnt = 0
-    val longs = longElems
-    while (i < na && j < nb) {
-      // null elements are outside the sorted-set contract: result is
-      // null (defined), never an NPE mid-merge
-      if (a.isNullAt(i) || b.isNullAt(j)) return null
-      val c =
-        if (longs) java.lang.Long.compare(a.getLong(i), b.getLong(j))
-        else a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (c == 0) { cnt += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    cnt
+    val cnt = SortedIntersectCount.count(
+      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], longElems)
+    if (cnt < 0) null else cnt
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val cnt = ctx.freshName("cnt")
-      val c = ctx.freshName("c")
-      val cmp =
-        if (longElems) s"java.lang.Long.compare($a.getLong($i), $b.getLong($j))"
-        else s"$a.getUTF8String($i).compareTo($b.getUTF8String($j))"
-      s"""
-         |int $na = $a.numElements();
-         |int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; int $cnt = 0;
-         |while ($i < $na && $j < $nb) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($j)) { ${ev.isNull} = true; break; }
-         |  int $c = $cmp;
-         |  if ($c == 0) { $cnt++; $i++; $j++; }
-         |  else if ($c < 0) { $i++; } else { $j++; }
-         |}
-         |if (!${ev.isNull}) { ${ev.value} = $cnt; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      ${ev.value} = graft.plans.SortedIntersectCount$$.MODULE$$.count(
+        $a, $b, $longElems);
+      ${ev.isNull} = ${ev.value} < 0;""")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
@@ -126,4 +90,27 @@ object SortedIntersectCount {
     GraftColumnBridge.column(
       SortedIntersectCount(
         GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+
+  /** The kernel, for eval and generated code alike. A count is never
+    * negative, so -1 stands for a null result.
+    */
+  def count(a: ArrayData, b: ArrayData, longs: Boolean): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var cnt = 0
+    while (i < na && j < nb) {
+      // null elements are outside the sorted-set contract: result is
+      // null (defined), never an NPE mid-merge
+      if (a.isNullAt(i) || b.isNullAt(j)) return -1
+      val c =
+        if (longs) java.lang.Long.compare(a.getLong(i), b.getLong(j))
+        else a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      if (c == 0) { cnt += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    cnt
+  }
 }

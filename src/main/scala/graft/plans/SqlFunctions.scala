@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 /** SQL-text surface for the native expressions: after
   * `SqlFunctions.registerAll(spark)`, `spark.sql` queries can call
   * `cosine_sim(a, b)`, `hyperplane_sig(v, bits)`,
-  * `word_shingles(text, n, distinct)`, `sorted_intersect_count(a, b)`
-  * and `int8_dot(a, b)` directly — the same extension
+  * `word_shingles(text, n, distinct)`, `sorted_intersect_count(a, b)`,
+  * `int8_dot(a, b)` and `unicode_normalize(text[, form])` directly —
+  * the same extension
   * point `SparkSessionExtensions.injectFunction` serves at
   * session-build time, exposed for live sessions (the reference's
   * user-code hooks are job-conf class names, SURVEY §2.10; here the
@@ -32,43 +33,36 @@ object SqlFunctions {
       s"$what must be a boolean literal, got $other")
   }
 
+  // `build` covers the accepted argument lists; any other is an
+  // arity error naming the function and `arity`
+  private def register(spark: SparkSession, name: String, arity: String)(
+      build: PartialFunction[Seq[Expression], Expression]): Unit =
+    GraftColumnBridge.registerFunction(spark, name, args =>
+      build.applyOrElse(args, (a: Seq[Expression]) =>
+        throw new IllegalArgumentException(
+          s"$name expects $arity arguments, got ${a.length}")))
+
   def registerAll(spark: SparkSession): Unit = {
-    GraftColumnBridge.registerFunction(spark, "cosine_sim", {
-      case Seq(a, b) => CosineSim(a, b)
-      case args => throw new IllegalArgumentException(
-        s"cosine_sim expects 2 arguments, got ${args.length}")
-    })
-    GraftColumnBridge.registerFunction(spark, "hyperplane_sig", {
+    register(spark, "cosine_sim", "2") { case Seq(a, b) => CosineSim(a, b) }
+    register(spark, "hyperplane_sig", "2") {
       case Seq(v, bits) => HyperplaneSig(v, intArg(bits, "bits"))
-      case args => throw new IllegalArgumentException(
-        s"hyperplane_sig expects 2 arguments, got ${args.length}")
-    })
-    GraftColumnBridge.registerFunction(spark, "word_shingles", {
+    }
+    register(spark, "word_shingles", "2-3") {
       case Seq(t, n) => WordShingles(t, intArg(n, "n"), distinct = false)
       case Seq(t, n, d) =>
         WordShingles(t, intArg(n, "n"), boolArg(d, "distinct"))
-      case args => throw new IllegalArgumentException(
-        s"word_shingles expects 2-3 arguments, got ${args.length}")
-    })
-    GraftColumnBridge.registerFunction(spark, "sorted_intersect_count", {
+    }
+    register(spark, "sorted_intersect_count", "2") {
       case Seq(a, b) => SortedIntersectCount(a, b)
-      case args => throw new IllegalArgumentException(
-        s"sorted_intersect_count expects 2 arguments, got ${args.length}")
-    })
-    GraftColumnBridge.registerFunction(spark, "int8_dot", {
-      case Seq(a, b) => Int8Dot(a, b)
-      case args => throw new IllegalArgumentException(
-        s"int8_dot expects 2 arguments, got ${args.length}")
-    })
-    GraftColumnBridge.registerFunction(spark, "unicode_normalize", {
+    }
+    register(spark, "int8_dot", "2") { case Seq(a, b) => Int8Dot(a, b) }
+    register(spark, "unicode_normalize", "1-2") {
       case Seq(t) => UnicodeNormalize(t, "NFC")
       case Seq(t, f) => UnicodeNormalize(t, f match {
         case Literal(v, _) if v != null => v.toString
         case other => throw new IllegalArgumentException(
           s"form must be a string literal, got $other")
       })
-      case args => throw new IllegalArgumentException(
-        s"unicode_normalize expects 1-2 arguments, got ${args.length}")
-    })
+    }
   }
 }

@@ -51,7 +51,7 @@ case class UnicodeNormalize(child: Expression, form: String)
     // `form` is whitelist-validated above, so interpolating it into
     // the static Form reference is injection-safe
     nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.plans.UnicodeNormalize.normalize(
+       |${ev.value} = graft.plans.UnicodeNormalize$$.MODULE$$.normalize(
        |  $c, java.text.Normalizer.Form.$form);
      """.stripMargin)
 

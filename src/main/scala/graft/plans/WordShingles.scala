@@ -50,7 +50,7 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.WordShingles.compute($c, $n, $distinct);")
+      s"${ev.value} = graft.plans.WordShingles$$.MODULE$$.compute($c, $n, $distinct);")
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
     copy(child = newChild)

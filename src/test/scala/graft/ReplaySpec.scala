@@ -131,4 +131,17 @@ class ReplaySpec extends SparkSpec {
       Future(Replay.scratchDir(spark, "replayspec")), 1.minute)
     assert(there != here)
   }
+
+  test("scratchDir is a fresh dir, not one at a name another JVM can share") {
+    // a name derived from the slot alone, which two JVMs can share
+    val tag = "replayspec-premade"
+    val shared = new File(System.getProperty("java.io.tmpdir"),
+      s"graft-$tag-${System.identityHashCode(spark)}-${Thread.currentThread().getId}")
+    assert(shared.mkdir() || shared.isDirectory)
+    try {
+      val got = new File(Replay.scratchDir(spark, tag))
+      assert(got != shared)
+      assert(got.isDirectory && got.list().isEmpty)
+    } finally Replay.rmTree(shared)
+  }
 }

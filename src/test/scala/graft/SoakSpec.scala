@@ -10,9 +10,8 @@ package graft
 class SoakSpec extends SparkSpec {
 
   test("all six gridmix families run and validate at miniature scale") {
-    val dir = java.nio.file.Files.createTempDirectory("soak-all").toString
     // scale 0.002: 4000 fixed-width, 600 variable-width, 2000 text rows
-    val got = Soak.run(spark, dir, scale = 0.002)
+    val got = Soak.withWorkDir(d => Soak.run(spark, d.toString, scale = 0.002))
     assert(got.map(_._1) == Seq("three_stage", "var_sort", "ref_select",
       "indirect_read", "api_sort", "combiner"))
     val byName = got.toMap
@@ -80,21 +79,23 @@ class SoakSpec extends SparkSpec {
 
   test("indirectChain (the graded algebra) equals the soak's " +
       "file-based indirect_read family row-for-row") {
-    val dir = java.nio.file.Files.createTempDirectory("soak-ind").toString
-    // scale 0.0025: 2500 text rows; artifacts kept for the witness
-    Soak.run(spark, dir, scale = 0.0025, reclaim = false)
-    // regenerate family 4's corpus (content is partitioning-
-    // independent, so parts needn't match) and run the algebra twin
-    val kv = sources.Generate.randomKv(spark, 2500,
-      keyMinWords = 5, keyMaxWords = 5, valueMinWords = 20,
-      valueMaxWords = 20, vocab = 2000, seed = 44L, skewed = true,
-      numPartitions = 4, portable = false)
-    val chain = Soak.indirectChain(kv, iterations = 10)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    val files = spark.read.parquet(s"$dir/indirect/out_9")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(chain.length == files.length && chain.sameElements(files),
-      s"algebra ${chain.length} rows vs files ${files.length}")
+    Soak.withWorkDir { d =>
+      val dir = d.toString
+      // scale 0.0025: 2500 text rows; artifacts kept for the witness
+      Soak.run(spark, dir, scale = 0.0025, reclaim = false)
+      // regenerate family 4's corpus (content is partitioning-
+      // independent, so parts needn't match) and run the algebra twin
+      val kv = sources.Generate.randomKv(spark, 2500,
+        keyMinWords = 5, keyMaxWords = 5, valueMinWords = 20,
+        valueMaxWords = 20, vocab = 2000, seed = 44L, skewed = true,
+        numPartitions = 4, portable = false)
+      val chain = Soak.indirectChain(kv, iterations = 10)
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted
+      val files = spark.read.parquet(s"$dir/indirect/out_9")
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted
+      assert(chain.length == files.length && chain.sameElements(files),
+        s"algebra ${chain.length} rows vs files ${files.length}")
+    }
   }
 
   test("FAIR pools bound short-job latency while a bulk job " +
@@ -174,20 +175,21 @@ class SoakSpec extends SparkSpec {
   }
   test("reclaim mode: rows/validation identical, artifacts deleted, " +
       "out_mb credited") {
-    val dir = java.nio.file.Files.createTempDirectory("soak-rec").toString
-    val plain = Soak.run(spark, java.nio.file.Files
-      .createTempDirectory("soak-pl").toString, scale = 0.0015,
-      reclaim = false)
-    val rec = Soak.run(spark, dir, scale = 0.0015)
-    val pm = plain.toMap; val rm = rec.toMap
-    pm.keys.foreach(k => assert(rm(k).rows == pm(k).rows,
-      s"$k rows moved under reclaim"))
-    // every family dir is gone and its volume was credited
-    Seq("three_stage", "var_sort", "ref_select", "indirect", "api_sort",
-      "combiner").foreach { d =>
-      assert(!new java.io.File(s"$dir/$d").exists(), s"$d not reclaimed")
+    Soak.withWorkDir { work =>
+      val dir = new java.io.File(work, "rec").toString
+      val plain = Soak.run(spark, new java.io.File(work, "plain").toString,
+        scale = 0.0015, reclaim = false)
+      val rec = Soak.run(spark, dir, scale = 0.0015)
+      val pm = plain.toMap; val rm = rec.toMap
+      pm.keys.foreach(k => assert(rm(k).rows == pm(k).rows,
+        s"$k rows moved under reclaim"))
+      // every family dir is gone and its volume was credited
+      Seq("three_stage", "var_sort", "ref_select", "indirect", "api_sort",
+        "combiner").foreach { d =>
+        assert(!new java.io.File(s"$dir/$d").exists(), s"$d not reclaimed")
+      }
+      rm.values.foreach(r => assert(r.outBytes >= 0))
+      assert(rm.values.map(_.outBytes).sum > 0)
     }
-    rm.values.foreach(r => assert(r.outBytes >= 0))
-    assert(rm.values.map(_.outBytes).sum > 0)
   }
 }

@@ -13,35 +13,7 @@ class BpeishTokensSpec extends SparkSpec {
   private def legacy(c: org.apache.spark.sql.Column) =
     filter(split(lower(c), "[^a-z0-9']+"), t => length(t) > 0)
 
-  private val cases = Seq(
-    "the Quick BROWN fox",
-    "  leading and trailing  ",
-    "a",
-    "",
-    "   ",
-    "don't stop-believing",
-    "digits 123 mix3d t0kens",
-    "apostrophe's 'quoted' ''",
-    "UPPER lower MiXeD",
-    "tabs\tnewlines\nand\r\nreturns",
-    "punctuation!@#$%^&*()[]{};:,.<>?/|\\~`\"=+_-",
-    // non-ASCII: slow path, must replicate lower+regex exactly
-    "Ünïcödé wörds höre",
-    "汉字 mixed with ascii",
-    "émigré café naïve",
-    // case-mapping crosses into ASCII: U+212A KELVIN SIGN -> 'k',
-    // U+0130 LATIN CAPITAL I WITH DOT -> "i" + combining dot
-    "temp 300K outside",
-    "İstanbul visit",
-    // German sharp S and ligatures
-    "STRAßE groß",
-    "ﬁle ﬂow",
-    // surrogate pairs
-    "emoji 😀 split 🎉 here",
-    "a'b''c'''d",
-    "'''",
-    "x" * 5000,
-    ("word " * 200).trim)
+  import BpeishTokensSpec.cases
 
   test("native tokenizer equals the legacy lower+regex chain on " +
        "ASCII, Unicode, and case-crossing inputs") {
@@ -83,18 +55,37 @@ class BpeishTokensSpec extends SparkSpec {
       .filter(r => r.getSeq[String](0) != r.getSeq[String](1))
     assert(bad.isEmpty, bad.take(3).mkString("; "))
   }
+}
 
-  test("interpreted eval matches codegen (HOF contexts use eval)") {
-    // transform() evaluates lambdas interpreted — the LM family wraps
-    // bpeishTokens output in transform(tk, xxhash64), so both paths
-    // must agree
-    val df = cases.toDF("t")
-    val viaHof = df.select(size(transform(
-      graft.functions.TextAnalysis.bpeishTokens(col("t")),
-      x => upper(x))).as("n"))
-    val direct = df.select(size(
-      graft.functions.TextAnalysis.bpeishTokens(col("t"))).as("n"))
-    assert(viaHof.collect().map(_.getInt(0)).toSeq ==
-      direct.collect().map(_.getInt(0)).toSeq)
-  }
+object BpeishTokensSpec {
+  /** Also the inputs of [[CodegenParitySpec]]'s row. */
+  val cases: Seq[String] = Seq(
+    "the Quick BROWN fox",
+    "  leading and trailing  ",
+    "a",
+    "",
+    "   ",
+    "don't stop-believing",
+    "digits 123 mix3d t0kens",
+    "apostrophe's 'quoted' ''",
+    "UPPER lower MiXeD",
+    "tabs\tnewlines\nand\r\nreturns",
+    "punctuation!@#$%^&*()[]{};:,.<>?/|\\~`\"=+_-",
+    // non-ASCII: slow path, must replicate lower+regex exactly
+    "Ünïcödé wörds höre",
+    "汉字 mixed with ascii",
+    "émigré café naïve",
+    // case-mapping crosses into ASCII: U+212A KELVIN SIGN -> 'k',
+    // U+0130 LATIN CAPITAL I WITH DOT -> "i" + combining dot
+    "temp 300K outside",
+    "İstanbul visit",
+    // German sharp S and ligatures
+    "STRAßE groß",
+    "ﬁle ﬂow",
+    // surrogate pairs
+    "emoji 😀 split 🎉 here",
+    "a'b''c'''d",
+    "'''",
+    "x" * 5000,
+    ("word " * 200).trim)
 }

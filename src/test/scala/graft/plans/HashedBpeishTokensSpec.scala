@@ -16,31 +16,7 @@ class HashedBpeishTokensSpec extends SparkSpec {
     transform(graft.functions.TextAnalysis.bpeishTokens(c),
       t => xxhash64(t))
 
-  private val cases = Seq(
-    "the Quick BROWN fox",
-    "  leading and trailing  ",
-    "a",
-    "",
-    "   ",
-    "don't stop-believing",
-    "digits 123 mix3d t0kens",
-    "apostrophe's 'quoted' ''",
-    "UPPER lower MiXeD",
-    "tabs\tnewlines\nand\r\nreturns",
-    "punctuation!@#$%^&*()[]{};:,.<>?/|\\~`\"=+_-",
-    // non-ASCII: the tokenizer's slow path feeds the same hash
-    "Ünïcödé wörds höre",
-    "汉字 mixed with ascii",
-    "émigré café naïve",
-    "temp 300K outside",
-    "İstanbul visit",
-    "STRAßE groß",
-    "ﬁle ﬂow",
-    "emoji 😀 split 🎉 here",
-    "a'b''c'''d",
-    "'''",
-    "x" * 5000,
-    ("word " * 200).trim)
+  import HashedBpeishTokensSpec.cases
 
   test("fused hash equals transform(bpeishTokens, xxhash64) on ASCII, " +
        "Unicode, and boundary inputs") {
@@ -80,20 +56,33 @@ class HashedBpeishTokensSpec extends SparkSpec {
       .filter(r => r.getSeq[Long](0) != r.getSeq[Long](1))
     assert(bad.isEmpty, bad.take(3).mkString("; "))
   }
+}
 
-  test("interpreted eval matches codegen") {
-    // aggregate(...) over the expression forces the interpreted eval
-    // path for the child; the legacy chain is the codegen'd witness —
-    // the element XOR-fold must agree between both (XOR, not sum:
-    // 64-bit hash sums overflow under ANSI)
-    val df = cases.toDF("t")
-    val viaHof = df.select(coalesce(aggregate(
-      HashedBpeishTokens(col("t")), lit(0L), (a, x) => a.bitwiseXOR(x)),
-      lit(0L)).as("s"))
-    val direct = df.select(coalesce(aggregate(
-      legacy(col("t")), lit(0L), (a, x) => a.bitwiseXOR(x)),
-      lit(0L)).as("s"))
-    assert(viaHof.collect().map(_.getLong(0)).toSeq ==
-      direct.collect().map(_.getLong(0)).toSeq)
-  }
+object HashedBpeishTokensSpec {
+  /** Also the inputs of [[CodegenParitySpec]]'s row. */
+  val cases: Seq[String] = Seq(
+    "the Quick BROWN fox",
+    "  leading and trailing  ",
+    "a",
+    "",
+    "   ",
+    "don't stop-believing",
+    "digits 123 mix3d t0kens",
+    "apostrophe's 'quoted' ''",
+    "UPPER lower MiXeD",
+    "tabs\tnewlines\nand\r\nreturns",
+    "punctuation!@#$%^&*()[]{};:,.<>?/|\\~`\"=+_-",
+    // non-ASCII: the tokenizer's slow path feeds the same hash
+    "Ünïcödé wörds höre",
+    "汉字 mixed with ascii",
+    "émigré café naïve",
+    "temp 300K outside",
+    "İstanbul visit",
+    "STRAßE groß",
+    "ﬁle ﬂow",
+    "emoji 😀 split 🎉 here",
+    "a'b''c'''d",
+    "'''",
+    "x" * 5000,
+    ("word " * 200).trim)
 }

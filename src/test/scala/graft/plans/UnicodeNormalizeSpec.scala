@@ -43,19 +43,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
     }
   }
 
-  test("interpreted path matches codegen (eval parity)") {
-    val rows = Seq("ascii", "cafe\u0301", "caf\u00e9", "", "mix u\u0308 x")
-    val df = rows.toDF("t")
-    val on = df.select(UnicodeNormalize($"t", "NFC")).as[String].collect().toSeq
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val off = df.select(UnicodeNormalize($"t", "NFC")).as[String].collect().toSeq
-      assert(on == off)
-    } finally conf.set("spark.sql.codegen.factoryMode", prev)
-  }
-
   test("canonicalText keys precomposed and decomposed variants identically") {
     val df = Seq(
       (1L, "The  Caf\u00e9 menu"),

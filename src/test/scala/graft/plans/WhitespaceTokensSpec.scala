@@ -14,29 +14,7 @@ class WhitespaceTokensSpec extends SparkSpec {
   private def legacy(c: org.apache.spark.sql.Column) =
     filter(split(c, "\\s+"), t => length(t) > 0)
 
-  private val cases = Seq(
-    "the Quick BROWN fox",
-    "  leading and trailing  ",
-    "a",
-    "",
-    "   ",
-    "\t\n\r\f",
-    "tabs\tnewlines\nand\r\nreturns",
-    "verticaltab form\ffeed",
-    "case MUST be Preserved",
-    "punctuation!@# stays-in tokens.",
-    // non-ASCII whitespace must NOT split (Java \s is ASCII-only):
-    // NBSP, EN QUAD, LINE SEPARATOR, IDEOGRAPHIC SPACE
-    "nbsp joined",
-    "quad joined",
-    "line joined",
-    "ideo　joined",
-    "Ünïcödé wörds höre",
-    "汉字 mixed with ascii",
-    "emoji 😀 split 🎉 here",
-    "x" * 5000,
-    ("word " * 200).trim,
-    " \t mixed run \n ends\t")
+  import WhitespaceTokensSpec.cases
 
   test("native whitespace tokenizer equals the legacy split+filter " +
        "chain on ASCII, Unicode, and unicode-whitespace inputs") {
@@ -76,15 +54,31 @@ class WhitespaceTokensSpec extends SparkSpec {
       .filter(r => r.getSeq[String](0) != r.getSeq[String](1))
     assert(bad.isEmpty, bad.take(3).mkString("; "))
   }
+}
 
-  test("interpreted eval matches codegen (HOF contexts use eval)") {
-    val df = cases.toDF("t")
-    val viaHof = df.select(size(transform(
-      graft.functions.TextAnalysis.tokens(col("t")),
-      x => upper(x))).as("n"))
-    val direct = df.select(size(
-      graft.functions.TextAnalysis.tokens(col("t"))).as("n"))
-    assert(viaHof.collect().map(_.getInt(0)).toSeq ==
-      direct.collect().map(_.getInt(0)).toSeq)
-  }
+object WhitespaceTokensSpec {
+  /** Also the inputs of [[CodegenParitySpec]]'s row. */
+  val cases: Seq[String] = Seq(
+    "the Quick BROWN fox",
+    "  leading and trailing  ",
+    "a",
+    "",
+    "   ",
+    "\t\n\r\f",
+    "tabs\tnewlines\nand\r\nreturns",
+    "verticaltab form\ffeed",
+    "case MUST be Preserved",
+    "punctuation!@# stays-in tokens.",
+    // non-ASCII whitespace must NOT split (Java \s is ASCII-only):
+    // NBSP, EN QUAD, LINE SEPARATOR, IDEOGRAPHIC SPACE
+    "nbsp joined",
+    "quad joined",
+    "line joined",
+    "ideo　joined",
+    "Ünïcödé wörds höre",
+    "汉字 mixed with ascii",
+    "emoji 😀 split 🎉 here",
+    "x" * 5000,
+    ("word " * 200).trim,
+    " \t mixed run \n ends\t")
 }
