@@ -18,9 +18,6 @@ object Bench {
     spark.range(100).selectExpr("sum(id)").collect()
     // best-effort: a missing warmup directory must not abort the
     // bench (measured queries have their own failure isolation).
-    // The warmup's internal localCheckpoint blocks (KB-scale at this
-    // sf) persist until ContextCleaner GC — negligible next to the
-    // measured working sets.
     try {
       import org.apache.spark.sql.functions._
       val warmDocs = Graft.table(spark, "/root/testdata/sf0.001", "documents")
@@ -57,26 +54,7 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       val samples = (1 to passes).map { _ =>
-        // isolate queries: operators that persist derived indexes
-        // (LSH banding, inverted indexes) must not distort successors
-        // or their own re-runs
-        spark.catalog.clearCache()
-        // clearCache drops cached DataFrames but NOT localCheckpoint
-        // RDD blocks. Queries whose RESULT rides a checkpointed
-        // lineage (the rerank doc pins, the tf pins, ...) cannot drop
-        // their own blocks — and waiting for ContextCleaner GC let
-        // them accumulate across 156 queries × 3 passes until the sf1
-        // bench OOM'd the default 8 GB heap (round-9 closing caveat).
-        // Unpersist every still-registered RDD explicitly: at this
-        // point the previous query's result has been consumed, so
-        // nothing live depends on the blocks.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        // ...then nudge the cleaner for broadcasts and accumulator
-        // state the registry does not cover
-        System.gc()
-        SparkEntry.replayWriteNanos.set(0L)
-        SparkEntry.artifactWriteNanos.set(0L)
+        Graft.isolate(spark)
         val t0 = System.nanoTime()
         try {
           // toRdd.count() executes the PHYSICAL plan as built: a plain
@@ -143,7 +121,7 @@ object Bench {
       .map(j => s""","zorder_pruning":$j""").getOrElse("")
     val failed = meds.collect { case (k, m, _, _, _, _) if m < 0 => "\"" + k + "\"" }
     val total = meds.collect { case (_, m, _, _, _, _) if m >= 0 => m }.sum
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","protocol":"median-of-$passes","queries":$qs,"spread":$spread,"replay_write":$replayWrite,"stream_only":$streamOnlyJson,"artifact_write":$artifactWrite,"probe_only":$probeOnly$zorderPruning,"failed":[${failed.mkString(",")}],"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","protocol":"median-of-$passes","queries":$qs,"spread":$spread,"replay_write":$replayWrite,"stream_only":$streamOnlyJson,"artifact_write":$artifactWrite,"probe_only":$probeOnly$zorderPruning,"failed":[${failed.mkString(",")}],"sf":"$sfDir","cpus":${Graft.cpus}}""")
     spark.stop()
   }
 }

@@ -119,6 +119,20 @@ object Graft {
     session(master = s"local[$cpus]", shufflePartitions = cpus,
       appName = appName, extraConfs = extraConfs)
 
+  /** The step between Verify, Bench and Explain's queries: drop cached
+    * frames and every registered RDD (`localCheckpoint` pins, which
+    * `clearCache` keeps, once ran the sf1 Bench out of heap), GC to
+    * nudge the cleaner, and zero the per-query harness counters.
+    */
+  def isolate(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
+    SparkEntry.replayWriteNanos.set(0L)
+    SparkEntry.artifactWriteNanos.set(0L)
+  }
+
   private val advisorWired = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 

@@ -69,6 +69,8 @@ private[graft] object Replay {
       val c = new File(s"$root-checkpoint"); track(c.toString, c); c.toString
     }
     val sink: String = new File(root, "sink").toString
+    /** Slices a held replay holds back until [[release]]. */
+    val slices: Int = held.length
     private var released = 0
 
     def stream: DataFrame = s.readStream.schema(schema)
@@ -79,8 +81,8 @@ private[graft] object Replay {
       * so the stream still sees them in slice order.
       */
     def release(k: Int): Unit = {
-      require(released <= k && k <= held.length,
-        s"release($k) outside [$released, ${held.length}]")
+      require(released <= k && k <= slices,
+        s"release($k) outside [$released, $slices]")
       charged((released until k).foreach { i =>
         Files.move(held(i).toPath, Paths.get(source, held(i).getName))
       })
@@ -94,13 +96,12 @@ private[graft] object Replay {
   val Slices = 8
 
   /** Hash-spread files: micro-batches arrive in no event order — the
-    * harsher harness for order-insensitive sinks.
+    * harsher harness for order-insensitive sinks. `held` as in
+    * [[ordered]].
     */
-  def unordered(s: SparkSession, batch: DataFrame): Staged =
-    stage(s, batch.schema, held = false) { dir =>
-      batch.repartition(Slices).write.mode("overwrite").parquet(dir)
-      IndexedSeq.empty
-    }
+  def unordered(s: SparkSession, batch: DataFrame, held: Boolean = false): Staged =
+    stage(s, batch.schema, held)(
+      batch.repartition(Slices).write.mode("overwrite").parquet)
 
   /** Controlled ARRIVAL ORDER: file k holds the k-th range slice on
     * `order`, stamped with strictly increasing mod-times, and the file
@@ -114,24 +115,27 @@ private[graft] object Replay {
     stage(s, batch.schema, held) { dir =>
       batch.repartitionByRange(nFiles, order).sortWithinPartitions(order)
         .write.mode("overwrite").parquet(dir)
-      val parts = new File(dir).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName).toIndexedSeq
       val base = System.currentTimeMillis() - 3600000L
-      parts.zipWithIndex.foreach { case (f, i) =>
+      parts(new File(dir)).zipWithIndex.foreach { case (f, i) =>
         require(f.setLastModified(base + i * 2000L),
           s"cannot stamp replay mod-time on $f")
       }
-      parts
     }
 
-  // `write` fills the dir it is given and returns its slices in order
+  // a replay's files, in slice order
+  private def parts(dir: File): IndexedSeq[File] = dir.listFiles()
+    .filter(_.getName.startsWith("part-")).sortBy(_.getName).toIndexedSeq
+
+  // `write` fills the dir it is given; a held replay's is the stage dir
   private def stage(s: SparkSession, schema: StructType, held: Boolean)(
-      write: String => IndexedSeq[File]): Staged = {
+      write: String => Unit): Staged = {
     val root = newSlot(s)
     val source = new File(root, "source")
     val slices = charged {
-      if (held) { source.mkdir(); write(new File(root, "stage").toString) }
-      else { write(source.toString); IndexedSeq.empty }
+      if (held) {
+        source.mkdir(); write(new File(root, "stage").toString)
+        parts(new File(root, "stage"))
+      } else { write(source.toString); IndexedSeq.empty }
     }
     new Staged(s, schema, root, slices)
   }

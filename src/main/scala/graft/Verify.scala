@@ -13,6 +13,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => subset.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      Graft.isolate(spark)
       // repartition(1), NOT coalesce(1): coalesce propagates the
       // single-partition constraint up through narrow stages, so a
       // map-only query's whole scan+compute would run on one core;

@@ -1,15 +1,18 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Query.t
 import OracleSql.{asofSql, ngramJaccardSql, retentionSql, weightedSampleSql,
   words}
 
-/** The streaming twins (SURVEY.md §2.9): each query replays a batch
-  * table through a file-source stream ([[graft.Replay]]) and is graded
-  * against a batch oracle.
+/** The streaming twins (SURVEY.md §2.9): each query is a [[Streamed]]
+  * declaration. Its batch table is replayed through a file-source stream
+  * ([[graft.Replay]]: 8 parquet files read one per trigger ⇒ 8
+  * micro-batches with watermark/state maintenance between them), and
+  * the drained sink is graded by the SAME DuckDB oracle a batch query
+  * would use.
   */
 object StreamQueries {
 
@@ -64,37 +67,22 @@ object StreamQueries {
         |            ELSE tr END AS INT) AS target_rep
         |FROM ranked""".stripMargin
 
-  /** Run a replay's `stream` to the end into the memory sink `sink`
-    * (in output `mode`) and read the sink back.
+  /** The throttled-EWMA heat fold over an ordered replay of the events
+    * table as a file-access log (`path` = user_id, `tsMs` the access
+    * time in ms), then `finish`. TTL ≫ the fixture's 30-day event span
+    * (1e12 ms ≈ 31 years): the graded recurrence must see every access;
+    * state lifecycle is graded separately by the TTL eviction specs.
     */
-  private def drain(s: SparkSession, stream: Dataset[_], mode: String,
-                    sink: String): DataFrame = {
-    val q = stream.writeStream.outputMode(mode).format("memory")
-      .queryName(sink).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(sink)
-  }
-
-  /** The events table as a file-access log: `path` = user_id, `tsMs`
-    * the access time in ms.
-    */
-  private def accesses(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .select(col("user_id").cast("string").as("path"),
-        expr("ts div 1000000").as("tsMs"))
-
-  /** The throttled-EWMA heat fold over a replay of [[accesses]]. TTL
-    * ≫ the fixture's 30-day event span (1e12 ms ≈ 31 years): the
-    * graded recurrence must see every access; state lifecycle is
-    * graded separately by the TTL eviction specs.
-    */
-  private def heatUpdates(s: SparkSession, replay: Replay.Staged)
-      : Dataset[streaming.HeatStream.HeatRecord] = {
+  private def heat(s: SparkSession, dir: String)(
+      finish: DataFrame => DataFrame): Streamed = {
     import s.implicits._
-    streaming.HeatStream.heatUpdates(
-      replay.stream.as[streaming.HeatStream.Access],
-      stateTtlMs = 1000000000000L,
-      allowedLatenessMs = 1000000000000L)
+    val accesses = t(s, dir, "events").select(
+      col("user_id").cast("string").as("path"), expr("ts div 1000000").as("tsMs"))
+    Streamed(accesses, "update",
+      stream => streaming.HeatStream.heatUpdates(
+        stream.as[streaming.HeatStream.Access],
+        stateTtlMs = 1000000000000L, allowedLatenessMs = 1000000000000L),
+      finish, order = Some(col("tsMs")))
   }
 
   /** Each file's settled heat `m`: its update with the greatest
@@ -108,44 +96,37 @@ object StreamQueries {
   /** The policy tail of q_stream_replication over heat updates. */
   private def replicationPlan(updates: DataFrame): DataFrame = {
     val heat = settled(updates)
-      .select(col("path").cast("long").as("user_id"),
-        col("m.ewma").as("ewma"))
+      .select(col("path").cast("long").as("user_id"), col("m.ewma").as("ewma"))
     val nFiles = heat.count()
     streaming.Heat.policyLoopPlan(heat, col("user_id"), col("ewma"),
       blocksCol = when(col("user_id") % 5 === 0, 1).otherwise(2),
       sizeBytes = 1000L, capacityBytes = 3500L * math.max(nFiles, 1L))
   }
 
-  /** Each replay runs at [[Replay.StatePartitions]] shuffle partitions. */
-  val all: Seq[Query] = Seq(
-    // ---- §2.9 streaming twins, graded against BATCH oracles ---------
-    // The events table is replayed through a real file-source stream
-    // (graft.Replay: 8 parquet files read one per trigger ⇒ 8
-    // micro-batches with watermark/state maintenance between them),
-    // the sink is collected after processAllAvailable, and the result
-    // is graded by the SAME DuckDB oracle a batch query would use —
-    // closing the "streaming twins are spec-only" gap: the streaming
-    // plan algebra now has rows+schema+hash correctness rows.
+  /** The last slice of a one-window replay: its watermark closes it. */
+  private def heartbeat(s: SparkSession, cols: Column*): DataFrame =
+    s.range(1).select(lit(new java.sql.Timestamp(1300000L)).as("ts") +:
+      cols :+ lit(Long.MaxValue).as("__ord"): _*)
 
+  /** q_stream_replication's declaration, resumed by its twin. */
+  private val replication: (SparkSession, String) => Streamed =
+    heat(_, _)(replicationPlan)
+
+  val all: Seq[Query] = Seq(
     // tumbling event-time day windows (EventWindows.tumbling) in
     // complete mode: the final sink state equals the batch
     // aggregation no matter how the replay micro-batches. Times are
     // integer-floored to seconds (ts DIV 1e9 = epoch_us // 1e6 on
     // the nanos fixture); sums go through DECIMAL(18,2) so partial
     // aggregation order can't move a bit.
-    Query("q_stream_windows", (s, dir) => {
-      val batch = t(s, dir, "events")
+    Query.stream("q_stream_windows", (s, dir) => Streamed(
+      t(s, dir, "events")
         .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-          col("event_type"), col("value"))
-      val agg = streaming.EventWindows.tumbling(
-        Replay.unordered(s, batch).stream, "ts2",
-        col("event_type"), "90 days", "1 day",
-        col("value").cast("decimal(18,2)"))
-      drain(s, agg, "complete", "q_stream_windows_sink")
-        .select(col("w_start").cast("long").as("w_start"),
-          col("event_type"), col("n"),
-          col("total").cast("double").as("total"))
-    },
+          col("event_type"), col("value")), "complete",
+      streaming.EventWindows.tumbling(_, "ts2", col("event_type"),
+        "90 days", "1 day", col("value").cast("decimal(18,2)")),
+      _.select(col("w_start").cast("long").as("w_start"), col("event_type"),
+        col("n"), col("total").cast("double").as("total"))),
       // q_stream_windows: the streamed tumbling-window aggregation's
       // final (complete-mode) state must equal the plain batch GROUP BY
       // — day floors via integer division, sums via exact DECIMAL
@@ -163,21 +144,17 @@ object StreamQueries {
     // The -1 rollup row re-unions the per-window sketches from the
     // SINK (panelRollup's law on streamed output): the emitted
     // artifact stays mergeable, not just readable.
-    Query("q_stream_sketch", (s, dir) => {
-      val batch = t(s, dir, "events")
+    Query.stream("q_stream_sketch", (s, dir) => Streamed(
+      t(s, dir, "events")
         .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-          col("user_id"))
-      val est = streaming.StreamSketch.perWindow(
-        Replay.unordered(s, batch).stream, "ts2", "90 days", "1 day",
-        col("user_id"))
-      val sink = drain(s, est, "complete", "q_stream_sketch_sink")
-      sink.select(col("window_start"), col("distinct_est"))
+          col("user_id")), "complete",
+      streaming.StreamSketch.perWindow(_, "ts2", "90 days", "1 day", col("user_id")),
+      sink => sink.select(col("window_start"), col("distinct_est"))
         .unionByName(sink.agg(
           lit(-1L).as("window_start"),
           call_function("theta_sketch_estimate",
             call_function("theta_union_agg", col("theta"), lit(20)))
-            .as("distinct_est")))
-    },
+            .as("distinct_est")))),
       // q_stream_sketch: per-day theta distinct estimates are exact
       // below capacity, so they equal COUNT(DISTINCT) per window; the
       // -1 row is the cross-window sketch union = global distinct
@@ -200,7 +177,7 @@ object StreamQueries {
     // the sample exactly once. Map-side thinning forwards ≤ k
     // candidates per partition per batch into the single window
     // group.
-    Query("q_stream_sample", (s, dir) => {
+    Query.stream("q_stream_sample", (s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
       val batch = docs.select(
@@ -208,21 +185,18 @@ object StreamQueries {
           col("doc_id").cast("string").as("key"),
           col("n_chars").cast("double").as("weight"),
           col("doc_id").as("__ord"))
-        .unionByName(s.range(1).select(
-          lit(new java.sql.Timestamp(1300000L)).as("ts"),
-          lit(null).cast("string").as("key"),
-          lit(0.0).as("weight"),
-          lit(Long.MaxValue).as("__ord")))
-      val stream = Replay.ordered(s, batch, col("__ord"), nFiles = 9).stream
-        .select(col("ts"), col("key"), col("weight"))
-        .as[streaming.StreamSample.Item]
-      val picks = streaming.StreamSample.perWindow(stream,
-        windowMillis = 600000L, watermark = "10 minutes", k = 20)
-      drain(s, picks, "append", "q_stream_sample_sink")
-        .select(col("key"), col("draw"))
-        .join(docs, col("key") === docs("doc_id").cast("string"))
-        .select(docs("doc_id"), docs("text"), docs("lang"),
-          docs("source"), docs("n_chars"), col("draw"))
+        .unionByName(heartbeat(s,
+          lit(null).cast("string").as("key"), lit(0.0).as("weight")))
+      Streamed(batch, "append",
+        stream => streaming.StreamSample.perWindow(
+          stream.select(col("ts"), col("key"), col("weight"))
+            .as[streaming.StreamSample.Item],
+          windowMillis = 600000L, watermark = "10 minutes", k = 20),
+        _.select(col("key"), col("draw"))
+          .join(docs, col("key") === docs("doc_id").cast("string"))
+          .select(docs("doc_id"), docs("text"), docs("lang"),
+            docs("source"), docs("n_chars"), col("draw")),
+        order = Some(col("__ord")), nFiles = 9)
     },
       // q_stream_sample: the batch oracle VERBATIM — the streaming
       // twin's window holds the whole corpus and the A-ES draw is
@@ -238,7 +212,7 @@ object StreamQueries {
     // heartbeat-driven close. Cell-wise sums are order-free, so the
     // emitted table equals the batch cmsTable bit-for-bit and grades
     // against the same SQL derivation as q_cms's tbl stage.
-    Query("q_stream_cms", (s, dir) => {
+    Query.stream("q_stream_cms", (s, dir) => {
       import s.implicits._
       val words = t(s, dir, "documents")
         .select(explode(split(col("text"), "\\s+")).as("w"))
@@ -247,17 +221,15 @@ object StreamQueries {
           lit(new java.sql.Timestamp(100000L)).as("ts"),
           col("w").as("item"),
           monotonically_increasing_id().as("__ord"))
-        .unionByName(s.range(1).select(
-          lit(new java.sql.Timestamp(1300000L)).as("ts"),
-          lit("closer").as("item"),
-          lit(Long.MaxValue).as("__ord")))
-      val stream = Replay.ordered(s, batch, col("__ord"), nFiles = 9).stream
-        .select(col("ts"), col("item")).as[streaming.StreamCms.Item]
-      val cells = streaming.StreamCms.perWindow(stream,
-        windowMillis = 600000L, watermark = "10 minutes",
-        depth = 4, width = 64)
-      drain(s, cells, "append", "q_stream_cms_sink").filter(col("windowStart") === 0L)
-        .select(col("r"), col("bucket"), col("cnt"))
+        .unionByName(heartbeat(s, lit("closer").as("item")))
+      Streamed(batch, "append",
+        stream => streaming.StreamCms.perWindow(
+          stream.select(col("ts"), col("item")).as[streaming.StreamCms.Item],
+          windowMillis = 600000L, watermark = "10 minutes",
+          depth = 4, width = 64),
+        _.filter(col("windowStart") === 0L)
+          .select(col("r"), col("bucket"), col("cnt")),
+        order = Some(col("__ord")), nFiles = 9)
     },
       // q_stream_cms: the sketch TABLE re-derived (q_cms's tbl stage)
       // — the streaming window holds the whole corpus' word stream and
@@ -280,16 +252,13 @@ object StreamQueries {
     // though WHICH copy survives depends on file arrival order
     // (only the key columns are emitted). State is the exercised
     // surface: keys ride the state store across 8 micro-batches.
-    Query("q_stream_dedup", (s, dir) => {
-      val batch = t(s, dir, "events")
+    Query.stream("q_stream_dedup", (s, dir) => Streamed(
+      t(s, dir, "events")
         .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-          col("user_id"), col("event_type"))
-      val deduped = streaming.StreamDedup.withinWatermark(
-        Replay.unordered(s, batch).stream, "ts2", "3650 days",
-        Seq("user_id", "event_type"))
-      drain(s, deduped, "append", "q_stream_dedup_sink")
-        .select(col("user_id"), col("event_type"))
-    },
+          col("user_id"), col("event_type")), "append",
+      streaming.StreamDedup.withinWatermark(_, "ts2", "3650 days",
+        Seq("user_id", "event_type")),
+      _.select(col("user_id"), col("event_type"))),
       // q_stream_dedup: the appended stream-dedup survivors are exactly
       // the distinct key set (watermark outlives the replay span; only
       // key columns emitted, so arrival order is invisible)
@@ -303,19 +272,16 @@ object StreamQueries {
     // across the replay), appended output graded by the SAME exact-
     // Jaccard oracle as q_minhash_lsh/q_ngram_jaccard — the batch/
     // stream pair-set equality is the operator's contract
-    Query("q_stream_neardup", (s, dir) => {
-      val batch = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    Query.stream("q_stream_neardup", (s, dir) => Streamed(
+      t(s, dir, "documents").select(col("doc_id"), col("text")), "append",
       // -Dgraft.stream.ledger=true (Profile --streamphases) turns on
       // the in-operator phase accumulators (signature-walk vs rerank
       // nanos) on the EXACT graded shape; off, the hot loop carries
       // no timing calls
-      val pairs = streaming.StreamNearDup.pairs(
-        Replay.unordered(s, batch).stream, col("doc_id"), col("text"),
+      streaming.StreamNearDup.pairs(_, col("doc_id"), col("text"),
         shingleN = 3, numHashes = 16, bands = 16, threshold = 0.5,
-        ledger = java.lang.Boolean.getBoolean("graft.stream.ledger"))
-      drain(s, pairs, "append", "q_stream_neardup_sink")
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    },
+        ledger = java.lang.Boolean.getBoolean("graft.stream.ledger")),
+      _.select(col("id_a"), col("id_b"), col("jaccard"))),
       // q_stream_neardup: the streaming LSH twin at the same
       // oracle-parity banding — its appended pair set equals the batch
       // operator's, so the exact-Jaccard oracle applies verbatim
@@ -330,20 +296,15 @@ object StreamQueries {
     // session (merge condition start <= end on half-open windows), so
     // the oracle breaks strictly greater-than; timestamps are floored
     // to seconds, sums ride DECIMAL(18,2).
-    Query("q_stream_sessions", (s, dir) => {
-      val batch = t(s, dir, "events")
+    Query.stream("q_stream_sessions", (s, dir) => Streamed(
+      t(s, dir, "events")
         .select(expr("ts div 1000000000").cast("timestamp").as("ts2"),
-          col("user_id"), col("value"))
-      val agg = streaming.EventWindows.sessions(
-        Replay.unordered(s, batch).stream, "ts2",
-        col("user_id"), "3650 days", "12 hours",
-        col("value").cast("decimal(18,2)"))
-      drain(s, agg, "complete", "q_stream_sessions_sink")
-        .select(col("s_start").cast("long").as("s_start"),
-          col("s_end").cast("long").as("s_end"),
-          col("user_id"), col("n"),
-          col("total").cast("double").as("total"))
-    },
+          col("user_id"), col("value")), "complete",
+      streaming.EventWindows.sessions(_, "ts2", col("user_id"),
+        "3650 days", "12 hours", col("value").cast("decimal(18,2)")),
+      _.select(col("s_start").cast("long").as("s_start"),
+        col("s_end").cast("long").as("s_end"), col("user_id"), col("n"),
+        col("total").cast("double").as("total"))),
       """WITH e AS (SELECT user_id, epoch_us(ts) // 1000000 AS t,
         |                  CAST(value AS DECIMAL(18,2)) AS v FROM events),
         |y AS (SELECT user_id, t, v,
@@ -364,24 +325,17 @@ object StreamQueries {
     // bounded by buckets/user, never events — and the (cohort,
     // period) matrix is the batch rollup of the sink. Same oracle
     // as q_retention: the stream must converge to the batch answer.
-    Query("q_stream_retention", (s, dir) => {
-      val batch = t(s, dir, "events")
+    Query.stream("q_stream_retention", (s, dir) => Streamed(
+      t(s, dir, "events")
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
         .select(col("user_id").as("u"),
           operators.Temporal.timeBucket(col("ts"), 604800000000000L)
-            .as("b"))
-      val agg = Replay.unordered(s, batch).stream.groupBy(col("u"))
-        .agg(min(col("b")).as("cohort"), collect_set(col("b")).as("bs"))
-      drain(s, agg, "complete", "q_stream_retention_sink")
-        .select(col("cohort"), explode(col("bs")).as("b"))
+            .as("b")), "complete",
+      _.groupBy(col("u"))
+        .agg(min(col("b")).as("cohort"), collect_set(col("b")).as("bs")),
+      _.select(col("cohort"), explode(col("bs")).as("b"))
         .groupBy(col("cohort"), (col("b") - col("cohort")).as("period"))
-        .agg(count(lit(1)).as("users"))
-    },
-      // q_stream_sessions: final complete-mode session-window state vs
-      // the batch lag-form. Spark's session_window merges an event at
-      // EXACTLY gap distance (merge condition start <= current end), so
-      // the break is strictly greater-than; session end = last event +
-      // gap.
+        .agg(count(lit(1)).as("users"))),
       // q_stream_retention: the streamed fold must converge to the
       // batch cohort matrix — q_retention's oracle verbatim
       retentionSql),
@@ -391,9 +345,9 @@ object StreamQueries {
     // stream (each micro-batch a time slice), so the O(1)-per-key
     // state (latest snapshot only) reproduces the batch as-of join
     // exactly — same split of the events table as q_asof_join, same
-    // DuckDB ASOF LEFT JOIN oracle. Update-mode memory sink: each
-    // point emits exactly once, in the batch it arrives.
-    Query("q_stream_asof", (s, dir) => {
+    // DuckDB ASOF LEFT JOIN oracle. Update mode: each point emits
+    // exactly once, in the batch it arrives.
+    Query.stream("q_stream_asof", (s, dir) => {
       val e = t(s, dir, "events")
       val merged = e.filter(col("event_id") % 7 =!= 0)
         .select(col("user_id").as("key"), expr("ts div 1000").as("t"),
@@ -402,20 +356,20 @@ object StreamQueries {
         .unionByName(e.filter(col("event_id") % 7 === 0)
           .select(col("user_id").as("key"), expr("ts div 1000").as("t"),
             lit(false).as("isPoint"), lit("").as("tag"), col("value")))
-      val stream = Replay.ordered(s, merged, col("t")).stream
-        .as(org.apache.spark.sql.Encoders.product[streaming.StreamAsOf.Merged])
       // t is epoch-MICROseconds here (ts div 1000), so the ms-named
       // TTL/lateness params count µs on this stream: pass explicit
       // values ≫ the fixture's 30-day span (1e15 µs ≈ 31 years) so
       // the lifecycle machinery provably cannot evict or drop
       // anything mid-replay and the oracle equality is untouched
-      val enriched = streaming.StreamAsOf.enrichMerged(stream,
-        stateTtlMs = 1000000000000000L,
-        allowedLatenessMs = 1000000000000000L)
-      drain(s, enriched, "update", "q_stream_asof_sink")
-        .select(col("tag").cast("long").as("event_id"),
+      Streamed(merged, "update",
+        stream => streaming.StreamAsOf.enrichMerged(stream.as(
+            org.apache.spark.sql.Encoders.product[streaming.StreamAsOf.Merged]),
+          stateTtlMs = 1000000000000000L,
+          allowedLatenessMs = 1000000000000000L),
+        _.select(col("tag").cast("long").as("event_id"),
           col("key").as("user_id"), col("t").as("ts"),
-          col("snapValue").as("snap_value"))
+          col("snapValue").as("snap_value")),
+        order = Some(col("t")))
     },
       // q_stream_asof: identical oracle to q_asof_join — the ordered
       // replay makes the O(1)-state streaming enrichment equal the
@@ -430,18 +384,17 @@ object StreamQueries {
     // the 5 distinct event_types, so the Misra-Gries sketch never
     // decrements and min_count IS the exact per-window count — the
     // oracle is a plain GROUP BY over the closed windows.
-    Query("q_stream_heavy", (s, dir) => {
+    Query.stream("q_stream_heavy", (s, dir) => {
       import s.implicits._
-      val batch = t(s, dir, "events")
-        .select(expr("ts div 1000000000").cast("timestamp").as("ts"),
-          col("event_type").as("item"))
-      val stream = Replay.ordered(s, batch, col("ts")).stream
-        .as[streaming.StreamHeavyHitters.Item]
-      val heavy = streaming.StreamHeavyHitters
-        .perWindow(stream, 86400000L, "0 seconds", capacity = 64)
-      drain(s, heavy, "append", "q_stream_heavy_sink")
-        .select(expr("windowStart div 1000").as("w_start"), col("item"),
-          col("minCount").as("min_count"), col("n"))
+      Streamed(t(s, dir, "events")
+          .select(expr("ts div 1000000000").cast("timestamp").as("ts"),
+            col("event_type").as("item")), "append",
+        stream => streaming.StreamHeavyHitters.perWindow(
+          stream.as[streaming.StreamHeavyHitters.Item],
+          86400000L, "0 seconds", capacity = 64),
+        _.select(expr("windowStart div 1000").as("w_start"), col("item"),
+          col("minCount").as("min_count"), col("n")),
+        order = Some(col("ts")))
     },
       // q_stream_heavy: append-mode emission = exactly the day windows
       // whose end is strictly before the max event second (the final
@@ -471,7 +424,7 @@ object StreamQueries {
     // window — which is precisely what the oracle computes with a
     // plain GROUP BY. A sketch regression that drops a true heavy
     // hitter under pressure loses a row and hash-mismatches.
-    Query("q_stream_heavy_pressure", (s, dir) => {
+    Query.stream("q_stream_heavy_pressure", (s, dir) => {
       import s.implicits._
       val phi = 0.05
       val base = t(s, dir, "events")
@@ -480,26 +433,26 @@ object StreamQueries {
             .otherwise(concat(lit("u"),
               (col("event_id") % 499).cast("string"))).as("item"))
         .filter(col("item").isNotNull && col("ts").isNotNull)
-      val stream = Replay.ordered(s, base, col("ts")).stream
-        .as[streaming.StreamHeavyHitters.Item]
-      val sketch = streaming.StreamHeavyHitters
-        .perWindow(stream, 86400000L, "0 seconds", capacity = 24)
       // decide phase: candidates (≤ capacity per window) broadcast
       // against one exact recount of the same table — the sketch
       // only proposes, exact counting decides (phiHeavyHitters'
       // two-pass discipline, reference SortValidator.java's
       // self-validating-job pattern)
-      val cands = drain(s, sketch, "append", "q_stream_pressure_sink")
-        .select(expr("windowStart div 1000").as("w_start"), col("item"),
-          col("n"))
       val counted = base
         .select((expr("CAST(ts AS LONG) div 86400") * 86400).as("w_start"),
           col("item"))
         .groupBy(col("w_start"), col("item"))
         .agg(count(lit(1)).as("cnt"))
-      counted.join(broadcast(cands), Seq("w_start", "item"))
-        .filter(col("cnt") >= ceil(lit(phi) * col("n")))
-        .select(col("w_start"), col("item"), col("cnt"), col("n"))
+      Streamed(base, "append",
+        stream => streaming.StreamHeavyHitters.perWindow(
+          stream.as[streaming.StreamHeavyHitters.Item],
+          86400000L, "0 seconds", capacity = 24),
+        sink => counted.join(broadcast(sink
+            .select(expr("windowStart div 1000").as("w_start"), col("item"),
+              col("n"))), Seq("w_start", "item"))
+          .filter(col("cnt") >= ceil(lit(phi) * col("n")))
+          .select(col("w_start"), col("item"), col("cnt"), col("n")),
+        order = Some(col("ts")))
     },
       // q_stream_heavy_pressure: the sketch only proposes and the exact
       // recount decides, so the oracle is the plain per-closed-window
@@ -538,13 +491,9 @@ object StreamQueries {
     // order can't drift the result. Final state per file = the
     // update-mode record with the greatest lastUpdateMs (throttled
     // batches re-emit the unchanged record — max(struct) dedups).
-    Query("q_stream_heat", (s, dir) => {
-      val replay = Replay.ordered(s, accesses(s, dir), col("tsMs"))
-      settled(drain(s, heatUpdates(s, replay), "update", "q_stream_heat_sink"))
-        .select(col("path").cast("long").as("user_id"),
-          col("m.ewma").as("ewma"),
-          col("m.lastUpdateMs").as("last_update_ms"))
-    },
+    Query.stream("q_stream_heat", heat(_, _)(
+      settled(_).select(col("path").cast("long").as("user_id"),
+        col("m.ewma").as("ewma"), col("m.lastUpdateMs").as("last_update_ms"))),
       // q_stream_heat: the throttled-EWMA policy fold replayed as a
       // recursive CTE — seed raw on first access, then skip when
       // t <= ewma + 30000 else blend 0.5/0.5; lastUpdate moves only on
@@ -568,11 +517,7 @@ object StreamQueries {
     // (ReplicationPolicySpec). The oracle replays the identical
     // throttled fold as a recursive CTE (bit-exact dyadic blends),
     // then mirrors tier/exempt/sweep in closed form.
-    Query("q_stream_replication", (s, dir) => {
-      val replay = Replay.ordered(s, accesses(s, dir), col("tsMs"))
-      replicationPlan(
-        drain(s, heatUpdates(s, replay), "update", "q_stream_repl_sink"))
-    },
+    Query.stream("q_stream_replication", replication,
       // q_stream_replication: the q_stream_heat fold, then the policy
       // tail in closed form — exempt files (user_id % 5 = 0) pin at 3;
       // multi-block files ntile(4) into reps 6..3 by (ewma DESC, id);
@@ -587,34 +532,14 @@ object StreamQueries {
     // the middle of the replay — the recovery grading for the most
     // state-critical query: the first four time slices stream, the
     // query is killed, the remaining four arrive, a NEW query resumes
-    // from the SAME checkpoint, and the final replication plan is
-    // graded against the identical oracle as the uninterrupted run.
-    // Only the recovered per-file EWMA state (offset log + state
-    // store) can make the resumed fold land on the same numbers; the
-    // memory sink of the base query is replaced by a foreachBatch
-    // parquet append because an in-memory sink does not survive a
-    // restart (it is not fault-tolerant — the point of the exercise).
-    Query("q_stream_replication_recovery", (s, dir) => {
-      val replay =
-        Replay.ordered(s, accesses(s, dir), col("tsMs"), held = true)
-      def run(): Unit = {
-        val q = heatUpdates(s, replay).writeStream.outputMode("update")
-          .option("checkpointLocation", replay.checkpoint)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[
-              streaming.HeatStream.HeatRecord], _: Long) =>
-            b.write.mode("append").parquet(replay.sink); ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      replay.release(4); run() // phase 1, then the hard stop
-      replay.release(8); run() // resume from the SAME checkpoint
-      replicationPlan(s.read.parquet(replay.sink))
-    },
-      // row-identical to the uninterrupted run by construction — the
-      // recovery replay feeds the SAME events through a mid-replay
-      // kill + checkpoint resume, so the graded contract is "restart
-      // changes nothing": the oracle is shared verbatim
-      streamReplicationSql),
-  ).map(q => q.copy(run = (s, dir) =>
-    Replay.withStateWidth(s)(q.run(s, dir))))
+    // from the SAME checkpoint (Streamed.resumed), and the final
+    // replication plan is graded against the identical oracle as the
+    // uninterrupted run. Only the recovered per-file EWMA state (offset
+    // log + state store) can make the resumed fold land on the same
+    // numbers.
+    Query("q_stream_replication_recovery",
+      (s, dir) => replication(s, dir).resumed(4),
+      // "restart changes nothing": the oracle is shared verbatim
+      streamReplicationSql, Some(replication)),
+  )
 }

@@ -6,9 +6,10 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.queries.Streamed
 import graft.streaming.HeatStream
 
 /** The replay harness every streaming query stages through: slice
@@ -25,22 +26,16 @@ class ReplaySpec extends SparkSpec {
     .select(col("user_id").cast("string").as("path"),
       expr("ts div 1000000").as("tsMs"))
 
-  // one heatUpdates query over the replay, appending to its sink from
-  // its checkpoint (q_stream_replication_recovery's shape)
-  private def runHeat(r: Replay.Staged): Unit = {
-    val q = HeatStream.heatUpdates(r.stream.as[HeatStream.Access],
-        stateTtlMs = 1000000000000L, allowedLatenessMs = 1000000000000L)
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", r.checkpoint)
-      .foreachBatch { (b: Dataset[HeatStream.HeatRecord], _: Long) =>
-        b.write.mode("append").parquet(r.sink); ()
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-  }
+  // q_stream_heat's declaration, its raw heat updates as output
+  private def heat: Streamed = SparkEntry.registry.find(_.name == "q_stream_heat")
+    .flatMap(_.stream).get(spark, sf).copy(finish = identity)
+
+  private def rows(df: DataFrame): Seq[HeatStream.HeatRecord] =
+    df.as[HeatStream.HeatRecord].collect().toSeq
+      .sortBy(h => (h.path, h.lastUpdateMs, h.ewma))
 
   private def sinkRows(r: Replay.Staged): Seq[HeatStream.HeatRecord] =
-    spark.read.parquet(r.sink).as[HeatStream.HeatRecord].collect().toSeq
-      .sortBy(h => (h.path, h.lastUpdateMs, h.ewma))
+    rows(spark.read.parquet(r.sink))
 
   test("the replay scope turns checkpoint checksums off, then restores") {
     val key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
@@ -50,6 +45,13 @@ class ReplaySpec extends SparkSpec {
       def walk(f: File): Seq[String] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f.getName)
       walk(new File(dir)).filter(n => n.endsWith(".crc") && !n.startsWith("."))
+    }
+    // one heat stream on the replay's checkpoint, in or out of scope
+    def runHeat(r: Replay.Staged): Unit = {
+      val q = heat.stateful(r.stream).writeStream.outputMode("update")
+        .option("checkpointLocation", r.checkpoint)
+        .format("noop").start()
+      try q.processAllAvailable() finally q.stop()
     }
     assert(spark.conf.get(key) == "true")
     val outside = Replay.unordered(spark, accesses)
@@ -82,19 +84,17 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("stop after batch k and resume equals the uninterrupted run") {
-    val full = Replay.ordered(spark, accesses, col("tsMs"))
-    runHeat(full)
-    val expected = sinkRows(full)
+    val expected = rows(heat.run("replayspec_heat"))
     assert(expected.nonEmpty)
     for (k <- Seq(1, nFiles - 1)) {
-      val r = Replay.ordered(spark, accesses, col("tsMs"), held = true)
-      assert(new File(r.source).list().isEmpty)
-      r.release(k)
-      assert(new File(r.source).list().count(_.startsWith("part-")) == k)
-      runHeat(r)
-      assert(sinkRows(r).size < expected.size, s"no stop after batch $k")
-      r.release(nFiles); runHeat(r)
-      assert(sinkRows(r) == expected, s"resume after batch $k diverged")
+      val held = Replay.ordered(spark, accesses, col("tsMs"), held = true)
+      assert(new File(held.source).list().isEmpty)
+      assert(held.slices == nFiles)
+      val got = heat.resumed(k, atStop = r => {
+        assert(new File(r.source).list().count(_.startsWith("part-")) == k)
+        assert(sinkRows(r).size < expected.size, s"no stop after batch $k")
+      })
+      assert(rows(got) == expected, s"resume after batch $k diverged")
     }
   }
 

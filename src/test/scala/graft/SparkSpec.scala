@@ -20,4 +20,12 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** `body` over fresh temp dirs, one per prefix, swept after it
+    * returns or throws.
+    */
+  def withTempDirs[T](prefixes: String*)(body: Seq[String] => T): T = {
+    val dirs = prefixes.map(p => java.nio.file.Files.createTempDirectory(p).toFile)
+    try body(dirs.map(_.toString)) finally dirs.foreach(Replay.rmTree)
+  }
 }

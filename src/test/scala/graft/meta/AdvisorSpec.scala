@@ -58,18 +58,19 @@ class AdvisorSpec extends SparkSpec {
 
   test("unpushed_filter fires when the predicate defeats pushdown") {
     withAqeOff {
-      val dir = java.nio.file.Files.createTempDirectory("adv").toString
-      (1L to 4000L).toDF("id").write.mode("overwrite")
-        .parquet(s"$dir/t")
-      // md5-wrapped predicate: nothing pushes, scan decodes all rows
-      val wrapped = spark.read.parquet(s"$dir/t")
-        .filter(substring(md5(col("id").cast("string")), 1, 1) === "0")
-      val got = rules(Advisor.diagnose(wrapped))
-      assert(got.get("unpushed_filter").contains("high"), got)
-      // the same selectivity as a plain comparison pushes fine
-      val plain = spark.read.parquet(s"$dir/t").filter(col("id") < 250)
-      val none = rules(Advisor.diagnose(plain))
-      assert(!none.contains("unpushed_filter"), none)
+      withTempDirs("adv") { case Seq(dir) =>
+        (1L to 4000L).toDF("id").write.mode("overwrite")
+          .parquet(s"$dir/t")
+        // md5-wrapped predicate: nothing pushes, scan decodes all rows
+        val wrapped = spark.read.parquet(s"$dir/t")
+          .filter(substring(md5(col("id").cast("string")), 1, 1) === "0")
+        val got = rules(Advisor.diagnose(wrapped))
+        assert(got.get("unpushed_filter").contains("high"), got)
+        // the same selectivity as a plain comparison pushes fine
+        val plain = spark.read.parquet(s"$dir/t").filter(col("id") < 250)
+        val none = rules(Advisor.diagnose(plain))
+        assert(!none.contains("unpushed_filter"), none)
+      }
     }
   }
 
@@ -118,16 +119,17 @@ class AdvisorSpec extends SparkSpec {
   }
 
   test("small_files_scan fires on a fragmented write, not a compact one") {
-    val dir = java.nio.file.Files.createTempDirectory("adv").toString
-    (1L to 1000L).toDF("id").repartition(16).write
-      .mode("overwrite").parquet(s"$dir/frag")
-    val got = rules(Advisor.diagnose(spark.read.parquet(s"$dir/frag")))
-    assert(got.get("small_files_scan").exists(Set("high", "medium")), got)
-    (1L to 1000L).toDF("id").repartition(1).write
-      .mode("overwrite").parquet(s"$dir/compact")
-    // 1 file < minFiles -> silent regardless of size
-    val none = rules(Advisor.diagnose(spark.read.parquet(s"$dir/compact")))
-    assert(!none.contains("small_files_scan"), none)
+    withTempDirs("adv") { case Seq(dir) =>
+      (1L to 1000L).toDF("id").repartition(16).write
+        .mode("overwrite").parquet(s"$dir/frag")
+      val got = rules(Advisor.diagnose(spark.read.parquet(s"$dir/frag")))
+      assert(got.get("small_files_scan").exists(Set("high", "medium")), got)
+      (1L to 1000L).toDF("id").repartition(1).write
+        .mode("overwrite").parquet(s"$dir/compact")
+      // 1 file < minFiles -> silent regardless of size
+      val none = rules(Advisor.diagnose(spark.read.parquet(s"$dir/compact")))
+      assert(!none.contains("small_files_scan"), none)
+    }
   }
 
   test("broadcast_candidate fires on an SMJ with a tiny side") {
@@ -170,30 +172,31 @@ class AdvisorSpec extends SparkSpec {
   test("lineage_reexecution fires on an unpinned shared scan, not on " +
       "a pinned or single-consumer one") {
     withAqeOff {
-      val dir = java.nio.file.Files.createTempDirectory("adv-lre").toString
-      (1L to 5000L).map(i => (i, i * 2, s"v$i")).toDF("a", "b", "s")
-        .write.mode("overwrite").parquet(s"$dir/t")
-      val base = spark.read.parquet(s"$dir/t")
-      // two differently-pruned consumers of the SAME relation: no
-      // exchange to reuse between them -> the scan executes twice
-      val twice = base.agg(sum(col("a")).as("sa"))
-        .crossJoin(base.agg(avg(col("b")).as("ab")))
-      val got = rules(Advisor.diagnose(twice, minRescanBytes = 1L))
-      assert(got.get("lineage_reexecution").contains("medium"), got)
-      // pinning the shared subtree removes the file scans entirely
-      val pinned = base.localCheckpoint()
-      val fixed = pinned.agg(sum(col("a")).as("sa"))
-        .crossJoin(pinned.agg(avg(col("b")).as("ab")))
-      val none = rules(Advisor.diagnose(fixed, minRescanBytes = 1L))
-      assert(!none.contains("lineage_reexecution"), none)
-      // a single consumer never fires
-      val single = rules(Advisor.diagnose(
-        base.agg(sum(col("a")).as("sa")), minRescanBytes = 1L))
-      assert(!single.contains("lineage_reexecution"), single)
-      // a small relation re-read twice is below the byte floor at
-      // the default threshold
-      val small = rules(Advisor.diagnose(twice))
-      assert(!small.contains("lineage_reexecution"), small)
+      withTempDirs("adv-lre") { case Seq(dir) =>
+        (1L to 5000L).map(i => (i, i * 2, s"v$i")).toDF("a", "b", "s")
+          .write.mode("overwrite").parquet(s"$dir/t")
+        val base = spark.read.parquet(s"$dir/t")
+        // two differently-pruned consumers of the SAME relation: no
+        // exchange to reuse between them -> the scan executes twice
+        val twice = base.agg(sum(col("a")).as("sa"))
+          .crossJoin(base.agg(avg(col("b")).as("ab")))
+        val got = rules(Advisor.diagnose(twice, minRescanBytes = 1L))
+        assert(got.get("lineage_reexecution").contains("medium"), got)
+        // pinning the shared subtree removes the file scans entirely
+        val pinned = base.localCheckpoint()
+        val fixed = pinned.agg(sum(col("a")).as("sa"))
+          .crossJoin(pinned.agg(avg(col("b")).as("ab")))
+        val none = rules(Advisor.diagnose(fixed, minRescanBytes = 1L))
+        assert(!none.contains("lineage_reexecution"), none)
+        // a single consumer never fires
+        val single = rules(Advisor.diagnose(
+          base.agg(sum(col("a")).as("sa")), minRescanBytes = 1L))
+        assert(!single.contains("lineage_reexecution"), single)
+        // a small relation re-read twice is below the byte floor at
+        // the default threshold
+        val small = rules(Advisor.diagnose(twice))
+        assert(!small.contains("lineage_reexecution"), small)
+      }
     }
   }
 
@@ -226,24 +229,25 @@ class AdvisorSpec extends SparkSpec {
   test("lineage_reexecution does not double-count a reused scalar " +
       "subquery") {
     withAqeOff {
-      val dir = java.nio.file.Files.createTempDirectory("adv-rsq").toString
-      (1L to 5000L).map(i => (i, i * 2)).toDF("a", "b")
-        .write.mode("overwrite").parquet(s"$dir/a")
-      (1L to 5000L).map(i => (i, i * 3)).toDF("c", "d")
-        .write.mode("overwrite").parquet(s"$dir/b")
-      spark.read.parquet(s"$dir/a").createOrReplaceTempView("adv_rsq_a")
-      spark.read.parquet(s"$dir/b").createOrReplaceTempView("adv_rsq_b")
-      // the identical scalar subquery appears twice; subquery reuse
-      // executes it ONCE (the second is a ReusedSubqueryExec) — its
-      // scan must not be counted per consumer
-      val q = spark.sql(
-        """SELECT a FROM adv_rsq_a
-          | WHERE a > (SELECT avg(d) FROM adv_rsq_b) / 4
-          |    OR a + 7 > (SELECT avg(d) FROM adv_rsq_b)""".stripMargin)
-      assert(q.queryExecution.executedPlan.toString
-        .contains("ReusedSubquery"), "fixture must exercise reuse")
-      val got = rules(Advisor.diagnose(q, minRescanBytes = 1L))
-      assert(!got.contains("lineage_reexecution"), got)
+      withTempDirs("adv-rsq") { case Seq(dir) =>
+        (1L to 5000L).map(i => (i, i * 2)).toDF("a", "b")
+          .write.mode("overwrite").parquet(s"$dir/a")
+        (1L to 5000L).map(i => (i, i * 3)).toDF("c", "d")
+          .write.mode("overwrite").parquet(s"$dir/b")
+        spark.read.parquet(s"$dir/a").createOrReplaceTempView("adv_rsq_a")
+        spark.read.parquet(s"$dir/b").createOrReplaceTempView("adv_rsq_b")
+        // the identical scalar subquery appears twice; subquery reuse
+        // executes it ONCE (the second is a ReusedSubqueryExec) — its
+        // scan must not be counted per consumer
+        val q = spark.sql(
+          """SELECT a FROM adv_rsq_a
+            | WHERE a > (SELECT avg(d) FROM adv_rsq_b) / 4
+            |    OR a + 7 > (SELECT avg(d) FROM adv_rsq_b)""".stripMargin)
+        assert(q.queryExecution.executedPlan.toString
+          .contains("ReusedSubquery"), "fixture must exercise reuse")
+        val got = rules(Advisor.diagnose(q, minRescanBytes = 1L))
+        assert(!got.contains("lineage_reexecution"), got)
+      }
     }
   }
 

@@ -70,38 +70,39 @@ class FileStreamSpec extends SparkSpec {
   import graft.streaming.EventWindows
 
   test("file-source streaming: events parquet replayed as a stream matches batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fs").toString
-    val batch = graft.Graft.table(spark, sf, "events")
-      .withColumn("ts2", (col("ts") / 1000000000L).cast("timestamp"))
-      .select("ts2", "event_type", "value")
-    batch.write.parquet(s"$dir/in")
+    withTempDirs("graft-fs") { case Seq(dir) =>
+      val batch = graft.Graft.table(spark, sf, "events")
+        .withColumn("ts2", (col("ts") / 1000000000L).cast("timestamp"))
+        .select("ts2", "event_type", "value")
+      batch.write.parquet(s"$dir/in")
 
-    val stream = spark.readStream
-      .schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    // watermark must exceed the fixture's full time span (~30 days,
-    // unordered): a shorter one would drop late rows if the replay
-    // ever splits into multiple micro-batches
-    val agg = EventWindows.tumbling(stream, "ts2",
-      col("event_type"), "60 days", "1 day", col("value"))
-    val q = agg.writeStream.outputMode("update")
-      .format("memory").queryName("fs_win").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("fs_win")
-        .groupBy("event_type").agg(sum("n").as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val expected = batch.groupBy("event_type").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // update-mode memory sink may hold several updates per window;
-      // take the final counts via max per (window, type) instead
-      val finalCounts = spark.table("fs_win")
-        .groupBy("w_start", "event_type").agg(max("n").as("n"))
-        .groupBy("event_type").agg(sum("n").as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(finalCounts == expected, s"$streamed vs $expected")
-    } finally q.stop()
+      val stream = spark.readStream
+        .schema(batch.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$dir/in")
+      // watermark must exceed the fixture's full time span (~30 days,
+      // unordered): a shorter one would drop late rows if the replay
+      // ever splits into multiple micro-batches
+      val agg = EventWindows.tumbling(stream, "ts2",
+        col("event_type"), "60 days", "1 day", col("value"))
+      val q = agg.writeStream.outputMode("update")
+        .format("memory").queryName("fs_win").start()
+      try {
+        q.processAllAvailable()
+        val streamed = spark.table("fs_win")
+          .groupBy("event_type").agg(sum("n").as("n"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val expected = batch.groupBy("event_type").count()
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        // update-mode memory sink may hold several updates per window;
+        // take the final counts via max per (window, type) instead
+        val finalCounts = spark.table("fs_win")
+          .groupBy("w_start", "event_type").agg(max("n").as("n"))
+          .groupBy("event_type").agg(sum("n").as("n"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(finalCounts == expected, s"$streamed vs $expected")
+      } finally q.stop()
+    }
   }
 }
 

@@ -13,7 +13,8 @@ Verdict classes per query:
   fatal   — the JVM died running this query alone (OOM at this heap)
 
 Usage: python3 tools/sweep.py <sfDir> <queriesFile> <outJson>
-Env: SWEEP_CHUNK (default 12), SPARK_GRAFT_CPUS (default 32),
+Env: SWEEP_CHUNK (default 12), SPARK_GRAFT_CPUS (default unset ->
+     Bench's own default; the record reports the count Bench used),
      SPARK_DRIVER_MEM (default unset -> Bench's 8g default).
 """
 import json
@@ -33,7 +34,6 @@ def run_bench(sf_dir, names, timeout=7200):
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env["SPARK_GRAFT_BENCH_PASSES"] = "1"
     env["SPARK_GRAFT_BENCH_ONLY"] = ",".join(names)
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
     t0 = time.time()
     try:
         p = subprocess.run(
@@ -96,10 +96,12 @@ def main():
             return False
         return True
 
+    cpus = None  # the core count Bench reports running at
     for ci, chunk in enumerate(chunks):
         print(f"[sweep] chunk {ci + 1}/{len(chunks)}: {chunk[0]}..{chunk[-1]}",
               flush=True)
         metric, secs, fails, wall = run_bench(sf_dir, chunk)
+        cpus = (metric or {}).get("cpus", cpus)
         missing = []
         for name in chunk:
             sec = secs.get(name)
@@ -112,6 +114,7 @@ def main():
                   f"{len(missing)} singly: {missing}", flush=True)
             for name in missing:
                 m2, s2, f2, w2 = run_bench(sf_dir, [name], timeout=5400)
+                cpus = (m2 or {}).get("cpus", cpus)
                 sec = s2.get(name)
                 if sec is not None and sec < 0:
                     sec = None
@@ -122,7 +125,7 @@ def main():
         with open(out_json, "w") as f:
             json.dump({"sf_dir": sf_dir,
                        "heap": os.environ.get("SPARK_DRIVER_MEM", "8g"),
-                       "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+                       "cpus": cpus,
                        "results": results}, f, indent=1, sort_keys=True)
     counts = {}
     for v in results.values():
